@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.ast._
 import graft.graph.PropertyGraph
 import graft.impl.Planner
 import graft.parser.CypherParser
@@ -278,58 +279,44 @@ class GraftSession(val spark: SparkSession) {
   })
 
   def store(name: String, g: PropertyGraph): Unit = catalog.put(name, g)
-  def graphByName(name: String): PropertyGraph = resolveGraphRef(name)
+
+  /** A graph by name: the exact catalog name first (dotted names
+    * included), then `ns.rest` through the source registered for `ns`. */
+  def graphByName(name: String): PropertyGraph = catalog.get(name) match {
+    case Some(g) => g
+    case None =>
+      val i = name.indexOf('.')
+      if (i > 0) graphSources.get(name.substring(0, i)) match {
+        case Some(src) => src(name.substring(i + 1))
+        case None => throw new IllegalArgumentException(
+          s"unknown graph namespace: ${name.substring(0, i)}")
+      }
+      else throw new IllegalArgumentException(s"unknown graph or view: $name")
+  }
 
   /** Parameterized graph views (CatalogDDLTests' CATALOG CREATE VIEW):
-    * name -> (parameter names without '$', body text ending RETURN GRAPH). */
-  private val views = TrieMap.empty[String, (Seq[String], String)]
-  private val viewArgCounter = new java.util.concurrent.atomic.AtomicLong()
-  def storeView(name: String, params: Seq[String], body: String): Unit =
+    * name -> (parameter names without '$', body ending RETURN GRAPH). */
+  private val views = TrieMap.empty[String, (Seq[String], Query)]
+  def storeView(name: String, params: Seq[String], body: Query): Unit =
     views.put(name, (params, body))
   def dropView(name: String): Unit = views.remove(name)
   def viewNames: Set[String] = views.keySet.toSet
 
-  /** Resolve a graph reference: a catalog name, or a view invocation
-    * `v(ref, ...)` whose arguments are themselves graph references
-    * (recursively — `inc(inc(a))`). View bodies run with their `$param`
-    * occurrences bound to the resolved argument graphs. */
-  def resolveGraphRef(ref: String): PropertyGraph = {
-    val call = """(?s)\s*([\w`]+)\s*\((.*)\)\s*""".r
-    ref match {
-      case call(name, argsStr) if views.contains(name) =>
-        val (params, body) = views(name)
-        val args = splitTopLevel(argsStr).filter(_.nonEmpty)
-        require(args.size == params.size,
-          s"view $name expects ${params.size} graph arguments, got ${args.size}")
-        val bound = args.map(resolveGraphRef)
-        var text = body
-        // Bind longest parameter names first and replace on a word boundary
-        // so $a never clobbers the prefix of $ab.
-        val temps = params.zip(bound).sortBy(-_._1.length).map { case (p, g) =>
-          val tmp = s"__viewarg_${viewArgCounter.incrementAndGet()}"
-          catalog.put(tmp, g)
-          text = text.replaceAll(
-            java.util.regex.Pattern.quote("$" + p) + "\\b",
-            java.util.regex.Matcher.quoteReplacement(tmp))
-          tmp
-        }
-        try cypherGraph(PropertyGraph(Seq.empty), text)
-        finally temps.foreach(catalog.remove)
-      case _ =>
-        val t = ref.trim
-        catalog.get(t) match { // literal names win (incl. backticked dots)
-          case Some(g) => g
-          case None =>
-            val i = t.indexOf('.')
-            if (i > 0) graphSources.get(t.substring(0, i)) match {
-              case Some(src) => src(t.substring(i + 1))
-              case None => throw new IllegalArgumentException(
-                s"unknown graph namespace: ${t.substring(0, i)}")
-            }
-            else throw new IllegalArgumentException(
-              s"unknown graph or view: $ref")
-        }
-    }
+  /** Resolve a graph reference. A view call resolves its arguments
+    * (recursively — `inc(inc(a))`), then plans the stored body with its
+    * `$param` references bound to them through `bound`. */
+  private def resolveGraph(ref: GraphRef,
+      bound: Map[String, PropertyGraph]): PropertyGraph = ref match {
+    case GraphName(parts) => graphByName(parts.mkString("."))
+    case GraphParam(p) => bound.getOrElse(p,
+      throw new IllegalArgumentException(s"unbound graph parameter: $$$p"))
+    case ViewCall(name, args) =>
+      val (params, body) = views.getOrElse(name,
+        throw new IllegalArgumentException(s"unknown graph or view: $name"))
+      require(args.size == params.size,
+        s"view $name expects ${params.size} graph arguments, got ${args.size}")
+      graphOf(PropertyGraph(Seq.empty), body, Map.empty,
+        params.zip(args.map(resolveGraph(_, bound))).toMap)
   }
 
   /** Graph namespaces (the reference's PGDS namespaces / qualified graph
@@ -342,153 +329,107 @@ class GraftSession(val spark: SparkSession) {
   def registerSource(namespace: String, src: String => PropertyGraph): Unit =
     graphSources.put(namespace, src)
 
-  /** Split "a,b(c,d),e" on top-level commas only. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    s.foreach {
-      case ',' if depth == 0 => out += cur.toString.trim; cur.clear()
-      case c =>
-        if (c == '(') depth += 1
-        if (c == ')') depth -= 1
-        cur += c
+  /** The one planner path: plan `query` against `graph` (`bound` holds a
+    * view body's graph parameters). Returns the planner, for its written
+    * or constructed graph, and a thunk rendering the RETURN rows. */
+  private def plan(graph: PropertyGraph, query: Query,
+      params: Map[String, Any], drivingTable: Option[DataFrame] = None,
+      bound: Map[String, PropertyGraph] = Map.empty)
+      : (Planner, () => DataFrame) = {
+    val planner = new Planner(spark, graph, params, drivingTable,
+      resolveGraph(_, bound), functions.toMap, procedures.toMap)
+    val (df, outs, header) = classifyingTypeErrors { planner.plan(query) }
+    (planner, () => classifyingTypeErrors { planner.render(df, outs, header) })
+  }
+
+  private def graphOf(graph: PropertyGraph, query: Query,
+      params: Map[String, Any],
+      bound: Map[String, PropertyGraph] = Map.empty): PropertyGraph =
+    plan(graph, query, params, bound = bound)._1.constructedGraph.getOrElse(
+      throw new IllegalArgumentException(
+        "query does not end in CONSTRUCT ... RETURN GRAPH"))
+
+  /** Parse `text`, which must be a query; `op` names the entry point that
+    * refuses session-level statements. */
+  private def queryOf(text: String, op: String): Query =
+    CypherParser.parseStatement(text) match {
+      case q: Query => q
+      case s => throw new CypherException(CypherError.SemanticError,
+        CypherError.CompileTime, CypherError.InvalidClauseComposition,
+        s"$op expects a query, not a ${s.productPrefix} statement")
     }
-    if (cur.nonEmpty) out += cur.toString.trim
-    out.result()
-  }
 
-  // CATALOG DDL statements handled at the session level (the reference's
-  // CatalogDDL surface: CATALOG CREATE GRAPH/VIEW, CATALOG DROP ...).
-  private val CatalogCreateGraphRe =
-    """(?is)\s*CATALOG\s+CREATE\s+GRAPH\s+([\w`]+)\s*\{(.*)\}\s*""".r
-  private val CatalogCreateViewRe =
-    """(?is)\s*CATALOG\s+CREATE\s+VIEW\s+([\w`]+)\s*\(([^)]*)\)\s*\{(.*)\}\s*""".r
-  private val CatalogDropRe =
-    """(?is)\s*CATALOG\s+DROP\s+(GRAPH|VIEW)\s+([\w`]+)\s*""".r
-
-  private val ShowProceduresRe = """(?is)\A\s*SHOW\s+PROCEDURES\s*\z""".r
-  private val ShowFunctionsRe =
-    """(?is)\A\s*SHOW\s+(?:USER\s+DEFINED\s+)?FUNCTIONS\s*\z""".r
-  // Neo4j migration-script DDL. Indexes are performance-only artifacts —
-  // Catalyst plans against parquet statistics, so CREATE/DROP INDEX is an
-  // honest no-op (same stance as the discarded USING hints). Constraints
-  // are ENFORCEMENT: silently not enforcing a uniqueness/existence rule
-  // the user believes is active would be a correctness lie, so CREATE
-  // CONSTRAINT refuses with a classified error instead.
-  private val IndexDdlRe =
-    ("""(?is)\A\s*(?:CREATE\s+(?:TEXT\s+|POINT\s+|RANGE\s+|LOOKUP\s+""" +
-      """|FULLTEXT\s+|VECTOR\s+)?INDEX|DROP\s+INDEX)\b.*""").r
-  private val CreateConstraintRe =
-    """(?is)\A\s*CREATE\s+CONSTRAINT\b.*""".r
-  // SHOW INDEXES / SHOW CONSTRAINTS: indexes are no-ops and constraints
-  // refuse at CREATE, so the truthful listing is ALWAYS empty — a
-  // migration script's inventory pass runs and sees none. DROP CONSTRAINT
-  // follows Neo4j: IF EXISTS tolerates the (necessarily) missing
-  // constraint; the bare form raises for an unknown name.
-  private val ShowIndexesRe =
-    """(?is)\A\s*SHOW\s+(?:ALL\s+|TEXT\s+|POINT\s+|RANGE\s+|LOOKUP\s+|FULLTEXT\s+|VECTOR\s+)?INDEXES\s*\z""".r
-  private val ShowConstraintsRe =
-    """(?is)\A\s*SHOW\s+(?:ALL\s+)?CONSTRAINTS\s*\z""".r
-  private val DropConstraintIfExistsRe =
-    """(?is)\A\s*DROP\s+CONSTRAINT\s+[\w`]+\s+IF\s+EXISTS\s*\z""".r
-  private val DropConstraintRe =
-    """(?is)\A\s*DROP\s+CONSTRAINT\b.*""".r
-
-  private def isCatalogDdl(q: String): Boolean =
-    CatalogCreateGraphRe.matches(q) || CatalogCreateViewRe.matches(q) ||
-      CatalogDropRe.matches(q)
-
-  /** Intercept CATALOG DDL; returns Some(empty DF) when `query` was DDL. */
-  private def handleCatalogDdl(graph: PropertyGraph, query: String)
-      : Option[DataFrame] = query match {
-    case CatalogCreateGraphRe(name, body) =>
-      store(name, cypherGraph(graph, body))
-      Some(spark.emptyDataFrame)
-    case CatalogCreateViewRe(name, paramsStr, body) =>
-      val params = paramsStr.split(",").map(_.trim).filter(_.nonEmpty)
-        .map(p => if (p.startsWith("$")) p.substring(1) else p)
-      storeView(name, params.toSeq, body)
-      Some(spark.emptyDataFrame)
-    case CatalogDropRe(kind, name) =>
-      if (kind.equalsIgnoreCase("VIEW")) dropView(name) else catalog.remove(name)
-      Some(spark.emptyDataFrame) // idempotent, like the reference
-    case _ => None
-  }
-
-  /** Compile and plan a Cypher query against a graph; the result is a lazy
-    * DataFrame with user-facing column names. An optional driving table's
-    * columns are visible to the query as value variables (reference entry
-    * point 3, RelationalCypherSession driving tables). */
+  /** Compile a Cypher statement against a graph. A query plans to a lazy
+    * DataFrame with user-facing column names; an optional driving table's
+    * columns are visible to it as value variables (reference entry point 3,
+    * RelationalCypherSession driving tables). Session-level statements
+    * (CATALOG, SHOW, index and constraint DDL) run at once. */
   def cypher(graph: PropertyGraph, query: String,
       params: Map[String, Any] = Map.empty,
       drivingTable: Option[DataFrame] = None): DataFrame = {
-    // EXPLAIN <query>: plan but don't run — one (plan) row with Spark's
-    // formatted physical plan (what `.explain("formatted")` prints).
-    // PROFILE is accepted as a synonym; with no instrumentation layer the
-    // honest answer is the same plan text, not fake per-operator counts.
-    val ExplainRe = "(?is)^\\s*(EXPLAIN|PROFILE)\\s+(.*)$".r
-    query match {
-      case ExplainRe(_, rest) =>
-        import spark.implicits._
-        // Catalog DDL must NOT run under EXPLAIN ("plan but don't run"):
-        // recursing into cypher() would hit handleCatalogDdl and actually
-        // create/drop the graph or view. DDL has no Spark plan, so the
-        // honest answer is a descriptive row, side-effect free.
-        if (isCatalogDdl(rest)) return Seq(
-          "catalog DDL statement: no Spark plan; not executed under " +
-            "EXPLAIN/PROFILE").toDF("plan")
-        val planned = cypher(graph, rest, params, drivingTable)
-        val text = planned.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        return Seq(text).toDF("plan")
-      case _ =>
-    }
-    handleCatalogDdl(graph, query) match {
-      case Some(ddlResult) => return ddlResult
-      case None =>
-    }
-    // Discovery surface (Neo4j SHOW PROCEDURES / SHOW FUNCTIONS): list the
-    // session registries. Built-in scalar functions compile directly in
-    // ExprCompiler (no runtime registry), so SHOW FUNCTIONS enumerates the
-    // REGISTERED (user) functions — the scoped divergence is recorded in
-    // tck_blacklist.md.
-    ShowProceduresRe.findFirstIn(query).foreach { _ =>
-      import spark.implicits._
-      return procedures.keys.toSeq.sorted
-        .map(n => (n, "READ")).toDF("name", "mode")
-    }
-    ShowFunctionsRe.findFirstIn(query).foreach { _ =>
-      import spark.implicits._
-      return functions.keys.toSeq.sorted
-        .map(n => (n, "user")).toDF("name", "category")
-    }
-    if (ShowIndexesRe.matches(query) || ShowConstraintsRe.matches(query)) {
-      import spark.implicits._
-      return Seq.empty[(String, String, Seq[String], Seq[String])]
-        .toDF("name", "type", "labelsOrTypes", "properties")
-    }
-    if (DropConstraintIfExistsRe.matches(query)) return spark.emptyDataFrame
-    if (DropConstraintRe.matches(query))
-      throw new graft.api.CypherException(
-        CypherError.SemanticError, CypherError.CompileTime,
-        CypherError.UnsupportedExpression,
-        "no such constraint: constraints cannot be created in this " +
-          "engine (use DROP CONSTRAINT ... IF EXISTS for tolerant scripts)")
-    if (IndexDdlRe.matches(query)) return spark.emptyDataFrame
-    if (CreateConstraintRe.matches(query))
-      throw new graft.api.CypherException(
-        CypherError.SemanticError, CypherError.CompileTime,
-        CypherError.UnsupportedExpression,
-        "constraints are not supported: this engine computes over " +
-          "immutable snapshots and cannot enforce uniqueness/existence " +
-          "rules; refusing rather than silently not enforcing")
-    val ast = CypherParser.parse(query)
-    val planner = new Planner(spark, graph, params, drivingTable,
-      graphByName, functions.toMap, procedures.toMap)
-    classifyingTypeErrors {
-      val (df, outs, header) = planner.plan(ast)
-      planner.render(df, outs, header)
+    import spark.implicits._
+    CypherParser.parseStatement(query) match {
+      case q: Query => plan(graph, q, params, drivingTable)._2()
+      // EXPLAIN <query>: plan but don't run — one (plan) row with Spark's
+      // formatted physical plan (what `.explain("formatted")` prints).
+      // PROFILE is accepted as a synonym; with no instrumentation layer the
+      // honest answer is the same plan text, not fake per-operator counts.
+      case Explain(_, q: Query) =>
+        Seq(plan(graph, q, params, drivingTable)._2().queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode))
+          .toDF("plan")
+      // Any other statement has no Spark plan, and EXPLAIN must not apply
+      // its side effects: the honest answer is a descriptive row.
+      case Explain(_, s) =>
+        Seq(s"${s.productPrefix} statement: no Spark plan; not executed " +
+          "under EXPLAIN/PROFILE").toDF("plan")
+      case CatalogCreateGraph(name, body) =>
+        store(name, graphOf(graph, body, params))
+        spark.emptyDataFrame
+      case CatalogCreateView(name, ps, body) =>
+        storeView(name, ps, body)
+        spark.emptyDataFrame
+      case CatalogDrop(view, name) =>
+        if (view) dropView(name) else catalog.remove(name)
+        spark.emptyDataFrame // idempotent, like the reference
+      // Discovery surface (Neo4j SHOW PROCEDURES / SHOW FUNCTIONS): list the
+      // session registries. Built-in scalar functions compile directly in
+      // ExprCompiler (no runtime registry), so SHOW FUNCTIONS enumerates the
+      // REGISTERED (user) functions — the scoped divergence is recorded in
+      // tck_blacklist.md.
+      case ShowProcedures =>
+        procedures.keys.toSeq.sorted.map(n => (n, "READ")).toDF("name", "mode")
+      case ShowFunctions =>
+        functions.keys.toSeq.sorted.map(n => (n, "user"))
+          .toDF("name", "category")
+      // Neo4j migration-script DDL. Indexes are performance-only artifacts —
+      // Catalyst plans against parquet statistics, so CREATE/DROP INDEX is an
+      // honest no-op (same stance as the discarded USING hints). Constraints
+      // are ENFORCEMENT: silently not enforcing a uniqueness/existence rule
+      // the user believes is active would be a correctness lie, so CREATE
+      // CONSTRAINT refuses with a classified error instead.
+      // SHOW INDEXES / SHOW CONSTRAINTS: indexes are no-ops and constraints
+      // refuse at CREATE, so the truthful listing is ALWAYS empty — a
+      // migration script's inventory pass runs and sees none. DROP CONSTRAINT
+      // follows Neo4j: IF EXISTS tolerates the (necessarily) missing
+      // constraint; the bare form raises for an unknown name.
+      case ShowIndexes | ShowConstraints =>
+        Seq.empty[(String, String, Seq[String], Seq[String])]
+          .toDF("name", "type", "labelsOrTypes", "properties")
+      case IndexDdl | DropConstraint(true) => spark.emptyDataFrame
+      case DropConstraint(false) =>
+        throw new CypherException(
+          CypherError.SemanticError, CypherError.CompileTime,
+          CypherError.UnsupportedExpression,
+          "no such constraint: constraints cannot be created in this " +
+            "engine (use DROP CONSTRAINT ... IF EXISTS for tolerant scripts)")
+      case CreateConstraint =>
+        throw new CypherException(
+          CypherError.SemanticError, CypherError.CompileTime,
+          CypherError.UnsupportedExpression,
+          "constraints are not supported: this engine computes over " +
+            "immutable snapshots and cannot enforce uniqueness/existence " +
+            "rules; refusing rather than silently not enforcing")
     }
   }
 
@@ -532,40 +473,26 @@ class GraftSession(val spark: SparkSession) {
     * whose tables are lazy views over the old ones (beyond-reference
     * surface: the reference engine is read-only). */
   def update(graph: PropertyGraph, query: String,
-      params: Map[String, Any] = Map.empty): PropertyGraph = {
-    val ast = CypherParser.parse(query)
-    val planner = new Planner(spark, graph, params, None, graphByName,
-      functions.toMap, procedures.toMap)
-    classifyingTypeErrors { planner.plan(ast) }
-    planner.updatedGraph.getOrElse(
-      throw new IllegalArgumentException("query has no write clauses"))
-  }
+      params: Map[String, Any] = Map.empty): PropertyGraph =
+    written(plan(graph, queryOf(query, "update"), params)._1)
 
   /** Like update(), additionally returning the RETURN rows of the write
     * query (`CREATE (n) RETURN n.p`). */
   def updateWithResult(graph: PropertyGraph, query: String,
       params: Map[String, Any] = Map.empty): (DataFrame, PropertyGraph) = {
-    val ast = CypherParser.parse(query)
-    val planner = new Planner(spark, graph, params, None, graphByName,
-      functions.toMap, procedures.toMap)
-    val (df, outs, header) = classifyingTypeErrors { planner.plan(ast) }
-    val rows = planner.render(df, outs, header)
-    (rows, planner.updatedGraph.getOrElse(
-      throw new IllegalArgumentException("query has no write clauses")))
+    val (planner, rows) = plan(graph, queryOf(query, "updateWithResult"), params)
+    (rows(), written(planner))
   }
+
+  private def written(planner: Planner): PropertyGraph =
+    planner.updatedGraph.getOrElse(
+      throw new IllegalArgumentException("query has no write clauses"))
 
   /** Run a query ending in CONSTRUCT ... RETURN GRAPH; returns the built
     * graph (reference multiple-graphs support, SURVEY §2.6). */
   def cypherGraph(graph: PropertyGraph, query: String,
-      params: Map[String, Any] = Map.empty): PropertyGraph = {
-    val ast = CypherParser.parse(query)
-    val planner = new Planner(spark, graph, params, None, graphByName,
-      functions.toMap, procedures.toMap)
-    planner.plan(ast)
-    planner.constructedGraph.getOrElse(
-      throw new IllegalArgumentException(
-        "query does not end in CONSTRUCT ... RETURN GRAPH"))
-  }
+      params: Map[String, Any] = Map.empty): PropertyGraph =
+    graphOf(graph, queryOf(query, "cypherGraph"), params)
 
   /** CATALOG CREATE GRAPH equivalent: run a graph-returning query and
     * register the result under a name. */

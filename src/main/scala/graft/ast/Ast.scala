@@ -198,9 +198,19 @@ case class With(distinct: Boolean, star: Boolean, items: Seq[ReturnItem],
 case class Return(distinct: Boolean, star: Boolean, items: Seq[ReturnItem],
     orderBy: Seq[SortItem], skip: Option[Expr], limit: Option[Expr])
     extends Clause
-/** FROM GRAPH <name> / USE <name>: switch the ambient graph (plan-time,
+/** Graph reference in FROM GRAPH / USE / CONSTRUCT ON: a possibly
+  * qualified name (`ns.graph`, backticks already removed), a view
+  * invocation whose arguments are references themselves (`inc(inc(a))`),
+  * or a view parameter `$p` (parsed only inside a CATALOG CREATE VIEW
+  * body). The session resolves it; nothing re-parses it as text. */
+sealed trait GraphRef
+case class GraphName(parts: Seq[String]) extends GraphRef
+case class ViewCall(name: String, args: Seq[GraphRef]) extends GraphRef
+case class GraphParam(name: String) extends GraphRef
+
+/** FROM GRAPH <ref> / USE <ref>: switch the ambient graph (plan-time,
   * reference FromCatalogGraph / SwitchContext). */
-case class FromGraph(name: String) extends Clause
+case class FromGraph(ref: GraphRef) extends Clause
 /** CALL proc(args) [YIELD cols]: table procedure invocation (beyond-parity;
   * the reference has no procedure surface). */
 case class CallProc(name: String, args: Seq[Expr],
@@ -259,7 +269,7 @@ case class Foreach(variable: String, list: Expr, updates: Seq[Clause])
   * new graph from the current driving table (reference
   * ConstructGraphPlanner, SURVEY §2.6). Bound node vars are cloned; unbound
   * ones are created per row; ON merges catalog graphs into the result. */
-case class Construct(on: Seq[String], news: Seq[PatternPart],
+case class Construct(on: Seq[GraphRef], news: Seq[PatternPart],
     sets: Seq[SetItem], clones: Seq[(String, String)] = Seq.empty)
     extends Clause
 
@@ -275,3 +285,32 @@ case object ReturnGraph extends Clause
 case class SingleQuery(clauses: Seq[Clause])
 /** rest entries are (unionAll, query). */
 case class Query(first: SingleQuery, rest: Seq[(Boolean, SingleQuery)])
+    extends Statement
+
+// --- statements --------------------------------------------------------------
+/** Everything `CypherParser.parseStatement` accepts: a query, or one of the
+  * session-level statements, which have no Spark plan. */
+sealed trait Statement extends Product
+/** EXPLAIN / PROFILE <statement>: plan, never run. */
+case class Explain(profile: Boolean, inner: Statement) extends Statement
+/** CATALOG CREATE GRAPH name { query }: store the query's result graph. */
+case class CatalogCreateGraph(name: String, body: Query) extends Statement
+/** CATALOG CREATE VIEW name($p, ...) { query }: a parameterized graph
+  * view; `$p` graph references in the body bind at each invocation. */
+case class CatalogCreateView(name: String, params: Seq[String], body: Query)
+    extends Statement
+case class CatalogDrop(view: Boolean, name: String) extends Statement
+case object ShowProcedures extends Statement
+/** SHOW [USER DEFINED] FUNCTIONS. */
+case object ShowFunctions extends Statement
+/** SHOW [ALL|TEXT|POINT|RANGE|LOOKUP|FULLTEXT|VECTOR] INDEXES. */
+case object ShowIndexes extends Statement
+/** SHOW [ALL] CONSTRAINTS. */
+case object ShowConstraints extends Statement
+/** CREATE [kind] INDEX ... / DROP INDEX ...: the body is not retained —
+  * indexes are performance-only, so the statement is a no-op. */
+case object IndexDdl extends Statement
+/** CREATE CONSTRAINT ...: refused (enforcement cannot be faked). */
+case object CreateConstraint extends Statement
+/** DROP CONSTRAINT name [IF EXISTS]. */
+case class DropConstraint(ifExists: Boolean) extends Statement

@@ -35,8 +35,8 @@ object Planner {
 class Planner(spark: SparkSession, graph0: PropertyGraph,
     params: Map[String, Any] = Map.empty,
     drivingTable: Option[DataFrame] = None,
-    resolveGraph: String => PropertyGraph = n =>
-      throw new CypherCompileException(s"unknown graph $n (no catalog)"),
+    resolveGraph: GraphRef => PropertyGraph = r =>
+      throw new CypherCompileException(s"unknown graph $r (no catalog)"),
     extensions: Map[String, Seq[Column] => Column] = Map.empty,
     procedures: Map[String, (PropertyGraph, Seq[Any]) => DataFrame] = Map.empty) {
 
@@ -317,8 +317,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         // pinned by the clauses before it; the result is zero rows (and,
         // with no Return outs, zero columns).
         ctx = Ctx(ctx.df.limit(0), ctx.header)
-      case (FromGraph(name), _) =>
-        requireNoWrites("FROM GRAPH"); graph = resolveGraph(name)
+      case (FromGraph(ref), _) =>
+        requireNoWrites("FROM GRAPH"); graph = resolveGraph(ref)
       case (ReturnGraph, _) =>
         // The working graph — after FROM GRAPH switches and writes (the
         // ambient graph is already the written state at this point).
@@ -416,7 +416,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     * one element per row with fresh tagged ids. The construct table is
     * persisted before slicing into scans so monotonically_increasing_id is
     * evaluated exactly once (the determinism hazard SURVEY §4 flags). */
-  private def planConstruct(ctx0: Ctx, on: Seq[String], news: Seq[PatternPart],
+  private def planConstruct(ctx0: Ctx, on: Seq[GraphRef], news: Seq[PatternPart],
       sets: Seq[SetItem], clones: Seq[(String, String)] = Seq.empty)
       : PropertyGraph = {
     rejectLabelExprs(news, "CONSTRUCT")

@@ -10,6 +10,11 @@ import graft.ast._
 object CypherParser {
   def parse(query: String): Query = new Parser(Lexer.tokenize(query)).parseQuery()
 
+  /** Any statement: a query, EXPLAIN / PROFILE, CATALOG, SHOW, or index and
+    * constraint DDL. */
+  def parseStatement(text: String): Statement =
+    new Parser(Lexer.tokenize(text)).parseStatement()
+
   /** Temporal type names that form namespaced function calls
     * (`duration.between(...)`, `datetime.truncate(...)`). */
   private val temporalNamespaces: Set[String] =
@@ -162,17 +167,27 @@ object CypherParser {
       if (isKw(s)) p += 1 else fail(s"expected $s")
     private def tryKw(s: String): Boolean = if (isKw(s)) { p += 1; true } else false
 
+    /** The token at `i` is the upper-case word `w`: an identifier in any
+      * case, or the keyword. Unreserved words (statement words, LET,
+      * OFFSET, hints, path selectors) are matched this way, in context, so
+      * they stay usable as names. */
+    private def wordAt(i: Int, w: String): Boolean = tokAt(i) match {
+      case Ident(s, _) => s.equalsIgnoreCase(w)
+      case Kw(k, _, _) => k == w
+      case _ => false
+    }
+    private def isWord(w: String): Boolean = wordAt(p, w)
+    private def tryWord(w: String): Boolean =
+      if (isWord(w)) { p += 1; true } else false
+    private def eatWord(w: String): Unit =
+      if (!tryWord(w)) fail(s"expected $w, got $peek")
+
     /** After UNION: optional ALL, or the explicit GQL DISTINCT keyword
       * (the default, so it parses to all=false). */
     private def unionAll(): Boolean =
       if (tryKw("ALL")) true else { tryKw("DISTINCT"); false }
     /** SKIP or its Cypher-5 synonym OFFSET (an Ident, not a keyword). */
-    private def trySkipWord(): Boolean =
-      if (isKw("SKIP")) { p += 1; true }
-      else peek match {
-        case Ident(w, _) if w.equalsIgnoreCase("OFFSET") => p += 1; true
-        case _ => false
-      }
+    private def trySkipWord(): Boolean = tryKw("SKIP") || tryWord("OFFSET")
     private def isPunct(s: String): Boolean = peek match {
       case Punct(x, _) => x == s
       case _ => false
@@ -188,49 +203,143 @@ object CypherParser {
       case t => fail(s"expected identifier, got $t")
     }
 
+    // ---- statements ----
+    def parseStatement(): Statement = {
+      val s =
+        if (tryWord("EXPLAIN")) Explain(profile = false, statementBody())
+        else if (tryWord("PROFILE")) Explain(profile = true, statementBody())
+        else statementBody()
+      end()
+      s
+    }
+
+    private val indexKinds =
+      Seq("TEXT", "POINT", "RANGE", "LOOKUP", "FULLTEXT", "VECTOR")
+
+    private def statementBody(): Statement = {
+      // `CREATE index = (a)` binds a path named index: DDL words only
+      // count when no `=` follows them.
+      def ddlWordAt(i: Int, w: String) = wordAt(i, w) &&
+        (tokAt(i + 1) match { case Punct("=", _) => false; case _ => true })
+      val createIndex = isWord("CREATE") && (ddlWordAt(p + 1, "INDEX") ||
+        indexKinds.exists(wordAt(p + 1, _)) && ddlWordAt(p + 2, "INDEX"))
+      if (tryWord("CATALOG")) parseCatalog()
+      else if (tryWord("SHOW")) parseShow()
+      else if (createIndex || isWord("DROP") && wordAt(p + 1, "INDEX")) {
+        skipStatement(); IndexDdl
+      } else if (isWord("CREATE") && ddlWordAt(p + 1, "CONSTRAINT")) {
+        skipStatement(); CreateConstraint
+      } else if (isWord("DROP") && wordAt(p + 1, "CONSTRAINT")) {
+        p += 2
+        ident()
+        val ifExists = tryWord("IF")
+        if (ifExists) eatKw("EXISTS") else skipStatement()
+        DropConstraint(ifExists)
+      } else queryBody()
+    }
+
+    /** Index and constraint DDL bodies are not retained (the statements
+      * are no-ops or refusals): skip to the terminator. */
+    private def skipStatement(): Unit =
+      while (!isPunct(";") && !peek.isInstanceOf[Eof]) p += 1
+
+    private def parseShow(): Statement =
+      if (tryWord("PROCEDURES")) ShowProcedures
+      else if (tryWord("USER")) {
+        eatWord("DEFINED"); eatWord("FUNCTIONS"); ShowFunctions
+      } else if (tryWord("FUNCTIONS")) ShowFunctions
+      else if (tryWord("CONSTRAINTS") ||
+          isWord("ALL") && wordAt(p + 1, "CONSTRAINTS") && { p += 2; true })
+        ShowConstraints
+      else {
+        if (isWord("ALL") || indexKinds.exists(isWord)) p += 1
+        eatWord("INDEXES"); ShowIndexes
+      }
+
+    /** CATALOG CREATE GRAPH / CREATE VIEW / DROP GRAPH|VIEW (the
+      * reference's CatalogDDL surface). Bodies parse here, once. */
+    private def parseCatalog(): Statement =
+      if (tryWord("DROP")) {
+        val view = tryWord("VIEW")
+        if (!view) eatKw("GRAPH")
+        CatalogDrop(view, ident())
+      } else {
+        eatKw("CREATE")
+        if (tryKw("GRAPH")) CatalogCreateGraph(ident(), bracedQuery())
+        else {
+          eatWord("VIEW")
+          val name = ident()
+          val params = Seq.newBuilder[String]
+          def param(): Unit = { tryPunct("$"); params += ident() }
+          eatPunct("(")
+          if (!isPunct(")")) { param(); while (tryPunct(",")) param() }
+          eatPunct(")")
+          val ps = params.result()
+          graphParams = ps.toSet
+          CatalogCreateView(name, ps, bracedQuery())
+        }
+      }
+
+    private def bracedQuery(): Query = {
+      eatPunct("{")
+      val q = queryBody()
+      eatPunct("}")
+      q
+    }
+
+    /** Parameters of the view body being parsed: the only place a `$p`
+      * graph reference is valid. */
+    private var graphParams = Set.empty[String]
+
     // ---- query / clauses ----
     def parseQuery(): Query = {
+      val q = queryBody()
+      end()
+      q
+    }
+
+    /** A single trailing statement terminator is tolerated (statements
+      * pasted from cypher-shell / Browser end in one); anything after it is
+      * still a trailing-token error. */
+    private def end(): Unit = {
+      tryPunct(";")
+      peek match {
+        case Eof(_) =>
+        case t => fail(s"unexpected trailing token $t")
+      }
+    }
+
+    private def queryBody(): Query = {
       // Neo4j query preamble `CYPHER [version] [key=value ...]` (e.g.
       // `CYPHER 25 runtime=parallel MATCH …`): version pins and
       // planner/runtime options name Neo4j machinery with no analogue
       // here (Catalyst owns planning) — accepted and DISCARDED so queries
       // copied from Neo4j applications run unmodified. Documented in
       // tck_blacklist.md.
-      peek match {
-        case Ident(s, _) if s.equalsIgnoreCase("CYPHER") =>
-          p += 1
-          var more = true
-          while (more) peek match {
-            case NumTok(_, _) => p += 1 // version: 5 / 25 / 2025.06
-            case Ident(_, _) if (peek2 match {
-              case Punct("=", _) => true
-              case _ => false
-            }) =>
-              p += 2
-              peek match {
-                case Ident(_, _) | NumTok(_, _) => p += 1
-                case t => fail(s"expected a CYPHER option value, got $t")
-              }
-            case _ => more = false
-          }
-        case _ =>
+      if (tryWord("CYPHER")) {
+        var more = true
+        while (more) peek match {
+          case NumTok(_, _) => p += 1 // version: 5 / 25 / 2025.06
+          case Ident(_, _) if (peek2 match {
+            case Punct("=", _) => true
+            case _ => false
+          }) =>
+            p += 2
+            peek match {
+              case Ident(_, _) | NumTok(_, _) => p += 1
+              case t => fail(s"expected a CYPHER option value, got $t")
+            }
+          case _ => more = false
+        }
       }
       // Neo4j 4.x `USING PERIODIC COMMIT [n]` (LOAD CSV batching):
       // accepted and DISCARDED like the other USING hints — the engine
       // has no transaction machinery to batch, and LOAD CSV runs as one
       // distributed scan. Keeps 4.x migration scripts running unmodified.
-      peek match {
-        case Ident(s, _) if s.equalsIgnoreCase("USING") && (peek2 match {
-          case Ident(w, _) => w.equalsIgnoreCase("PERIODIC")
-          case _ => false
-        }) =>
-          p += 2
-          peek match {
-            case Ident(w, _) if w.equalsIgnoreCase("COMMIT") => p += 1
-            case t => fail(s"expected COMMIT after USING PERIODIC, got $t")
-          }
-          peek match { case NumTok(_, _) => p += 1; case _ => () }
-        case _ =>
+      if (isWord("USING") && wordAt(p + 1, "PERIODIC")) {
+        p += 2
+        eatWord("COMMIT")
+        peek match { case NumTok(_, _) => p += 1; case _ => () }
       }
       def unionQuery(): Query = {
         val first = parseSingleQuery()
@@ -241,10 +350,6 @@ object CypherParser {
         }
         Query(first, rest.result())
       }
-      def atNext: Boolean = peek match {
-        case Ident(s, _) if s.equalsIgnoreCase("NEXT") => true
-        case _ => false
-      }
       var q = unionQuery()
       // GQL / Cypher-2025 linear composition: `q1 NEXT q2 NEXT …` — each
       // segment's RETURN columns become (exactly) the working table of
@@ -252,22 +357,11 @@ object CypherParser {
       // onto WITH (the re-scoping projection NEXT specifies); a UNION
       // first segment plans as an uncorrelated CALL { } whose output
       // rows seed the working table.
-      if (atNext) {
+      if (isWord("NEXT")) {
         val segs = Seq.newBuilder[Query]
         segs += q
-        while (atNext) { p += 1; segs += unionQuery() }
+        while (tryWord("NEXT")) segs += unionQuery()
         q = desugarNext(segs.result())
-      }
-      // A single trailing statement terminator is tolerated (queries
-      // pasted from cypher-shell / Browser end in one); anything after
-      // it is still a trailing-token error.
-      peek match {
-        case Punct(";", _) => p += 1
-        case _ => ()
-      }
-      peek match {
-        case Eof(_) =>
-        case t => fail(s"unexpected trailing token $t")
       }
       q
     }
@@ -337,13 +431,7 @@ object CypherParser {
               Seq.empty, None, None, Some(parseExpr()))
           case Kw("ORDER", _, _) =>
             val order = parseOrderBy()
-            val skip =
-              if (tryKw("SKIP")) Some(parseExpr())
-              else peek match {
-                case Ident(w, _) if w.equalsIgnoreCase("OFFSET") =>
-                  p += 1; Some(parseExpr())
-                case _ => None
-              }
+            val skip = if (trySkipWord()) Some(parseExpr()) else None
             val limit = if (tryKw("LIMIT")) Some(parseExpr()) else None
             clauses += With(distinct = false, star = true, Seq.empty,
               order, skip, limit, None)
@@ -424,10 +512,10 @@ object CypherParser {
             p += 1; eatKw("DELETE"); clauses += parseDelete(detach = true)
           case Kw("CONSTRUCT", _, _) =>
             p += 1
-            val on = Seq.newBuilder[String]
+            val on = Seq.newBuilder[GraphRef]
             if (tryKw("ON")) {
-              on += ident()
-              while (tryPunct(",")) on += ident()
+              on += parseGraphRef()
+              while (tryPunct(",")) on += parseGraphRef()
             }
             val parts = Seq.newBuilder[PatternPart]
             val sets = Seq.newBuilder[SetItem]
@@ -478,33 +566,18 @@ object CypherParser {
           case Ident(s, _) if s.equalsIgnoreCase("FINISH") =>
             p += 1; clauses += Finish; done = true
           // LOAD CSV [WITH HEADERS] FROM url AS var [FIELDTERMINATOR s]
-          case Ident(s, _) if s.equalsIgnoreCase("LOAD") &&
-              (peek2 match {
-                case Ident(c, _) => c.equalsIgnoreCase("CSV")
-                case _ => false
-              }) =>
+          case Ident(s, _) if s.equalsIgnoreCase("LOAD") && wordAt(p + 1, "CSV") =>
             p += 2
-            val headers = if (isKw("WITH")) {
-              p += 1
-              peek match {
-                case Ident(h, _) if h.equalsIgnoreCase("HEADERS") =>
-                  p += 1; true
-                case t => fail(s"expected HEADERS after LOAD CSV WITH, got $t")
-              }
-            } else false
+            val headers = tryKw("WITH") && { eatWord("HEADERS"); true }
             eatKw("FROM")
             val url = parseExpr()
             eatKw("AS")
             val alias = ident()
-            val sep = peek match {
-              case Ident(f, _) if f.equalsIgnoreCase("FIELDTERMINATOR") =>
-                p += 1
-                advance() match {
-                  case StrTok(t, _) => Some(t)
-                  case t => fail(s"expected a string FIELDTERMINATOR, got $t")
-                }
-              case _ => None
-            }
+            val sep = if (!tryWord("FIELDTERMINATOR")) None
+              else advance() match {
+                case StrTok(t, _) => Some(t)
+                case t => fail(s"expected a string FIELDTERMINATOR, got $t")
+              }
             clauses += LoadCsv(headers, url, alias, sep)
           // INSERT: the GQL-conformant CREATE synonym (Neo4j 5.18).
           case Ident(s, _) if s.equalsIgnoreCase("INSERT") &&
@@ -519,10 +592,7 @@ object CypherParser {
             clauses += Create(Pattern(parts.result()))
           // NODETACH DELETE: the explicit non-detaching form (Neo4j 5).
           case Ident(s, _) if s.equalsIgnoreCase("NODETACH") &&
-              (peek2 match {
-                case Kw("DELETE", _, _) => true
-                case _ => false
-              }) =>
+              wordAt(p + 1, "DELETE") =>
             p += 2; clauses += parseDelete(detach = false)
           case _ => done = true
         }
@@ -670,28 +740,19 @@ object CypherParser {
       //   USING [RANGE|TEXT|POINT] INDEX [SEEK] v:Label(prop[, prop…])
       //   USING SCAN v:Label
       //   USING JOIN ON v[, v…]
-      def word(s: String): Boolean = peek match {
-        case Ident(w, _) => w.equalsIgnoreCase(s)
-        case Kw(k, _, _) => k.equalsIgnoreCase(s)
-        case _ => false
-      }
-      while (word("USING")) {
-        p += 1
-        if (word("RANGE") || word("TEXT") || word("POINT")) p += 1
-        if (word("INDEX")) {
-          p += 1
-          if (word("SEEK")) p += 1
+      while (tryWord("USING")) {
+        tryWord("RANGE") || tryWord("TEXT") || tryWord("POINT")
+        if (tryWord("INDEX")) {
+          tryWord("SEEK")
           ident(); eatPunct(":"); ident()
           eatPunct("(")
           ident()
           while (tryPunct(",")) ident()
           eatPunct(")")
-        } else if (word("SCAN")) {
-          p += 1; ident(); eatPunct(":"); ident()
-        } else if (word("JOIN")) {
-          p += 1
-          if (word("ON")) p += 1
-          else fail(s"expected ON after USING JOIN, got $peek")
+        } else if (tryWord("SCAN")) {
+          ident(); eatPunct(":"); ident()
+        } else if (tryWord("JOIN")) {
+          eatWord("ON")
           ident()
           while (tryPunct(",")) ident()
         } else fail(s"expected INDEX, SCAN or JOIN after USING, got $peek")
@@ -720,21 +781,28 @@ object CypherParser {
     }
 
     /** Graph reference: a possibly-qualified name (ns.graph, backticked
-      * segments allowed) or a view invocation name(ref, ...), kept as
-      * text — the session resolves it (possibly recursively). */
-    private def parseGraphRef(): String = {
-      var n = ident()
-      while (tryPunct(".")) n += "." + ident()
-      if (tryPunct("(")) {
-        val args = Seq.newBuilder[String]
-        if (!isPunct(")")) {
-          args += parseGraphRef()
-          while (tryPunct(",")) args += parseGraphRef()
-        }
-        eatPunct(")")
-        n + "(" + args.result().mkString(",") + ")"
-      } else n
-    }
+      * segments allowed), a view invocation name(ref, ...), or a view
+      * parameter `$p` inside a view body. */
+    private def parseGraphRef(): GraphRef =
+      if (tryPunct("$")) {
+        val n = ident()
+        if (!graphParams(n)) fail(s"graph parameter $$$n outside a " +
+          "CATALOG CREATE VIEW body that declares it")
+        GraphParam(n)
+      } else {
+        val parts = Seq.newBuilder[String]
+        parts += ident()
+        while (tryPunct(".")) parts += ident()
+        if (tryPunct("(")) {
+          val args = Seq.newBuilder[GraphRef]
+          if (!isPunct(")")) {
+            args += parseGraphRef()
+            while (tryPunct(",")) args += parseGraphRef()
+          }
+          eatPunct(")")
+          ViewCall(parts.result().mkString("."), args.result())
+        } else GraphName(parts.result())
+      }
 
     private def parseReturn(): Return = {
       val distinct = tryKw("DISTINCT")
@@ -796,31 +864,22 @@ object CypherParser {
       //   ANY [SHORTEST | k] | ALL SHORTEST | SHORTEST k [GROUP|GROUPS] | ALL
       // each with an optional PATH/PATHS noise word. Bare ALL is the default
       // semantics and parses to no selector.
-      def selWord(s: String): Boolean = peek match {
-        case Ident(n, _) => n.equalsIgnoreCase(s)
-        case Kw(k, _, _) => k == s
-        case _ => false
-      }
       def selInt(): Option[Int] = peek match {
         case NumTok(s, _) if s.nonEmpty && s.forall(_.isDigit) =>
           p += 1; Some(s.toInt)
         case _ => None
       }
-      def pathNoise(): Unit =
-        if (selWord("PATH") || selWord("PATHS")) p += 1
-      def groupsWord(): Boolean =
-        if (selWord("GROUP") || selWord("GROUPS")) { p += 1; true } else false
+      def pathNoise(): Unit = tryWord("PATH") || tryWord("PATHS")
+      def groupsWord(): Boolean = tryWord("GROUP") || tryWord("GROUPS")
       val kwSel: Option[PathSelector] =
-        if (selWord("ANY")) {
-          p += 1
-          if (selWord("SHORTEST")) { p += 1; pathNoise(); Some(PathSelector("shortest")) }
+        if (tryWord("ANY")) {
+          if (tryWord("SHORTEST")) { pathNoise(); Some(PathSelector("shortest")) }
           else selInt() match {
             case Some(k) if k < 1 => fail("path-selector count must be >= 1")
             case Some(k) if k >= 2 => pathNoise(); Some(PathSelector("shortestk", k))
             case _ => pathNoise(); Some(PathSelector("shortest"))
           }
-        } else if (selWord("SHORTEST")) {
-          p += 1
+        } else if (tryWord("SHORTEST")) {
           val k = selInt().getOrElse(
             fail("SHORTEST path selector needs a count (SHORTEST k [GROUPS])"))
           if (k < 1) fail("path-selector count must be >= 1")
@@ -831,13 +890,10 @@ object CypherParser {
           else
             Some(if (k == 1) PathSelector("shortest")
                  else PathSelector("shortestk", k))
-        } else if (selWord("ALL") && (peek2 match {
-            case Ident(n, _) => n.equalsIgnoreCase("SHORTEST") ||
-              n.equalsIgnoreCase("PATH") || n.equalsIgnoreCase("PATHS")
-            case _ => false
-          })) {
+        } else if (isWord("ALL") && Seq("SHORTEST", "PATH", "PATHS")
+            .exists(wordAt(p + 1, _))) {
           p += 1
-          if (selWord("SHORTEST")) { p += 1; pathNoise(); Some(PathSelector("allshortest")) }
+          if (tryWord("SHORTEST")) { pathNoise(); Some(PathSelector("allshortest")) }
           else { pathNoise(); None } // ALL PATHS = default semantics
         } else None
       // legacy shortestPath(...) / allShortestPaths(...) function wrapper
@@ -1199,12 +1255,9 @@ object CypherParser {
     private def parseNormalizedTail(): Option[String] = peek match {
       case Ident(s, _) if s.equalsIgnoreCase("NORMALIZED") =>
         p += 1; Some("NFC")
-      case Ident(s, _) if graft.functions.UnicodeNormalize.forms(s.toUpperCase) =>
-        peek2 match {
-          case Ident(n, _) if n.equalsIgnoreCase("NORMALIZED") =>
-            p += 2; Some(s.toUpperCase)
-          case _ => None
-        }
+      case Ident(s, _) if graft.functions.UnicodeNormalize.forms(s.toUpperCase) &&
+          wordAt(p + 1, "NORMALIZED") =>
+        p += 2; Some(s.toUpperCase)
       case _ => None
     }
 
@@ -1234,11 +1287,7 @@ object CypherParser {
             p += 1
             val negated = tryKw("NOT")
             // IS [NOT] TYPED <type> is the GQL keyword synonym of `::`.
-            val typed = tryPunct("::") || (peek match {
-              case Ident(s, _) if s.equalsIgnoreCase("TYPED") =>
-                p += 1; true
-              case _ => false
-            })
+            val typed = tryPunct("::") || tryWord("TYPED")
             if (typed) e = IsTyped(e, parseTypeSpec(), negated)
             else parseNormalizedTail() match {
               case Some(form) => e = IsNormalized(e, form, negated)
@@ -1287,13 +1336,6 @@ object CypherParser {
         case _ => false
       }) =>
         p += 1
-        def word(s: String): Boolean = peek match {
-          case Ident(w, _) => w.equalsIgnoreCase(s)
-          case Kw(k, _, _) => k.equalsIgnoreCase(s)
-          case _ => false
-        }
-        def eatWord(s: String): Unit =
-          if (word(s)) p += 1 else fail(s"expected $s, got $peek")
         // integer literal or $parameter (batch size / concurrency)
         def numOrParam(): Boolean = peek match {
           case NumTok(_, _) => p += 1; true
@@ -1302,48 +1344,33 @@ object CypherParser {
         }
         // [n|$p] CONCURRENT
         if (numOrParam()) eatWord("CONCURRENT")
-        else if (word("CONCURRENT")) p += 1
+        else tryWord("CONCURRENT")
         eatWord("TRANSACTIONS")
         if (tryKw("OF")) {
           if (!numOrParam()) fail(s"expected a row count after OF, got $peek")
-          peek match {
-            case Ident(w, _) if w.equalsIgnoreCase("ROWS") ||
-                w.equalsIgnoreCase("ROW") => p += 1
-            case t => fail(s"expected ROWS, got $t")
-          }
+          if (!tryWord("ROWS") && !tryWord("ROW")) fail(s"expected ROWS, got $peek")
         }
         var onErrorSkips = false // CONTINUE or BREAK (REPORT STATUS gate)
-        if (word("ON")) {
-          p += 1; eatWord("ERROR")
-          def handler(): Unit = peek match {
-            case Ident(w, _) if w.equalsIgnoreCase("CONTINUE") ||
-                w.equalsIgnoreCase("BREAK") =>
-              p += 1; onErrorSkips = true
-            case Ident(w, _) if w.equalsIgnoreCase("FAIL") => p += 1
-            case t => fail(s"expected CONTINUE, BREAK or FAIL, got $t")
-          }
-          peek match {
-            case Ident(w, _) if w.equalsIgnoreCase("RETRY") =>
-              p += 1
-              if (word("FOR")) {
-                p += 1; parseExpr() // max retry duration value
-                // Neo4j 2025 writes the duration with a unit word
-                // (`RETRY FOR 5 SECONDS`); a bare duration expression
-                // stays legal too.
-                peek match {
-                  case Ident(w2, _) if Seq("SECOND", "SECONDS",
-                      "MILLISECOND", "MILLISECONDS", "MINUTE", "MINUTES",
-                      "HOUR", "HOURS").exists(w2.equalsIgnoreCase) =>
-                    p += 1
-                  case _ =>
-                }
-              }
-              if (word("THEN")) { p += 1; handler() }
-            case _ => handler()
-          }
+        if (tryWord("ON")) {
+          eatWord("ERROR")
+          def handler(): Unit =
+            if (tryWord("CONTINUE") || tryWord("BREAK")) onErrorSkips = true
+            else if (!tryWord("FAIL"))
+              fail(s"expected CONTINUE, BREAK or FAIL, got $peek")
+          if (tryWord("RETRY")) {
+            if (tryWord("FOR")) {
+              parseExpr() // max retry duration value
+              // Neo4j 2025 writes the duration with a unit word
+              // (`RETRY FOR 5 SECONDS`); a bare duration expression
+              // stays legal too.
+              Seq("SECOND", "SECONDS", "MILLISECOND", "MILLISECONDS",
+                "MINUTE", "MINUTES", "HOUR", "HOURS").exists(tryWord)
+            }
+            if (tryWord("THEN")) handler()
+          } else handler()
         }
-        if (word("REPORT")) {
-          p += 1; eatWord("STATUS")
+        if (tryWord("REPORT")) {
+          eatWord("STATUS")
           if (!tryKw("AS")) fail(s"expected AS after REPORT STATUS, got $peek")
           val v = ident()
           if (!onErrorSkips) fail(
@@ -1840,15 +1867,9 @@ object CypherParser {
           })) {
             // SQL-style TRIM (Cypher 5):
             // trim([[BOTH|LEADING|TRAILING] [char] FROM] input)
-            val fn = peek match {
-              case Ident(w, _) if w.equalsIgnoreCase("LEADING") =>
-                p += 1; "ltrim"
-              case Ident(w, _) if w.equalsIgnoreCase("TRAILING") =>
-                p += 1; "rtrim"
-              case Ident(w, _) if w.equalsIgnoreCase("BOTH") =>
-                p += 1; "trim"
-              case _ => "trim"
-            }
+            val fn = if (tryWord("LEADING")) "ltrim"
+              else if (tryWord("TRAILING")) "rtrim"
+              else { tryWord("BOTH"); "trim" }
             val ch = if (tryKw("FROM")) None
               else { val c = parseExpr(); eatKw("FROM"); Some(c) }
             val input = parseExpr()

@@ -214,6 +214,29 @@ class AdviceRegressionSpec extends SparkTestBase {
     assert(!s.catalog.contains("ghost"), "EXPLAIN must not create the graph")
     s.cypher(graph, "EXPLAIN CATALOG DROP VIEW someview")
     assert(s.viewNames.isEmpty)
+    // Any non-query statement: described, not run (CREATE CONSTRAINT
+    // would raise if it ran).
+    val constraintPlan = s.cypher(graph,
+      "EXPLAIN CREATE CONSTRAINT c FOR (n:Person) REQUIRE n.name IS UNIQUE")
+    assert(constraintPlan.columns.toSeq === Seq("plan"))
+  }
+
+  test("update / updateWithResult / cypherGraph refuse non-query statements by kind") {
+    val s = new GraftSession(spark)
+    s.store("keepme", graph)
+    val entries = Seq[(String, String => Any)](
+      "update" -> (q => s.update(graph, q)),
+      "updateWithResult" -> (q => s.updateWithResult(graph, q)),
+      "cypherGraph" -> (q => s.cypherGraph(graph, q)))
+    for ((op, run) <- entries) {
+      val e = intercept[graft.api.CypherException] {
+        run("CATALOG DROP GRAPH keepme")
+      }
+      assert(e.detail === graft.api.CypherError.InvalidClauseComposition, op)
+      assert(e.getMessage.contains(op) && e.getMessage.contains("CatalogDrop"),
+        e.getMessage)
+    }
+    assert(s.catalog.contains("keepme"))
   }
 
   // --- round-13 medium (ADVICE r13): in a MIXED literal list, a

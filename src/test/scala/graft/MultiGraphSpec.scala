@@ -368,6 +368,56 @@ class MultiGraphSpec extends SparkTestBase {
     session.cypher(g, "CATALOG DROP VIEW dropme") // second drop: no error
   }
 
+  test("CATALOG CREATE GRAPH / VIEW / DROP accept backticked names") {
+    val sess = new GraftSession(spark)
+    val g = miniGraph(Seq("x"), "A")
+    sess.store("bt_src", g)
+    def count(ref: String): Long = sess.cypher(g,
+      s"FROM GRAPH $ref MATCH (a:A) RETURN count(*) AS n").collect().head.getLong(0)
+    sess.cypher(g, "CATALOG CREATE GRAPH `bt` { FROM GRAPH bt_src RETURN GRAPH }")
+    assert(count("bt") === 1L)
+    assert(count("`bt`") === 1L)
+    sess.cypher(g, "CATALOG CREATE VIEW `bt view`($g1) " +
+      "{ FROM GRAPH $g1 MATCH (a:A) CONSTRUCT CLONE a RETURN GRAPH }")
+    assert(count("`bt view`(`bt`)") === 1L)
+    sess.cypher(g, "CATALOG DROP GRAPH `bt`")
+    sess.cypher(g, "CATALOG DROP VIEW `bt view`")
+    assert(!sess.catalog.contains("bt"))
+    assert(sess.viewNames.isEmpty)
+  }
+
+  test("a view body binds its graph parameters, not their spelling in literals") {
+    val sess = new GraftSession(spark)
+    val g = miniGraph(Seq("x"), "A")
+    sess.store("vb_a", g)
+    sess.cypher(g, "CATALOG CREATE VIEW lit($g1) { FROM GRAPH $g1 MATCH (a:A) " +
+      "CONSTRUCT CREATE (:T {s: '$g1'}) RETURN GRAPH }")
+    assert(sess.cypher(g, "FROM GRAPH lit(vb_a) MATCH (t:T) RETURN t.s AS s")
+      .collect().map(_.getString(0)).toSeq === Seq("$g1"))
+  }
+
+  test("the catalog holds no temporary graphs while a view resolves") {
+    val sess = new GraftSession(spark)
+    val g = miniGraph(Seq("x"), "A")
+    sess.store("vc_a", g)
+    val before = sess.catalog.keySet.toSet
+    var seen = Set.empty[String]
+    sess.registerSource("probe", _ => { seen = sess.catalog.keySet.toSet; g })
+    sess.cypher(g, "CATALOG CREATE VIEW vc($g1) { FROM GRAPH probe.x " +
+      "MATCH (a:A) CONSTRUCT ON $g1 CLONE a RETURN GRAPH }")
+    sess.cypher(g, "FROM GRAPH vc(vc_a) MATCH (a:A) RETURN count(*) AS n").collect()
+    assert(seen === before)
+  }
+
+  test("CATALOG CREATE VIEW rejects a body with a syntax error") {
+    val sess = new GraftSession(spark)
+    intercept[graft.api.CypherException] {
+      sess.cypher(miniGraph(Seq.empty, "A"),
+        "CATALOG CREATE VIEW bad($g1) { MATCH (a:A RETURN GRAPH }")
+    }
+    assert(sess.viewNames.isEmpty)
+  }
+
   test("CONSTRUCT CREATE syntax and standalone construction") {
     // MultipleGraphTests "should construct a graph" — CREATE == NEW.
     val g = miniGraph(Seq.empty, "X")

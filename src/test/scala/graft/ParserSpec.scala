@@ -125,4 +125,69 @@ class ParserSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("parentheses"))
   }
+
+  private def stmt(s: String): Statement = CypherParser.parseStatement(s)
+  private def q(clauses: Clause*): Query = Query(SingleQuery(clauses), Seq.empty)
+
+  test("every statement form parses to its AST node, bare and with a leading comment and a trailing ;") {
+    val ret1 = CypherParser.parse("RETURN 1 AS x")
+    val cases = Seq[(String, Statement)](
+      "RETURN 1 AS x" -> ret1,
+      "EXPLAIN RETURN 1 AS x" -> Explain(profile = false, ret1),
+      "profile RETURN 1 AS x" -> Explain(profile = true, ret1),
+      "EXPLAIN CATALOG DROP GRAPH g" ->
+        Explain(profile = false, CatalogDrop(view = false, "g")),
+      "CATALOG CREATE GRAPH g { RETURN GRAPH }" ->
+        CatalogCreateGraph("g", q(ReturnGraph)),
+      "CATALOG CREATE VIEW v($a, b) { FROM GRAPH $a CONSTRUCT ON $b RETURN GRAPH }" ->
+        CatalogCreateView("v", Seq("a", "b"), q(FromGraph(GraphParam("a")),
+          Construct(Seq(GraphParam("b")), Seq.empty, Seq.empty))),
+      "CATALOG DROP GRAPH g" -> CatalogDrop(view = false, "g"),
+      "catalog drop view `my view`" -> CatalogDrop(view = true, "my view"),
+      "SHOW PROCEDURES" -> ShowProcedures,
+      "SHOW FUNCTIONS" -> ShowFunctions,
+      "SHOW USER DEFINED FUNCTIONS" -> ShowFunctions,
+      "SHOW INDEXES" -> ShowIndexes,
+      "SHOW RANGE INDEXES" -> ShowIndexes,
+      "SHOW CONSTRAINTS" -> ShowConstraints,
+      "SHOW ALL CONSTRAINTS" -> ShowConstraints,
+      "CREATE INDEX ix IF NOT EXISTS FOR (n:N) ON (n.val)" -> IndexDdl,
+      "CREATE FULLTEXT INDEX ft FOR (n:N) ON EACH [n.a, n.b]" -> IndexDdl,
+      "DROP INDEX ix IF EXISTS" -> IndexDdl,
+      "CREATE CONSTRAINT c FOR (n:N) REQUIRE n.val IS UNIQUE" ->
+        CreateConstraint,
+      "DROP CONSTRAINT c IF EXISTS" -> DropConstraint(ifExists = true),
+      "DROP CONSTRAINT c" -> DropConstraint(ifExists = false))
+    for ((text, expected) <- cases; form <- Seq(text, s"// lead\n$text;",
+        s"/* lead */ $text ;")) {
+      assert(stmt(form) === expected, form)
+    }
+  }
+
+  test("statement words still parse as variable, label and property names") {
+    for (w <- Seq("show", "profile", "explain", "index", "catalog", "view",
+        "constraint")) {
+      val m = stmt(s"MATCH ($w:$w {$w: 1}) RETURN $w.$w AS $w")
+        .asInstanceOf[Query].first.clauses.head.asInstanceOf[Match]
+      val node = m.pattern.parts.head.head
+      assert((node.variable, node.labels, node.props) ===
+        ((Some(w), Seq(w), Seq((w, IntLit(1))))), w)
+    }
+    // CREATE followed by a path variable named like a DDL word is a query
+    for (w <- Seq("index", "constraint"))
+      assert(stmt(s"CREATE $w = (a)-[:R]->(b)").isInstanceOf[Query], w)
+  }
+
+  test("graph references parse to a tree; $params only inside a view body") {
+    assert(single("FROM GRAPH inc(inc(session.`a b`), g) MATCH (n) RETURN n")
+      .clauses.head === FromGraph(ViewCall("inc", Seq(
+        ViewCall("inc", Seq(GraphName(Seq("session", "a b")))),
+        GraphName(Seq("g"))))))
+    intercept[CypherParser.CypherParseException] {
+      CypherParser.parse("FROM GRAPH $g MATCH (n) RETURN n")
+    }
+    intercept[CypherParser.CypherParseException] {
+      stmt("CATALOG CREATE VIEW v($a) { FROM GRAPH $b RETURN GRAPH }")
+    }
+  }
 }
