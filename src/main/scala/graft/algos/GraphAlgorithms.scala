@@ -2,7 +2,7 @@ package graft.algos
 
 import graft.graph.PropertyGraph
 import graft.impl.Pin
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.BloomBridge
 import org.apache.spark.sql.types._
@@ -77,42 +77,86 @@ object GraphAlgorithms {
 
   /** PageRank with damping; returns (id, rank). Each iteration: one join
     * (ranks x edges) + one aggregation; dangling mass redistributed
-    * uniformly so ranks sum to the node count.
-    *
-    * Nodes with no incident edge of the requested types are carried
-    * ANALYTICALLY, not iterated: an isolated node receives no link mass, so
-    * its rank is the same scalar every round — r_iso(t+1) = (1-d) + d *
-    * miss(t)/n. Only the connected subgraph iterates; on a 100-TB document
-    * graph where most nodes are isolated for any given rel-type subset this
-    * shrinks every per-round join and checkpoint by the isolated fraction. */
+    * uniformly so ranks sum to the node count. The loop is
+    * [[conservedRanks]] over the out-degree [[degreeLinks]]. */
   def pageRank(graph: PropertyGraph, iterations: Int = 10,
       damping: Double = 0.85, relTypes: Seq[String] = Seq.empty): DataFrame = {
+    val e = validated(edges(graph, relTypes), graph)
+    conservedRanks(graph, degreeLinks(e), endpointIds(e), iterations, damping,
+      col("rank") / col("deg"))
+  }
+
+  /** Weighted PageRank: link mass flows proportionally to edge weight
+    * (rank·w / Σ_out w) instead of uniformly — the GDS
+    * relationshipWeightProperty variant, with weights named per
+    * relationship type (the CALL-args-are-literals convention this
+    * engine's sssp also uses). Per-source weight shares sum to 1, so
+    * the mass-conservation / dangling-share algebra and the round are
+    * [[pageRank]]'s: [[conservedRanks]] with a weighted share. */
+  def pageRankWeighted(graph: PropertyGraph, weights: Map[String, Double],
+      iterations: Int = 10, damping: Double = 0.85): DataFrame = {
+    require(weights.nonEmpty, "weights must name >= 1 relationship type")
+    require(weights.values.forall(_ > 0), s"weights must be positive: $weights")
+    val spark = nodeIds(graph).sparkSession
+    val typed = weights.toSeq.flatMap { case (t, w) =>
+      graph.relScansFor(Seq(t)).map(_.df.select(
+        col(PropertyGraph.SRC).as("src"), col(PropertyGraph.TGT).as("dst"),
+        lit(w).as("w")))
+    }.reduceOption(_.unionByName(_)).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(StructField("src", LongType), StructField("dst", LongType),
+          StructField("w", DoubleType)))))
+    // Same single-exchange keyed links construction as degreeLinks, with
+    // the out-weight sum in place of the out-degree.
+    val links = Pin.keyed(typed, Seq("src"), tp =>
+      tp.join(tp.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src"))
+    conservedRanks(graph, links, endpointIds(typed), iterations, damping,
+      col("rank") * col("w") / col("outw"))
+  }
+
+  /** Links frame (src, dst, deg) of the out-degree rank family
+    * ([[pageRank]], [[personalizedPageRank]], [[articleRank]]). One src
+    * exchange feeds the degree aggregation AND the links join on both
+    * sides (r14, guide §2.4; ReuseExchange on the shared subtree), and
+    * Pin.keyed (r15) keeps the hash(src) layout visible through the pin,
+    * so no round re-exchanges links (the plain pin lost the metadata —
+    * UnknownPartitioning — and re-shuffled it every round; at 100 TB that
+    * re-shuffle would dominate). */
+  private[graft] def degreeLinks(e: DataFrame): DataFrame =
+    Pin.keyed(e, Seq("src"), ep =>
+      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+
+  /** Distinct endpoint ids of an (src, dst) edge frame, pinned keyed on
+    * hash(id). Edge endpoints ARE node ids, so this IS the connected-node
+    * set — no semi-join against the full node table. The distinct rides
+    * the pin's hash(id) exchange, which the loops' per-round joins on id
+    * then consume for free (r15). */
+  private def endpointIds(e: DataFrame): DataFrame =
+    Pin.keyed(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+
+  /** The mass-conserving damped rank loop of [[pageRank]] and
+    * [[pageRankWeighted]]; `share` is the fraction of a link's source rank
+    * it carries (see [[rankContribs]]). Mass no link transfers (dangling
+    * and isolated nodes') is spread uniformly, so ranks sum to n.
+    *
+    * Nodes outside `connected` are carried ANALYTICALLY, not iterated: an
+    * isolated node receives no link mass, so its rank is the same scalar
+    * every round — r_iso(t+1) = (1-d) + d * miss(t)/n. Only the connected
+    * subgraph iterates; on a 100-TB document graph where most nodes are
+    * isolated for any given rel-type subset this shrinks every per-round
+    * join and checkpoint by the isolated fraction. */
+  private def conservedRanks(graph: PropertyGraph, links: DataFrame,
+      connected: DataFrame, iterations: Int, damping: Double,
+      share: Column): DataFrame = {
     // All intermediate state is pinned lazily (Pin: localCheckpoint locally,
     // persist on a cluster): lineage is cut immediately (bounded plans across
     // rounds), blocks are materialized by the next action that reads them.
     val n = nodeIds(graph).count()
-    // One src exchange feeds the degree aggregation AND the links join on
-    // both sides (r14, guide §2.4) — the old shape shuffled the edge frame
-    // twice (groupBy input + join left).
-    val e = validated(edges(graph, relTypes), graph)
-    // Pin.keyed (r15): ONE explicit hash(src) exchange feeds the degree
-    // aggregation AND both join sides (the r14 single-exchange shape,
-    // via ReuseExchange on the shared subtree), and the layout claim
-    // survives the pin so no round re-exchanges links (the plain pin lost
-    // the metadata — UnknownPartitioning — and re-shuffled it every
-    // round; at 100 TB that re-shuffle would dominate).
-    val links = Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
-    // Edge endpoints ARE node ids, so the distinct endpoint set IS the
-    // connected-node set — no semi-join against the full node table. The
-    // distinct rides Pin.keyed's hash(id) exchange, which the loop's
-    // per-round contribution joins then consume for free (r15).
-    val connected = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
     var isoRank = 1.0
     var ranks = connected.select(col("id"), lit(1.0).as("rank"))
-    for (i <- 1 to iterations) {
-      val contribs = rankContribs(links, ranks)
+    for (_ <- 1 to iterations) {
+      val contribs = rankContribs(links, ranks, share)
       // `received` is read twice (mass total + rank update): the lazy
       // checkpoint is materialized by the 1-row mass aggregate — ONE job
       // per round (an eager checkpoint + separate aggregate was two; the
@@ -134,78 +178,33 @@ object GraphAlgorithms {
       isoRank = (1.0 - damping) + damping * missShare
     }
     // Isolated nodes receive no link mass, so their rank is the closed-form
-    // scalar of the last round; returned lazily — the caller's action reads
-    // the checkpointed ranks, no extra materialization pass here.
-    val isolated = nodeIds(graph).join(ranks.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(isoRank).as("rank"))
-    ranks.unionByName(isolated)
+    // scalar of the last round.
+    withIsolated(graph, ranks, lit(isoRank).as("rank"))
   }
 
-  /** Weighted PageRank: link mass flows proportionally to edge weight
-    * (rank·w / Σ_out w) instead of uniformly — the GDS
-    * relationshipWeightProperty variant, with weights named per
-    * relationship type (the CALL-args-are-literals convention this
-    * engine's sssp also uses). Per-source weight shares sum to 1, so
-    * the mass-conservation / dangling-share algebra is [[pageRank]]'s
-    * verbatim; the scale shape (links pinned pre-partitioned on src, ONE
-    * job per round via the lazy pin + mass aggregate, isolated nodes
-    * closed-form) is identical. */
-  def pageRankWeighted(graph: PropertyGraph, weights: Map[String, Double],
-      iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    require(weights.nonEmpty, "weights must name >= 1 relationship type")
-    require(weights.values.forall(_ > 0), s"weights must be positive: $weights")
-    val spark = nodeIds(graph).sparkSession
-    val n = nodeIds(graph).count()
-    val typed = weights.toSeq.flatMap { case (t, w) =>
-      graph.relScansFor(Seq(t)).map(_.df.select(
-        col(PropertyGraph.SRC).as("src"), col(PropertyGraph.TGT).as("dst"),
-        lit(w).as("w")))
-    }.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("src", LongType), StructField("dst", LongType),
-          StructField("w", DoubleType)))))
-    // Same single-exchange links construction as pageRank (r14).
-    // Pin.keyed (r15): one explicit hash(src) exchange feeds the weight
-    // aggregation and both join sides, and the layout claim survives the
-    // pin so no round re-exchanges links (see pageRank).
-    val links = Pin.keyed(typed, Seq("src"), tp =>
-      tp.join(tp.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src"))
-    val connected = Pin.keyed(typed.select(col("src").as("id"))
-      .unionByName(typed.select(col("dst").as("id"))), Seq("id"), _.distinct())
-    var isoRank = 1.0
-    var ranks = connected.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = links.join(ranks.hint("shuffle_hash"),
-          links("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          (col("rank") * col("w") / col("outw")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
-      val received = Pin(connected.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("contrib"), lit(0.0)).as("contrib")))
-      val tc = received.agg(coalesce(sum("contrib"), lit(0.0))).head().getDouble(0)
-      val missShare = (n - tc) / n
-      ranks = received.select(col("id"),
-        (lit(1.0 - damping) +
-          lit(damping) * (col("contrib") + lit(missShare))).as("rank"))
-      isoRank = (1.0 - damping) + damping * missShare
-    }
-    val isolated = nodeIds(graph).join(ranks.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(isoRank).as("rank"))
-    ranks.unionByName(isolated)
-  }
-
-  /** One damped-rank round's link-mass transfer: degree-normalized rank
-    * flows along the pinned (src-partitioned) links and aggregates per
-    * destination. Factored so AlgosSpec can assert the scale property —
-    * the round consumes the pinned hash(src) partitioning and never
-    * re-shuffles the edge side (shared by [[pageRank]] and
-    * [[personalizedPageRank]]). */
-  private[graft] def rankContribs(links: DataFrame, ranks: DataFrame): DataFrame =
+  /** One rank round's link-mass transfer: `share` of each link's source
+    * rank (default degree-normalized, `rank / deg`) flows along the pinned
+    * (src-partitioned) links and aggregates per destination as `contrib`.
+    * Factored so AlgosSpec can assert the scale property — the round
+    * consumes the pinned hash(src) partitioning and never re-shuffles the
+    * edge side (shared by [[conservedRanks]], [[personalizedPageRank]],
+    * [[eigenvectorCentrality]] and [[articleRank]]). */
+  private[graft] def rankContribs(links: DataFrame, ranks: DataFrame,
+      share: Column = col("rank") / col("deg")): DataFrame =
     // shuffle_hash on the rank side: links is the pinned fact frame and a
     // sort-merge join would re-sort it every round (r14, guide §3.1).
     links.join(ranks.hint("shuffle_hash"), links("src") === ranks("id"))
-      .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+      .select(col("dst").as("id"), share.as("c"))
       .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
+
+  /** `scored` (id, value) plus every node id it lacks, valued by the named
+    * column `fill` — appended lazily: the caller's action reads the pinned
+    * loop state, no extra materialization pass runs here. */
+  private def withIsolated(graph: PropertyGraph, scored: DataFrame,
+      fill: Column): DataFrame =
+    scored.unionByName(nodeIds(graph)
+      .join(scored.select(col("id")), Seq("id"), "left_anti")
+      .select(col("id"), fill))
 
   /** Connected components (undirected) by alternating large-star /
     * small-star contraction (Kiveris et al., "Connected Components in
@@ -225,12 +224,10 @@ object GraphAlgorithms {
   def connectedComponents(graph: PropertyGraph,
       relTypes: Seq[String] = Seq.empty, maxIterations: Int = 20): DataFrame = {
     val e0 = validated(edges(graph, relTypes), graph)
-    val comp = ccStarLabels(e0, maxIterations)
-    // Isolated singletons (incl. self-loop-only nodes) appended lazily; the
-    // caller's action reads the pinned comp frame — no extra pass here.
-    val isolated = nodeIds(graph).join(comp.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    comp.unionByName(isolated)
+    // Isolated singletons (incl. self-loop-only nodes) are their own
+    // component.
+    withIsolated(graph, ccStarLabels(e0, maxIterations),
+      col("id").as("component"))
   }
 
   /** The star-contraction core of [[connectedComponents]] over an arbitrary
@@ -320,34 +317,57 @@ object GraphAlgorithms {
     * aggregation, wedge self-join, closing semi-join); AQE handles
     * residual skew. */
   def triangleCountEdges(edges0: DataFrame): DataFrame = {
-    // canonical undirected form: low id -> high id, deduped, no loops
-    // Dedup rides the hash(a) repartition (one exchange, not two — r14,
-    // guide §2.4); Pin.keyed (r15) keeps the hash(a) layout VISIBLE, so
-    // orientByDegree's a-side attachment join, the closing semi-join's
-    // (a, b) clustering and the bloom-build scan all consume it free.
-    val canon = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val canon = canonEdges(edges0)
     val m = canon.count() // materializes the pin; sizes the bloom (r15)
-    val oriented = orientByDegree(canon)
-    val wedges = wedgeJoin(oriented)
-    // Close against the canonical edge set. wedgeJoin guarantees x < y
-    // (e1.v < e2.v), so the keys are plain (x, y) = (a, b) — no
-    // least/greatest evaluation on the fat side. The canon side is
-    // hinted shuffle_hash: the wedge side is orders of magnitude larger
-    // (O(Σ fwd_deg²) rows vs m) and a sort-merge join would SORT it —
-    // the measured dominant cost of this query family (guide §3.1);
-    // hashing the m-row canon partitions is the right asymmetric build.
-    // r15: non-closing wedges are additionally dropped map-side by a
-    // bloom prefilter BEFORE the wedge exchange (guide §3.2) — see
-    // wedgeBloomPrefilter for sizing and the exactness argument.
-    wedgeBloomPrefilter(wedges.select(col("x"), col("y")), canon, m)
+    closedWedges(canon, m).agg(count(lit(1)).as("triangles"))
+  }
+
+  /** Canonical undirected form of a (src, dst) edge frame: (a, b) with
+    * a < b, deduped, no loops. Dedup rides the hash(a) repartition (one
+    * exchange, not two — r14, guide §2.4); Pin.keyed (r15) keeps the
+    * hash(a) layout VISIBLE, so orientByDegree's a-side attachment join,
+    * the closing semi-join's (a, b) clustering and the bloom-build scan
+    * all consume it free. */
+  private[graft] def canonEdges(edges0: DataFrame): DataFrame =
+    Pin.keyed(undirectedPairs(edges0), Seq("a"),
+      _.dropDuplicates(Seq("a", "b")))
+
+  /** Loop-free (a = least, b = greatest) endpoint pairs, not yet deduped. */
+  private def undirectedPairs(edges0: DataFrame): DataFrame =
+    edges0.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+
+  /** Both orientations of the canonical undirected edge set as (a, b),
+    * pinned keyed on hash(a). One exchange, not three (r14, guide §2.4):
+    * dedup rides the hash(a) repartition of the symmetrized union (hash(a)
+    * satisfies the (a, b) dedup clustering — the arms are disjoint, a<b
+    * vs a>b, so the result set is canon ∪ reverse exactly), and the pinned
+    * hash(a) partitioning feeds the callers' per-a degree aggregation and
+    * a-side join with no further shuffle. */
+  private def symEdges(edges0: DataFrame): DataFrame = {
+    val raw = undirectedPairs(edges0)
+    Pin.keyed(raw.unionByName(raw.select(col("b").as("a"), col("a").as("b"))),
+      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+  }
+
+  /** The wedges (w0, x, y) of the degree-oriented `canon` that a canon
+    * edge (x, y) closes — one row per triangle. wedgeJoin guarantees
+    * x < y (e1.v < e2.v), so the closing keys are plain (x, y) = (a, b) —
+    * no least/greatest evaluation on the fat side. The canon side is
+    * hinted shuffle_hash: the wedge side is orders of magnitude larger
+    * (O(Σ fwd_deg²) rows vs m) and a sort-merge join would SORT it — the
+    * measured dominant cost of this query family (guide §3.1); hashing
+    * the m-row canon partitions is the right asymmetric build. Non-closing
+    * wedges are dropped map-side by a bloom prefilter BEFORE the wedge
+    * exchange (r15, guide §3.2) — see [[wedgeBloomPrefilter]] for `m`,
+    * `defaultMinItems` and the exactness argument. */
+  private def closedWedges(canon: DataFrame, m: Long,
+      defaultMinItems: Long = 1L << 15): DataFrame =
+    wedgeBloomPrefilter(wedgeJoin(orientByDegree(canon)), canon, m,
+      defaultMinItems)
       .join(canon.hint("shuffle_hash"),
         col("x") === col("a") && col("y") === col("b"), "left_semi")
-      .agg(count(lit(1)).as("triangles"))
-  }
 
   /** Per-node triangle counts and local clustering coefficient (GDS
     * triangleCount / localClusteringCoefficient parity): lcc(v) =
@@ -357,26 +377,11 @@ object GraphAlgorithms {
     * one extra explode+aggregate attributes each closed triangle to its
     * three corners. Returns (id, triangles, lcc). */
   def localClusteringCoefficient(edges0: DataFrame): DataFrame = {
-    // Dedup rides the hash(a) repartition (one exchange, not two — r14,
-    // guide §2.4); Pin.keyed (r15) keeps the hash(a) layout visible for
-    // orientByDegree's a-side join and the closing semi-join.
-    val canon = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val canon = canonEdges(edges0)
     val m = canon.count() // materializes the pin; sizes the bloom (r15)
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    val oriented = orientByDegree(canon)
-    // Same closing-join shape as triangleCountEdges: plain (x, y) keys
-    // (wedgeJoin guarantees x < y) + shuffle_hash on the small canon side
-    // so the fat wedge side is never sorted; bloom prefilter before the
-    // wedge exchange (r15, guide §3.2).
-    val tri = wedgeBloomPrefilter(wedgeJoin(oriented), canon, m)
-      .join(canon.hint("shuffle_hash"),
-        col("x") === col("a") && col("y") === col("b"), "left_semi")
-    val perNode = tri
+    val perNode = closedWedges(canon, m)
       .select(explode(array(col("w0"), col("x"), col("y"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("t"))
     deg.join(perNode, Seq("id"), "left_outer")
@@ -437,13 +442,17 @@ object GraphAlgorithms {
     * `spark.graft.bloom.maxBits` (default 2^27 = 16 MB) so the broadcast
     * value stays bounded on huge graphs — past the cap the filter saturates
     * toward pass-through (less selective, never wrong). Skipped below
-    * `spark.graft.bloom.minItems` build rows (default 2^15) where the wedge
-    * frame is too small for the extra aggregate pass to pay. */
+    * `spark.graft.bloom.minItems` build rows where the wedge frame is too
+    * small for the extra aggregate pass to pay; when that conf is unset
+    * the bar is the caller's `defaultMinItems` (2^15 for the one-shot
+    * wedge queries, 2^20 for ktruss's per-round builds — see
+    * [[edgeSupport]]). An explicitly set conf wins over either. */
   private def wedgeBloomPrefilter(wedges: DataFrame, canon: DataFrame,
-      m: Long): DataFrame = {
+      m: Long, defaultMinItems: Long): DataFrame = {
     val conf = canon.sparkSession.conf
-    val minItems = conf.get("spark.graft.bloom.minItems", "32768").toLong
-    if (m <= 0 || m < minItems) wedges // m <= 0: caller-disabled (ktruss)
+    val minItems = conf.getOption("spark.graft.bloom.minItems")
+      .fold(defaultMinItems)(_.toLong)
+    if (m <= 0 || m < minItems) wedges
     else {
       val maxBits =
         conf.get("spark.graft.bloom.maxBits", String.valueOf(1L << 27)).toLong
@@ -472,31 +481,22 @@ object GraphAlgorithms {
     * Nothing materializes per-pair state — memory is O(reached ×
     * sources-that-reach), the Brandes invariant.
     *
-    * Per-round job shape (VERDICT r13 #1, adjudicated by the BetwProbe
-    * A/B): the forward visited set is a LAZY union of the already-pinned
-    * levels (no per-round visited checkpoint write — the anti-join
-    * re-reads cached level blocks), convergence is the 1-row aggregate
-    * that materializes the round's pin, and the backward sweep pins only
-    * the inner-join contrib frame per level — the zero-fill for
+    * Per-round job shape (VERDICT r13 #1, adjudicated by the r13 A/B
+    * measured below): the forward visited set is a LAZY union of the
+    * already-pinned levels (no per-round visited checkpoint write — the
+    * anti-join re-reads cached level blocks), convergence is the 1-row
+    * aggregate that materializes the round's pin, and the backward sweep
+    * pins only the inner-join contrib frame per level — the zero-fill for
     * contribution-less nodes happens at the USE site (a coalesce inside
     * the next level's `upper` join) instead of a per-level left-outer
-    * materialization. Measured: 98 → 85 driver-visible jobs and v0 19.8s
-    * → v2 16.9s mean (noisy window; job count is the stable signal —
-    * fewer barriers is what the driver's loud-window readings tax). */
+    * materialization. Measured against the per-round-checkpoint shape:
+    * 98 → 85 driver-visible jobs and 19.8 s → 16.9 s mean (noisy window;
+    * job count is the stable signal — fewer barriers is what the
+    * driver's loud-window readings tax). */
   def betweenness(edges0: DataFrame, sources: DataFrame,
       directed: Boolean = false, maxDepth: Int = 50): DataFrame = {
-    val spark = edges0.sparkSession
-    val base = edges0.select(col("src").cast(LongType).as("src"),
-      col("dst").cast(LongType).as("dst"))
-    val sym = if (directed) base
-      else base.unionByName(base.select(col("dst").as("src"),
-        col("src").as("dst")))
-    // One exchange, not two: repartition on src, then dedup in place —
-    // hash(src) satisfies the (src, dst) clustering the dedup aggregate
-    // needs. Pin.keyed (r15) keeps the hash(src) layout VISIBLE through
-    // the pin, so no per-round join re-exchanges the edge frame (plain
-    // Pin lost the metadata and re-shuffled it every round).
-    val e = Pin.keyed(sym, Seq("src"), _.dropDuplicates(Seq("src", "dst")))
+    val e = bfsEdges(edges0.select(col("src").cast(LongType).as("src"),
+      col("dst").cast(LongType).as("dst")), directed)
     val src0 = sources.select(col("id").cast(LongType).as("s")).distinct()
     // forward BFS: levels(k) = (s, v, sigma) first reached at depth k.
     // visited is a lazy union of the pinned levels — no per-round visited
@@ -587,37 +587,23 @@ object GraphAlgorithms {
     * join (the [[triangleCountEdges]] machinery — fan-out bounded by
     * forward degree), then exploded back onto its three edges and
     * counted. One wedge join + one map-side-combinable aggregation. */
-  private[graft] def edgeSupport(canon: DataFrame, m: Long): DataFrame = {
-    val oriented = orientByDegree(canon)
-    val wedges = oriented.as("e1")
-      .join(oriented.as("e2"),
-        col("e1.u") === col("e2.u") && col("e1.v") < col("e2.v"))
-      .select(col("e1.u").as("u"), col("e1.v").as("x"), col("e2.v").as("y"))
-    // plain (x, y) keys (x < y by construction) + shuffle_hash on the
-    // small canon side — see triangleCountEdges; bloom prefilter before
-    // the wedge exchange (r15, guide §3.2). `m` is the caller's canon
-    // count (the ktruss loop counts each round's survivors anyway).
-    // PER-ROUND caller: the bloom build costs one aggregate job + a
-    // subquery per peeling round, so it must clear a higher bar than the
-    // one-shot wedge queries — below ~1M surviving edges the wedge
-    // exchange is already small and the r15 bench measured the per-round
-    // builds as a net loss (+7 jobs, +0.6 s at sf0.1's ~750k edges).
-    val iterativeFloor = math.max(1L << 20,
-      canon.sparkSession.conf
-        .get("spark.graft.bloom.minItems", "32768").toLong)
-    val tri = wedgeBloomPrefilter(wedges, canon,
-      if (m >= iterativeFloor) m else 0L)
-      .join(canon.hint("shuffle_hash"),
-        col("x") === col("a") && col("y") === col("b"), "left_semi")
-    tri.select(explode(array(
-        struct(least(col("u"), col("x")).as("a"),
-          greatest(col("u"), col("x")).as("b")),
-        struct(least(col("u"), col("y")).as("a"),
-          greatest(col("u"), col("y")).as("b")),
+  private[graft] def edgeSupport(canon: DataFrame, m: Long): DataFrame =
+    // `m` is the caller's canon count (the ktruss loop counts each round's
+    // survivors anyway). PER-ROUND caller: the bloom build costs one
+    // aggregate job + a subquery per peeling round, so by default it must
+    // clear a higher bar than the one-shot wedge queries — below ~1M
+    // surviving edges the wedge exchange is already small and the r15
+    // bench measured the per-round builds as a net loss (+7 jobs, +0.6 s
+    // at sf0.1's ~750k edges).
+    closedWedges(canon, m, defaultMinItems = 1L << 20)
+      .select(explode(array(
+        struct(least(col("w0"), col("x")).as("a"),
+          greatest(col("w0"), col("x")).as("b")),
+        struct(least(col("w0"), col("y")).as("a"),
+          greatest(col("w0"), col("y")).as("b")),
         struct(col("x").as("a"), col("y").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-  }
 
   /** k-truss: the maximal subgraph in which every edge closes at least
     * k-2 triangles WITHIN the subgraph (Cohen 2008) — the edge-level
@@ -636,13 +622,7 @@ object GraphAlgorithms {
   def kTrussEdges(edges0: DataFrame, k: Int,
       maxIterations: Int = 50): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    // Same single-exchange canonicalization as triangleCountEdges (r14),
-    // with the hash(a) layout kept visible (Pin.keyed, r15).
-    var cur = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    var cur = canonEdges(edges0)
     var n = cur.count()
     var changed = n > 0
     var it = 0
@@ -697,16 +677,13 @@ object GraphAlgorithms {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("src", LongType), StructField("dst", LongType),
           StructField("w", DoubleType)))))
-    val sym = if (directed) typed
-      else typed.unionByName(typed.select(
-        col("dst").as("src"), col("src").as("dst"), col("w")))
     // Pinned pre-partitioned on src WITH the partitioning kept visible
     // (Pin.keyed, r15): every round's frontier join consumes the hash(src)
     // layout, so the edge list shuffles once per call, ever. The r14 plain
     // Pin lost the metadata (UnknownPartitioning after localCheckpoint)
     // and re-exchanged the full edge frame EVERY round — measured 473 MB
     // of the query's shuffle at sf0.1, ~90% of it this frame.
-    val e = Pin.keyed(sym, Seq("src"))
+    val e = Pin.keyed(bothWays(typed, directed), Seq("src"))
     var dist = Pin(sources.select(col("id").cast(LongType).as("id"))
       .distinct().select(col("id"), lit(0.0).as("dist")))
     var frontier = dist
@@ -752,8 +729,9 @@ object GraphAlgorithms {
     * dangling mass is 1 − transferred (one 1-row aggregate per round,
     * same as [[pageRank]]).
     *
-    * Scale shape is [[pageRank]]'s: links pinned pre-partitioned on src
-    * (no per-round edge shuffle), one pin + one job per round. The
+    * Scale shape is [[pageRank]]'s: [[degreeLinks]] pinned
+    * pre-partitioned on src (no per-round edge shuffle), one
+    * [[rankContribs]] round, one pin + one job per round. The
     * working set is edge endpoints ∪ seeds; every node OUTSIDE it — and
     * every working node unreachable from the seeds — has exactly 0 rank
     * (no restart mass, no in-mass), so the unreachable remainder is
@@ -761,15 +739,8 @@ object GraphAlgorithms {
   def personalizedPageRank(graph: PropertyGraph, seeds: DataFrame,
       iterations: Int = 10, damping: Double = 0.85,
       relTypes: Seq[String] = Seq.empty): DataFrame = {
-    // One src exchange feeds the degree aggregation AND the links join on
-    // both sides (r14, guide §2.4) — the old shape shuffled the edge frame
-    // twice (groupBy input + join left).
     val e = validated(edges(graph, relTypes), graph)
-    // Pin.keyed (r15): one explicit hash(src) exchange feeds the degree
-    // aggregation and both join sides, and the layout claim survives the
-    // pin so no round re-exchanges links (see pageRank).
-    val links = Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+    val links = degreeLinks(e)
     val seedIds = seeds.select(col("id").cast(LongType).as("id")).distinct()
     val k = seedIds.count()
     require(k > 0, "personalizedPageRank needs at least one seed")
@@ -824,8 +795,7 @@ object GraphAlgorithms {
     // pins, so the per-round hub-side joins skip the edge re-exchange.
     val e = Pin.keyed(edges0.select(col("src").cast(LongType).as("src"),
       col("dst").cast(LongType).as("dst")), Seq("src"))
-    val nodes = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+    val nodes = endpointIds(e)
     var scores = Pin(nodes.select(col("id"),
       lit(1).cast(dec).as("hub"), lit(1).cast(dec).as("auth")))
     // Distinguish "no in/out edges" (join miss — score 0) from Decimal
@@ -880,19 +850,7 @@ object GraphAlgorithms {
     * is independent of partitioning and aggregation order — which also
     * lets a SQL oracle replay it bit-for-bit. */
   def degreeAssortativity(edges0: DataFrame): DataFrame = {
-    // One exchange, not three (r14, guide §2.4): dedup rides the hash(a)
-    // repartition of the symmetrized union (hash(a) satisfies the (a, b)
-    // dedup clustering — the arms are disjoint, a<b vs a>b, so the result
-    // set is the old canon∪reverse exactly), and the pinned hash(a)
-    // partitioning feeds the degree aggregation and the x-attachment join
-    // below with no further shuffle.
-    val raw = edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-    val sym = Pin.keyed(raw.unionByName(
-        raw.select(col("b").as("a"), col("a").as("b"))),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val sym = symEdges(edges0)
     val deg = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
     val dec = DecimalType(38, 0)
     val pairs = sym
@@ -932,9 +890,8 @@ object GraphAlgorithms {
     // One exchange, not two: hash(dst) satisfies the (src, dst) dedup
     // clustering, and the pinned partitioning feeds every round's
     // labels-join (r14, guide §2.4).
-    val und = Pin.keyed(e0.unionByName(e0.select(col("dst").as("src"),
-        col("src").as("dst"))),
-      Seq("dst"), _.dropDuplicates(Seq("src", "dst")))
+    val und = Pin.keyed(bothWays(e0), Seq("dst"),
+      _.dropDuplicates(Seq("src", "dst")))
     var lbl = Pin(und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label")))
     var changed = 1L
@@ -953,10 +910,7 @@ object GraphAlgorithms {
       lbl = next
       it += 1
     }
-    val isolated = nodeIds(graph)
-      .join(lbl.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("label"))
-    lbl.unionByName(isolated)
+    withIsolated(graph, lbl, col("id").as("label"))
   }
 
   /** The k-core: the maximal subgraph in which every node has degree
@@ -976,15 +930,9 @@ object GraphAlgorithms {
   def kCoreEdges(edges0: DataFrame, k: Int,
       maxIterations: Int = 50): DataFrame = {
     require(k >= 1, "k >= 1")
-    // Same single-exchange canonicalization as degreeAssortativity (r14,
-    // guide §2.4); the pinned hash(a) feeds the first round's degree
-    // aggregation and a-semi-join shuffle-free.
-    val raw = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-    var sym = Pin.keyed(raw.unionByName(
-        raw.select(col("b").as("a"), col("a").as("b"))),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    // The pinned hash(a) feeds the first round's degree aggregation and
+    // a-semi-join shuffle-free.
+    var sym = symEdges(edges0)
     var nEdges = sym.count()
     var prev = -1L
     var it = 0
@@ -1274,52 +1222,64 @@ object GraphAlgorithms {
       .select(col("u").as("id"), col("ball2"))
   }
 
-  /** HyperBall-style approximate neighborhood function (Boldi & Vigna,
-    * WWW'14 "HyperBall: a fast sketch-based diameter tool"; the reference
-    * engine has nothing comparable — this is the 100-TB formulation):
-    * every node carries an HLL sketch of its h-hop ball, and one round of
-    * sketch-union along edges grows the radius by one. Returns
-    * (id, ball_est) — the estimated |B(v, maxHops)|, self included.
-    *
-    * Scale shape: the symmetrized edge frame is pinned PRE-PARTITIONED on
-    * its join key once, so each round shuffles only the per-node sketch
-    * frame (sketches stay tiny for small balls — DataSketches HLL is
-    * sparse until ~2^lgK distinct items); per round: one join + one
-    * hll_union_agg groupBy + one merge join. Nothing ever materializes a
-    * pair set, which is the whole point vs [[neighborhoodSizes2]] — ball
-    * counting over a 100-TB edge list is feasible exactly because the
-    * state per node is O(2^lgK) bytes regardless of ball size. Estimates
-    * are deterministic (DataSketches HLL has no run-time randomness), so
-    * the accuracy gate in the registered query is stable. */
   /** Exact harmonic centrality restricted to `sources` (k-source form,
     * the standard sampling approximation — pass every node for the exact
     * value): H(v) = Σ_{s∈sources, s≠v} 1/d(s, v) over undirected
     * (`directed=false`) or directed distances. Unreachable pairs
     * contribute 0 (the point of harmonic over closeness).
     *
-    * Scale shape: one multi-source BFS — per round the (s, v) frontier
-    * joins the pinned src-partitioned edge frame and anti-joins the
-    * visited set; memory is O(sources × reached), the same documented
-    * bound as [[betweenness]]; throws at the cap (distances past it
-    * would silently vanish from the sum). The whole-graph scale path is
-    * [[harmonicCentralityHll]]. */
+    * Scale shape: one multi-source BFS ([[bfsDistances]]); memory is
+    * O(sources × reached), the same documented bound as [[betweenness]];
+    * throws at the cap (distances past it would silently vanish from the
+    * sum). The whole-graph scale path is [[harmonicCentralityHll]]. */
   def harmonicCentrality(graph: PropertyGraph, sources: DataFrame,
       relTypes: Seq[String] = Seq.empty, directed: Boolean = false,
       maxIterations: Int = 50): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
-      .filter(col("src") =!= col("dst"))
-    val base = e0.select(col("src"), col("dst"))
-    val sym = if (directed) base
-      else base.unionByName(base.select(col("dst").as("src"),
-        col("src").as("dst")))
-    // One exchange, not two (r14, guide §2.4): the old shape deduped the
-    // directed base (one full shuffle) and re-shuffled the symmetrized
-    // union on src; hash(src) satisfies the (src, dst) dedup clustering,
-    // so one repartition + in-place dedup does both — and dedups ACROSS
-    // the union arms too (harmless: every BFS level dedups (s, v), so
-    // edge multiplicity never reaches the scores). Pin.keyed (r15) keeps
-    // the hash(src) layout visible so rounds skip the edge re-exchange.
-    val e = Pin.keyed(sym, Seq("src"), _.dropDuplicates(Seq("src", "dst")))
+    val scores = bfsDistances(graph, sources, relTypes, directed,
+        maxIterations, "harmonicCentrality")
+      .filter(col("s") =!= col("v"))
+      .groupBy(col("v").as("id"))
+      .agg(sum(lit(1.0) / col("d")).as("harmonic"))
+    nodeIds(graph).join(scores, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
+  }
+
+  /** `e` plus every edge reversed (src and dst swapped, other columns
+    * riding along); `e` itself when `directed`. */
+  private def bothWays(e: DataFrame, directed: Boolean = false): DataFrame =
+    if (directed) e
+    else e.unionByName(e.select(e.columns.toSeq.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*))
+
+  /** The BFS edge frame of [[betweenness]] and [[bfsDistances]]: `base`
+    * (src, dst), symmetrized unless `directed`, deduped and pinned keyed
+    * on hash(src). One exchange, not two (r14, guide §2.4): hash(src)
+    * satisfies the (src, dst) dedup clustering, so one repartition +
+    * in-place dedup does both — and dedups ACROSS the union arms too
+    * (harmless: every BFS level dedups (s, v), so edge multiplicity never
+    * reaches the scores). Pin.keyed (r15) keeps the hash(src) layout
+    * VISIBLE through the pin, so no per-round join re-exchanges the edge
+    * frame (plain Pin lost the metadata and re-shuffled it every round). */
+  private def bfsEdges(base: DataFrame, directed: Boolean): DataFrame =
+    Pin.keyed(bothWays(base, directed), Seq("src"),
+      _.dropDuplicates(Seq("src", "dst")))
+
+  /** Multi-source BFS over `graph`'s loop-free rel types, shared by
+    * [[harmonicCentrality]] and [[closenessCentrality]]: every (s, v, d)
+    * with d the hop distance from source s to reached node v (d = 0 at
+    * v = s). All sources advance together, one level per round: the (s, v)
+    * frontier joins the pinned src-partitioned [[bfsEdges]] frame and
+    * anti-joins the visited set. THROWS (naming `caller`) if nodes are
+    * still being reached at `maxIterations` — distances past the cap would
+    * silently vanish from the callers' sums. */
+  private def bfsDistances(graph: PropertyGraph, sources: DataFrame,
+      relTypes: Seq[String], directed: Boolean, maxIterations: Int,
+      caller: String): DataFrame = {
+    val e = bfsEdges(validated(edges(graph, relTypes), graph)
+      .filter(col("src") =!= col("dst")), directed)
     // visited is a LAZY union of the pinned per-depth levels (no per-round
     // visited checkpoint write — the anti-join re-reads cached level
     // blocks), and the convergence count is the 1-row aggregate that
@@ -1348,14 +1308,27 @@ object GraphAlgorithms {
       else levels = levels :+ next
     }
     if (go) throw new IllegalStateException(
-      s"harmonicCentrality did not finish within $maxIterations BFS " +
+      s"$caller did not finish within $maxIterations BFS " +
         "rounds (raise maxIterations)")
-    val visited = levels.reduce(_.unionByName(_))
-    val scores = visited.filter(col("s") =!= col("v"))
-      .groupBy(col("v").as("id"))
-      .agg(sum(lit(1.0) / col("d")).as("harmonic"))
-    nodeIds(graph).join(scores, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
+    levels.reduce(_.unionByName(_))
+  }
+
+  /** Symmetrized, deduped, loop-free (u, v) neighbor frame of the HyperBall
+    * loops, pinned keyed on hash(v). One exchange, not two (r14, guide
+    * §2.4): the neighbor dedup rides the hash(v) repartition every hop's
+    * sketch join consumes (hash(v) satisfies the (u, v) dedup clustering),
+    * and Pin.keyed (r15) keeps that layout visible, so no hop re-exchanges
+    * the edge frame. Width stays at defaultParallelism (the deliberate r14
+    * choice): the per-hop sketch unions are CPU-bound, and the pin's width
+    * SETS the loop's parallelism — byte-derived sizing measured
+    * neighborhood_hll 6.3 -> 11.1 s by running the merges 2-3 wide on 32
+    * cores. */
+  private def sketchNeighbors(edges0: DataFrame): DataFrame = {
+    val e = edges0.filter(col("src") =!= col("dst"))
+    Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
+      .unionByName(e.select(col("dst").as("u"), col("src").as("v"))),
+      Seq("v"), _.dropDuplicates(Seq("u", "v")),
+      width = Some(edges0.sparkSession.sparkContext.defaultParallelism))
   }
 
   /** Harmonic centrality ESTIMATES for every node via HyperBall
@@ -1367,23 +1340,7 @@ object GraphAlgorithms {
     * distances — the 100-TB formulation. */
   def harmonicCentralityHll(edges0: DataFrame, maxIterations: Int = 50,
       lgK: Int = 12): DataFrame = {
-    val spark = edges0.sparkSession
-    // One exchange, not two (r14, guide §2.4): the neighbor dedup rides
-    // the hash(v) repartition every hop's sketch join consumes (hash(v)
-    // satisfies the (u, v) dedup clustering).
-    val sym = {
-      val e = edges0.filter(col("src") =!= col("dst"))
-      // Pin.keyed (r15): hash(v) layout stays visible, so every hop's
-      // sketch join consumes it instead of re-exchanging the edge frame.
-      // Width stays at defaultParallelism (the deliberate r14 choice):
-      // the per-hop sketch unions are CPU-bound, and the pin's width now
-      // SETS the loop's parallelism — byte-derived sizing measured
-      // 6.3 -> 11.1 s here by running the merges 2-3 wide on 32 cores.
-      Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(e.select(col("dst").as("u"), col("src").as("v"))),
-        Seq("v"), _.dropDuplicates(Seq("u", "v")),
-        width = Some(spark.sparkContext.defaultParallelism))
-    }
+    val sym = sketchNeighbors(edges0)
     var state = Pin {
       val init = sym.select(col("u").as("id"))
         .groupBy(col("id"))
@@ -1424,24 +1381,25 @@ object GraphAlgorithms {
     state.select(col("id"), col("acc").as("harmonic_est"))
   }
 
+  /** HyperBall-style approximate neighborhood function (Boldi & Vigna,
+    * WWW'14 "HyperBall: a fast sketch-based diameter tool"; the reference
+    * engine has nothing comparable — this is the 100-TB formulation):
+    * every node carries an HLL sketch of its h-hop ball, and one round of
+    * sketch-union along edges grows the radius by one. Returns
+    * (id, ball_est) — the estimated |B(v, maxHops)|, self included.
+    *
+    * Scale shape: the symmetrized edge frame is pinned PRE-PARTITIONED on
+    * its join key once, so each round shuffles only the per-node sketch
+    * frame (sketches stay tiny for small balls — DataSketches HLL is
+    * sparse until ~2^lgK distinct items); per round: one join + one
+    * hll_union_agg groupBy + one merge join. Nothing ever materializes a
+    * pair set, which is the whole point vs [[neighborhoodSizes2]] — ball
+    * counting over a 100-TB edge list is feasible exactly because the
+    * state per node is O(2^lgK) bytes regardless of ball size. Estimates
+    * are deterministic (DataSketches HLL has no run-time randomness), so
+    * the accuracy gate in the registered query is stable. */
   def neighborhoodHll(edges0: DataFrame, maxHops: Int, lgK: Int = 12): DataFrame = {
-    val spark = edges0.sparkSession
-    // One exchange, not two (r14, guide §2.4): the neighbor dedup rides
-    // the hash(v) repartition every hop's sketch join consumes (hash(v)
-    // satisfies the (u, v) dedup clustering).
-    val sym = {
-      val e = edges0.filter(col("src") =!= col("dst"))
-      // Pin.keyed (r15): hash(v) layout stays visible, so every hop's
-      // sketch join consumes it instead of re-exchanging the edge frame.
-      // Width stays at defaultParallelism (the deliberate r14 choice):
-      // the per-hop sketch unions are CPU-bound, and the pin's width now
-      // SETS the loop's parallelism — byte-derived sizing measured
-      // 6.3 -> 11.1 s here by running the merges 2-3 wide on 32 cores.
-      Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(e.select(col("dst").as("u"), col("src").as("v"))),
-        Seq("v"), _.dropDuplicates(Seq("u", "v")),
-        width = Some(spark.sparkContext.defaultParallelism))
-    }
+    val sym = sketchNeighbors(edges0)
     var sk = Pin(sym.select(col("u").as("id"))
       .groupBy(col("id"))
       .agg(hll_sketch_agg(col("id"), lgK).as("sk")))
@@ -1539,8 +1497,8 @@ object GraphAlgorithms {
       topK, degreeCutoff, similarityCutoff, metric = metric)
 
   /** Exact closeness centrality from a source set (GDS closeness parity;
-    * same multi-source BFS loop as [[harmonicCentrality]] — frontier
-    * pinned per level, work proportional to the visited set). For node v
+    * the multi-source BFS of [[bfsDistances]] — frontier pinned per
+    * level, work proportional to the visited set). For node v
     * reached by r sources at total distance S: closeness = r / S;
     * with `wassermanFaust` the component-size correction
     * (r / (n−1)) · (r / S) (Wasserman & Faust 1994) so scores stay
@@ -1548,49 +1506,8 @@ object GraphAlgorithms {
   def closenessCentrality(graph: PropertyGraph, sources: DataFrame,
       relTypes: Seq[String] = Seq.empty, directed: Boolean = false,
       wassermanFaust: Boolean = false, maxIterations: Int = 50): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
-      .filter(col("src") =!= col("dst"))
-    val base = e0.select(col("src"), col("dst"))
-    val sym = if (directed) base
-      else base.unionByName(base.select(col("dst").as("src"),
-        col("src").as("dst")))
-    // One exchange, not two (r14, guide §2.4): the old shape deduped the
-    // directed base (one full shuffle) and re-shuffled the symmetrized
-    // union on src; hash(src) satisfies the (src, dst) dedup clustering,
-    // so one repartition + in-place dedup does both — and dedups ACROSS
-    // the union arms too (harmless: every BFS level dedups (s, v), so
-    // edge multiplicity never reaches the scores). Pin.keyed (r15) keeps
-    // the hash(src) layout visible so rounds skip the edge re-exchange.
-    val e = Pin.keyed(sym, Seq("src"), _.dropDuplicates(Seq("src", "dst")))
-    // Same per-round job fold as [[harmonicCentrality]]: lazy visited
-    // union over pinned levels + convergence folded into the pin-
-    // materializing aggregate (VERDICT r13 #1).
-    var levels = Vector(Pin(sources.select(col("id").cast(LongType).as("s"))
-      .distinct().select(col("s"), col("s").as("v"), lit(0).as("d"))))
-    var d = 0
-    var go = true
-    while (go && d < maxIterations) {
-      d += 1
-      val frontier = levels.last
-      val visited = levels.map(_.select(col("s"), col("v")))
-        .reduce(_.unionByName(_))
-      val next = Pin(e.join(frontier.hint("shuffle_hash"),
-          e("src") === frontier("v"))
-        .select(col("s"), col("dst").as("v"), lit(d).as("d"))
-        // dedup on (s, v) only — d is a per-level constant, so this is
-        // the old full-row distinct, but the dedup's hash(s, v) output
-        // partitioning now feeds the anti-join probe side exchange-free;
-        // the visited side is the hash build (no per-round sort of
-        // either side — r14, guide §2.4/§3.1).
-        .dropDuplicates(Seq("s", "v"))
-        .join(visited.hint("shuffle_hash"), Seq("s", "v"), "left_anti"))
-      if (next.agg(count(lit(1))).head().getLong(0) == 0L) go = false
-      else levels = levels :+ next
-    }
-    if (go) throw new IllegalStateException(
-      s"closenessCentrality did not finish within $maxIterations BFS " +
-        "rounds (raise maxIterations)")
-    val visited = levels.reduce(_.unionByName(_))
+    val visited = bfsDistances(graph, sources, relTypes, directed,
+      maxIterations, "closenessCentrality")
     val n = nodeIds(graph).count()
     val agg = visited.filter(col("s") =!= col("v"))
       .groupBy(col("v").as("id"))
@@ -1607,9 +1524,10 @@ object GraphAlgorithms {
   /** Eigenvector centrality by power iteration (GDS eigenvector parity):
     * x ← A'x / ‖A'x‖₂ from a uniform start — each round one src-keyed
     * join + one dst aggregation + one 1-row norm aggregate (which also
-    * materializes the round's lazy pin: ONE job per round, the pageRank
-    * pattern). The edge list is pinned pre-partitioned on src once, so no
-    * iteration re-shuffles it. Nodes with no in-edges (of the requested
+    * materializes the round's lazy pin: ONE job per round, the
+    * [[conservedRanks]] pattern; the round's transfer is [[rankContribs]]
+    * with a unit share). The edge list is pinned pre-partitioned on src
+    * once, so no iteration re-shuffles it. Nodes with no in-edges (of the requested
     * types) read 0 — returned analytically, never iterated. Fixed
     * iteration count (deterministic, oracle-replayable); GDS's tolerance
     * stop is a caller-side loop away.
@@ -1621,24 +1539,16 @@ object GraphAlgorithms {
   def eigenvectorCentrality(graph: PropertyGraph, iterations: Int = 3,
       relTypes: Seq[String] = Seq.empty,
       directed: Boolean = true): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
-      .select(col("src"), col("dst"))
-    val e = if (directed) e0
-      else e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
+    val e = bothWays(validated(edges(graph, relTypes), graph), directed)
     // Pin.keyed (r15): hash(src)/hash(id) layouts stay visible through the
     // pins, so no power-iteration round re-exchanges the edge frame.
     val links = Pin.keyed(e, Seq("src"))
-    val connected = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+    val connected = endpointIds(e)
     var x = connected.select(col("id"), lit(1.0).as("score"))
     for (_ <- 1 to iterations) {
-      val contrib = links.join(x.hint("shuffle_hash"),
-          links("src") === x("id"))
-        .groupBy(links("dst").as("id"))
-        .agg(sum(col("score")).as("raw"))
+      val contrib = rankContribs(links, x, share = col("score"))
       val received = Pin(connected.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("raw"), lit(0.0)).as("raw")))
+        .select(col("id"), coalesce(col("contrib"), lit(0.0)).as("raw")))
       // L2 norm materializes the pin — the round's single job.
       val norm = math.sqrt(
         received.agg(sum(col("raw") * col("raw"))).head().getDouble(0))
@@ -1647,10 +1557,7 @@ object GraphAlgorithms {
       val denom = if (norm == 0.0) 1.0 else norm
       x = received.select(col("id"), (col("raw") / lit(denom)).as("score"))
     }
-    val isolated = nodeIds(graph)
-      .join(x.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(0.0).as("score"))
-    x.unionByName(isolated)
+    withIsolated(graph, x, lit(0.0).as("score"))
   }
 
   /** Louvain community detection (GDS louvain parity), DETERMINISTIC:
@@ -1794,10 +1701,7 @@ object GraphAlgorithms {
       undirected: Boolean = true): DataFrame = {
     val MOD = 1000000007L // fits every intermediate product in a Long
     val e0 = edges0.select(col("src"), col("dst")).distinct()
-    val sym = if (undirected)
-      e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-    else e0
+    val sym = if (undirected) bothWays(e0).distinct() else e0
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
     // Pin.keyed (r15): hash(src) layout stays visible so each step's
@@ -1841,39 +1745,25 @@ object GraphAlgorithms {
     * avgOutDeg = |E| / |connected nodes|, no dangling-mass
     * redistribution (mass is NOT conserved in this recurrence — the
     * normalizer is deliberately too large), initial rank 1.0, isolated
-    * nodes closed-form at `1 - damping`. Scale shape = [[pageRank]]:
-    * links pinned pre-partitioned on src, one keyed join + aggregation
-    * per round, isolated nodes never iterate. */
+    * nodes closed-form at `1 - damping`. Scale shape: [[degreeLinks]]
+    * pinned pre-partitioned on src, one [[rankContribs]] round (keyed join
+    * + aggregation), isolated nodes never iterate. */
   def articleRank(graph: PropertyGraph, iterations: Int = 10,
       damping: Double = 0.85, relTypes: Seq[String] = Seq.empty): DataFrame = {
-    // One src exchange feeds the degree aggregation AND the links join on
-    // both sides (r14, guide §2.4) — the old shape shuffled the edge frame
-    // twice (groupBy input + join left).
     val e = validated(edges(graph, relTypes), graph)
-    // Pin.keyed (r15): one explicit hash(src) exchange feeds the degree
-    // aggregation and both join sides, and the layout claim survives the
-    // pin so no round re-exchanges links (see pageRank).
-    val links = Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
-    val connected = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+    val links = degreeLinks(e)
+    val connected = endpointIds(e)
     val nConn = connected.count()
     val avgDeg = if (nConn == 0L) 0.0 else e.count().toDouble / nConn
     var ranks = connected.select(col("id"), lit(1.0).as("rank"))
     for (_ <- 1 to iterations) {
-      val contribs = links.join(ranks.hint("shuffle_hash"),
-          links("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          (col("rank") / (col("deg") + lit(avgDeg))).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
+      val contribs = rankContribs(links, ranks,
+        col("rank") / (col("deg") + lit(avgDeg)))
       ranks = Pin(connected.join(contribs, Seq("id"), "left_outer")
         .select(col("id"), (lit(1.0 - damping) +
           lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))
     }
-    val isolated = nodeIds(graph)
-      .join(ranks.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(1.0 - damping).as("rank"))
-    ranks.unionByName(isolated)
+    withIsolated(graph, ranks, lit(1.0 - damping).as("rank"))
   }
 
   /** Global transitivity (a.k.a. global clustering coefficient):
@@ -1884,14 +1774,7 @@ object GraphAlgorithms {
     * division is bit-deterministic and the oracle replays it without
     * rounding. Returns 1 row (triangles, wedges, transitivity). */
   def transitivityEdges(edges0: DataFrame): DataFrame = {
-    // Dedup rides the hash(a) repartition (one exchange, not two — r14,
-    // guide §2.4); Pin.keyed (r15) keeps the hash(a) layout visible for
-    // orientByDegree's a-side join and the closing semi-join.
-    val canon = Pin.keyed(edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val canon = canonEdges(edges0)
     // Σ deg·(deg−1) stays an exact LONG end to end; the halving is an
     // integer `div` (the product is always even), never a double.
     val wedges = canon.select(explode(array(col("a"), col("b"))).as("id"))
@@ -1899,14 +1782,7 @@ object GraphAlgorithms {
       .agg(sum(col("deg") * (col("deg") - 1)).as("w2"))
       .select(expr("w2 div 2").as("wedges"))
     val m = canon.count() // materializes the pin; sizes the bloom (r15)
-    val tri = {
-      val oriented = orientByDegree(canon)
-      wedgeBloomPrefilter( // before the wedge exchange (r15, guide §3.2)
-          wedgeJoin(oriented).select(col("x"), col("y")), canon, m)
-        .join(canon.hint("shuffle_hash"),
-          col("x") === col("a") && col("y") === col("b"), "left_semi")
-        .agg(count(lit(1)).as("triangles"))
-    }
+    val tri = closedWedges(canon, m).agg(count(lit(1)).as("triangles"))
     tri.crossJoin(wedges) // both are 1-row aggregates: a broadcast join
       .select(col("triangles"), col("wedges").cast(LongType).as("wedges"),
         when(col("wedges") === 0, lit(0.0))
@@ -1930,10 +1806,7 @@ object GraphAlgorithms {
   def modularityEdges(edges0: DataFrame, assign: DataFrame): DataFrame = {
     // Single-exchange canonicalization (r14, guide §2.4): hash(a) rides
     // into the a-side assignment join below.
-    val canon = edges0
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
+    val canon = undirectedPairs(edges0)
       .repartition(col("a")).dropDuplicates(Seq("a", "b"))
     val tagged = Pin(canon
       .join(assign.select(col("id").as("a"), col("community").as("ca")), Seq("a"))

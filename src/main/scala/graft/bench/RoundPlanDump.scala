@@ -19,7 +19,8 @@ object RoundPlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(if (args.nonEmpty) args(0) else "plans/r15")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -60,8 +61,7 @@ object RoundPlanDump {
 
     // pagerank round: rank contributions against the keyed-pinned links
     // frame (one explicit src exchange shared with the degree aggregation).
-    val links = graft.impl.Pin.keyed(edges, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+    val links = GraphAlgorithms.degreeLinks(edges)
     val ranks = g.nodeIdFrame.select(col("id"), lit(1.0).as("rank"))
     dump("pagerank_contribs", GraphAlgorithms.rankContribs(links, ranks))
 
@@ -72,11 +72,7 @@ object RoundPlanDump {
 
     // wedge canon fragment: orientByDegree over the keyed-pinned canon —
     // the a-side attachment join must consume the claimed hash(a).
-    val canon = graft.impl.Pin.keyed(edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    val canon = GraphAlgorithms.canonEdges(edges)
     // orientByDegree pins its result, so dump the a-side attachment join
     // fragment inline (the same expression, minus the final Pin): the
     // canon scan must carry the hash(a) claim with no Exchange above it.

@@ -20,19 +20,19 @@ import org.apache.spark.storage.StorageLevel
   * blocks are silently recomputed — the right trade at 1000 executors even
   * though entries sit in the cache manager until evicted.
   *
-  * Override per session with `spark.graft.pin = localCheckpoint | persist`.
+  * The mode follows the master alone: session-wide `persist` on a local
+  * master was measured and rejected (OPTIMIZATION_r15.md).
   */
 object Pin {
   def apply(df: DataFrame): DataFrame =
-    mode(df) match {
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case _         => df.localCheckpoint(eager = false)
-    }
+    if (onCluster(df)) df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df.localCheckpoint(eager = false)
 
   /** Pin WITH a retained hash(keys) partitioning (r15, guide §2.4):
-    * repartitions `df` to the session shuffle-partition count with an
-    * EXPLICIT n (so AQE cannot coalesce the exchange and the layout claim
-    * stays exactly true), applies `andThen` (which must be partitioning-
+    * repartitions `df` to an EXPLICIT partition count (so AQE cannot
+    * coalesce the exchange and the layout claim stays exactly true) —
+    * `width` if given, else derived from the frame's estimated size (see
+    * [[keyedPartitions]]) — applies `andThen` (which must be partitioning-
     * preserving: dedup/aggregate on a key superset, filter, non-renaming
     * projection — NEVER a re-keying operation), and pins the result so the
     * planner still SEES the hash(keys) layout afterwards. Every per-round
@@ -49,7 +49,6 @@ object Pin {
   def keyed(df: DataFrame, keys: Seq[String],
       andThen: DataFrame => DataFrame = identity,
       width: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
     // `width` overrides the size-derived count for frames whose CONSUMERS
     // are compute-bound rather than byte-bound (e.g. the HyperBall sketch
     // merges): there the pin's width sets the loop's parallelism, and
@@ -58,12 +57,9 @@ object Pin {
     val n = width.getOrElse(keyedPartitions(df))
     val shaped = andThen(df.repartition(n,
       keys.map(org.apache.spark.sql.functions.col): _*))
-    mode(df) match {
-      case "persist" => shaped.persist(StorageLevel.MEMORY_AND_DISK)
-      case _ =>
-        org.apache.spark.sql.graftx.PinBridge
-          .checkpointKeepingHash(shaped, keys, n)
-    }
+    if (onCluster(df)) shaped.persist(StorageLevel.MEMORY_AND_DISK)
+    else org.apache.spark.sql.graftx.PinBridge
+      .checkpointKeepingHash(shaped, keys, n)
   }
 
   /** Scale-adaptive partition count for a keyed pin (guide §2.2): derive
@@ -75,37 +71,19 @@ object Pin {
     * few MB — measured r15: betweenness 9.2 → 24.8 s at a fixed 32 on
     * sf0.1 purely from tiny-task scheduling. Deriving n from bytes keeps
     * the local bench at AQE-like counts while a 100 TB frame gets the full
-    * configured width; `spark.graft.pin.keyedPartitions` overrides. When
-    * the estimate is unusable (unknown-size leaves poison the product to
-    * ~Long.Max) fall back to shuffle.partitions — the conservative,
-    * cluster-correct width. */
+    * configured width. When the estimate is unusable (unknown-size leaves
+    * poison the product to ~Long.Max) fall back to shuffle.partitions —
+    * the conservative, cluster-correct width. */
   private def keyedPartitions(df: DataFrame): Int = {
     val spark = df.sparkSession
     val maxN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    spark.conf.getOption("spark.graft.pin.keyedPartitions") match {
-      case Some(v) => v.toInt.max(1)
-      case None =>
-        val advisory = org.apache.spark.sql.graftx.PinBridge
-          .advisoryPartitionSize(spark)
-        val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (est <= 0 || est > BigInt(Long.MaxValue) / 4) maxN
-        else ((est + advisory - 1) / advisory).min(maxN).max(1).toInt
-    }
+    val advisory = org.apache.spark.sql.graftx.PinBridge
+      .advisoryPartitionSize(spark)
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est <= 0 || est > BigInt(Long.MaxValue) / 4) maxN
+    else ((est + advisory - 1) / advisory).min(maxN).max(1).toInt
   }
 
-  /** Eager variant for per-iteration loop state that the caller unpersists
-    * once the next round is materialized. */
-  def eager(df: DataFrame): DataFrame =
-    mode(df) match {
-      case "persist" =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK); p.count(); p
-      case _ => df.localCheckpoint(eager = true)
-    }
-
-  private def mode(df: DataFrame): String = {
-    val spark = df.sparkSession
-    spark.conf.getOption("spark.graft.pin").getOrElse {
-      if (spark.sparkContext.isLocal) "localCheckpoint" else "persist"
-    }
-  }
+  private def onCluster(df: DataFrame): Boolean =
+    !df.sparkSession.sparkContext.isLocal
 }

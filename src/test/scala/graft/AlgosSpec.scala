@@ -428,6 +428,16 @@ class AlgosSpec extends SparkTestBase {
       GraphAlgorithms.harmonicCentrality(g, src, maxIterations = 1).collect()
     }
     assert(ex.getMessage.contains("did not finish"))
+    val exC = intercept[IllegalStateException] {
+      GraphAlgorithms.closenessCentrality(g, src, maxIterations = 1).collect()
+    }
+    assert(exC.getMessage.contains("closenessCentrality did not finish"))
+    // directed: only forward paths count — nothing reaches 1, 3 is reached
+    // from 2 (d=1) and 1 (d=2)
+    val hd = GraphAlgorithms.harmonicCentrality(g, src, directed = true)
+      .collect().map(r => (r.getLong(0) & 0xFFFFFFFFL, r.getDouble(1))).toMap
+    assert(hd(1L) === 0.0 && hd(2L) === 1.0 && hd(3L) === 1.5)
+    assert(math.abs(hd(4L) - (1.0 + 0.5 + 1.0 / 3)) < 1e-9)
   }
 
   test("harmonic centrality HLL estimate tracks the exact values") {
@@ -976,6 +986,12 @@ class AlgosSpec extends SparkTestBase {
     // n = 4: WF multiplies by r/(n-1) = 2/3.
     assert(math.abs(wf(2L) - (2.0 / 3) * 1.0) < 1e-12)
     assert(math.abs(wf(1L) - (2.0 / 3) * (2.0 / 3)) < 1e-12)
+    // directed 1 -> 2 -> 3: nothing reaches 1; 3 is reached from 2 (d=1)
+    // and 1 (d=2), so closeness(3) = 2/3 and closeness(2) = 1/1.
+    val dir = GraphAlgorithms.closenessCentrality(g, src, directed = true)
+      .collect().map(r => (r.getLong(0) & 0xFFFFFFFFL) -> r.getDouble(1)).toMap
+    assert(dir(1L) === 0.0 && dir(2L) === 1.0)
+    assert(math.abs(dir(3L) - 2.0 / 3) < 1e-12)
   }
 
   test("eigenvector centrality: star center dominates, L2 norm is 1") {

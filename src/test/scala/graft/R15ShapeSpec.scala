@@ -47,6 +47,22 @@ class R15ShapeSpec extends SparkTestBase {
     assert(truss("0") === truss(s"${Long.MaxValue}"))
   }
 
+  test("an explicit bloom.minItems=0 builds the k-truss per-round bloom") {
+    // The 2^20 per-round floor applies only while the conf is unset, so
+    // the forced-on k-truss comparison above really runs a bloom.
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    withSQLConf("spark.graft.bloom.minItems" -> "0") {
+      val canon = messyEdges.filter(col("src") =!= col("dst"))
+        .select(least(col("src"), col("dst")).as("a"),
+          greatest(col("src"), col("dst")).as("b")).distinct()
+      val plan = GraphAlgorithms.edgeSupport(canon, canon.count())
+        .queryExecution.optimizedPlan
+      assert(plan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[BloomFilterMightContain]))),
+        s"edgeSupport must probe the wedge bloom:\n$plan")
+    }
+  }
+
   // ---- Pin.keyed round-body pins (VERDICT r14 #7): the per-round join
   // against a keyed pin must consume the claimed hash layout — no exchange
   // above the pinned scan — and the claim must never change results.
