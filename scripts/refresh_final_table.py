@@ -3,27 +3,34 @@
 committed full bench artifact (round-12 process: the r8 quiet table was
 four rounds old and 12 rows short; the reference is now the cleanest
 available full run at its RECORDED sentinels, and future rounds regress
-sentinel-matched)."""
+sentinel-matched).
+
+Usage: scripts/refresh_final_table.py <full bench artifact .json>
+"""
 import json, sys
 
-src = sys.argv[1] if len(sys.argv) > 1 else "BENCH_local_r12_final.json"
+if len(sys.argv) != 2:
+    sys.exit("usage: refresh_final_table.py <full bench artifact .json>")
+src = sys.argv[1]
 d = json.load(open(src))
 qs = dict(sorted(d["queries"].items()))
 scan = d["sentinel_base_sec"]
 barrier = d.get("barrier_base_sec")
+cpus = d["cpus"]
+suspects = len(d.get("suspect", {}))
 
 rows = "\n".join(f"| {k} | {v} |" for k, v in qs.items())
 import os
 round_no = os.environ.get("GRAFT_ROUND", "13")
 table = f"""
-## Round-{round_no} FINAL table (sf0.1, local[32]) — the standing reference
+## Round-{round_no} FINAL table (sf0.1, local[{cpus}]) — the standing reference
 
 One table, one window (VERDICT r12 #1): every registry row measured in
 a single full run at its RECORDED sentinels; future rounds regress
 sentinel-matched (scan AND barrier). Source artifact: {src}.
 
-**Sentinels: scan {scan} s (quiet ref 0.06), barrier {barrier} s
-(provisional quiet ref 0.60).** Total {d['value']} s / {len(qs)} rows.
+**Sentinels: scan {scan} s, barrier {barrier} s** (quiet refs in force during the run: scan {d['quiet_scan_ref_sec']}, barrier {d['quiet_barrier_ref_sec']}).
+Total {d['value']} s / {len(qs)} rows; contaminated={str(d['contaminated']).lower()}, {suspects} suspect rows.
 
 | query | sec |
 |---|---|
@@ -38,8 +45,8 @@ bench_ref = f'''package graft
 /** Committed per-row bench reference (seconds), used by Bench to flag rows
   * whose min-of-passes exceeds SuspectFactor x this value as "suspect" —
   * contention the sentinels under-detected, never folded in silently.
-  * Source: {src} (full {len(qs)}-row run, scan sentinel {scan},
-  * barrier sentinel {barrier}, contaminated=false, zero suspects).
+  * Source: {src} (full {len(qs)}-row run at local[{cpus}],
+  * scan sentinel {scan}, barrier sentinel {barrier}, contaminated={str(d['contaminated']).lower()}, {suspects} suspect rows).
   * Regenerate with scripts/refresh_final_table.py whenever BASELINE.md's
   * FINAL table is refreshed; a missing row (a query newer than the
   * table) is simply not suspect-checked until the next refresh.

@@ -438,9 +438,10 @@ object GraphAlgorithms {
     * unchanged by construction.
     *
     * Sizing (§5): `m` is the exact canon count (one cheap job over the
-    * pinned blocks). Bits target 3% fpp, capped at
-    * `spark.graft.bloom.maxBits` (default 2^27 = 16 MB) so the broadcast
-    * value stays bounded on huge graphs — past the cap the filter saturates
+    * pinned blocks). Bits target 3% fpp; [[BloomBridge.mightContain]]
+    * clamps both to the caps Spark's aggregate applies
+    * (`spark.sql.optimizer.runtime.bloomFilter.maxNumBits`, default 2^26
+    * = 8 MB, and `…maxNumItems`) — past the cap the filter saturates
     * toward pass-through (less selective, never wrong). Skipped below
     * `spark.graft.bloom.minItems` build rows where the wedge frame is too
     * small for the extra aggregate pass to pay; when that conf is unset
@@ -453,14 +454,9 @@ object GraphAlgorithms {
     val minItems = conf.getOption("spark.graft.bloom.minItems")
       .fold(defaultMinItems)(_.toLong)
     if (m <= 0 || m < minItems) wedges
-    else {
-      val maxBits =
-        conf.get("spark.graft.bloom.maxBits", String.valueOf(1L << 27)).toLong
-      val bits =
-        math.min(maxBits, BloomBridge.optimalNumOfBits(m, 0.03))
-      wedges.filter(BloomBridge.mightContain(canon,
-        xxhash64(col("a"), col("b")), xxhash64(col("x"), col("y")), m, bits))
-    }
+    else wedges.filter(BloomBridge.mightContain(canon,
+      xxhash64(col("a"), col("b")), xxhash64(col("x"), col("y")), m,
+      BloomBridge.optimalNumOfBits(m, 0.03)))
   }
 
   /** Betweenness centrality via k-source Brandes (Brandes 2001; exact

@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.bench.ScaleCheck [scale ...]   (default: 1 10)
   * Prints one line per (algo, scale) and a final exponent table; paste
-  * into SCALE.md's round-13 validation section.
+  * into SCALE.md's round-13 validation section. `SPARK_GRAFT_ONLY` picks
+  * rows (e.g. `SPARK_GRAFT_ONLY=pagerank` with scale 10 for a pagerank
+  * A/B) without paying for the full matrix.
   */
 object ScaleCheck {
   private val BaseNodes = 60000L
@@ -40,14 +42,18 @@ object ScaleCheck {
       .filter(col("src") =!= col("dst"))
   }
 
-  def syntheticGraph(spark: SparkSession, scale: Int): PropertyGraph = {
-    val n = BaseNodes * scale
-    val nodes = spark.range(n).toDF("id")
-    val edges = syntheticEdges(spark, scale)
-      .withColumn("rid", monotonically_increasing_id())
+  def syntheticGraph(spark: SparkSession, scale: Int): PropertyGraph =
+    graphOf(spark, scale, syntheticEdges(spark, scale), Map.empty)
+
+  /** One `N` node table over ids `0 until BaseNodes * scale` and one `E`
+    * rel table over `edges0` (src, dst), rel ids assigned here. */
+  private def graphOf(spark: SparkSession, scale: Int, edges0: DataFrame,
+      props: Map[String, String]): PropertyGraph = {
+    val nodes = spark.range(BaseNodes * scale).toDF("id")
+    val edges = edges0.withColumn("rid", monotonically_increasing_id())
       .select(col("rid"), col("src"), col("dst"))
     PropertyGraph(
-      Seq(NodeTableDef(Set("N"), nodes, "id", Map.empty, "n")),
+      Seq(NodeTableDef(Set("N"), nodes, "id", props, "n")),
       Seq(RelTableDef("E", edges, "rid", "src", "dst", Map.empty,
         "e", "n", "n")))
   }
@@ -74,33 +80,15 @@ object ScaleCheck {
         .as("dst"))
   }
 
-  def syntheticDagGraph(spark: SparkSession, scale: Int): PropertyGraph = {
-    val n = BaseNodes * scale
-    val nodes = spark.range(n).toDF("id")
-    val edges = syntheticDagEdges(spark, scale)
-      .withColumn("rid", monotonically_increasing_id())
-      .select(col("rid"), col("src"), col("dst"))
-    PropertyGraph(
-      Seq(NodeTableDef(Set("N"), nodes, "id", Map("pid" -> "id"), "n")),
-      Seq(RelTableDef("E", edges, "rid", "src", "dst", Map.empty,
-        "e", "n", "n")))
-  }
+  def syntheticDagGraph(spark: SparkSession, scale: Int): PropertyGraph =
+    graphOf(spark, scale, syntheticDagEdges(spark, scale), Map("pid" -> "id"))
 
   /** [[syntheticGraph]] with the raw id exposed as a `pid` node property
     * (the cypher-driven rows need a property to select sources by;
     * [[syntheticGraph]] itself stays property-less so the r13 algo rows
     * keep their exact measured shape). */
-  def syntheticPropGraph(spark: SparkSession, scale: Int): PropertyGraph = {
-    val n = BaseNodes * scale
-    val nodes = spark.range(n).toDF("id")
-    val edges = syntheticEdges(spark, scale)
-      .withColumn("rid", monotonically_increasing_id())
-      .select(col("rid"), col("src"), col("dst"))
-    PropertyGraph(
-      Seq(NodeTableDef(Set("N"), nodes, "id", Map("pid" -> "id"), "n")),
-      Seq(RelTableDef("E", edges, "rid", "src", "dst", Map.empty,
-        "e", "n", "n")))
-  }
+  def syntheticPropGraph(spark: SparkSession, scale: Int): PropertyGraph =
+    graphOf(spark, scale, syntheticEdges(spark, scale), Map("pid" -> "id"))
 
   /** Deterministic synthetic events for the streaming state-growth row:
     * `scale` multiplies BOTH the row count and the key cardinality, so
@@ -141,59 +129,25 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val session = new GraftSession(spark)
-
-    // Optional row filter (comma-separated names) so the 8-vs-32-core and
-    // low-partition spill sweeps (VERDICT r14 #4/#5) can target the
-    // heaviest rows without paying for the full matrix.
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
 
     // Spill / peak-memory accounting per timed row (VERDICT r14 #5: the
     // forced shuffle-hash builds need a spill-safety story — shuffled-hash
     // build sides do not spill, so the signal to watch at low partition
     // counts is peak execution memory and whether ANY operator spills).
-    @volatile var spillMem = 0L
-    @volatile var spillDisk = 0L
-    @volatile var peakExec = 0L
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          synchronized {
-            val m = te.taskMetrics
-            if (m != null) {
-              spillMem += m.memoryBytesSpilled
-              spillDisk += m.diskBytesSpilled
-              peakExec = math.max(peakExec, m.peakExecutionMemory)
-            }
-          }
-      })
+    val meter = new Harness.Meter(spark)
 
     // (name, scale) -> seconds
     val times = scala.collection.mutable.LinkedHashMap.empty[(String, Int), Double]
     def time(name: String, scale: Int)(f: => Unit): Unit = {
-      if (only.forall(_.contains(name))) {
-        val (sm0, sd0) = (spillMem, spillDisk)
-        peakExec = 0L
-        val t0 = System.nanoTime()
-        f
-        val sec = (System.nanoTime() - t0) / 1e9
+      if (Harness.selected(name)) {
+        val (sec, c) = meter.time(f)
         times((name, scale)) = sec
-        Thread.sleep(120) // let the listener bus drain the last task batch
         println(f"[scale] $name%-16s ${scale}x  $sec%8.2f s  " +
-          f"spillMB=${(spillMem - sm0) / 1e6}%8.1f " +
-          f"spillDiskMB=${(spillDisk - sd0) / 1e6}%8.1f " +
-          f"peakTaskMemMB=${peakExec / 1e6}%8.1f")
+          f"spillMB=${c.spillMem / 1e6}%8.1f " +
+          f"spillDiskMB=${c.spillDisk / 1e6}%8.1f " +
+          f"peakTaskMemMB=${c.peakTaskMem / 1e6}%8.1f")
       }
     }
 
@@ -263,7 +217,7 @@ object ScaleCheck {
           syntheticEvents(spark, sc).coalesce(4)
             .write.mode("overwrite").parquet(staged.toString)
           import graft.streaming.GraftStreaming
-          GraftStreaming.withStatePartitions(spark, cpus.toInt) {
+          GraftStreaming.withStatePartitions(spark, Harness.cpus) {
             val stream = GraftStreaming.eventsStream(spark, staged.toString)
             // Per-USER windowed aggregation — state rows = users x open
             // windows, so the 10x key cardinality actually lands in the

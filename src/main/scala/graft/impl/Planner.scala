@@ -473,16 +473,14 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     val baseGraphs = on.map(resolveGraph)
     var df = ctx.df
     val compiler = () => new ExprCompiler(ctx.header, df.schema, params, Map.empty, extensions)
-    // Fresh ids live in construct-private spaces above any source tag.
-    val ConstructTagBase = 200L
+    // Fresh ids come from the write-id generator, so a CONSTRUCT over a
+    // graph holding an earlier CONSTRUCT's elements cannot re-mint them.
     val nodeIdCols: Map[String, String] =
       nodes.keys.toSeq.zipWithIndex.map { case (v, idx) =>
         if (ctx.header.contains(IdSlot(v))) v -> ctx.header.col(IdSlot(v))
         else {
           val cname = s"_ct_id_$idx"
-          df = df.withColumn(cname,
-            shiftleft(lit(ConstructTagBase + idx), 56)
-              .bitwiseOR(monotonically_increasing_id()))
+          df = df.withColumn(cname, freshWriteId(writeGen, nextWriteVarIdx()))
           v -> cname
         }
       }.toMap
@@ -497,9 +495,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     }
     val relIdCols: Seq[String] = edges.zipWithIndex.map { case (e, idx) =>
       val cname = s"_ct_rid_$idx"
-      df = df.withColumn(cname,
-        shiftleft(lit(ConstructTagBase + 32 + idx), 56)
-          .bitwiseOR(monotonically_increasing_id()))
+      df = df.withColumn(cname, freshWriteId(writeGen, nextWriteVarIdx()))
       cname
     }
     val relPropCols: Seq[Seq[(String, String)]] = edges.zipWithIndex.map {
@@ -2370,26 +2366,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     val spPrune = shortestSpecs.find(_.hops == Seq((e.v, true)))
       .exists(s => (s.sel.mode == "shortest" || s.sel.mode == "allshortest") &&
         !deferredShortest.contains(s.key))
-    // SCALE.md "SHORTEST k>=2 per-pair early-stop" variant (b), behind
-    // spark.graft.shortestK.compact (default off): compact the paths
-    // ACCUMULATOR — never the frontier — to per-endpoint-pair top-k after
-    // each level. Sound because levels arrive in strictly increasing
-    // length: dense_rank over (length, rel-id sequence) never demotes an
-    // existing row when longer rows arrive, so a row ranked > k at any
-    // level can never re-enter the final selector window's top-k, and
-    // dropping it leaves every kept row's rank unchanged. The frontier is
-    // untouched, so dropped rows still extend into longer trails for OTHER
-    // pairs (the round-10 soundness counter-argument against frontier
-    // drops). Bounds the selector-window input to O(pairs·k) instead of
-    // the full bounded-trail set — the 1000-executor win for hi >= 6
-    // shapes; below that the per-level window shuffle is a net loss,
-    // hence the opt-in flag. Deferred (path-reading WHERE) specs are
-    // excluded: the filter runs before selection, so rank-now does not
-    // bound rank-after-filter.
-    val compactSpec = shortestSpecs.find(_.hops == Seq((e.v, true)))
-      .filter(s => (s.sel.mode == "shortestk" || s.sel.mode == "shortestgroups") &&
-        !deferredShortest.contains(s.key) &&
-        spark.conf.getOption("spark.graft.shortestK.compact").exists(_.toBoolean))
     // nodes(p) needs the intermediate node ids; accumulate them only when a
     // bound path variable spans this var-length hop (one extra array column
     // per frontier row otherwise wasted).
@@ -2465,25 +2441,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         if (closedPairs == null) newPairs
         else closedPairs.unionByName(newPairs)
     }
-    // Per-level accumulator compaction (see compactSpec above). The same
-    // (length, rel-id sequence) ranking the final selector window applies,
-    // partitioned by the endpoint pair — which IS the final window's
-    // partitioning for a single-var-length-hop spec.
-    def compactAcc(acc: DataFrame): DataFrame = compactSpec match {
-      case None => acc
-      case Some(s) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(aCol), col(oCol))
-        val len = F.size(col(pids))
-        val rk =
-          if (s.sel.mode == "shortestgroups") F.dense_rank().over(w.orderBy(len))
-          else F.dense_rank().over(w.orderBy(len, col(pids)))
-        // Pin: the compacted accumulator is re-read and re-windowed every
-        // level; the cut keeps window lineage from nesting per level.
-        Pin(acc.withColumn("_sp_ck", rk).filter(col("_sp_ck") <= s.sel.k)
-          .drop("_sp_ck"))
-    }
-
     if (!unbounded) {
       for (k <- 1 to hi) {
         if (spPrune && k >= math.max(lo, 1)) {
@@ -2497,8 +2454,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
           }
         }
         if (k >= lo) paths = if (paths == null) frontier else paths.unionByName(frontier)
-        if (compactSpec.nonEmpty && paths != null && k < hi)
-          paths = compactAcc(paths)
         if (k < hi) frontier = extend(frontier)
       }
     } else {
@@ -2523,7 +2478,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         else {
           if (spPrune && k >= math.max(lo, 1)) recordClosed(frontier)
           if (k >= lo) paths = if (paths == null) frontier else paths.unionByName(frontier)
-          if (compactSpec.nonEmpty && paths != null) paths = compactAcc(paths)
           if (k >= maxIters) throw new CypherCompileException(
             s"unbounded var-length expand exceeded $maxIters levels " +
               "(raise spark.graft.varLength.maxIterations)")
@@ -3475,8 +3429,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     PropertyGraph(nodeDefs, relDefs)
   }
 
-  /** Fresh element ids for write clauses, unique against every source id
-    * space: [8b tag=233][8b generation][5b var][12b partition][31b row].
+  /** Fresh element ids for write clauses and CONSTRUCT, unique against
+    * every source id space and every earlier write or CONSTRUCT:
+    * [8b tag=233][8b generation][5b var][12b partition][31b row].
     * One generation is allocated per write query (JVM-wide counter); the
     * partition/row fields come from monotonically_increasing_id's layout,
     * so the frame feeding a CREATE must stay under 2^12 partitions and

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
   Literal, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 
 /** Package-local bridge to Catalyst's runtime Bloom-filter machinery
   * (guide §3.2). Spark 4.1 ships `BloomFilterAggregate` /
@@ -43,12 +44,18 @@ object BloomBridge {
     * `build` (sized for `expectedItems` items in `numBits` bits) possibly
     * contain `probeKey`? Both key expressions must be LongType — pass
     * `xxhash64(cols...)` on both sides so arbitrary key tuples hash the
-    * same way. */
+    * same way. Both sizes are clamped to the session's
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` / `maxNumBits`,
+    * the caps `BloomFilterAggregate` applies at execution, so the plan
+    * shows the size the filter really gets. */
   def mightContain(build: DataFrame, buildKey: Column, probeKey: Column,
       expectedItems: Long, numBits: Long): Column = {
-    val agg = ExpressionUtils.column(
-      new BloomFilterAggregate(ExpressionUtils.expression(buildKey),
-        Literal(expectedItems), Literal(numBits)).toAggregateExpression())
+    val conf = build.sparkSession.sessionState.conf
+    val agg = ExpressionUtils.column(new BloomFilterAggregate(
+      ExpressionUtils.expression(buildKey),
+      Literal(expectedItems.min(conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS))),
+      Literal(numBits.min(conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS))))
+      .toAggregateExpression())
     val aggPlan = build.select(agg.as("graft_bloom"))
       .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed

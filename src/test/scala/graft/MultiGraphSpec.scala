@@ -108,6 +108,19 @@ class MultiGraphSpec extends SparkTestBase {
       "MATCH (x:X)-[:TAGGED]->(t:Tag) RETURN x.name AS n, t.of AS o")
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got === Set(("a", "a"), ("b", "b")))
+    // The same CONSTRUCT ON over its own result mints fresh ids again, so
+    // no new element reuses an id of the first CONSTRUCT's Tags.
+    session.store("tagged", built)
+    val twice = session.cypherGraph(built,
+      "MATCH (x:X) CONSTRUCT ON tagged NEW (x)-[:TAGGED]->(:Tag {of: x.name}) " +
+        "RETURN GRAPH")
+    val perX = session.cypher(twice,
+      "MATCH (x:X)-[:TAGGED]->(t:Tag) RETURN x.name AS n, count(*) AS c")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perX === Map("a" -> 2L, "b" -> 2L))
+    assert(session.cypher(twice,
+      "MATCH (t:Tag) RETURN count(DISTINCT id(t)) AS c")
+      .collect().head.getLong(0) === 4L)
   }
 
   test("createGraph registers a constructed graph in the catalog") {

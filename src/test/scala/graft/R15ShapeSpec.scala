@@ -157,4 +157,23 @@ class R15ShapeSpec extends SparkTestBase {
         s"might_contain must be below the wedge exchange:\n$plan")
     }
   }
+
+  test("bloom size is clamped to Spark's runtime bloomFilter.maxNumBits") {
+    // ~2,000 canon edges want ~15k bits at 3% fpp; BloomFilterAggregate
+    // would cut that to the session cap at execution, so the plan must
+    // already carry the capped size.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val chain = spark.range(2000L).select(col("id").as("src"),
+      (col("id") + 1L).as("dst"))
+    val e = messyEdges.unionByName(chain.select(col("src") + 1000L,
+      col("dst") + 1000L).toDF("src", "dst"))
+    withSQLConf("spark.graft.bloom.minItems" -> "0",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> "4096") {
+      val plan = GraphAlgorithms.triangleCountEdges(e).queryExecution.analyzed
+      val bits = plan.collectWithSubqueries { case p => p.expressions }
+        .flatten.flatMap(_.collect { case b: BloomFilterAggregate =>
+          b.numBitsExpression.eval().asInstanceOf[Number].longValue })
+      assert(bits.nonEmpty && bits.forall(_ <= 4096L), s"bloom bits: $bits")
+    }
+  }
 }
