@@ -1240,13 +1240,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     (ctx, rewritten)
   }
 
-  /** Pattern comprehension `[ (a)-->(b) WHERE p | proj ]` in value
-    * position: plan the pattern as a correlated subquery, aggregate the
-    * projection per binding of the SHARED variables, left-join the lists
-    * back, rewrite the expression to the list column. Correlating on the
-    * shared vars (not a row id) is exact: outer rows with equal shared
-    * bindings have equal lists by definition. Unmatched rows get [].
-    * List order is unspecified (as in openCypher without ORDER BY). */
   /** Full-query subquery expression (EXISTS/COUNT/COLLECT { <query> }):
     * desugared onto the correlated CALL {{ }} machinery. The body's RETURN
     * becomes a WITH (keeping DISTINCT/SKIP/LIMIT — they change the row
@@ -1370,6 +1363,13 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     (ctx, replacement)
   }
 
+  /** Pattern comprehension `[ (a)-->(b) WHERE p | proj ]` in value
+    * position: plan the pattern as a correlated subquery, aggregate the
+    * projection per binding of the SHARED variables, left-join the lists
+    * back, rewrite the expression to the list column. Correlating on the
+    * shared vars (not a row id) is exact: outer rows with equal shared
+    * bindings have equal lists by definition. Unmatched rows get [].
+    * List order is unspecified (as in openCypher without ORDER BY). */
   private def materializePatternComps(ctx0: Ctx, e: Expr): (Ctx, Expr) = {
     var ctx = ctx0
     val rewritten = ExprOps.transformUp(e) {
@@ -1536,18 +1536,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     }
   }
 
-  /** Lambdas (quantifiers / comprehensions / reduce) over relationships(p)
-    * or nodes(p) that read the binder as an entity (`all(r IN
-    * relationships(p) WHERE r.w > 4)`) need entity VALUES, but the path
-    * struct stores bare ids (bindPaths). Materialize an ordered
-    * entity-struct list per DISTINCT id array — correlating on the array
-    * itself is exact, since equal id arrays have equal entity lists — via
-    * posexplode + id-join against the full rel/node scan, left-join the
-    * lists back, and swap the lambda's list expression for the new column.
-    * The binder then compiles under ExprCompiler's entity-struct env rules
-    * (bare binder still means the id, so identity semantics hold). One
-    * id-keyed join + one aggregation per (path, kind), paid only by queries
-    * using the shape; both sides stay key-bucketed at scale. */
   /** Turn an id-array column into a fresh value var holding the ordered
     * ENTITY-struct list (one distinct-key join against the full node/rel
     * element scan; position-sorted collect rebuilds the order). Shared by
@@ -1578,6 +1566,18 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       listVar)
   }
 
+  /** Lambdas (quantifiers / comprehensions / reduce) over relationships(p)
+    * or nodes(p) that read the binder as an entity (`all(r IN
+    * relationships(p) WHERE r.w > 4)`) need entity VALUES, but the path
+    * struct stores bare ids (bindPaths). Materialize an ordered
+    * entity-struct list per DISTINCT id array — correlating on the array
+    * itself is exact, since equal id arrays have equal entity lists — via
+    * posexplode + id-join against the full rel/node scan, left-join the
+    * lists back, and swap the lambda's list expression for the new column.
+    * The binder then compiles under ExprCompiler's entity-struct env rules
+    * (bare binder still means the id, so identity semantics hold). One
+    * id-keyed join + one aggregation per (path, kind), paid only by queries
+    * using the shape; both sides stay key-bucketed at scale. */
   private def materializeEntityLists(ctx0: Ctx, e: Expr): (Ctx, Expr) = {
     def listKind(v: String): Option[Boolean] =
       if (!ctx0.header.contains(PathSlot(v))) None
@@ -1636,9 +1636,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     (ctx, rewritten)
   }
 
-  /** EXISTS-style pattern predicate -> left semi (or anti) join, the Spark
-    * formulation of the reference's ExistsSubQuery
-    * (RelationalPlanner.scala:224-247). */
   /** Vars an inner pattern-predicate WHERE references that the pattern
     * itself does not bind but the OUTER context does — the openCypher
     * "EXISTS sees the enclosing scope" cases the id-semi-join machinery
@@ -1664,6 +1661,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         Seq(ReturnItem(IntLit(1), Some("_ppq"))), Seq.empty, None, None))),
       Seq.empty))
 
+  /** EXISTS-style pattern predicate -> left semi (or anti) join, the Spark
+    * formulation of the reference's ExistsSubQuery
+    * (RelationalPlanner.scala:224-247). */
   private def planPatternPredicate(ctx: Ctx, part: PatternPart,
       negated: Boolean, innerWhere: Option[Expr] = None): Ctx = {
     if (outerOnlyWhereRefs(ctx, part, innerWhere).nonEmpty) {
@@ -3433,21 +3433,26 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     * every source id space and every earlier write or CONSTRUCT:
     * [8b tag=233][8b generation][5b var][12b partition][31b row].
     * One generation is allocated per write query (JVM-wide counter); the
-    * partition/row fields come from monotonically_increasing_id's layout,
-    * so the frame feeding a CREATE must stay under 2^12 partitions and
-    * 2^31 rows per partition (plenty after any shuffle; a raw 100 TB scan
-    * feeding CREATE directly should be repartitioned first). The id frame
-    * is pinned so the nondeterministic generator evaluates exactly once
-    * (same hazard planConstruct documents). */
+    * partition/row fields come from monotonically_increasing_id's layout.
+    * A frame feeding a write with 2^12 or more partitions, or 2^31 or more
+    * rows in one partition, would overflow into the neighbouring field and
+    * mint duplicate ids, so the id expression fails the job instead,
+    * naming the limit (repartition such a frame before the write). The id
+    * frame is pinned so the nondeterministic generator evaluates exactly
+    * once (same hazard planConstruct documents). */
   private def freshWriteId(gen: Int, varIdx: Int): Column = {
     val m = monotonically_increasing_id()
-    val part = shiftright(m, 33)
-    val row = m.bitwiseAND(lit((1L << 33) - 1))
-    shiftleft(lit(233L), 56)
-      .bitwiseOR(shiftleft(lit(gen.toLong), 48))
-      .bitwiseOR(shiftleft(lit(varIdx.toLong), 43))
-      .bitwiseOR(shiftleft(part, 31))
-      .bitwiseOR(row)
+    // Set bits outside the 12-bit partition and 31-bit row fields.
+    val overflow = ~((((1L << 12) - 1) << 33) | ((1L << 31) - 1))
+    when(m.bitwiseAND(lit(overflow)) =!= 0L, raise_error(lit(
+      "fresh write ids allow at most 4096 (2^12) partitions and 2^31 rows " +
+        "per partition in the frame feeding a write clause; repartition " +
+        "it first")).cast(LongType))
+      .otherwise(shiftleft(lit(233L), 56)
+        .bitwiseOR(shiftleft(lit(gen.toLong), 48))
+        .bitwiseOR(shiftleft(lit(varIdx.toLong), 43))
+        .bitwiseOR(shiftleft(shiftright(m, 33), 31))
+        .bitwiseOR(m.bitwiseAND(lit((1L << 33) - 1))))
   }
 
   private lazy val writeGen: Int = {
@@ -3467,8 +3472,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     writeVarIdx
   }
 
-  /** CREATE pattern: one new element per driving row per unbound var;
-    * bound vars may only appear as bare endpoints. */
   /** Label EXPRESSIONS describe a match, not a concrete label set —
     * Neo4j rejects them in writing clauses; without this, CREATE (n:A|B)
     * would silently make an unlabeled node and MERGE (n:A|B) would match
@@ -3529,6 +3532,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     }
   }
 
+  /** CREATE pattern: one new element per driving row per unbound var;
+    * bound vars may only appear as bare endpoints. */
   private def planCreate(ctx0: Ctx, pattern0: Pattern): Ctx = {
     val pattern = Pattern(foldWriteDynPattern(pattern0.parts, "CREATE"))
     rejectLabelExprs(pattern.parts, "CREATE")
@@ -4223,466 +4228,200 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     ctx0
   }
 
-  /** MERGE: single node pattern, or a single relationship whose endpoints
-    * are already bound. Matching multiplies rows exactly like MATCH; per
-    * distinct unmatched key combination ONE element is created and every
-    * unmatched row binds to it (Neo4j's row-sequential MERGE converges to
-    * the same state). */
+  /** MERGE: match the whole pattern against the write state, or create it
+    * whole (openCypher all-or-nothing). Every pattern property is
+    * evaluated on the driving row into a key column, so keys may depend
+    * on the row. The pattern's candidate frame — one scan per relationship
+    * and per unbound node, joined along the chain; a bound endpoint binds
+    * off the relationship's own column, with no node-table join — is
+    * left-joined on the bound ids plus `property = key`. Matching
+    * multiplies rows exactly like MATCH. Per distinct unmatched (bound ids
+    * + keys) ONE instance is created — a fresh node for every unbound var,
+    * even when a node alone would have matched, and every relationship —
+    * and every unmatched row binds to it (Neo4j's row-sequential MERGE
+    * converges to the same state). */
   private def planMerge(ctx0: Ctx, m: Merge): Ctx = {
     val foldedPart = foldWriteDynPattern(Seq(m.part), "MERGE").head
     rejectLabelExprs(Seq(foldedPart), "MERGE")
     beginWrites()
     val (nodes, edges) = normalizePattern(Pattern(Seq(foldedPart)))
-    // MERGE p = (...): normalizePattern registered the path bind, but the
-    // path-merge branch plans the pattern through an inner OPTIONAL MATCH
-    // whose own bindPaths would CONSUME it while the created rows' id
-    // columns are still null — the struct would freeze as null forever.
-    // Stash the bind and re-register it for the final bindPaths, which
-    // runs after created ids are coalesced in.
+    // MERGE p = (...): stash the path bind normalizePattern registered so
+    // no nested planMatch (a pattern predicate in ON CREATE SET) consumes
+    // it; the final bindPaths runs after created ids are bound.
     val (mergePathBinds, otherBinds) =
       pathBinds.partition(b => foldedPart.pathVar.contains(b.v))
     pathBinds = otherBinds
-    val createdMark = "_w_created"
-    var ctx = ctx0
-
-    if (edges.isEmpty) {
-      val nc = nodes.values.head
-      if (ctx.header.kinds.contains(nc.v)) throw new CypherCompileException(
-        s"MERGE of already-bound variable ${nc.v}",
+    val isBound: String => Boolean = ctx0.header.kinds.contains
+    edges.foreach { e =>
+      if (e.types.size != 1) throw new CypherCompileException(
+        "MERGE requires exactly one relationship type",
+        CE.SyntaxError, CE.NoSingleRelationshipType)
+      // Undirected rels are legal in MERGE (Neo4j): the match considers
+      // both orientations and creation runs left-to-right.
+      if (e.varLength.isDefined) throw new CypherCompileException(
+        "MERGE of a variable-length relationship",
+        CE.SyntaxError, CE.CreatingVarLength)
+      if (isBound(e.v)) throw new CypherCompileException(
+        s"MERGE of already-bound relationship ${e.v}",
         CE.SyntaxError, CE.VariableAlreadyBound)
-      val keys = nc.props.map(_._1)
-      val keyCols = nc.props.zipWithIndex.map { case ((_, e), i) =>
-        val cn = s"_wm_k$i"
-        ctx = Ctx(ctx.df.withColumn(cn, ctx.compiler.compile(e)), ctx.header)
-        cn
-      }
-      // Candidates: every node whose labels cover the pattern's. The scan
-      // carries the node's FULL property and label sets, not just the
-      // merge keys: a MATCHED node must bind complete (RETURN n.other and
-      // labels(n) read the stored node, exactly like a MATCH binding) —
-      // previously only pattern props/labels were bound and everything
-      // else silently read null.
-      val candTables = wNodes.filter(t => nc.labels.toSet.subsetOf(t.labels))
-      val candProps = unifyProps(candTables.map(_.propTypes))
-      val candPropKeys = candProps.keys.toSeq.sorted
-      val candLabels = (candTables.flatMap(_.labels).toSet ++ nc.labels)
-        .toSeq.sorted
-      val cands = candTables
-        .map { t =>
-          val sel = col(ID).as("_wm_id") +:
-            (keys.zipWithIndex.map { case (k, i) =>
-              (if (t.propTypes.contains(k)) col(propCol(k)) else lit(null))
-                .as(s"_wm_c$i")
-            } ++
-            candPropKeys.zipWithIndex.map { case (k, i) =>
-              (if (t.propTypes.contains(k))
-                col(propCol(k)).cast(candProps(k))
-              else lit(null).cast(candProps(k))).as(s"_wm_p$i")
-            } ++
-            candLabels.zipWithIndex.map { case (l, i) =>
-              lit(t.labels.contains(l)).as(s"_wm_l$i")
-            })
-          t.df.select(sel: _*)
-        }
-        .reduceOption(_.unionByName(_))
-      val joined = cands match {
-        case Some(c) =>
-          val cond = keyCols.zipWithIndex.map { case (kc, i) =>
-            col(kc) === col(s"_wm_c$i")
-          }.reduceOption(_ && _).getOrElse(lit(true))
-          ctx.df.join(c, cond, "left").drop(keys.indices.map(i => s"_wm_c$i"): _*)
-        case None =>
-          // No candidate table: every row creates. The full-binding
-          // columns below still read _wm_p/_wm_l, so provide them null.
-          var d = ctx.df.withColumn("_wm_id", lit(null).cast(LongType))
-          candPropKeys.zipWithIndex.foreach { case (k, i) =>
-            d = d.withColumn(s"_wm_p$i", lit(null).cast(candProps(k)))
-          }
-          candLabels.indices.foreach { i =>
-            d = d.withColumn(s"_wm_l$i", lit(null).cast(BooleanType))
-          }
-          d
-      }
-      // One fresh node per distinct unmatched key combination.
-      val varIdx = nextWriteVarIdx()
-      val unmatched = joined.filter(col("_wm_id").isNull)
-      val createdKeys = Pin(unmatched.select(keyCols.map(col): _*).distinct()
-        .withColumn("_wm_nid", freshWriteId(writeGen, varIdx)))
-      if (keys.nonEmpty) {
-        val types = keys.zipWithIndex.map { case (k, i) =>
-          k -> createdKeys.schema(s"_wm_k$i").dataType
-        }.toMap
-        wNodes :+= WNode(nc.labels.toSet,
-          createdKeys.select(col("_wm_nid").as(ID) +:
-            keys.zipWithIndex.map { case (k, i) =>
-              col(s"_wm_k$i").as(propCol(k))
-            }: _*),
-          types)
-      } else {
-        wNodes :+= WNode(nc.labels.toSet,
-          createdKeys.select(col("_wm_nid").as(ID)), Map.empty)
-      }
-      val rebound = if (keys.nonEmpty) {
-        val cond = keyCols.map(kc => col(kc) <=> col(s"${kc}_c"))
-          .reduce(_ && _)
-        val renamed = keyCols.foldLeft(createdKeys) { (d, kc) =>
-          d.withColumnRenamed(kc, s"${kc}_c")
-        }
-        joined.join(renamed, cond && col("_wm_id").isNull, "left")
-          .drop(keyCols.map(kc => s"${kc}_c"): _*)
-      } else {
-        joined.join(createdKeys, col("_wm_id").isNull, "left")
-      }
-      val idSlot = IdSlot(nc.v)
-      var df = rebound
-        .withColumn(RecordHeader.colName(idSlot),
-          coalesce(col("_wm_id"), col("_wm_nid")))
-        .withColumn(createdMark, col("_wm_id").isNull)
-      var header = ctx.header.withSlot(idSlot)
-        .withVar(nc.v, NodeKind(nc.labels.toSet))
-      // Full binding (a MATCHED node behaves exactly like a MATCH binding):
-      // every label a candidate table carries, from the scan for matched
-      // rows and the pattern set for created ones.
-      candLabels.zipWithIndex.foreach { case (l, i) =>
-        val s = LabelSlot(nc.v, l)
-        df = df.withColumn(RecordHeader.colName(s),
-          when(col(createdMark), lit(nc.labels.contains(l)))
-            .otherwise(coalesce(col(s"_wm_l$i"), lit(false))))
-        header = header.withSlot(s)
-      }
-      // Every property a candidate table carries: stored value for matched
-      // rows; for created rows the merge-key value (or null off-key).
-      val keyIdx = keys.zipWithIndex.toMap
-      candPropKeys.zipWithIndex.foreach { case (k, i) =>
-        val s = PropSlot(nc.v, k)
-        val onCreate = keyIdx.get(k) match {
-          case Some(ki) => col(s"_wm_k$ki").cast(candProps(k))
-          case None => lit(null).cast(candProps(k))
-        }
-        df = df.withColumn(RecordHeader.colName(s),
-          when(col(createdMark), onCreate).otherwise(col(s"_wm_p$i")))
-        header = header.withSlot(s)
-      }
-      // Merge keys no candidate table carries (a brand-new property).
-      keys.zipWithIndex.filterNot { case (k, _) => candProps.contains(k) }
-        .foreach { case (k, ki) =>
-          val s = PropSlot(nc.v, k)
-          df = df.withColumn(RecordHeader.colName(s),
-            when(col(createdMark), col(s"_wm_k$ki")))
-          header = header.withSlot(s)
-        }
-      df = df.drop("_wm_id", "_wm_nid")
-        .drop(keyCols: _*)
-        .drop(candPropKeys.indices.map(i => s"_wm_p$i"): _*)
-        .drop(candLabels.indices.map(i => s"_wm_l$i"): _*)
-      ctx = Ctx(df, header)
-    } else {
-      edges.foreach { e =>
-        if (e.types.size != 1) throw new CypherCompileException(
-          "MERGE requires exactly one relationship type",
-          CE.SyntaxError, CE.NoSingleRelationshipType)
-        // Undirected rels are legal in MERGE everywhere (Neo4j): the
-        // match side considers both orientations (planOptionalMatch
-        // honors dir == BOTH in the path branch; the bound-pair branch
-        // unions the flipped candidates) and creation runs left-to-right.
-        if (e.varLength.isDefined) throw new CypherCompileException(
-          "MERGE of a variable-length relationship",
-          CE.SyntaxError, CE.CreatingVarLength)
-        if (ctx.header.kinds.contains(e.v)) throw new CypherCompileException(
-          s"MERGE of already-bound relationship ${e.v}",
-          CE.SyntaxError, CE.VariableAlreadyBound)
-      }
-      if (edges.map(_.v).distinct.size != edges.size)
+    }
+    if (edges.map(_.v).distinct.size != edges.size)
+      throw new CypherCompileException(
+        "MERGE pattern repeats a relationship variable",
+        CE.SyntaxError, CE.VariableAlreadyBound)
+    val nodeVars =
+      if (edges.isEmpty) nodes.keys.toSeq
+      else (edges.head.src +: edges.map(_.tgt)).distinct
+    val (bound, unbound) = nodeVars.partition(isBound)
+    bound.foreach { v =>
+      if (edges.isEmpty) throw new CypherCompileException(
+        s"MERGE of already-bound variable $v",
+        CE.SyntaxError, CE.VariableAlreadyBound)
+      if (nodes(v).labels.nonEmpty || nodes(v).props.nonEmpty)
         throw new CypherCompileException(
-          "MERGE pattern repeats a relationship variable",
+          s"MERGE cannot add labels or properties to bound variable $v",
           CE.SyntaxError, CE.VariableAlreadyBound)
-      val singleBound = edges.size == 1 &&
-        ctx.header.kinds.contains(edges.head.src) &&
-        ctx.header.kinds.contains(edges.head.tgt)
-      if (!singleBound) {
-        ctx = planMergePath(ctx, nodes, edges, createdMark)
-      } else {
-      val e = edges.head
-      val (srcV, tgtV) = if (e.dir == INBOUND) (e.tgt, e.src) else (e.src, e.tgt)
-      val keys = e.props.map(_._1)
-      val keyCols = e.props.zipWithIndex.map { case ((_, ex), i) =>
-        val cn = s"_wm_k$i"
-        ctx = Ctx(ctx.df.withColumn(cn, ctx.compiler.compile(ex)), ctx.header)
-        cn
-      }
-      val srcCol = col(ctx.header.col(IdSlot(srcV)))
-      val tgtCol = col(ctx.header.col(IdSlot(tgtV)))
-      // Candidate rels carry their FULL property set: a MATCHED
-      // relationship must bind complete (RETURN r.other reads the stored
-      // value), exactly like the node-merge branch above.
-      val candTables = wRels.filter(_.relType == e.types.head)
-      val candProps = unifyProps(candTables.map(_.propTypes))
-      val candPropKeys = candProps.keys.toSeq.sorted
-      val cands = candTables.map { t =>
-        t.df.select(col(ID).as("_wm_id") +: col(SRC).as("_wm_s") +:
-          col(TGT).as("_wm_t") +: (keys.zipWithIndex.map { case (k, i) =>
-            (if (t.propTypes.contains(k)) col(propCol(k)) else lit(null))
-              .as(s"_wm_c$i")
-          } ++ candPropKeys.zipWithIndex.map { case (k, i) =>
-            (if (t.propTypes.contains(k)) col(propCol(k)).cast(candProps(k))
-             else lit(null).cast(candProps(k))).as(s"_wm_p$i")
-          }): _*)
-      }.reduceOption(_.unionByName(_))
-      // Undirected MERGE (bound endpoints): match the stored relationship
-      // in EITHER direction; the created one (no match) runs left-to-right
-      // (Neo4j). The stored endpoints (_wm_s/_wm_t) are kept so a reversed
-      // match binds r's src/tgt as stored, not as written in the pattern.
-      val undirected = e.dir == BOTH
-      val joined = cands match {
-        case Some(c) =>
-          val fwd = (srcCol === col("_wm_s")) && (tgtCol === col("_wm_t"))
-          val dirCond =
-            if (undirected)
-              fwd || ((srcCol === col("_wm_t")) && (tgtCol === col("_wm_s")))
-            else fwd
-          val cond = dirCond &&
-            keyCols.zipWithIndex.map { case (kc, i) =>
-              col(kc) === col(s"_wm_c$i")
-            }.foldLeft(lit(true))(_ && _)
-          ctx.df.join(c, cond, "left")
-            .drop(keys.indices.map(i => s"_wm_c$i"): _*)
-        case None =>
-          var d = ctx.df
-            .withColumn("_wm_id", lit(null).cast(LongType))
-            .withColumn("_wm_s", lit(null).cast(LongType))
-            .withColumn("_wm_t", lit(null).cast(LongType))
-          candPropKeys.zipWithIndex.foreach { case (k, i) =>
-            d = d.withColumn(s"_wm_p$i", lit(null).cast(candProps(k)))
-          }
-          d
-      }
-      val varIdx = nextWriteVarIdx()
-      val srcName = ctx.header.col(IdSlot(srcV))
-      val tgtName = ctx.header.col(IdSlot(tgtV))
-      val unmatched = joined.filter(col("_wm_id").isNull)
-      val createdKeys = Pin(unmatched
-        .select((col(srcName).as("_wm_cs") +: col(tgtName).as("_wm_ct") +:
-          keyCols.map(col)): _*).distinct()
-        .withColumn("_wm_nid", freshWriteId(writeGen, varIdx)))
-      val types = keys.zipWithIndex.map { case (k, i) =>
-        k -> createdKeys.schema(s"_wm_k$i").dataType
-      }.toMap
-      wRels :+= WRel(e.types.head,
-        createdKeys.select((col("_wm_nid").as(ID) +: col("_wm_cs").as(SRC) +:
-          col("_wm_ct").as(TGT) +: keys.zipWithIndex.map { case (k, i) =>
-            col(s"_wm_k$i").as(propCol(k))
-          }): _*),
-        types)
-      val cond = (col(srcName) <=> col("_wm_cs")) &&
-        (col(tgtName) <=> col("_wm_ct")) &&
-        keyCols.map(kc => col(kc) <=> col(s"${kc}_c"))
-          .foldLeft(lit(true))(_ && _)
-      val renamed = keyCols.foldLeft(createdKeys) { (d, kc) =>
-        d.withColumnRenamed(kc, s"${kc}_c")
-      }
-      val rebound = joined
-        .join(renamed, cond && col("_wm_id").isNull, "left")
-        .drop("_wm_cs", "_wm_ct")
-        .drop(keyCols.map(kc => s"${kc}_c"): _*)
-      val idSlot = IdSlot(e.v)
-      var df = rebound
-        .withColumn(RecordHeader.colName(idSlot),
-          coalesce(col("_wm_id"), col("_wm_nid")))
-        .withColumn(createdMark, col("_wm_id").isNull)
-        .drop("_wm_id", "_wm_nid")
-        .drop(keyCols: _*)
-      val srcSlot = SrcSlot(e.v)
-      val tgtSlot = TgtSlot(e.v)
-      val typeSlot = TypeSlot(e.v)
-      df = df
-        .withColumn(RecordHeader.colName(srcSlot),
-          coalesce(col("_wm_s"), col(srcName)))
-        .withColumn(RecordHeader.colName(tgtSlot),
-          coalesce(col("_wm_t"), col(tgtName)))
-        .withColumn(RecordHeader.colName(typeSlot), lit(e.types.head))
-        .drop("_wm_s", "_wm_t")
-      var header = ctx.header
-        .withSlots(Seq(idSlot, srcSlot, tgtSlot, typeSlot))
-        .withVar(e.v, RelKind(e.types.toSet))
-      // Full property binding: every prop a candidate table carries reads
-      // the stored value on matched rows; created rows take the merge-key
-      // value (or null off-key). Key exprs are recompiled per row since
-      // they may reference outer variables.
-      val keyExpr = e.props.toMap
-      def keyVal(k: String): Column =
-        new ExprCompiler(header, df.schema, params, Map.empty, extensions)
-          .compile(keyExpr(k))
-      candPropKeys.zipWithIndex.foreach { case (k, i) =>
-        val sl = PropSlot(e.v, k)
-        val onCreate =
-          if (keyExpr.contains(k)) keyVal(k).cast(candProps(k))
-          else lit(null).cast(candProps(k))
-        df = df.withColumn(RecordHeader.colName(sl),
-          when(col(createdMark), onCreate).otherwise(col(s"_wm_p$i")))
-        header = header.withSlot(sl)
-      }
-      keys.filterNot(candProps.contains).foreach { k =>
-        val sl = PropSlot(e.v, k)
-        df = df.withColumn(RecordHeader.colName(sl),
-          when(col(createdMark), keyVal(k)))
-        header = header.withSlot(sl)
-      }
-      df = df.drop(candPropKeys.indices.map(i => s"_wm_p$i"): _*)
-      ctx = Ctx(df, header)
+    }
+    val edgeOf = edges.map(e => e.v -> e).toMap
+    def ends(e: EdgeCons): (String, String) =
+      if (e.dir == INBOUND) (e.tgt, e.src) else (e.src, e.tgt)
+
+    // Key columns (var, key, column): every pattern property on the row.
+    val elems = unbound ++ edges.map(_.v)
+    var df = ctx0.df
+    val keys = elems.flatMap { v =>
+      val props = if (nodes.contains(v)) nodes(v).props else edgeOf(v).props
+      props.map { case (k, ex) => (v, k, ex) }
+    }.zipWithIndex.map { case ((v, k, ex), i) =>
+      df = df.withColumn(s"_wm_k$i", ctx0.compiler.compile(ex))
+      (v, k, s"_wm_k$i")
+    }
+
+    // Candidate frame over the write state: every occurrence of a var in
+    // it (node-scan id, relationship end columns) must be equal.
+    graph = buildWrittenGraph()
+    val scans = mutable.ArrayBuffer.empty[(DataFrame, RecordHeader)]
+    val occ = mutable.LinkedHashMap.empty[String, Seq[String]]
+    def scanNode(v: String): Unit = if (!isBound(v) && !occ.contains(v)) {
+      val (d, h, _) = nodeScanDf(nodes(v).copy(props = Seq.empty))
+      scans += ((d, h))
+      occ(v) = Seq(h.col(IdSlot(v)))
+    }
+    if (edges.isEmpty) scanNode(unbound.head)
+    edges.foreach { e =>
+      val (d, h, _) = relScanDf(e.v, e.types, Seq.empty, e.dir == BOTH)
+      scans += ((d, h))
+      // Undirected scans bind Src/Tgt in traversal order: left end first.
+      val (sv, tv) = ends(e)
+      Seq(sv -> SrcSlot(e.v), tv -> TgtSlot(e.v)).foreach { case (v, slot) =>
+        scanNode(v)
+        occ(v) = occ.getOrElse(v, Seq.empty) :+ h.col(slot)
       }
     }
+    var pending = occ.values.toSeq.flatMap(cs => cs.tail.map(cs.head -> _))
+    def eqs(ps: Seq[(String, String)]): Seq[Column] =
+      ps.map { case (a, b) => col(a) === col(b) }
+    val (cand0, candH) = scans.reduceLeft { (acc, next) =>
+      val have = acc._1.columns.toSet ++ next._1.columns
+      val (now, later) = pending.partition(p => have(p._1) && have(p._2))
+      pending = later
+      val on = eqs(now).reduceOption(_ && _).getOrElse(lit(true))
+      (acc._1.join(next._1, on), acc._2 ++ next._2)
+    }
+    // Relationship uniqueness within the pattern (as in MATCH).
+    val distinctRels = for {
+      i <- edges.indices; j <- (i + 1) until edges.size
+      if edges(i).types == edges(j).types
+    } yield col(candH.col(IdSlot(edges(i).v))) =!=
+      col(candH.col(IdSlot(edges(j).v)))
+    val cand = (eqs(pending) ++ distinctRels).foldLeft(cand0)(_ filter _)
+
+    // Match: one left join on the bound ids plus property = key.
+    val createdMark = "_w_created"
+    val on = bound.map(v =>
+        col(ctx0.header.col(IdSlot(v))) === col(occ(v).head)) ++
+      keys.map { case (v, k, kc) =>
+        candH.get(PropSlot(v, k)).fold(lit(false))(c => col(kc) === col(c))
+      }
+    val matchId = candH.col(IdSlot(edges.headOption.fold(unbound.head)(_.v)))
+    df = df.join(cand, on.reduceOption(_ && _).getOrElse(lit(true)), "left")
+      .withColumn(createdMark, col(matchId).isNull)
+
+    // One instance per distinct unmatched (bound ids + keys). Pinned so
+    // the id generator evaluates once for the new tables and the rebinding
+    // join alike.
+    val keyCols = bound.map(v => ctx0.header.col(IdSlot(v))) ++ keys.map(_._3)
+    val newId = elems.zipWithIndex.map { case (v, i) => v -> s"_wm_n$i" }.toMap
+    val created = Pin(elems.foldLeft(
+        df.filter(col(createdMark)).select(keyCols.map(col): _*).distinct()) {
+      (d, v) => d.withColumn(newId(v), freshWriteId(writeGen, nextWriteVarIdx()))
+    })
+    def idOf(v: String): Column =
+      if (isBound(v)) col(ctx0.header.col(IdSlot(v))) else col(newId(v))
+    def table(v: String, lead: Seq[Column]) = {
+      val ks = keys.filter(_._1 == v)
+      (created.select(lead ++ ks.map(t => col(t._3).as(propCol(t._2))): _*),
+        ks.map(t => t._2 -> created.schema(t._3).dataType).toMap)
+    }
+    unbound.foreach { v =>
+      val (t, types) = table(v, Seq(idOf(v).as(ID)))
+      wNodes :+= WNode(nodes(v).labels.toSet, t, types)
+    }
+    edges.foreach { e =>
+      val (s, t) = ends(e)
+      val (tb, types) = table(e.v,
+        Seq(idOf(e.v).as(ID), idOf(s).as(SRC), idOf(t).as(TGT)))
+      wRels :+= WRel(e.types.head, tb, types)
+    }
+
+    // Rebind created rows (null-safe key join). Matched rows keep the
+    // candidate's full binding; created rows get fresh ids, pattern labels
+    // true and other labels false, keys cast to the slot type, null
+    // off-key.
+    val renamed =
+      keyCols.foldLeft(created)((d, c) => d.withColumnRenamed(c, c + "_c"))
+    val sameKey = keyCols.map(c => col(c) <=> col(c + "_c"))
+    df = df.join(renamed, sameKey.foldLeft(col(createdMark))(_ && _), "left")
+      .drop(keyCols.map(_ + "_c"): _*)
+    def keyOf(v: String, k: String): Option[String] =
+      keys.collectFirst { case (`v`, `k`, kc) => kc }
+    val bindSchema = df.schema
+    df = df.withColumns(candH.slots.map { case (slot, c) =>
+      val onCreate = slot match {
+        case IdSlot(v) => idOf(v)
+        case SrcSlot(v) => idOf(ends(edgeOf(v))._1)
+        case TgtSlot(v) => idOf(ends(edgeOf(v))._2)
+        case TypeSlot(v) => lit(edgeOf(v).types.head)
+        case LabelSlot(v, l) => lit(nodes(v).labels.contains(l))
+        case PropSlot(v, k) => keyOf(v, k).fold(lit(null))(col)
+        case _ => lit(false) // RevSlot: a created rel binds as stored
+      }
+      c -> when(col(createdMark), onCreate.cast(bindSchema(c).dataType))
+        .otherwise(col(c))
+    })
+    var header = ctx0.header ++ candH
+    // Keys no candidate table carries (a brand-new property).
+    keys.foreach { case (v, k, kc) =>
+      val s = PropSlot(v, k)
+      if (!header.contains(s)) {
+        df = df.withColumn(RecordHeader.colName(s),
+          when(col(createdMark), col(kc)))
+        header = header.withSlot(s)
+      }
+    }
+    var out = normalizeRelOrientation(
+      Ctx(df.drop(keys.map(_._3) ++ newId.values: _*), header))
 
     // ON CREATE / ON MATCH SET against the marked rows; the mark column is
     // dropped afterwards so it never leaks into projections.
-    var out = ctx
     if (m.onCreate.nonEmpty)
       out = planSetItems(out, m.onCreate, Some(col(createdMark)))
     if (m.onMatch.nonEmpty)
       out = planSetItems(out, m.onMatch, Some(!col(createdMark)))
     // MERGE p = (...): bind the path variable (fixed-length hops only),
-    // deferred past the created-id coalescing (see the stash above).
+    // deferred past the created-id binding (see the stash above).
     pathBinds = pathBinds ++ mergePathBinds
     bindPaths(Ctx(out.df.drop(createdMark), out.header))
-  }
-
-  /** MERGE of a (possibly multi-hop) path pattern with any mix of bound
-    * and unbound node vars: match the WHOLE pattern as an OPTIONAL MATCH
-    * against the current write state; per openCypher all-or-nothing
-    * semantics, rows without a full match create the ENTIRE pattern —
-    * fresh nodes for every unbound node var (even when a node alone
-    * would have matched) plus every relationship — ONE instance per
-    * distinct key (bound endpoint ids; unbound-node and rel properties
-    * must be literal here, so they never split keys). The optional match
-    * multiplies rows exactly like MATCH on full matches, mirroring the
-    * bound-endpoint branch. */
-  private def planMergePath(ctx0: Ctx, nodes: Map[String, NodeCons],
-      edges: Seq[EdgeCons], createdMark: String): Ctx = {
-    val patVars = edges.flatMap(e => Seq(e.src, e.tgt)).distinct
-    val bound = patVars.filter(ctx0.header.kinds.contains).toSet
-    val unbound = patVars.filterNot(bound)
-    val outerVars = ctx0.header.kinds.keySet
-    val propExprs = unbound.flatMap(v => nodes(v).props.map(_._2)) ++
-      edges.flatMap(_.props.map(_._2))
-    if (propExprs.exists(ex => exprVars(ex).intersect(outerVars).nonEmpty))
-      throw new CypherCompileException(
-        "MERGE with an unbound endpoint supports only literal properties " +
-          "(row-dependent values cannot correlate the pattern match)",
-        CE.SemanticError, CE.UnsupportedExpression)
-    // Rebuild the pattern with the EXPLICIT var names from this normalize
-    // pass (re-normalizing would mint fresh anonymous names).
-    def np(v: String) =
-      NodePattern(Some(v), nodes(v).labels, nodes(v).props)
-    val part = PatternPart(np(edges.head.src),
-      edges.map(e =>
-        (RelPattern(Some(e.v), e.types, e.props, e.dir, None), np(e.tgt))))
-    // Match against the current write state (prior writes in this query —
-    // including earlier FOREACH-body clauses — must be visible).
-    graph = buildWrittenGraph()
-    val matched = planOptionalMatch(ctx0, Pattern(Seq(part)), None)
-    // All-or-nothing: on a partial match the optional pattern nulls every
-    // pattern slot together, so any one rel id marks the unmatched rows.
-    val relIdCol = matched.header.col(IdSlot(edges.head.v))
-    // Evaluate creation columns (all literal) once per row.
-    var df = matched.df
-    def evalCols(props: Seq[(String, Expr)], tag: String): Seq[(String, String)] =
-      props.zipWithIndex.map { case ((k, ex), i) =>
-        val cn = s"_wm_$tag$i"
-        df = df.withColumn(cn,
-          new ExprCompiler(RecordHeader.empty, df.schema, params,
-            Map.empty, extensions).compile(ex))
-        (k, cn)
-      }
-    val nodeProps: Map[String, Seq[(String, String)]] =
-      unbound.zipWithIndex.map { case (v, i) =>
-        v -> evalCols(nodes(v).props, s"n${i}_") }.toMap
-    val relProps: Map[String, Seq[(String, String)]] =
-      edges.zipWithIndex.map { case (e, i) =>
-        e.v -> evalCols(e.props, s"r${i}_") }.toMap
-    val boundIdCols =
-      patVars.filter(bound).map(v => ctx0.header.col(IdSlot(v))).distinct
-    val keyCols = (boundIdCols ++
-      unbound.flatMap(v => nodeProps(v).map(_._2)) ++
-      edges.flatMap(e => relProps(e.v).map(_._2))).distinct
-    // One created pattern instance per distinct unmatched key.
-    val unmatched = df.filter(col(relIdCol).isNull)
-    var created = unmatched.select(keyCols.map(col): _*).distinct()
-    val nodeIdCol: Map[String, String] = unbound.zipWithIndex.map {
-      case (v, i) =>
-        created = created.withColumn(s"_wm_nid$i",
-          freshWriteId(writeGen, nextWriteVarIdx()))
-        v -> s"_wm_nid$i"
-    }.toMap
-    val relIdNew: Map[String, String] = edges.zipWithIndex.map {
-      case (e, i) =>
-        created = created.withColumn(s"_wm_rid$i",
-          freshWriteId(writeGen, nextWriteVarIdx()))
-        e.v -> s"_wm_rid$i"
-    }.toMap
-    created = Pin(created)
-    def createdId(v: String): Column =
-      if (bound(v)) col(ctx0.header.col(IdSlot(v))) else col(nodeIdCol(v))
-    unbound.foreach { v =>
-      val props = nodeProps(v)
-      wNodes :+= WNode(nodes(v).labels.toSet,
-        created.select(col(nodeIdCol(v)).as(ID) +: props.map { case (k, cn) =>
-          col(cn).as(propCol(k)) }: _*),
-        props.map { case (k, cn) => k -> created.schema(cn).dataType }.toMap)
-    }
-    edges.foreach { e =>
-      val (srcV, tgtV) = if (e.dir == INBOUND) (e.tgt, e.src) else (e.src, e.tgt)
-      val props = relProps(e.v)
-      wRels :+= WRel(e.types.head,
-        created.select(col(relIdNew(e.v)).as(ID) +:
-          createdId(srcV).as(SRC) +: createdId(tgtV).as(TGT) +:
-          props.map { case (k, cn) => col(cn).as(propCol(k)) }: _*),
-        props.map { case (k, cn) => k -> created.schema(cn).dataType }.toMap)
-    }
-    // Bind created elements back onto the unmatched rows (null-safe key
-    // equality; matched rows keep their bindings).
-    val renamed = keyCols.foldLeft(created) { (d, kc) =>
-      d.withColumnRenamed(kc, kc + "_c") }
-    val cond = keyCols.map(kc => col(kc) <=> col(kc + "_c"))
-      .foldLeft(col(relIdCol).isNull)(_ && _)
-    df = df.join(renamed, cond, "left")
-      .drop(keyCols.map(_ + "_c"): _*)
-      .withColumn(createdMark, col(relIdCol).isNull)
-    var header = matched.header
-    def bindCreated(slotCol: String, value: Column): Unit =
-      df = df.withColumn(slotCol, coalesce(col(slotCol), value))
-    def bindProp(v: String, k: String, cn: String): Unit = {
-      val s = PropSlot(v, k)
-      header.get(s) match {
-        case Some(c) =>
-          df = df.withColumn(c,
-            when(col(createdMark), col(cn)).otherwise(col(c)))
-        case None =>
-          df = df.withColumn(RecordHeader.colName(s),
-            when(col(createdMark), col(cn)))
-          header = header.withSlot(s)
-      }
-    }
-    edges.foreach { e =>
-      val (srcV, tgtV) = if (e.dir == INBOUND) (e.tgt, e.src) else (e.src, e.tgt)
-      bindCreated(header.col(IdSlot(e.v)), col(relIdNew(e.v)))
-      bindCreated(header.col(SrcSlot(e.v)), createdId(srcV))
-      bindCreated(header.col(TgtSlot(e.v)), createdId(tgtV))
-      bindCreated(header.col(TypeSlot(e.v)), lit(e.types.head))
-      relProps(e.v).foreach { case (k, cn) => bindProp(e.v, k, cn) }
-    }
-    unbound.foreach { v =>
-      bindCreated(header.col(IdSlot(v)), col(nodeIdCol(v)))
-      // Created rows: pattern labels true, other scanned labels false.
-      header.ownedBy(v).collect { case s @ LabelSlot(_, l) => (s, l) }
-        .foreach { case (s, l) =>
-          df = df.withColumn(header.col(s),
-            when(col(createdMark), lit(nodes(v).labels.contains(l)))
-              .otherwise(col(header.col(s))))
-        }
-      nodeProps(v).foreach { case (k, cn) => bindProp(v, k, cn) }
-    }
-    val temps = (nodeIdCol.values ++ relIdNew.values).toSeq ++
-      (nodeProps.values.flatten ++ relProps.values.flatten).map(_._2).toSeq
-    Ctx(df.drop(temps.distinct: _*), header)
   }
 
   /** ORDER BY may repeat a projected expression (ORDER BY count(*)); map it

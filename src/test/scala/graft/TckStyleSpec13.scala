@@ -68,9 +68,12 @@ class TckStyleSpec13 extends TckScenarioBase {
   errorScenario("DELETE a value variable", g,
     "WITH 1 AS v DELETE v RETURN 1 AS x",
     TypeError, InvalidArgumentType)
-  errorScenario("unbound-endpoint MERGE with a row-dependent property", g,
-    "MATCH (n:A) MERGE (a:NewA {p: n.num})-[r:T]->(b:NewB) RETURN 1 AS x",
-    SemanticError, UnsupportedExpression)
+  scenario("unbound-endpoint MERGE with a row-dependent property", g,
+    "MATCH (n) WHERE n.num IS NOT NULL " +
+      "MERGE (a:NewA {p: n.num})-[r:T]->(b:NewB) " +
+      "WITH n MERGE (a:NewA {p: n.num})-[r:T]->(b:NewB) " +
+      "WITH count(*) AS c MATCH (a:NewA)-[:T]->(:NewB) RETURN a.p AS x",
+    rows(Map("x" -> 1L), Map("x" -> 2L)))
 
   // -------------------------------------------------- string functions
   scenario("split on a multi-char delimiter", g,

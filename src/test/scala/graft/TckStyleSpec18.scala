@@ -7,7 +7,8 @@ import graft.api.CypherError._
   * the WHOLE pattern is matched; rows without a full match create the
   * entire pattern (fresh nodes for unbound endpoints even when a node
   * alone would have matched), one instance per distinct key of bound
-  * endpoint ids + literal properties. Mirrors the TCK Merge feature
+  * endpoint ids + property values, which may depend on the driving row
+  * (also inside FOREACH bodies). Mirrors the TCK Merge feature
   * scenarios the reference blacklists wholesale (read-only engine). */
 class TckStyleSpec18 extends TckScenarioBase {
   import TckFixtures._
@@ -137,17 +138,40 @@ class TckStyleSpec18 extends TckScenarioBase {
       "MERGE (x2:PX {k: 1})-[:H1]->(y2:PY {k: 2})-[:H2]->(z:PZ) " +
       "WITH count(*) AS c MATCH (m:PX) RETURN count(m) AS x", value(2L))
 
+  // ---------------------------------------- row-dependent properties
+  // Keys are evaluated on the driving row: one pattern per distinct key
+  // (each key is driven twice), and the second MERGE matches the first's.
+  scenario("row-dependent property on an unbound endpoint", g,
+    "UNWIND [1, 1] AS i MATCH (n) WHERE n.num IS NOT NULL " +
+      "MERGE (x:X {k: n.num})-[r:T]->(y:Y) " +
+      "WITH DISTINCT n MERGE (x:X {k: n.num})-[r:T]->(y:Y) " +
+      "WITH count(*) AS c MATCH (m:X)-[:T]->(:Y) RETURN m.k AS x",
+    rows(Map("x" -> 1L), Map("x" -> 2L)))
+  scenario("row-dependent property on the relationship", g,
+    "UNWIND [1, 1] AS i MATCH (n) WHERE n.num IS NOT NULL " +
+      "MERGE (x:X)-[r:T {w: n.num}]->(y:Y) " +
+      "WITH DISTINCT n MERGE (x:X)-[r:T {w: n.num}]->(y:Y) " +
+      "WITH count(*) AS c MATCH (:X)-[r:T]->(:Y) RETURN r.w AS x",
+    rows(Map("x" -> 1L), Map("x" -> 2L)))
+
   // ------------------------------------------------------------ errors
-  errorScenario("row-dependent property on an unbound endpoint", g,
-    "MATCH (n:A) MERGE (x:X {k: n.num})-[r:T]->(y:Y) RETURN 1 AS x",
-    SemanticError, UnsupportedExpression)
-  errorScenario("row-dependent property on the relationship", g,
-    "MATCH (n:A) MERGE (x:X)-[r:T {w: n.num}]->(y:Y) RETURN 1 AS x",
-    SemanticError, UnsupportedExpression)
   errorScenario("repeated relationship variable in a MERGE chain", g,
     "MERGE (a:X)-[r:T]->(b:Y)<-[r:T]-(c:Z) RETURN 1 AS x",
     SyntaxError, VariableAlreadyBound)
   errorScenario("var-length relationship in MERGE", g,
     "MERGE (a:X)-[r:T*1..2]->(b:Y) RETURN 1 AS x",
     SyntaxError, CreatingVarLength)
+
+  // ---------------------------------------------- FOREACH-driven paths
+  scenario("FOREACH body path-MERGEs on the loop variable", g,
+    "FOREACH (i IN [1, 2, 2] | MERGE (:FX {k: i})-[:FT]->(:FY)) " +
+      "FOREACH (i IN [2, 3] | MERGE (:FX {k: i})-[:FT]->(:FY)) " +
+      "WITH 1 AS one MATCH (m:FX)-[:FT]->(:FY) RETURN m.k AS x",
+    rows(Map("x" -> 1L), Map("x" -> 2L), Map("x" -> 3L)))
+
+  // A bound node in a relationship MERGE takes no new labels or
+  // properties (TCK Merge5: VariableAlreadyBound).
+  errorScenario("bound endpoint with new labels in a relationship MERGE", g,
+    "MATCH (a:A) MERGE (a:Extra)-[r:T]->(b:B) RETURN 1 AS x",
+    SyntaxError, VariableAlreadyBound)
 }

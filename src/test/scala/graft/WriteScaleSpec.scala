@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.GraftSession
-import graft.graph.PropertyGraph
+import graft.graph.{NodeTableDef, PropertyGraph}
 
 /** Plan-shape assertions for the write path: at 100 TB a SET must stay one
   * id-keyed join per touched table, CREATE must not rescan the graph, and
@@ -55,6 +55,36 @@ class WriteScaleSpec extends SparkTestBase {
     assert(created.count() === 7L)
     // the created table is the pinned distinct-keys frame: no join at all
     assert(joins(created) === 0, plan(created))
+  }
+
+  test("bound-endpoint MERGE matches off the relationship scan, no node scan") {
+    val ab = graph(spark,
+      Seq(N(1, Set("A")), N(2, Set("B")), N(3, Set("C"))),
+      Seq(R(10, 1, 2, "R")))
+    val (rows, _) = session.updateWithResult(ab,
+      "MATCH (a:A), (b:B) MERGE (a)-[r:R]->(b) RETURN id(r) AS x")
+    val stored = session.cypher(ab, "MATCH ()-[r:R]->() RETURN id(r) AS x")
+    assert(rows.collect().toSeq === stored.collect().toSeq)
+    // the driving MATCH scans :A and :B once each; the MERGE match reads
+    // only the :R table, binding a and b off its endpoint columns
+    val nodeLeaves = ab.nodeDefs.flatMap(_.df.queryExecution.analyzed.collectLeaves())
+    val plan = rows.queryExecution.analyzed
+    val scans = plan.collectLeaves().count(l => nodeLeaves.exists(_.sameResult(l)))
+    assert(scans === 2, plan)
+  }
+
+  test("fresh write ids fail the job past 2^12 driving partitions") {
+    // the id's partition field has 12 bits: partition 4096 would overflow
+    // into the neighbouring field and duplicate ids
+    val wide = PropertyGraph(Seq(NodeTableDef(Set("W"),
+      spark.range(0, 4097, 1, 4097).toDF("id"), "id", Map.empty, "w")), Seq.empty)
+    val g2 = session.update(wide, "MATCH (n:W) CREATE (:Fresh)")
+    val e = intercept[Exception] {
+      g2.nodeDefs.find(_.labels == Set("Fresh")).get.df.collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage))
+    assert(msgs.exists(_.contains("4096 (2^12) partitions")), e)
   }
 
   test("updated graph stays lazy: building it runs no Spark job") {

@@ -266,13 +266,19 @@ class WriteSpec extends SparkTestBase {
     assert(one(g3, "MATCH (a:Loop) RETURN count(*) AS n") === 1L)
   }
 
-  test("unbound-endpoint MERGE rejects row-dependent properties") {
-    val e = intercept[CypherException] {
-      session.update(g,
-        "MATCH (p:Person) MERGE (a:Proj {k: p.age})-[r:HAS]->(b:Task)")
-    }
-    assert(e.errorType === CypherError.SemanticError)
-    assert(e.detail === CypherError.UnsupportedExpression)
+  test("unbound-endpoint MERGE accepts row-dependent properties") {
+    val q = "MATCH (p:Person) MERGE (a:Proj {k: p.age})-[r:HAS]->(b:Task)"
+    def patterns(g: PropertyGraph) = one(g,
+      "MATCH (p:Person), (a:Proj)-[:HAS]->(:Task) WHERE a.k = p.age " +
+        "RETURN count(*) AS n")
+    // one pattern per distinct key (ages 30 and 40)
+    val g2 = session.update(g, q)
+    assert(patterns(g2) === 2L)
+    assert(one(g2, "MATCH (n) RETURN count(*) AS n") === 7L)
+    // re-running matches every row's pattern: no growth
+    val g3 = session.update(g2, q)
+    assert(patterns(g3) === 2L)
+    assert(one(g3, "MATCH (n) RETURN count(*) AS n") === 7L)
   }
 
   test("SET += a parameter map") {
