@@ -3,18 +3,23 @@ package graft.bench
 import graft.algos.GraphAlgorithms
 import graft.graph.PropertyGraph
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
-/** Dump `.explain("formatted")` for named registry queries and iterative
-  * round bodies to files.
+/** Run named registry queries and iterative round bodies, then dump the
+  * `.explain("formatted")` of each executed (final adaptive) plan to files.
   *
   * Usage: runMain graft.bench.PlanDump <outDir> <tag> <name>[,<name>...]
   * A registry query writes <outDir>/<name>_<tag>.txt; a round body (see
   * [[roundBodies]]) writes <outDir>/roundbody_<name>.txt. The session and
   * preparation are the bench's, so the captured plans are the ones the
-  * bench executes.
+  * bench executes. Each dump also prints one stdout line,
+  * `[plandump] <name>: scans=S exchanges=X joins=J`, counted by [[shape]].
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -31,8 +36,12 @@ object PlanDump {
         .orElse(bodies.get(name).map(b => (s"roundbody_$name.txt", b))) match {
         case None =>
           System.err.println(s"[plandump] unknown query or round body: $name")
-        case Some((file, df)) =>
-          val text = df().queryExecution.explainString(
+        case Some((file, mk)) =>
+          val df = mk()
+          df.collect()
+          val (scans, exchanges, joins) = shape(df.queryExecution.executedPlan)
+          println(s"[plandump] $name: scans=$scans exchanges=$exchanges joins=$joins")
+          val text = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.write(outDir.resolve(file),
             text.getBytes(StandardCharsets.UTF_8))
@@ -40,6 +49,20 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** Scan leaves, exchanges and joins of a physical plan, read through
+    * adaptive query stages; a reused exchange counts once, where it ran. */
+  def shape(plan: SparkPlan): (Int, Int, Int) = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _: ReusedExchangeExec => Seq.empty
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val all = nodes(plan)
+    (all.count(_.children.isEmpty), all.count(_.isInstanceOf[Exchange]),
+      all.count(_.isInstanceOf[BaseJoinExec]))
   }
 
   /** ROUND-BODY plans of the iterative algorithms — the fragments a

@@ -73,16 +73,29 @@ case class CoStoredNode(labels: Set[String], propTypes: Map[String, DataType])
 
 /** Canonical rel scan: `_id`, `_src`, `_tgt`, `_type` + `p_<key>` columns
   * (+ co-stored endpoint properties, see [[CoStoredNode]]).
-  * `srcLabels`/`tgtLabels` are the labels GUARANTEED for the endpoint id
-  * spaces (intersection over the node tables of that space) — the planner
-  * uses them to elide endpoint node-table joins whose label constraint the
-  * relationship schema already implies. */
+  * `srcCombos`/`tgtCombos` are the label combinations a node at each
+  * endpoint can carry: the label sets of the node tables in the endpoint's
+  * id space and of every pre-tagged node table. `None` marks a pre-tagged "!" space, whose ids may name a node
+  * of any table. The planner uses them twice: a table whose endpoint can
+  * hold no node of the pattern's labels is left out of the scan (the
+  * reference's pattern-embedding table selection, ScanGraph.scanOperator),
+  * and an endpoint whose every combination satisfies the pattern's labels
+  * binds its id off the rel column, without a node-table join. */
 case class RelScanTable(relType: String, df: DataFrame,
     propTypes: Map[String, DataType],
-    srcLabels: Set[String] = Set.empty,
-    tgtLabels: Set[String] = Set.empty,
+    srcCombos: Option[Set[Set[String]]] = None,
+    tgtCombos: Option[Set[Set[String]]] = None,
     srcNode: Option[CoStoredNode] = None,
-    tgtNode: Option[CoStoredNode] = None)
+    tgtNode: Option[CoStoredNode] = None) {
+  private def combos(relSrc: Boolean) = if (relSrc) srcCombos else tgtCombos
+  /** Some node at endpoint `relSrc` can carry a combination `accepts`. */
+  def canHold(relSrc: Boolean, accepts: Set[String] => Boolean): Boolean =
+    combos(relSrc).forall(_.exists(accepts))
+  /** Every node at endpoint `relSrc` carries a combination `accepts` (false
+    * for a "!" space or a space without node tables). */
+  def implies(relSrc: Boolean, accepts: Set[String] => Boolean): Boolean =
+    combos(relSrc).exists(cs => cs.nonEmpty && cs.forall(accepts))
+}
 
 object PropertyGraph {
   val ID = "_id"
@@ -167,12 +180,13 @@ class PropertyGraph(val nodeDefs: Seq[NodeTableDef], val relDefs: Seq[RelTableDe
       d.properties.map { case (k, src) => k -> fields(src) })
   }
 
-  /** Labels guaranteed for every node of an id space: the intersection of
-    * the label sets of the node tables in that space. */
-  private lazy val spaceLabels: Map[String, Set[String]] =
-    nodeDefs.groupBy(_.idSpace).map { case (s, defs) =>
-      s -> defs.map(_.labels).reduce(_ intersect _)
-    }
+  /** Label combinations a node of an id space can carry: the label sets of
+    * the space's node tables, plus those of every pre-tagged "!" node table,
+    * whose ids are not confined to a space. A "!" space can hold anything. */
+  private def spaceCombos(space: String): Option[Set[Set[String]]] =
+    if (space.startsWith("!")) None
+    else Some(nodeDefs.filter(d => d.idSpace == space ||
+      d.idSpace.startsWith("!")).map(_.labels).toSet)
 
   /** The single node table of `space` when it is co-stored with rel def `d`
     * (same DataFrame, keyed by the rel's endpoint column). */
@@ -201,8 +215,7 @@ class PropertyGraph(val nodeDefs: Seq[NodeTableDef], val relDefs: Seq[RelTableDe
       nd.properties.map { case (k, src) => k -> fields(src) })
     RelScanTable(d.relType, d.df.select(cols: _*),
       d.properties.map { case (k, src) => k -> fields(src) },
-      spaceLabels.getOrElse(d.srcSpace, Set.empty),
-      spaceLabels.getOrElse(d.tgtSpace, Set.empty),
+      spaceCombos(d.srcSpace), spaceCombos(d.tgtSpace),
       srcCo.map(coInfo), tgtCo.map(coInfo))
   }
 
@@ -220,6 +233,20 @@ class PropertyGraph(val nodeDefs: Seq[NodeTableDef], val relDefs: Seq[RelTableDe
   def relScansFor(requested: Seq[String]): Seq[RelScanTable] =
     if (requested.isEmpty) relTables
     else relTables.filter(t => requested.contains(t.relType))
+
+  /** Rel tables of the requested types that can connect a node whose label
+    * combination `src` accepts to one `tgt` accepts, in stored direction or,
+    * when `undirected`, in either. `None` constrains nothing: an unlabelled
+    * endpoint keeps every table, even one whose space has no node table. */
+  def relScansFor(requested: Seq[String], src: Option[Set[String] => Boolean],
+      tgt: Option[Set[String] => Boolean],
+      undirected: Boolean): Seq[RelScanTable] = {
+    def fits(t: RelScanTable, from: Option[Set[String] => Boolean],
+        to: Option[Set[String] => Boolean]) =
+      from.forall(t.canHold(relSrc = true, _)) && to.forall(t.canHold(relSrc = false, _))
+    relScansFor(requested).filter(t =>
+      fits(t, src, tgt) || (undirected && fits(t, tgt, src)))
+  }
 
   /** Memoized oriented hop tables for var-length expands, keyed by
     * (rel types, reversed, undirected). Every var-length / shortestPath

@@ -1509,7 +1509,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   private def entityElementsDf(isRels: Boolean): (DataFrame, Column, String) = {
     val v = freshVar()
     if (isRels) {
-      val (df, h, _) = relScanDf(v, Seq.empty, Seq.empty, undirected = false)
+      val (df, h, _) = relScanDf(v, graph.relTables, Seq.empty, Seq.empty,
+        undirected = false)
       val props = h.ownedBy(v).collect { case s @ PropSlot(_, k) => (k, h.col(s)) }
         .filterNot(_._1.startsWith("_")).sortBy(_._1)
       val elem = struct((Seq(
@@ -1685,8 +1686,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       val c = sub.header.col(IdSlot(v))
       (v, c, "_pp_" + c)
     }
-    val subDf = sub.df
-      .select(renamed.map { case (_, c, r) => col(c).as(r) }: _*).distinct()
+    // No dedup: a semi/anti join emits each driving row at most once
+    // however many matches it finds.
+    val subDf = sub.df.select(renamed.map { case (_, c, r) => col(c).as(r) }: _*)
     val cond = renamed.map { case (v, _, r) =>
       col(ctx.header.col(IdSlot(v))) === col(r)
     }.reduce(_ && _)
@@ -1707,7 +1709,15 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         .join(sub.df, lit(true), "left_outer").drop("_om_unit")
       return Ctx(joined, sub.header)
     }
-    val sub = planMatch(unitCtx, pattern, where)
+    // Only the id of a shared node var survives the join below, so one the
+    // optional pattern does not read (no inline property, no WHERE or path
+    // reference) is planned id-only, like a dead var: its endpoint binds
+    // off the rel column instead of scanning every node table.
+    val idOnly = ctx.header.kinds.keySet.filter(v => ctx.header.contains(IdSlot(v))) --
+      ExprOps.matchObservedVars(Match(optional = true, pattern, where))
+    val saved = deadVars
+    deadVars = saved ++ idOnly
+    val sub = try planMatch(unitCtx, pattern, where) finally deadVars = saved
     val shared = sub.header.kinds.keySet.intersect(ctx.header.kinds.keySet)
     // Columns of shared vars already exist on the lhs: join on ids, drop the
     // rhs copies of every shared-var column.
@@ -1797,18 +1807,31 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     case _ => false
   }
 
+  /** The label combinations `nc`'s label constraint admits; `None` when
+    * the pattern puts no label on the node. A dynamic term disables
+    * compile-time pruning outright: an optimistic "true" would flip to
+    * pessimistic exclusion under a negation (:!$(e) must not drop every
+    * table). Every combination passes it; the runtime HasDynLabels filter
+    * applies the constraint and Catalyst pushes its deterministic parts
+    * into the scans. */
+  private def labelFilter(nc: NodeCons): Option[Set[String] => Boolean] =
+    if (nc.labels.isEmpty && nc.labelExpr.isEmpty) None
+    else Some(ls => nc.labels.forall(ls.contains) &&
+      nc.labelExpr.forall(le => hasDynLabel(le) || evalLabelExpr(le, ls)))
+
+  /** Every node at endpoint `relSrc` of `t` satisfies `nc`'s label
+    * constraint, so checking it needs no node table. A dynamic term is a
+    * per-row check and is never implied. */
+  private def labelsImplied(nc: NodeCons, t: RelScanTable,
+      relSrc: Boolean): Boolean = labelFilter(nc) match {
+    case None => true
+    case Some(accepts) =>
+      !nc.labelExpr.exists(hasDynLabel) && t.implies(relSrc, accepts)
+  }
+
   private def nodeScanDf(nc: NodeCons): (DataFrame, RecordHeader, Seq[Expr]) = {
-    val tables = nc.labelExpr match {
-      // A dynamic term disables compile-time table pruning outright: an
-      // optimistic "true" would flip to pessimistic exclusion under a
-      // negation (:!$(e) must not drop every table). All combo tables
-      // scan; the runtime HasDynLabels filter applies the constraint and
-      // Catalyst pushes its deterministic parts into the scans.
-      case Some(le) if !hasDynLabel(le) => graph.nodeScansFor(nc.labels)
-        .filter(t => evalLabelExpr(le, t.labels))
-      case Some(_) => graph.nodeScansFor(nc.labels)
-      case None => graph.nodeScansFor(nc.labels)
-    }
+    val tables = labelFilter(nc).fold(graph.nodeTables)(accepts =>
+      graph.nodeTables.filter(t => accepts(t.labels)))
     val v = nc.v
     if (tables.isEmpty) {
       val labelSlots = nc.labels.map(l => LabelSlot(v, l))
@@ -1889,16 +1912,15 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   }
 
   // ------------------------------------------------------------- rel scans
-  /** Unified co-stored endpoint info across every rel table matching
-    * `types` (reference NodeRelPattern/TripletPattern): available when all
-    * tables co-store that side with an identical label set. Undirected
-    * scans union a reversed copy, so their endpoint columns alternate
-    * sides and never qualify. */
-  private def coStoredSide(types: Seq[String], relSrc: Boolean,
+  /** Unified co-stored endpoint info across the rel tables an expand reads,
+    * i.e. every table that survives endpoint-label pruning (reference
+    * NodeRelPattern/TripletPattern): available when all of them co-store
+    * that side with an identical label set. Undirected scans union a
+    * reversed copy, so their endpoint columns alternate sides and never
+    * qualify. */
+  private def coStoredSide(tables: Seq[RelScanTable], relSrc: Boolean,
       undirected: Boolean): Option[graft.graph.CoStoredNode] = {
-    if (undirected) return None
-    val tables = graph.relScansFor(types)
-    if (tables.isEmpty) return None
+    if (undirected || tables.isEmpty) return None
     val infos = tables.flatMap(t => if (relSrc) t.srcNode else t.tgtNode)
     if (infos.size != tables.size) return None
     if (infos.map(_.labels).distinct.size != 1) return None
@@ -1913,11 +1935,21 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     "_np_" + v.map(c => if (c.isLetterOrDigit || c == '_') c else '_') +
       (if (relSrc) "_s_" else "_t_") + k
 
-  private def relScanDf(v: String, types: Seq[String],
-      props: Seq[(String, Expr)], undirected: Boolean,
+  /** The rel tables an expand of `e` reads: those of its types whose
+    * endpoint id spaces can hold the pattern's endpoint labels, in either
+    * orientation for an undirected hop. relScanDf, coStoredSide and
+    * canElideEndpoint all see this one list. */
+  private def relTablesFor(e: EdgeCons,
+      nodes: Map[String, NodeCons]): Seq[RelScanTable] = {
+    val (s, t) = (labelFilter(nodes(e.src)), labelFilter(nodes(e.tgt)))
+    if (e.dir == INBOUND) graph.relScansFor(e.types, t, s, undirected = false)
+    else graph.relScansFor(e.types, s, t, undirected = e.dir == BOTH)
+  }
+
+  private def relScanDf(v: String, tables: Seq[RelScanTable],
+      types: Seq[String], props: Seq[(String, Expr)], undirected: Boolean,
       dynType: Option[(Boolean, Expr)] = None)
       : (DataFrame, RecordHeader, Seq[Expr]) = {
-    val tables = graph.relScansFor(types)
     val propTypes = unifyProps(tables.map(_.propTypes))
     var header = RecordHeader.empty
       .withSlots(Seq(IdSlot(v), SrcSlot(v), TgtSlot(v), TypeSlot(v)))
@@ -1933,8 +1965,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     }
     // Pass co-stored endpoint properties through the scan under fixed
     // names; Catalyst prunes them when the planner does not bind them.
-    val srcCo = coStoredSide(types, relSrc = true, undirected)
-    val tgtCo = coStoredSide(types, relSrc = false, undirected)
+    val srcCo = coStoredSide(tables, relSrc = true, undirected)
+    val tgtCo = coStoredSide(tables, relSrc = false, undirected)
     val dfs = tables.map { t =>
       def coCols(co: Option[graft.graph.CoStoredNode], relSrc: Boolean) =
         co.toSeq.flatMap { u =>
@@ -2014,28 +2046,25 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
 
   /** True when the endpoint's node-table join can be skipped: its id can be
     * bound straight off the relationship column because (a) the var is
-    * structurally unobservable beyond its id (anonymous, or inside a
+    * structurally unobservable beyond its id (anonymous, dead, an OPTIONAL
+    * MATCH variable shared with the driving rows, or inside a
     * pattern-predicate subplan where only shared ids escape), (b) it has no
-    * inline property predicates, and (c) every matching rel table's endpoint
-    * space already guarantees the requested labels. Assumes referential
+    * inline property predicates, and (c) in every table that survives
+    * endpoint-label pruning, each label combination the endpoint's space
+    * can hold satisfies the requested labels. Assumes referential
     * integrity of rel endpoints (the property-graph contract; the reference
     * makes the same assumption in its pattern scans,
     * okapi-logical/.../impl/LogicalOptimizer.scala:67-134). Skipping the
     * join matters at scale: an EXISTS over a fact-table rel otherwise pays
     * a node-table join only to discard it. */
   private def canElideEndpoint(nc: NodeCons, e: EdgeCons,
-      isPatternSrc: Boolean): Boolean =
+      tables: Seq[RelScanTable], isPatternSrc: Boolean): Boolean =
     (elideAllNodes || deadVars(nc.v) || nc.v.startsWith("_a")) &&
-      nc.props.isEmpty &&
-      nc.copyOf.isEmpty && {
-        val tables = graph.relScansFor(e.types)
-        tables.nonEmpty && tables.forall { t =>
-          val implied =
-            if (e.dir == BOTH) t.srcLabels intersect t.tgtLabels
-            else if ((e.dir != INBOUND) == isPatternSrc) t.srcLabels
-            else t.tgtLabels
-          nc.labels.toSet.subsetOf(implied)
-        }
+      nc.props.isEmpty && nc.copyOf.isEmpty &&
+      tables.nonEmpty && tables.forall { t =>
+        if (e.dir == BOTH)
+          labelsImplied(nc, t, relSrc = true) && labelsImplied(nc, t, relSrc = false)
+        else labelsImplied(nc, t, relSrc = (e.dir != INBOUND) == isPatternSrc)
       }
 
   /** Truthful (as-stored) endpoint columns of a bound rel var: undirected
@@ -2100,17 +2129,18 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     if (bound(e.v) && ctx.header.contains(SrcSlot(e.v)))
       return planBoundRelEdge(ctx, e, nodes, bound)
     val undirected = e.dir == BOTH
+    val tables = relTablesFor(e, nodes)
     // relSrc side of a pattern endpoint: for OUT the pattern src sits on
     // the rel's _src column, for IN on its _tgt column.
     def relSrcOf(isPatternSrc: Boolean): Boolean = (e.dir != INBOUND) == isPatternSrc
     def coStoredFor(nc: NodeCons, isPatternSrc: Boolean)
         : Option[graft.graph.CoStoredNode] =
-      if (nc.copyOf.nonEmpty) None
-      else coStoredSide(e.types, relSrcOf(isPatternSrc), undirected)
-        .filter(co => nc.labels.toSet.subsetOf(co.labels))
+      if (nc.copyOf.nonEmpty || nc.labelExpr.exists(hasDynLabel)) None
+      else coStoredSide(tables, relSrcOf(isPatternSrc), undirected)
+        .filter(co => labelFilter(nc).forall(_(co.labels)))
 
     val srcElide = !bound(e.src) && !bound(e.tgt) && e.varLength.isEmpty &&
-      canElideEndpoint(nodes(e.src), e, isPatternSrc = true)
+      canElideEndpoint(nodes(e.src), e, tables, isPatternSrc = true)
     val srcCoDrive: Option[graft.graph.CoStoredNode] =
       if (!srcElide && !bound(e.src) && !bound(e.tgt) && e.varLength.isEmpty)
         coStoredFor(nodes(e.src), isPatternSrc = true)
@@ -2125,7 +2155,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     if (e.varLength.isDefined) return planVarLengthEdge(ctx, e, nodes, bound)
 
     val (relDf, relHeader, relDeferred) =
-      relScanDf(e.v, e.types, e.props, undirected, e.dynType)
+      relScanDf(e.v, tables, e.types, e.props, undirected, e.dynType)
     val (srcSideSlot, tgtSideSlot) =
       if (e.dir == INBOUND) (TgtSlot(e.v), SrcSlot(e.v))
       else (SrcSlot(e.v), TgtSlot(e.v))
@@ -2173,7 +2203,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       if (bound(e.tgt)) {
         df = df.filter(
           col(header.col(IdSlot(e.tgt))) === col(relHeader.col(tgtSideSlot)))
-      } else if (canElideEndpoint(nodes(e.tgt), e, isPatternSrc = false)) {
+      } else if (canElideEndpoint(nodes(e.tgt), e, tables, isPatternSrc = false)) {
         elideInto(e.tgt, tgtSideSlot)
       } else coStoredFor(nodes(e.tgt), isPatternSrc = false) match {
         case Some(co) => coStoredInto(e.tgt, co, tgtSideSlot, isPatternSrc = false)
@@ -2204,7 +2234,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       // Only tgt bound: anchor from the target side.
       df = df.join(relDf,
         col(ctx.header.col(IdSlot(e.tgt))) === col(relHeader.col(tgtSideSlot)))
-      if (canElideEndpoint(nodes(e.src), e, isPatternSrc = true)) {
+      if (canElideEndpoint(nodes(e.src), e, tables, isPatternSrc = true)) {
         elideInto(e.src, srcSideSlot)
       } else coStoredFor(nodes(e.src), isPatternSrc = true) match {
         case Some(co) => coStoredInto(e.src, co, srcSideSlot, isPatternSrc = true)
@@ -2300,8 +2330,14 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     val (hopBase, sizingDf, cacheableHop) = e.qpp match {
       case Some(spec) => val hb = qppHopBase(ctx0, spec); (hb, hb, false)
       case None =>
+        // Only a single hop is bounded by both pattern endpoints; a deeper
+        // walk passes through unconstrained nodes, so it reads every table
+        // of its types (and shares the per-graph hop table).
+        val tables =
+          if (!unbounded && hi <= 1) relTablesFor(e, nodes)
+          else graph.relScansFor(e.types)
         val (relDf0, relHeader0, vlDeferred) =
-          relScanDf(rv, e.types, e.props, undirected, e.dynType)
+          relScanDf(rv, tables, e.types, e.props, undirected, e.dynType)
         require(vlDeferred.isEmpty,
           "var-length relationship properties/types cannot reference " +
             "outer variables")
@@ -2383,8 +2419,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     // bound ids keeps hop 1 (and everything grown from it) proportional to
     // the anchor instead of enumerating every relationship in the graph —
     // the difference between O(anchor·deg^k) and O(|E|·deg^(k-1)) work.
-    val anchorIds = ctx0.df
-      .select(col(ctx0.header.col(IdSlot(anchorVar))).as("_vl_anchor")).distinct()
+    val anchorId = col(ctx0.header.col(IdSlot(anchorVar)))
+    val anchorIds = ctx0.df.select(anchorId.as("_vl_anchor"))
     val (seedCol, growCol) = if (anchorIsSrc) ("_h_from", "_h_to") else ("_h_to", "_h_from")
     var paths: DataFrame = null
     val seed = hop
@@ -2400,8 +2436,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     // paths close (a, a) before hop 1.
     var closedPairs: DataFrame =
       if (spPrune && lo == 0) {
-        val a = ctx0.df
-          .select(col(ctx0.header.col(IdSlot(anchorVar))).as("_sp_a")).distinct()
+        val a = ctx0.df.select(anchorId.as("_sp_a")).distinct()
         Pin(a.select(col("_sp_a"), col("_sp_a").as("_sp_o")))
       } else null
     // Grow the frontier one hop, appending the rel id (edge isomorphism via
@@ -2487,22 +2522,20 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       }
       if (paths == null) paths = frontier.limit(0)
     }
-    if (lo == 0) {
-      // Zero-length: anchored endpoint pairs with itself, empty path.
-      val zero0 = ctx0.df.select(col(ctx0.header.col(IdSlot(anchorVar))).as(pfrom))
-        .distinct()
-        .select(col(pfrom), col(pfrom).as(pto),
-          array().cast(ArrayType(LongType)).as(pids))
-      val zero =
-        if (trackNodes) zero0.withColumn(pnodes, array(col(pfrom)))
-        else zero0
-      paths = if (paths == null) zero else paths.unionByName(zero)
-    }
-
     val (anchorCol, otherCol, otherVar) =
       if (anchorIsSrc) (pfrom, pto, e.tgt) else (pto, pfrom, e.src)
-    var df = ctx0.df.join(paths,
-      col(ctx0.header.col(IdSlot(anchorVar))) === col(anchorCol))
+    val walked =
+      if (paths == null) None
+      else Some(ctx0.df.join(paths, anchorId === col(anchorCol)))
+    // Zero-length: every driving row with an anchor pairs it with itself
+    // over an empty path, read off the driving rows (no dedup, no join).
+    val zero =
+      if (lo > 0) None
+      else Some(ctx0.df.filter(anchorId.isNotNull).select(Seq(col("*"),
+        anchorId.as(pfrom), anchorId.as(pto),
+        array().cast(ArrayType(LongType)).as(pids)) ++
+        (if (trackNodes) Seq(array(anchorId).as(pnodes)) else Seq.empty): _*))
+    var df = (walked ++ zero).reduce(_.unionByName(_))
     var header = ctx0.header
       .withSlot(PathSlot(e.v)).withVar(e.v, ListRelKind(e.types.toSet))
     if (trackNodes) header = header.withSlot(PathNodesSlot(e.v))
@@ -4309,7 +4342,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     }
     if (edges.isEmpty) scanNode(unbound.head)
     edges.foreach { e =>
-      val (d, h, _) = relScanDf(e.v, e.types, Seq.empty, e.dir == BOTH)
+      val (d, h, _) = relScanDf(e.v, relTablesFor(e, nodes), e.types,
+        Seq.empty, e.dir == BOTH)
       scans += ((d, h))
       // Undirected scans bind Src/Tgt in traversal order: left end first.
       val (sv, tv) = ends(e)
