@@ -15,8 +15,9 @@ import scala.collection.mutable
   * visible instead of silently wrong.
   *
   * Every timed call runs under the harness's job-tag meter; each row's
-  * jobs, stages, tasks, shuffle, spill and peak task memory from its last
-  * timed run go on its stderr line and into the full JSON line.
+  * jobs, stages, tasks, shuffle, spill, peak task memory and Janino
+  * compiles from its last timed run go on its stderr line and into the
+  * full JSON line.
   */
 object Bench {
   private val GroupSize = 6
@@ -161,7 +162,8 @@ object Bench {
             System.err.println(f"[bench] $name%-24s $v%8.2f s  jobs=${c.jobs}%d " +
               f"stages=${c.stages}%d tasks=${c.tasks}%d shufWriteMB=${c.shuffleWrite / 1e6}%.1f " +
               f"shufReadMB=${c.shuffleRead / 1e6}%.1f spillMB=${(c.spillMem + c.spillDisk) / 1e6}%.1f " +
-              f"peakTaskMemMB=${c.peakTaskMem / 1e6}%.1f")
+              f"peakTaskMemMB=${c.peakTaskMem / 1e6}%.1f compiles=${c.compiles}%d " +
+              f"compileMs=${c.compileMs}%.0f")
           case None => System.err.println(f"[bench] $name%-24s   FAILED")
         }
       }
@@ -221,8 +223,12 @@ object Bench {
     // timed run.
     val xj = field("exec", ok.map { case (k, _) => val c = counts(k)
       k -> s"[${c.jobs},${c.stages},${c.tasks},${ms(c.shuffleWrite / 1e6)}]" })
+    // codegen: row -> [Janino compiles, compile ms] of its last timed run,
+    // a map apart from "exec" so parsers of the exec arrays keep working.
+    val cj = field("codegen", ok.map { case (k, _) => val c = counts(k)
+      k -> s"[${c.compiles},${ms(c.compileMs)}]" })
     val total = ok.values.sum
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs$xj,""" +
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs$xj$cj,""" +
       s""""prepare_sec":${ms(prepSec)},"sentinel_base_sec":${ms(sentBase)},""" +
       s""""barrier_base_sec":${ms(barrierBase)},""" +
       s""""quiet_scan_ref_sec":$QuietScanRefSec,""" +

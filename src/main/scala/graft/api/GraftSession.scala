@@ -13,8 +13,15 @@ import scala.collection.concurrent.TrieMap
   * (okapi-relational/.../api/graph/RelationalCypherSession.scala:130-199;
   * okapi-api/.../api/graph/PropertyGraph.scala:46-117): parse -> plan ->
   * lazy DataFrame. Nothing executes until an action on the returned frame.
+  *
+  * Constructing a session sizes Spark's JVM-wide codegen cache for graft's
+  * working set, unless the host set its size or a class already compiled
+  * ([[org.apache.spark.sql.graftx.CodegenBridge.sizeCache]]), so a repeated
+  * plan shape compiles once per JVM and not once per call.
   */
 class GraftSession(val spark: SparkSession) {
+  org.apache.spark.sql.graftx.CodegenBridge.sizeCache(spark)
+
   /** Named-graph catalog (SessionGraphDataSource equivalent). */
   val catalog: TrieMap[String, PropertyGraph] = TrieMap.empty
 

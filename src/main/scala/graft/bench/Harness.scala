@@ -4,7 +4,7 @@ import graft.graph.PropertyGraph
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftx.ListenerBridge
+import org.apache.spark.sql.graftx.{CodegenBridge, ListenerBridge}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
@@ -32,7 +32,9 @@ object Harness {
   def selected(name: String): Boolean = only.forall(_.contains(name))
 
   /** The bench session: local[cpus] with as many shuffle partitions, AQE,
-    * UTC, ANSI off, nanosAsLong, no UI, then the extra-conf overlay. */
+    * UTC, ANSI off, nanosAsLong, no UI, then the extra-conf overlay. The
+    * codegen cache is sized here, as a GraftSession would size it, because
+    * [[prepare]] compiles before any row builds a GraftSession. */
   def session(): SparkSession = {
     val base = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -48,6 +50,7 @@ object Harness {
       .foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    CodegenBridge.sizeCache(spark)
     spark
   }
 
@@ -63,10 +66,15 @@ object Harness {
     g
   }
 
-  /** Execution counters of the jobs one metered call started. */
+  /** Execution counters of the jobs one metered call started, plus the
+    * Janino compiles (`compiles`, `compileMs`) made while it ran. Those
+    * two are JVM-wide deltas, not tagged: they belong to the call only
+    * because the meter times one call at a time. */
   final class Counts {
     var jobs, stages, tasks = 0
     var shuffleWrite, shuffleRead, spillMem, spillDisk, peakTaskMem = 0L
+    var compiles = 0L
+    var compileMs = 0.0
   }
 
   /** Job-tag meter: every job started inside [[Meter.time]] (also from
@@ -110,6 +118,7 @@ object Harness {
     def time(f: => Any): (Double, Counts) = {
       val tag = MeterTag + seq.incrementAndGet()
       var counts: Counts = null
+      val (compiles0, compileNs0) = (CodegenBridge.compiles, CodegenBridge.compileNanos)
       sc.addJobTag(tag)
       val t0 = System.nanoTime()
       val sec = try { f; (System.nanoTime() - t0) / 1e9 } finally {
@@ -119,6 +128,8 @@ object Harness {
           stageTag.filterInPlace((_, t) => t != tag)
           acc.remove(tag).getOrElse(new Counts)
         }
+        counts.compiles = CodegenBridge.compiles - compiles0
+        counts.compileMs = (CodegenBridge.compileNanos - compileNs0) / 1e6
       }
       (sec, counts)
     }

@@ -27,13 +27,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * co-partitioned consumers skip the exchange.
   *
   * Correctness guards: the claim is refused (falls back to the plain
-  * checkpoint) unless the checkpointed RDD's partition count equals the
-  * explicit `n`, and the key attributes resolve in the output. A FALSE
-  * claim would silently mis-join, so callers must only pass frames shaped
-  * as described above; every registry query downstream is hash-checked
-  * against the DuckDB oracle, which would catch a violation.
+  * checkpoint, with one `[graft]` line) unless the checkpointed RDD's
+  * partition count equals the explicit `n`, and the key attributes resolve
+  * in the output. A FALSE claim would silently mis-join, so callers must
+  * only pass frames shaped as described above; every registry query
+  * downstream is hash-checked against the DuckDB oracle, which would catch
+  * a violation. The re-wrapped relation keeps the checkpoint's size
+  * statistics, so the planner does not read a keyed pin as
+  * `spark.sql.defaultSizeInBytes`.
   */
 object PinBridge {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft")
 
   /** The session's AQE advisory partition size (bytes) — the same target
     * AQE coalescing aims for; used to size keyed pins from estimated
@@ -55,8 +59,18 @@ object PinBridge {
         val attrs = keys.map(k => output.find(_.name == k).get)
         Dataset.ofRows(ck.sparkSession,
           LogicalRDD(output, rdd, HashPartitioning(attrs, n), ordering,
-            streaming, stream)(ck.sparkSession))
-      case _ => ck // partition count changed or keys missing: no claim
+            streaming, stream)(ck.sparkSession, Some(lr.computeStats())))
+      case plan =>
+        val got = plan match {
+          case LogicalRDD(output, rdd, _, _, _, _) =>
+            s"${rdd.getNumPartitions} partitions over " +
+              output.map(_.name).mkString("[", ", ", "]")
+          case other => s"a ${other.nodeName}"
+        }
+        log.warn(s"[graft] keyed pin claim refused: keys " +
+          keys.mkString("[", ", ", "]") + s", expected n = $n, got $got; " +
+          "the pin keeps no partitioning and its consumers re-exchange it")
+        ck
     }
   }
 }

@@ -134,6 +134,31 @@ class R15ShapeSpec extends SparkTestBase {
     assert(keyed === plain)
   }
 
+  test("keyed pin keeps its checkpoint's size estimate") {
+    // Without the checkpoint's stats the re-wrapped relation reads as
+    // spark.sql.defaultSizeInBytes (Long.MaxValue): never broadcast, and
+    // every size-derived width downstream falls back to its maximum.
+    val edges = (1L to 400L).map(i => (i % 37, i % 11)).toDF("src", "dst")
+    val pin = graft.impl.Pin.keyed(edges, Seq("src"))
+    val est = pin.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est < org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes,
+      s"keyed pin estimate $est")
+  }
+
+  test("a refused keyed-pin claim logs one [graft] line") {
+    val df = (1L to 40L).toDF("src").repartition(3, col("src"))
+    var pinned: org.apache.spark.sql.DataFrame = null
+    val lines = graftLog {
+      pinned = org.apache.spark.sql.graftx.PinBridge
+        .checkpointKeepingHash(df, Seq("src"), 5)
+    }
+    assert(lines.size === 1, lines)
+    assert(lines.head.contains("[graft] keyed pin claim refused") &&
+      lines.head.contains("[src]") && lines.head.contains("n = 5") &&
+      lines.head.contains("3 partitions"), lines.head)
+    assert(pinned.count() === 40L)
+  }
+
   test("bloom prefilter sits BEFORE the wedge exchange in the plan") {
     withSQLConf("spark.graft.bloom.minItems" -> "0",
       "spark.sql.adaptive.enabled" -> "false",

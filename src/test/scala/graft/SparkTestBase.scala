@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** One shared local SparkSession across all suites (getOrCreate). */
 trait SparkTestBase extends AnyFunSuite {
@@ -28,6 +29,31 @@ trait SparkTestBase extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** The messages `body` logs to the `graft` logger (its `[graft]` lines). */
+  def graftLog(body: => Any): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    logger.addAppender(appender)
+    try body finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    lines.asScala.toSeq
   }
 
   /** Multiset compare helper (Bag semantics, like the reference's
