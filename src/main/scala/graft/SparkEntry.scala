@@ -607,6 +607,10 @@ object SparkEntry {
         |       sum(o.o_totalprice) AS revenue
         |ORDER BY region""".stripMargin)
 
+  /** The (name, Cypher text) of each plain Cypher row of [[queries]]. */
+  def cypherRows: Seq[(String, String)] =
+    cypherQueries.map { case (name, q, _) => (name, q) }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     cypherQueries.map { case (name, q, _) => name -> cy(q) }.toMap ++

@@ -51,42 +51,27 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   private var anonCounter = 0
   private def freshVar(): String = { anonCounter += 1; s"_a$anonCounter" }
 
-  /** Inside a pattern-predicate subplan every node var is a candidate for
-    * endpoint elision (only shared ids escape the subplan); elsewhere only
-    * anonymous vars are. Saved/restored because subplans can nest. */
-  private var elideAllNodes = false
-  private def withElideAll[T](f: => T): T = {
-    val saved = elideAllNodes
-    elideAllNodes = true
-    try f finally elideAllNodes = saved
-  }
-
-  /** Named endpoint vars of the MATCH being planned that are provably never
-    * observed afterwards (liveness over the remaining clauses) — candidates
-    * for endpoint elision exactly like anonymous vars. Set per MATCH in
-    * planSingle; a named-but-dead var must not defeat join elision (the
-    * reference's schema-driven scan pruning, LogicalOptimizer.scala:67-134,
-    * applied one step further). */
-  private var deadVars: Set[String] = Set.empty
-
-  /** Endpoint vars named in `m`'s pattern but never observed by `m` itself
-    * (WHERE / inline props / path functions) nor by any later clause.
-    * Binding occurrences downstream count as observations (a re-MATCH joins
-    * on the id); RETURN * / WITH * kills the analysis. */
-  private def deadEndpointVars(m: Match, rest: Seq[Clause]): Set[String] = {
-    val downstream = rest.foldLeft(Option(Set.empty[String])) {
-      case (None, _) => None
-      case (Some(acc), c) => ExprOps.clauseRefs(c).map(acc ++ _)
+  /** The variables the clauses `rest` read, binding occurrences included (a
+    * re-MATCH joins on the id); `None` when one of them is RETURN * or
+    * WITH *, which reads them all. */
+  private def readBy(rest: Seq[Clause]): Option[Set[String]] =
+    rest.foldLeft(Option(Set.empty[String])) { (acc, c) =>
+      for (a <- acc; r <- ExprOps.clauseRefs(c)) yield a ++ r
     }
-    downstream match {
-      case None => Set.empty
-      case Some(later) =>
-        val observed = later ++ ExprOps.matchObservedVars(m)
-        m.pattern.parts.flatMap { part =>
-          (part.head +: part.tail.map(_._2)).flatMap(_.variable)
-        }.toSet -- observed
-    }
-  }
+
+  /** The one elision rule. Of a pattern's node variables `vars` (anonymous
+    * ones included), those nothing reads but their id: not the pattern
+    * itself (inline properties, `copyOf`, path functions), not its `where`
+    * and not `after`, the variables whatever follows the pattern reads.
+    * Such a variable binds its id straight off a relationship column instead
+    * of joining its node scan (the reference's schema-driven scan pruning,
+    * LogicalOptimizer.scala:67-134, applied one step further); the endpoint
+    * checks in [[canElideEndpoint]] and [[planVarLengthEdge]] add only what
+    * the schema must imply. */
+  private def elidableVars(vars: Iterable[String], pattern: Pattern,
+      where: Option[Expr], after: Set[String]): Set[String] =
+    vars.toSet -- ExprOps.matchObservedVars(Match(optional = false, pattern, where)) --
+      after
 
   /** `ordSeq`: the anonymous var holding a monotone row-sequence column
     * stamped AFTER the most recent ORDER BY (WITH … ORDER BY). Cypher's
@@ -104,6 +89,13 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   }
 
   private def unitCtx: Ctx = Ctx(spark.range(1).select(), RecordHeader.empty)
+
+  /** `df`, or one all-null row when it is empty: Cypher's OPTIONAL over a
+    * pattern, CALL body or procedure that yields nothing. The unit row
+    * left-outer joins `df`, so nothing runs while planning. */
+  private def orNullRow(df: DataFrame): DataFrame =
+    spark.range(1).select(lit(1).as("_om_unit"))
+      .join(df, lit(true), "left_outer").drop("_om_unit")
 
   /** Leaf context for the query: the driving table's columns become value
     * vars (DrivingTable leaf, LogicalOperator.scala:342). Pattern-predicate
@@ -235,10 +227,14 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
 
   /** Reading clauses that depend only on the incoming context (no planner
     * state mutated) — the unit of shared-prefix caching across UNION
-    * branches. */
-  private def planReadingClause(ctx: Ctx, c: Clause): Ctx = c match {
-    case m @ Match(false, _, _) => planMatch(ctx, m.pattern, m.where)
-    case m @ Match(true, _, _) => planOptionalMatch(ctx, m.pattern, m.where)
+    * branches. `after` is what the clauses after `c` read ([[readBy]]);
+    * `None` keeps every variable a MATCH names live. */
+  private def planReadingClause(ctx: Ctx, c: Clause,
+      after: Option[Set[String]]): Ctx = c match {
+    case m: Match =>
+      val live = after.getOrElse(m.pattern.parts.flatMap(ExprOps.patternRefs).toSet)
+      if (m.optional) planOptionalMatch(ctx, m.pattern, m.where, live)
+      else planMatch(ctx, m.pattern, m.where, live)
     case Unwind(e, alias) => planUnwind(ctx, e, alias)
     case LoadCsv(headers, url, alias, sep) =>
       planLoadCsv(ctx, headers, url, alias, sep)
@@ -293,7 +289,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       val seedLen = (prefix.length - 1 to 1 by -1)
         .find(k => memo.contains(prefix.take(k))).getOrElse(0)
       var ctx = if (seedLen == 0) startCtx else memo(prefix.take(seedLen))
-      prefix.drop(seedLen).foreach(c => ctx = planReadingClause(ctx, c))
+      // What follows differs per branch: every variable stays live.
+      prefix.drop(seedLen).foreach(c => ctx = planReadingClause(ctx, c, None))
       memo(prefix) = ctx.copy(df = Pin(ctx.df))
     }
     memo.toMap
@@ -327,9 +324,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       case (Construct(on, news, sets, clones), _) =>
         requireNoWrites("CONSTRUCT")
         constructedGraph = Some(planConstruct(ctx, on, news, sets, clones))
-      case (w: Clause, _) if w.isInstanceOf[Create] || w.isInstanceOf[SetClause] ||
-          w.isInstanceOf[Remove] || w.isInstanceOf[Delete] ||
-          w.isInstanceOf[Merge] || w.isInstanceOf[Foreach] =>
+      case (w, _) if isWriteClause(w) =>
         ctx = planWriteClause(ctx, w)
         // The ambient graph becomes the written state, so everything after
         // the clause boundary — element-binding in RETURN and (per
@@ -357,18 +352,15 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
           if (arms.exists(a => containsWriteClause(a.clauses)))
             graph = buildWrittenGraph()
         }
-      case (m: Match, i) =>
-        deadVars = deadEndpointVars(m, rem.drop(i + 1))
-        try ctx = planReadingClause(ctx, m) finally deadVars = Set.empty
-      case (reading, _) =>
+      case (reading, i) =>
         // Clauses that read the (written) ambient graph or only reshape
         // the driving table are legal after writes; FROM GRAPH/CONSTRUCT
         // are not (they would switch away from the written state).
         reading match {
-          case _: With | _: Unwind | _: CallProc => ()
+          case _: Match | _: With | _: Unwind | _: CallProc => ()
           case other => requireNoWrites(other.getClass.getSimpleName)
         }
-        ctx = planReadingClause(ctx, reading)
+        ctx = planReadingClause(ctx, reading, readBy(rem.drop(i + 1)))
     }
     (ctx, outs)
   }
@@ -393,10 +385,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     var df = proc(graph, args.map(evalLit))
     // OPTIONAL CALL (Neo4j 5.21): an empty procedure result contributes
     // one all-null row instead of annihilating the driving rows.
-    if (optional && df.isEmpty)
-      df = df.sparkSession.range(1).select(df.schema.fields.map(f =>
-        org.apache.spark.sql.functions.lit(null).cast(f.dataType)
-          .as(f.name)): _*)
+    if (optional) df = orNullRow(df)
     val cols = if (yields.nonEmpty) yields else df.columns.toSeq
     df = df.select(cols.map(col): _*)
     var header = RecordHeader.empty
@@ -820,8 +809,12 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     case _ => false
   }
 
-  private def planMatch(ctx0: Ctx, pattern: Pattern, where: Option[Expr]): Ctx = {
+  /** Plan `pattern` and its `where` onto `ctx0`; `after` is what reads the
+    * result ([[elidableVars]]). */
+  private def planMatch(ctx0: Ctx, pattern: Pattern, where: Option[Expr],
+      after: Set[String]): Ctx = {
     val (nodes, edges) = normalizePattern(pattern)
+    val elidable = elidableVars(nodes.keys, pattern, where, after)
     var ctx = ctx0
     val bound = mutable.Set.empty[String]
     ctx0.header.kinds.foreach { case (v, _) => bound += v }
@@ -897,7 +890,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     while (remaining.nonEmpty) {
       val idx = remaining.indexWhere(e => bound(e.src) || bound(e.tgt))
       val e = if (idx >= 0) remaining.remove(idx) else remaining.remove(0)
-      ctx = planEdge(ctx, e, nodes, bound)
+      ctx = planEdge(ctx, e, nodes, bound, elidable)
     }
     // Standalone / leftover nodes; also re-apply label/property constraints
     // to vars that entered this MATCH already bound from an earlier clause —
@@ -1189,8 +1182,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   }
 
   /** Pattern predicate in *value* position (RETURN exists(...), OR-nested,
-    * CASE, ...): plan the subpattern, left-outer-join a distinct marker,
-    * rewrite the expression to IS NOT NULL on the marker — the reference's
+    * CASE, ...): plan the subpattern, left-outer-join one true marker per
+    * shared key (false where nothing matched), rewrite the expression to
+    * the marker — the reference's
     * ExistsSubQuery formulation (RelationalPlanner.scala:224-247). Returns
     * the augmented context and the rewritten expression. */
   private def materializePatternPredicates(ctx0: Ctx, e: Expr): (Ctx, Expr) = {
@@ -1203,38 +1197,11 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         ctx = c2
         if (negated) Not(repl) else repl
       case PatternPredicate(part, negated, innerWhere) =>
-        val sub = withElideAll { planMatch(unitCtx, Pattern(Seq(part)), innerWhere) }
-        val shared = sub.header.kinds.keySet.intersect(ctx.header.kinds.keySet)
-          .filter(v => sub.header.contains(IdSlot(v)) &&
-            ctx.header.contains(IdSlot(v)))
         val marker = freshVar()
-        val markerSlot = ValueSlot(marker)
-        val markerCol = RecordHeader.colName(markerSlot)
-        if (shared.isEmpty) {
-          // Uncorrelated (openCypher permits it): one global existence bit,
-          // broadcast onto every outer row.
-          val subDf = sub.df.limit(1).select(lit(true).as(markerCol))
-          ctx = Ctx(ctx.df.join(subDf, lit(true), "left_outer"),
-            ctx.header.withSlot(markerSlot).withVar(marker, ValueKind))
-        } else {
-          val renamed = shared.toSeq.map { v =>
-            val c = sub.header.col(IdSlot(v))
-            (v, c, "_pp_" + c)
-          }
-          val subDf = sub.df
-            .select(renamed.map { case (_, c, r) => col(c).as(r) }: _*)
-            .distinct()
-            .withColumn(markerCol, lit(true))
-          val cond = renamed.map { case (v, _, r) =>
-            col(ctx.header.col(IdSlot(v))) === col(r)
-          }.reduce(_ && _)
-          ctx = Ctx(
-            ctx.df.join(subDf, cond, "left_outer")
-              .drop(renamed.map(_._3): _*),
-            ctx.header.withSlot(markerSlot).withVar(marker, ValueKind))
-        }
-        val base = IsNull(Var(marker), negated = true)
-        if (negated) Not(base) else base
+        val sub = planMatch(unitCtx, Pattern(Seq(part)), innerWhere, Set.empty)
+        ctx = joinShared(ctx, sub, "left_outer",
+          Some((marker, max(lit(true)), lit(false))))
+        if (negated) Not(Var(marker)) else Var(marker)
       case other => other
     }
     (ctx, rewritten)
@@ -1378,13 +1345,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         ctx = c2
         repl
       case PatternComp(part, where, proj) =>
-        val sub = planMatch(unitCtx, Pattern(Seq(part)), where)
-        val shared = sub.header.kinds.keySet.intersect(ctx.header.kinds.keySet)
-          .filter(v => sub.header.contains(IdSlot(v)) &&
-            ctx.header.contains(IdSlot(v)))
-        val listVar = freshVar()
-        val listSlot = ValueSlot(listVar)
-        val listCol = RecordHeader.colName(listSlot)
+        val sub = planMatch(unitCtx, Pattern(Seq(part)), where,
+          ExprOps.varRefs(proj))
         // A bare entity var projects as the FULL entity struct (Neo4j: a
         // comprehension / single-MATCH COLLECT {} of nodes yields nodes,
         // not ids) — same capture rule as collect(n).
@@ -1396,35 +1358,10 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         // struct-wrap the projection so collect_list keeps null elements
         // (Cypher comprehension lists may contain null; bare collect_list
         // silently drops them), then unwrap.
-        val wrapped = struct(projCol.as("v")).as("_pc_proj")
-        if (shared.isEmpty) {
-          // Uncorrelated (openCypher permits it): one global list — the
-          // no-key aggregate always yields exactly one row ([] on empty
-          // input) — broadcast onto every outer row.
-          val subDf = sub.df.select(wrapped).groupBy()
-            .agg(transform(collect_list(col("_pc_proj")),
-              x => x.getField("v")).as(listCol))
-          ctx = Ctx(ctx.df.crossJoin(subDf),
-            ctx.header.withSlot(listSlot).withVar(listVar, ValueKind))
-        } else {
-          val renamed = shared.toSeq.map { v =>
-            val c = sub.header.col(IdSlot(v))
-            (v, c, "_pc_" + c)
-          }
-          val subDf = sub.df
-            .select(renamed.map { case (_, c, r) => col(c).as(r) } :+ wrapped: _*)
-            .groupBy(renamed.map { case (_, _, r) => col(r) }: _*)
-            .agg(transform(collect_list(col("_pc_proj")),
-              x => x.getField("v")).as(listCol))
-          val cond = renamed.map { case (v, _, r) =>
-            col(ctx.header.col(IdSlot(v))) === col(r)
-          }.reduce(_ && _)
-          ctx = Ctx(
-            ctx.df.join(subDf, cond, "left_outer")
-              .drop(renamed.map(_._3): _*)
-              .withColumn(listCol, coalesce(col(listCol), array())),
-            ctx.header.withSlot(listSlot).withVar(listVar, ValueKind))
-        }
+        val list = transform(collect_list(struct(projCol.as("v"))),
+          x => x.getField("v"))
+        val listVar = freshVar()
+        ctx = joinShared(ctx, sub, "left_outer", Some((listVar, list, array())))
         Var(listVar)
       case other => other
     }
@@ -1674,87 +1611,75 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       return ctx2.copy(df =
         ctx2.df.filter(ctx2.compiler.compileBoolOperand(pred)))
     }
-    val sub = withElideAll { planMatch(unitCtx, Pattern(Seq(part)), innerWhere) }
-    val shared = sub.header.kinds.keySet.intersect(ctx.header.kinds.keySet)
-      .filter(v => sub.header.contains(IdSlot(v)) && ctx.header.contains(IdSlot(v)))
-    if (shared.isEmpty)
-      // Uncorrelated: all-or-nothing on global existence — semi/anti join
-      // against a 1-row probe.
-      return ctx.copy(df = ctx.df.join(sub.df.limit(1).select(lit(true).as("_pp_g")),
-        lit(true), if (negated) "left_anti" else "left_semi"))
-    val renamed = shared.toSeq.map { v =>
-      val c = sub.header.col(IdSlot(v))
-      (v, c, "_pp_" + c)
-    }
-    // No dedup: a semi/anti join emits each driving row at most once
-    // however many matches it finds.
-    val subDf = sub.df.select(renamed.map { case (_, c, r) => col(c).as(r) }: _*)
-    val cond = renamed.map { case (v, _, r) =>
-      col(ctx.header.col(IdSlot(v))) === col(r)
-    }.reduce(_ && _)
-    ctx.copy(df = ctx.df.join(subDf, cond,
-      if (negated) "left_anti" else "left_semi"))
+    val sub = planMatch(unitCtx, Pattern(Seq(part)), innerWhere, Set.empty)
+    joinShared(ctx, sub, if (negated) "left_anti" else "left_semi")
   }
 
   /** OPTIONAL MATCH: plan the pattern standalone, then left-outer join on
-    * the shared variables (RelationalPlanner.planOptional :298-330). */
+    * the shared variables (RelationalPlanner.planOptional :298-330). Only
+    * the id of a shared variable reaches the join, so the ones the pattern
+    * itself does not read bind id-only off the rel column. */
   private def planOptionalMatch(ctx: Ctx, pattern: Pattern,
-      where: Option[Expr]): Ctx = {
-    if (ctx.isUnit) {
-      // OPTIONAL MATCH as the first clause: Cypher returns one all-null row
-      // when nothing matches, not zero rows — left-outer join the unit row
-      // to the subplan.
-      val sub = planMatch(unitCtx, pattern, where)
-      val joined = spark.range(1).select(lit(1).as("_om_unit"))
-        .join(sub.df, lit(true), "left_outer").drop("_om_unit")
-      return Ctx(joined, sub.header)
-    }
-    // Only the id of a shared node var survives the join below, so one the
-    // optional pattern does not read (no inline property, no WHERE or path
-    // reference) is planned id-only, like a dead var: its endpoint binds
-    // off the rel column instead of scanning every node table.
-    val idOnly = ctx.header.kinds.keySet.filter(v => ctx.header.contains(IdSlot(v))) --
-      ExprOps.matchObservedVars(Match(optional = true, pattern, where))
-    val saved = deadVars
-    deadVars = saved ++ idOnly
-    val sub = try planMatch(unitCtx, pattern, where) finally deadVars = saved
+      where: Option[Expr], after: Set[String]): Ctx = {
+    val outer = ctx.header.kinds.keySet.filter(v => ctx.header.contains(IdSlot(v)))
+    val sub = planMatch(unitCtx, pattern, where, after -- outer)
+    // As the first clause: one all-null row when nothing matches.
+    if (ctx.isUnit) Ctx(orNullRow(sub.df), sub.header)
+    else joinShared(ctx, sub, "left_outer")
+  }
+
+  /** Join `sub`, a pattern planned on its own, back onto `ctx` on the
+    * variables both bind: the reference's one shape for OPTIONAL MATCH and
+    * EXISTS (RelationalPlanner.planOptional :298-330, ExistsSubQuery
+    * :224-247). A shared variable joins on its id (on its value when
+    * neither side binds it as an entity); the sub's key columns are renamed
+    * apart for the join and dropped after it, and the sub's other columns
+    * of shared variables never join, since `ctx` has them already. With no
+    * key the join is on true (openCypher allows an uncorrelated pattern).
+    *
+    * `how` is left_semi or left_anti (existence: keep or drop the driving
+    * row, however many matches) or left_outer. A left-outer join without
+    * `perKey` adds every sub column, null where nothing matched.
+    * `perKey = (v, agg, default)` first reduces the sub to one row per key,
+    * `agg` becoming value variable `v`, and gives `v` the value `default`
+    * on driving rows with no match. */
+  private def joinShared(ctx: Ctx, sub: Ctx, how: String,
+      perKey: Option[(String, Column, Column)] = None): Ctx = {
     val shared = sub.header.kinds.keySet.intersect(ctx.header.kinds.keySet)
-    // Columns of shared vars already exist on the lhs: join on ids, drop the
-    // rhs copies of every shared-var column.
-    val sharedIdCols = shared.toSeq.flatMap { v =>
-      (sub.header.get(IdSlot(v)), ctx.header.get(IdSlot(v))) match {
-        case (Some(s), Some(l)) => Some((v, s, l))
-        case _ =>
-          (sub.header.get(ValueSlot(v)), ctx.header.get(ValueSlot(v))) match {
-            case (Some(s), Some(l)) => Some((v, s, l))
-            case _ => None
-          }
-      }
+    val keys: Map[String, String] = shared.toSeq.flatMap { v =>
+      Seq(IdSlot(v), ValueSlot(v)).find(s =>
+        sub.header.contains(s) && ctx.header.contains(s))
+        .map(s => sub.header.col(s) -> ctx.header.col(s))
+    }.toMap
+    def keyed(c: String): Column = col(c).as("_sj_" + c)
+    val keyCols = sub.df.columns.toSeq.filter(keys.contains).map(keyed)
+    val cond = keys.map { case (s, l) => col(l) === col("_sj_" + s) }
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val (right, header) = perKey match {
+      case Some((v, agg, _)) =>
+        (sub.df.groupBy(keyCols: _*).agg(agg.as(RecordHeader.colName(ValueSlot(v)))),
+          ctx.header.withSlot(ValueSlot(v)).withVar(v, ValueKind))
+      case None if how == "left_outer" =>
+        val sharedCols = shared.flatMap(sub.header.colsOf)
+        (sub.df.select(sub.df.columns.toSeq.collect {
+          case c if keys.contains(c) => keyed(c)
+          case c if !sharedCols(c) => col(c)
+        }: _*),
+          ctx.header ++ RecordHeader(
+            sub.header.slots.filterNot { case (s, _) => shared(s.owner) },
+            sub.header.kinds.view.filterKeys(!shared(_)).toMap))
+      case None =>
+        // No dedup: a semi/anti join emits each driving row at most once
+        // however many matches it finds; uncorrelated, one match decides.
+        (if (keys.isEmpty) sub.df.limit(1).select(lit(true).as("_sj_any"))
+         else sub.df.select(keyCols: _*), ctx.header)
     }
-    val dropCols = shared.toSeq.flatMap(v => sub.header.colsOf(v))
-    val renames = sharedIdCols.map { case (_, s, _) => s -> ("_om_" + s) }
-    var subDf = sub.df
-    renames.foreach { case (from, to) => subDf = subDf.withColumnRenamed(from, to) }
-    subDf = subDf.drop(dropCols.filterNot(c => renames.exists(_._1 == c)): _*)
-    if (sharedIdCols.isEmpty) {
-      // No shared vars: every lhs row pairs with every match, but an empty
-      // rhs must null-pad instead of dropping lhs rows (Cypher OPTIONAL
-      // semantics) — a left-outer join on TRUE gives exactly that.
-      val joined = ctx.df.join(subDf, lit(true), "left_outer")
-      val newHeader = ctx.header ++ RecordHeader(
-        sub.header.slots.filterNot { case (s, _) => shared(s.owner) },
-        sub.header.kinds.view.filterKeys(!shared(_)).toMap)
-      return Ctx(joined, newHeader)
+    var df = ctx.df.join(right, cond, how).drop(keys.keys.map("_sj_" + _).toSeq: _*)
+    perKey.foreach { case (v, _, default) =>
+      val c = RecordHeader.colName(ValueSlot(v))
+      df = df.withColumn(c, coalesce(col(c), default))
     }
-    val cond = sharedIdCols.map { case (_, s, l) =>
-      col(l) === col("_om_" + s)
-    }.reduce(_ && _)
-    val joined = ctx.df.join(subDf, cond, "left_outer")
-      .drop(renames.map(_._2): _*)
-    val newHeader = ctx.header ++ RecordHeader(
-      sub.header.slots.filterNot { case (s, _) => shared(s.owner) },
-      sub.header.kinds.view.filterKeys(!shared(_)).toMap)
-    Ctx(joined, newHeader)
+    Ctx(df, header)
   }
 
   // ------------------------------------------------------------ node scans
@@ -2045,10 +1970,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   // --------------------------------------------------------------- expand
 
   /** True when the endpoint's node-table join can be skipped: its id can be
-    * bound straight off the relationship column because (a) the var is
-    * structurally unobservable beyond its id (anonymous, dead, an OPTIONAL
-    * MATCH variable shared with the driving rows, or inside a
-    * pattern-predicate subplan where only shared ids escape), (b) it has no
+    * bound straight off the relationship column because (a) nothing reads
+    * the var beyond its id ([[elidableVars]]), (b) it has no
     * inline property predicates, and (c) in every table that survives
     * endpoint-label pruning, each label combination the endpoint's space
     * can hold satisfies the requested labels. Assumes referential
@@ -2058,9 +1981,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     * join matters at scale: an EXISTS over a fact-table rel otherwise pays
     * a node-table join only to discard it. */
   private def canElideEndpoint(nc: NodeCons, e: EdgeCons,
-      tables: Seq[RelScanTable], isPatternSrc: Boolean): Boolean =
-    (elideAllNodes || deadVars(nc.v) || nc.v.startsWith("_a")) &&
-      nc.props.isEmpty && nc.copyOf.isEmpty &&
+      tables: Seq[RelScanTable], isPatternSrc: Boolean,
+      elidable: Set[String]): Boolean =
+    elidable(nc.v) && nc.props.isEmpty && nc.copyOf.isEmpty &&
       tables.nonEmpty && tables.forall { t =>
         if (e.dir == BOTH)
           labelsImplied(nc, t, relSrc = true) && labelsImplied(nc, t, relSrc = false)
@@ -2124,7 +2047,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   }
 
   private def planEdge(ctx0: Ctx, e: EdgeCons, nodes: Map[String, NodeCons],
-      bound: mutable.Set[String]): Ctx = {
+      bound: mutable.Set[String], elidable: Set[String]): Ctx = {
     var ctx = ctx0
     if (bound(e.v) && ctx.header.contains(SrcSlot(e.v)))
       return planBoundRelEdge(ctx, e, nodes, bound)
@@ -2140,7 +2063,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         .filter(co => labelFilter(nc).forall(_(co.labels)))
 
     val srcElide = !bound(e.src) && !bound(e.tgt) && e.varLength.isEmpty &&
-      canElideEndpoint(nodes(e.src), e, tables, isPatternSrc = true)
+      canElideEndpoint(nodes(e.src), e, tables, isPatternSrc = true, elidable)
     val srcCoDrive: Option[graft.graph.CoStoredNode] =
       if (!srcElide && !bound(e.src) && !bound(e.tgt) && e.varLength.isEmpty)
         coStoredFor(nodes(e.src), isPatternSrc = true)
@@ -2152,7 +2075,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       ctx = planNodeScanInto(ctx, nodes(e.src))
       bound += e.src
     }
-    if (e.varLength.isDefined) return planVarLengthEdge(ctx, e, nodes, bound)
+    if (e.varLength.isDefined)
+      return planVarLengthEdge(ctx, e, nodes, bound, elidable)
 
     val (relDf, relHeader, relDeferred) =
       relScanDf(e.v, tables, e.types, e.props, undirected, e.dynType)
@@ -2203,7 +2127,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       if (bound(e.tgt)) {
         df = df.filter(
           col(header.col(IdSlot(e.tgt))) === col(relHeader.col(tgtSideSlot)))
-      } else if (canElideEndpoint(nodes(e.tgt), e, tables, isPatternSrc = false)) {
+      } else if (canElideEndpoint(nodes(e.tgt), e, tables, isPatternSrc = false,
+          elidable)) {
         elideInto(e.tgt, tgtSideSlot)
       } else coStoredFor(nodes(e.tgt), isPatternSrc = false) match {
         case Some(co) => coStoredInto(e.tgt, co, tgtSideSlot, isPatternSrc = false)
@@ -2234,7 +2159,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       // Only tgt bound: anchor from the target side.
       df = df.join(relDf,
         col(ctx.header.col(IdSlot(e.tgt))) === col(relHeader.col(tgtSideSlot)))
-      if (canElideEndpoint(nodes(e.src), e, tables, isPatternSrc = true)) {
+      if (canElideEndpoint(nodes(e.src), e, tables, isPatternSrc = true, elidable)) {
         elideInto(e.src, srcSideSlot)
       } else coStoredFor(nodes(e.src), isPatternSrc = true) match {
         case Some(co) => coStoredInto(e.src, co, srcSideSlot, isPatternSrc = true)
@@ -2296,9 +2221,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         b.src.copy(variable = Some(xv)),
         Seq((b.rel.copy(variable = Some(rvv), varLength = None, qpp = None),
           b.dst.copy(variable = Some(yv)))))
-      val sub = withElideAll {
-        planMatch(unitCtx, Pattern(Seq(innerPart)), b.where)
-      }
+      // Only the step's ids leave it.
+      val sub = planMatch(unitCtx, Pattern(Seq(innerPart)), b.where, Set.empty)
       sub.df.select(
         col(sub.header.col(IdSlot(xv))).as("_h_from"),
         col(sub.header.col(IdSlot(yv))).as("_h_to"),
@@ -2313,7 +2237,8 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   }
 
   private def planVarLengthEdge(ctx0: Ctx, e: EdgeCons,
-      nodes: Map[String, NodeCons], bound: mutable.Set[String]): Ctx = {
+      nodes: Map[String, NodeCons], bound: mutable.Set[String],
+      elidable: Set[String]): Ctx = {
     val (lo, hiOpt) = e.varLength.get
     // No upper bound (`[*]`, `[*1..]`): a dynamic fixpoint loop below, not
     // a capped unroll. Bounded patterns keep the static (job-free) unroll.
@@ -2570,8 +2495,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       // just to discard it; restricted to the fully-unconstrained case
       // because the hop union spans arbitrary types, so no label set is
       // implied by the rel tables.
-      val elide = (elideAllNodes || deadVars(otherVar) ||
-          otherVar.startsWith("_a")) &&
+      val elide = elidable(otherVar) &&
         onc.labels.isEmpty && onc.labelExpr.isEmpty &&
         onc.props.isEmpty && onc.copyOf.isEmpty
       if (elide) {
@@ -3078,13 +3002,14 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
           RecordHeader(slots,
             ctx0.header.kinds.filter { case (v, _) => imports.contains(v) }))
       }
-    body.foreach {
-      case w if isWriteClause(w) =>
+    body.zipWithIndex.foreach {
+      case (w, _) if isWriteClause(w) =>
         sub = planWriteClause(sub, w)
         graph = buildWrittenGraph()
-      case Finish => ()
-      case c if isReadingClause(c) => sub = planReadingClause(sub, c)
-      case other => throw new CypherCompileException(
+      case (Finish, _) => ()
+      case (c, i) if isReadingClause(c) =>
+        sub = planReadingClause(sub, c, readBy(body.drop(i + 1)))
+      case (other, _) => throw new CypherCompileException(
         s"CALL { } clause ${other.getClass.getSimpleName} is not supported " +
           "in a unit (updating) body",
         CE.SemanticError, CE.UnsupportedExpression)
@@ -3185,11 +3110,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         CE.SyntaxError, CE.VariableAlreadyBound)
     }
 
-    def isWriteClause(c: Clause): Boolean = c match {
-      case _: Create | _: Merge | _: SetClause | _: Remove | _: Delete |
-           _: Foreach => true
-      case _ => false
-    }
     val bodyWrites = clauses.exists(isWriteClause)
     // A WRITE body runs once per INPUT ROW (openCypher) even without
     // imports, so it must plan over the row-keyed driving frame; the
@@ -3197,13 +3117,14 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     if (imports.isEmpty && (!bodyWrites || ctx0.isUnit)) {
       // Uncorrelated: plan from the unit context, cross-join the result.
       var sub = unitCtx
-      clauses.foreach {
-        case cs: CallSubquery =>
+      clauses.zipWithIndex.foreach {
+        case (cs: CallSubquery, _) =>
           sub = planCallSubquery(sub, cs.inner, cs.optional)
-        case c if isWriteClause(c) =>
+        case (c, _) if isWriteClause(c) =>
           sub = planWriteClause(sub, c); graph = buildWrittenGraph()
-        case c if isReadingClause(c) => sub = planReadingClause(sub, c)
-        case other => unsupported(s"clause ${other.getClass.getSimpleName}")
+        case (c, i) if isReadingClause(c) =>
+          sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) :+ ret))
+        case (other, _) => unsupported(s"clause ${other.getClass.getSimpleName}")
       }
       if (ret.star && sub.header.kinds.isEmpty) throw new CypherCompileException(
         "CALL { } RETURN * with no variables in scope",
@@ -3218,11 +3139,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         case None =>
           // OPTIONAL CALL { }: an empty uncorrelated result contributes
           // one all-null row instead of annihilating the driving rows.
-          val doneDf =
-            if (optional && done.df.isEmpty)
-              done.df.sparkSession.range(1).select(done.df.schema.fields
-                .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
-            else done.df
+          val doneDf = if (optional) orNullRow(done.df) else done.df
           if (ctx0.isUnit) Ctx(doneDf, done.header)
           else Ctx(ctx0.df.crossJoin(doneDf), ctx0.header ++ done.header)
       }
@@ -3256,9 +3173,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         keyed.df.select(bodySlots.values.toSeq.distinct.map(col): _*),
         RecordHeader(bodySlots, keyed.header.kinds.filter { case (v, _) =>
           v == rowVar || imports.contains(v) }))
-      clauses.foreach {
-        case m: Match => sub = planReadingClause(sub, m)
-        case u: Unwind => sub = planReadingClause(sub, u)
+      clauses.zipWithIndex.foreach { case (c, i) => c match {
+        case _: Match | _: Unwind =>
+          sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) :+ ret))
         // Write clauses run per driving row (the body IS the keyed
         // driving frame); the caller refreshes stale outer bindings.
         case c if isWriteClause(c) =>
@@ -3290,7 +3207,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
           }
         case other => unsupported(
           s"clause ${other.getClass.getSimpleName} in a correlated subquery")
-      }
+      }}
       // RETURN * in a correlated body exports the body-local variables —
       // imports are excluded (they are already bound outside, so including
       // them would make * always clash; documented in tck_blacklist.md).

@@ -9,10 +9,12 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 /** Label-pruned pattern scans: an expand reads only the rel tables whose
   * endpoint id spaces can hold the pattern's endpoint labels (the
   * reference's ScanGraph.scanOperator table selection), an OPTIONAL MATCH
-  * plans its shared variables id-only, and semi/anti joins read their
-  * match side without a dedup pass. The plan-shape tests count the source
-  * tables a plan reads, in the style of WriteScaleSpec; the others pin the
-  * results of the edge cases the pruning must respect. */
+  * plans its shared variables id-only, semi/anti joins read their match
+  * side without a dedup pass, and a sub-pattern (pattern predicate,
+  * comprehension, QPP step) skips exactly the node scans nothing reads.
+  * The plan-shape tests count the source tables a plan reads, in the style
+  * of WriteScaleSpec; the others pin the results of the edge cases the
+  * pruning must respect. */
 class LabelPruningSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -115,6 +117,62 @@ class LabelPruningSpec extends SparkTestBase {
     assert(dfBag(exists) === bag(Seq(Seq(10L), Seq(12L))))
     assert(dfBag(notExists) === bag(Seq(Seq(11L))))
     assert(dfBag(varlen) === bag(Seq(Seq(2L, 2L), Seq(3L, 2L))))
+  }
+
+  test("a pattern comprehension reads each source table once") {
+    // c is shared and o unread by the projection: both bind off PLACED
+    val df = session.cypher(tpch,
+      "MATCH (c:Customer) RETURN c.c_custkey AS ck, " +
+        "size([(c)-[:PLACED]->(o:Order) | 1]) AS n")
+    assert(leaves(df, customer) === 1, df.queryExecution.analyzed)
+    assert(leaves(df, orders) === 1, df.queryExecution.analyzed)
+    assert(dfBag(df) === bag(Seq(Seq(1L, 2L), Seq(2L, 0L), Seq(3L, 1L))))
+  }
+
+  test("an EXISTS whose inner WHERE reads two variables scans both tables") {
+    val df = session.cypher(tpch,
+      "MATCH (c:Customer) WHERE EXISTS { MATCH (c)-[:PLACED]->(o:Order) " +
+        "WHERE o.o_orderkey > c.c_custkey + 9 } RETURN c.c_custkey AS ck")
+    // the driving scan, and the sub-pattern's scan of c for its c_custkey
+    // (c is unlabeled there, so it reads the union of every node table)
+    assert(leaves(df, customer) === 2, df.queryExecution.analyzed)
+    assert(leaves(df, orders) >= 1, df.queryExecution.analyzed)
+    assert(dfBag(df) === bag(Seq(Seq(1L))))
+  }
+
+  // ------------------------------------------- sub-pattern reads (results)
+
+  /** Customer 1's order 11 passes `o.o_orderkey > c.c_custkey + 9`; no
+    * other customer has such an order. */
+  private val innerWhere =
+    "MATCH (c)-[:PLACED]->(o:Order) WHERE o.o_orderkey > c.c_custkey + 9"
+
+  test("EXISTS and NOT EXISTS read the variables of their inner WHERE") {
+    def keys(pred: String) = dfBag(session.cypher(tpch,
+      s"MATCH (c:Customer) WHERE $pred RETURN c.c_custkey AS ck"))
+    assert(keys(s"EXISTS { $innerWhere }") === keys(s"COUNT { $innerWhere } > 0"))
+    assert(keys(s"EXISTS { $innerWhere }") === bag(Seq(Seq(1L))))
+    assert(keys(s"NOT EXISTS { $innerWhere }") === keys(s"COUNT { $innerWhere } = 0"))
+    assert(keys(s"NOT EXISTS { $innerWhere }") === bag(Seq(Seq(2L), Seq(3L))))
+  }
+
+  test("a value-position EXISTS reads the variables of its inner WHERE") {
+    def rows(e: String) = dfBag(session.cypher(tpch,
+      s"MATCH (c:Customer) RETURN c.c_custkey AS ck, $e AS e"))
+    assert(rows(s"EXISTS { $innerWhere }") === rows(s"COUNT { $innerWhere } > 0"))
+    assert(rows(s"EXISTS { $innerWhere }") ===
+      bag(Seq(Seq(1L, true), Seq(2L, false), Seq(3L, false))))
+  }
+
+  test("a QPP step reads the variables of its WHERE") {
+    def pairs(q: String) = dfBag(session.cypher(tpch,
+      q + " RETURN a.n_name AS a, b.r_name AS b"))
+    val qpp = pairs("MATCH (a:Nation)((x)-[:IN_REGION]->(y) " +
+      "WHERE y.r_regionkey = x.n_regionkey)+(b)")
+    assert(qpp === pairs("MATCH (a:Nation)-[:IN_REGION]->(b) " +
+      "WHERE b.r_regionkey = a.n_regionkey"))
+    assert(qpp === bag(Seq(Seq("FRANCE", "EUROPE"), Seq("GERMANY", "EUROPE"),
+      Seq("JAPAN", "ASIA"), Seq("CHINA", "ASIA"))))
   }
 
   // ------------------------------------------------------------ edge cases

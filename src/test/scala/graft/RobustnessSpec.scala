@@ -26,6 +26,56 @@ class RobustnessSpec extends SparkTestBase {
     }
   }
 
+  /** Spark jobs started while `f` runs, counted by the bench meter. */
+  private def jobsDuring(f: => Any): Int = {
+    val meter = new graft.bench.Harness.Meter(spark)
+    try meter.time(f)._2.jobs
+    finally spark.sparkContext.removeSparkListener(meter)
+  }
+
+  test("EXPLAIN of every Cypher registry row runs no Spark job but the listed ones") {
+    // The rows whose planning still runs jobs, with the Planner site that
+    // runs them. Under AQE a lazy localCheckpoint runs its frame's query
+    // stages as soon as it is built, so each Pin of a frame with an
+    // exchange is a job at planning time.
+    val allowed = Map(
+      "q_varexpand_unbounded" ->
+        "planVarLengthEdge fixpoint: one Pin + frontier.count() per level",
+      "q_shortest_path" ->
+        "planVarLengthEdge shortest modes: the Pin of each pruned frontier",
+      "q_shortest_path_expr" ->
+        "planVarLengthEdge shortest modes: the Pin of each pruned frontier")
+    // Counted on a second pass: the first also fills per-graph caches
+    // (the pinned node-id frame, hop tables), once per graph.
+    def explain(q: String) = session.cypher(g, "EXPLAIN " + q)
+    SparkEntry.cypherRows.foreach { case (_, q) => explain(q) }
+    val jobs = SparkEntry.cypherRows.map { case (name, q) =>
+      name -> jobsDuring(explain(q))
+    }.toMap
+    val running = jobs.filter(_._2 > 0)
+    // Equal, not a subset: a row that stops running jobs leaves the list.
+    assert(running.keySet === allowed.keySet, running)
+  }
+
+  test("OPTIONAL CALL plans its null row without running a job") {
+    val body = "MATCH (n:Nation) OPTIONAL CALL { MATCH (r:Region) " +
+      "WHERE r.r_regionkey > %d RETURN r.r_name AS rn } RETURN n.n_name AS n, rn"
+    require(g != null && session != null) // built before counting
+    assert(jobsDuring(session.cypher(g, "EXPLAIN " + body.format(10))) === 0)
+    val empty = session.cypher(g, body.format(10)).collect()
+    assert(empty.length === 25 && empty.forall(_.isNullAt(1)))
+    val two = session.cypher(g, body.format(2)).collect()
+    assert(two.length === 50 && two.map(_.getString(1)).toSet === Set("EUROPE", "MIDDLE EAST"))
+    session.registerProcedure("noRows", (_, _) => spark.range(0).toDF("x"))
+    session.registerProcedure("twoRows", (_, _) => spark.range(2).toDF("x"))
+    val proc = "MATCH (r:Region) OPTIONAL CALL %s() YIELD x " +
+      "RETURN count(*) AS rows, count(x) AS xs"
+    assert(jobsDuring(session.cypher(g, "EXPLAIN " + proc.format("noRows"))) === 0)
+    def counts(p: String) = session.cypher(g, proc.format(p)).collect().head.toSeq
+    assert(counts("noRows") === Seq(5L, 0L))
+    assert(counts("twoRows") === Seq(10L, 10L))
+  }
+
   // ---- grammar fuzz ----
   private val labels = Gen.oneOf("Customer", "Order", "Nation", "Zzz")
   private val props = Gen.oneOf("c_custkey", "o_totalprice", "n_name", "nope")
