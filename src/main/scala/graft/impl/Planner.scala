@@ -48,8 +48,28 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   import Planner._
   import PropertyGraph.{ID, SRC, TGT, TYPE, propCol}
 
+  /** Names the statement itself spells (variables, aliases, driving-table
+    * columns; literals too, harmlessly): [[freshVar]] never hands out one
+    * of them, nor a prefix of one. */
+  private var userNames: Set[String] = drivingTable.toSeq.flatMap(_.columns).toSet
+  /** Every name [[freshVar]] handed out. Star expansion and subquery
+    * imports skip these, whatever the user's names look like. */
+  private val generated = mutable.Set.empty[String]
   private var anonCounter = 0
-  private def freshVar(): String = { anonCounter += 1; s"_a$anonCounter" }
+  private def freshVar(): String = {
+    var v = ""
+    do { anonCounter += 1; v = s"_a$anonCounter" }
+    while (userNames.exists(_.startsWith(v)))
+    generated += v
+    v
+  }
+  /** Every string inside an AST value, found by walking its case classes. */
+  private def namesIn(x: Any): Iterator[String] = x match {
+    case s: String => Iterator(s)
+    case p: Product => p.productIterator.flatMap(namesIn)
+    case i: Iterable[_] => i.iterator.flatMap(namesIn)
+    case _ => Iterator.empty
+  }
 
   /** The variables the clauses `rest` read, binding occurrences included (a
     * re-MATCH joins on the id); `None` when one of them is RETURN * or
@@ -115,6 +135,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
 
   // ------------------------------------------------------------------ entry
   def plan(q: Query): (DataFrame, Seq[OutItem], RecordHeader) = {
+    userNames ++= namesIn(q)
     checkUnionMix(q)
     val shared = planSharedPrefixes((q.first +: q.rest.map(_._2)).map(_.clauses))
     val (first, outs) = planSingle(q.first, shared)
@@ -1213,13 +1234,16 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     * set, hence the count), an aggregate RETURN (count(*) or collect) is
     * appended, and the whole thing plans as an OPTIONAL CALL so driving
     * rows with zero subquery rows keep a null aggregate (coalesced to
-    * 0 / [] / false). UNION bodies nest one more CALL level so the row-id
-    * scoped UNION-distinct applies per driving row. */
+    * 0 / [] / false). The body imports the outer variables it names, so it
+    * correlates on their values and runs once per distinct import row
+    * ([[callKey]]); with none it runs once. UNION bodies nest one more
+    * CALL level, so UNION's distinct applies per key, hence per driving
+    * row. */
   private def materializeQuerySub(ctx0: Ctx, qs: QuerySub): (Ctx, Expr) = {
     var ctx = ctx0
     val arms = qs.inner.first +: qs.inner.rest.map(_._2)
     val refSets = arms.flatMap(_.clauses.map(ExprOps.clauseRefs))
-    val outerVars = ctx.header.kinds.keySet.filterNot(_.matches("_a\\d+"))
+    val outerVars = ctx.header.kinds.keySet.filterNot(generated)
     val imports =
       (if (refSets.contains(None)) outerVars
        else refSets.flatten.flatten.toSet.intersect(outerVars)).toSeq.sorted
@@ -1623,9 +1647,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       where: Option[Expr], after: Set[String]): Ctx = {
     val outer = ctx.header.kinds.keySet.filter(v => ctx.header.contains(IdSlot(v)))
     val sub = planMatch(unitCtx, pattern, where, after -- outer)
-    // As the first clause: one all-null row when nothing matches.
-    if (ctx.isUnit) Ctx(orNullRow(sub.df), sub.header)
-    else joinShared(ctx, sub, "left_outer")
+    joinShared(ctx, sub, "left_outer")
   }
 
   /** Join `sub`, a pattern planned on its own, back onto `ctx` on the
@@ -1635,17 +1657,21 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     * neither side binds it as an entity); the sub's key columns are renamed
     * apart for the join and dropped after it, and the sub's other columns
     * of shared variables never join, since `ctx` has them already. With no
-    * key the join is on true (openCypher allows an uncorrelated pattern).
+    * key the join is on true (openCypher allows an uncorrelated pattern);
+    * onto the unit row, the sub's rows are the result.
     *
     * `how` is left_semi or left_anti (existence: keep or drop the driving
-    * row, however many matches) or left_outer. A left-outer join without
-    * `perKey` adds every sub column, null where nothing matched.
+    * row, however many matches), inner or left_outer. An inner or
+    * left-outer join without `perKey` adds every sub column, null where
+    * nothing matched.
     * `perKey = (v, agg, default)` first reduces the sub to one row per key,
     * `agg` becoming value variable `v`, and gives `v` the value `default`
     * on driving rows with no match. */
   private def joinShared(ctx: Ctx, sub: Ctx, how: String,
       perKey: Option[(String, Column, Column)] = None): Ctx = {
     val shared = sub.header.kinds.keySet.intersect(ctx.header.kinds.keySet)
+    if (ctx.isUnit && perKey.isEmpty && (how == "inner" || how == "left_outer"))
+      return Ctx(if (how == "inner") sub.df else orNullRow(sub.df), sub.header)
     val keys: Map[String, String] = shared.toSeq.flatMap { v =>
       Seq(IdSlot(v), ValueSlot(v)).find(s =>
         sub.header.contains(s) && ctx.header.contains(s))
@@ -1659,7 +1685,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       case Some((v, agg, _)) =>
         (sub.df.groupBy(keyCols: _*).agg(agg.as(RecordHeader.colName(ValueSlot(v)))),
           ctx.header.withSlot(ValueSlot(v)).withVar(v, ValueKind))
-      case None if how == "left_outer" =>
+      case None if how == "left_outer" || how == "inner" =>
         val sharedCols = shared.flatMap(sub.header.colsOf)
         (sub.df.select(sub.df.columns.toSeq.collect {
           case c if keys.contains(c) => keyed(c)
@@ -2628,10 +2654,11 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
   private def planProjection(ctx0: Ctx, distinct: Boolean, star: Boolean,
       items0: Seq[ReturnItem], orderBy: Seq[SortItem], skip: Option[Expr],
       limit: Option[Expr], where: Option[Expr],
-      stampOrder: Boolean = false): (Ctx, Seq[OutItem]) = {
+      stampOrder: Boolean = false,
+      perKey: Option[String] = None): (Ctx, Seq[OutItem]) = {
     var ctx = ctx0
     val starItems =
-      if (star) ctx.header.kinds.keys.toSeq.sorted.filterNot(_.startsWith("_a"))
+      if (star) ctx.header.kinds.keys.toSeq.sorted.filterNot(generated)
         .map(v => ReturnItem(Var(v), None))
       else Seq.empty
     // `RETURN *` / `WITH *` with no named variables in scope is a TCK
@@ -2764,7 +2791,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         }
       }
       where.foreach { w => ctx2 = applyWhere(ctx2, w) }
-      ctx2 = applyOrderSkipLimit(ctx2, orderBy2, skip, limit, aliasMap)
+      ctx2 = applyOrderSkipLimit(ctx2, perKey, orderBy2, skip, limit, aliasMap)
       if (stampOrder && orderBy2.nonEmpty) {
         // Stamp a monotone row-sequence AFTER the sort (nondeterministic,
         // so Catalyst cannot push it below the Sort barrier): after a
@@ -2920,19 +2947,12 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       var ctx2 = Ctx(aggDf, newHeader)
       if (distinct) ctx2 = ctx2.copy(df = ctx2.df.dropDuplicates())
       where.foreach { w => ctx2 = applyWhere(ctx2, w) }
-      ctx2 = applyOrderSkipLimit(ctx2, orderBy2, skip, limit, aliasMap)
+      ctx2 = applyOrderSkipLimit(ctx2, perKey, orderBy2, skip, limit, aliasMap)
       (ctx2, outs.result())
     }
   }
 
   // ------------------------------------------------------- CALL { } subquery
-  /** CALL { [WITH imports] body RETURN items }: without an importing WITH
-    * the subquery runs once against the graph and its rows cross-join onto
-    * the driving table; with one, it runs logically once per driving row.
-    * The correlated form plans the body INLINE on the driving table (so
-    * Catalyst sees one join tree, not N subplans) and keys per-row
-    * aggregation by a pinned synthetic row id — the same shape as pattern
-    * comprehensions, generalized to a full subquery. */
   /** Mixing UNION and UNION ALL in one query is invalid per openCypher
     * (Neo4j raises the same); the fold would otherwise silently dedup
     * already-accumulated ALL arms. */
@@ -2951,8 +2971,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
           items.forall(i => i.alias.isEmpty && i.expr.isInstanceOf[Var]) =>
       (items.map(_.expr.asInstanceOf[Var].name), rest)
     case With(false, true, Seq(), Seq(), None, None, None) +: rest =>
-      (ctx0.header.kinds.keySet.toSeq.sorted
-        .filterNot(_.matches("_a\\d+")), rest)
+      (ctx0.header.kinds.keySet.toSeq.sorted.filterNot(generated), rest)
     case c => (Seq.empty[String], c)
   }
 
@@ -3017,50 +3036,116 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     ctx0
   }
 
+  /** The key a CALL { } body correlates on: `keyed` is the driving rows
+    * with the key column `key` added (none when uncorrelated); `perRow`
+    * marks a pinned row id. Three keys, by what the body may do:
+    *  - it imports nothing and only reads: no key. The body plans once
+    *    over the unit row and its rows join every driving row.
+    *  - it imports and only reads: the imported values, as one struct
+    *    column (an entity by its id, which fixes its labels and properties
+    *    within a statement). The body plans over the distinct import rows,
+    *    so driving rows with equal imports share one evaluation. This is
+    *    exact because a read-only body's rows depend only on what it
+    *    imports: the dependent join over the outer domain (Neumann &
+    *    Kemper, Unnesting Arbitrary Queries, BTW 2015). The struct is never
+    *    null and its null fields compare equal, so a null import finds its
+    *    body rows through a plain equi-join.
+    *  - it writes, so it runs once per driving row (openCypher), or an
+    *    import holds a map, which Spark can neither group nor compare (a
+    *    driving-table column): a row id. It is pinned because the body and
+    *    the join back must see the same generated ids. */
+  private case class CallKey(keyed: Ctx, key: Option[String], perRow: Boolean)
+
+  private def callKey(ctx0: Ctx, imports: Seq[String], writes: Boolean): CallKey = {
+    if (imports.isEmpty && (!writes || ctx0.isUnit)) return CallKey(ctx0, None, perRow = false)
+    def hasMap(dt: DataType): Boolean = dt match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val cols = imports.flatMap { v =>
+      if (ctx0.header.contains(IdSlot(v))) Seq(ctx0.header.col(IdSlot(v)))
+      else ctx0.header.colsOf(v)
+    }.distinct.sorted
+    val perRow = writes || cols.exists(c => hasMap(ctx0.df.schema(c).dataType))
+    val k = freshVar()
+    val df = ctx0.df.withColumn(RecordHeader.colName(ValueSlot(k)),
+      if (perRow) monotonically_increasing_id() else struct(cols.map(col): _*))
+    CallKey(Ctx(if (perRow) Pin(df) else df,
+      ctx0.header.withSlot(ValueSlot(k)).withVar(k, ValueKind)), Some(k), perRow)
+  }
+
+  /** CALL { [WITH imports] body RETURN items }, each UNION arm with its own
+    * importing WITH. Every arm plans once, INLINE (Catalyst sees one join
+    * tree, not one subplan per driving row), over the key frame of
+    * [[callKey]], and yields its RETURN rows per key. A UNION dedups them
+    * per key, so its distinct applies per driving row. [[joinShared]] then
+    * joins them back onto the driving rows on the key: inner, so a driving
+    * row with no body rows drops (CALL { } semantics), and left-outer under
+    * OPTIONAL CALL and for a global aggregate, whose missing key reads as
+    * the aggregate of no rows. */
   private def planCallSubquery(ctx0: Ctx, inner: Query,
       optional: Boolean = false): Ctx = {
     checkUnionMix(inner)
     if (optional && inner.rest.nonEmpty) throw new CypherCompileException(
       "OPTIONAL CALL { } with a UNION body is not supported",
       CE.SemanticError, CE.UnsupportedExpression)
-    val res = if (inner.rest.isEmpty) planCallArm(ctx0, inner.first, None, optional)
-    else {
-      // UNION body: every arm (each with its own importing WITH, per
-      // openCypher) shares ONE pinned row-id frame, so arm results are
-      // driving ⋈ arm-output rows carrying the row id. Join distributes
-      // over union, so unioning the joined arms equals joining the unioned
-      // subquery output — and the row id scopes UNION's distinct to each
-      // driving row even when outer rows are value-identical.
-      val rowVar = freshVar()
-      val rowSlot = ValueSlot(rowVar)
-      val keyed = Ctx(
-        Pin(ctx0.df.withColumn(RecordHeader.colName(rowSlot),
-          monotonically_increasing_id())),
-        ctx0.header.withSlot(rowSlot).withVar(rowVar, ValueKind))
-      val arms = inner.first +: inner.rest.map(_._2)
-      val results = arms.map(sq => planCallArm(ctx0, sq, Some((keyed, rowVar))))
-      def outNames(c: Ctx): Seq[String] =
-        (c.header.kinds.keySet -- keyed.header.kinds.keySet).toSeq.sorted
-      val firstNames = outNames(results.head)
-      val combined = inner.rest.map(_._1).zip(results.tail)
-        .foldLeft(results.head) { case (acc, (all, r)) =>
-          if (outNames(r) != firstNames) throw new CypherCompileException(
-            "CALL { } UNION arms must return the same columns",
-            CE.SyntaxError, CE.DifferentColumnsInUnion)
-          val u = acc.df.unionByName(r.df, allowMissingColumns = true)
-          Ctx(if (all) u else u.dropDuplicates(), acc.header ++ r.header)
+    val arms = inner.first +: inner.rest.map(_._2)
+    val imports = arms.flatMap(a => splitCallImports(ctx0, a.clauses)._1).distinct
+    imports.foreach { v =>
+      if (!ctx0.header.kinds.contains(v)) throw new CypherCompileException(
+        s"CALL { } imports unbound variable $v",
+        CE.SyntaxError, CE.UndefinedVariable)
+    }
+    val ck = callKey(ctx0, imports, arms.exists(a => containsWriteClause(a.clauses)))
+    val results = arms.map(planCallArm(ck, _))
+    def complete(onto: Ctx, arm: (Ctx, Option[Seq[(String, Column)]]),
+        how: String): Ctx =
+      arm match {
+        case (rows, Some(empty)) =>
+          val j = joinShared(onto, rows, "left_outer")
+          j.copy(df = empty.foldLeft(j.df) { case (df, (c, e)) =>
+            df.withColumn(c, coalesce(col(c), e)) })
+        case (rows, None) => joinShared(onto, rows, how)
+      }
+    val joined =
+      if (results.size == 1)
+        complete(ck.keyed, results.head, if (optional) "left_outer" else "inner")
+      else {
+        // A global-aggregate arm yields a row for every key before the union.
+        val domain = ck.key.map { k =>
+          val c = ck.keyed.header.col(ValueSlot(k))
+          Ctx(ck.keyed.df.select(col(c)).distinct(),
+            RecordHeader.empty.withSlot(ValueSlot(k)).withVar(k, ValueKind))
         }
-      Ctx(combined.df.drop(RecordHeader.colName(rowSlot)),
-        RecordHeader(combined.header.slots.filterNot(_._1.owner == rowVar),
-          combined.header.kinds - rowVar))
+        val rows = results.map {
+          case arm @ (_, Some(_)) if domain.isDefined =>
+            complete(domain.get, arm, "left_outer")
+          case (r, _) => r
+        }
+        def outNames(c: Ctx): Seq[String] =
+          c.header.kinds.keySet.filterNot(generated).toSeq.sorted
+        val combined = inner.rest.map(_._1).zip(rows.tail)
+          .foldLeft(rows.head) { case (acc, (all, r)) =>
+            if (outNames(r) != outNames(rows.head)) throw new CypherCompileException(
+              "CALL { } UNION arms must return the same columns",
+              CE.SyntaxError, CE.DifferentColumnsInUnion)
+            val u = acc.df.unionByName(r.df, allowMissingColumns = true)
+            Ctx(if (all) u else u.dropDuplicates(), acc.header ++ r.header)
+          }
+        joinShared(ck.keyed, combined, "inner")
+      }
+    val res = ck.key.fold(joined) { k =>
+      Ctx(joined.df.drop(joined.header.colsOf(k): _*), RecordHeader(
+        joined.header.slots.filterNot(_._1.owner == k), joined.header.kinds - k))
     }
     // Body writes can touch outer bindings (an imported var directly, or
     // any outer entity via a body-local alias); refresh the touched
     // (var, key) pairs from the written state so post-CALL reads observe
     // the final values — the FOREACH refresh rule, applied to the joined
     // result frame.
-    val pairs = (inner.first +: inner.rest.map(_._2))
-      .flatMap(a => writeSetKeys(a.clauses)).distinct
+    val pairs = arms.flatMap(a => writeSetKeys(a.clauses)).distinct
     if (pairs.isEmpty) res
     else {
       val outerEnt = ctx0.header.kinds.toSeq.collect {
@@ -3087,15 +3172,18 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     }
   }
 
-  /** One CALL { } arm. `keyedOpt` (UNION bodies) supplies a shared pinned
-    * row-id frame; the arm result then KEEPS the row-id column so the
-    * caller can union arms per driving row. */
-  private def planCallArm(ctx0: Ctx, inner: SingleQuery,
-      keyedOpt: Option[(Ctx, String)], optional: Boolean = false): Ctx = {
-    def unsupported(what: String): Nothing = throw new CypherCompileException(
-      s"CALL { } $what is not supported",
-      CE.SemanticError, CE.UnsupportedExpression)
-    val (imports, body) = splitCallImports(ctx0, inner.clauses)
+  /** One CALL { } arm over the key frame `ck`. The body sees the key and
+    * the arm's own imports only (openCypher scoping), one row per distinct
+    * key unless the key is a row id. Every projection in it carries the
+    * key, so an aggregate groups per key and ORDER BY/SKIP/LIMIT select per
+    * key. Returns the RETURN rows with the key and, for a global aggregate
+    * (one row per key, even for a key with no body rows), what its columns
+    * read on such a key where Spark's null is wrong: count and sum 0,
+    * collect []. */
+  private def planCallArm(ck: CallKey, inner: SingleQuery)
+      : (Ctx, Option[Seq[(String, Column)]]) = {
+    val CallKey(keyed, key, perRow) = ck
+    val (imports, body) = splitCallImports(keyed, inner.clauses)
     val ret = body.lastOption match {
       case Some(r: Return) => r
       case _ => throw new CypherCompileException(
@@ -3103,228 +3191,68 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         CE.SyntaxError, CE.InvalidSyntax)
     }
     val clauses = body.init
-
-    def checkClash(names: Iterable[String]): Unit = names.foreach { n =>
-      if (ctx0.header.kinds.contains(n)) throw new CypherCompileException(
+    val keyItem = key.map(k => ReturnItem(Var(k), None)).toSeq
+    val scope = imports.toSet ++ key
+    val slots = keyed.header.slots.filter { case (s, _) => scope(s.owner) }
+    var sub = key match {
+      case None => unitCtx
+      case Some(k) =>
+        // One row per value key, hash-partitioned on the key alone, so a
+        // per-key aggregate in the body needs no second exchange.
+        val df = keyed.df.select(slots.values.toSeq.distinct.map(col): _*)
+        Ctx(if (perRow) df else df.dropDuplicates(keyed.header.col(ValueSlot(k))),
+          RecordHeader(slots, keyed.header.kinds.filter { case (v, _) => scope(v) }))
+    }
+    clauses.zipWithIndex.foreach { case (c, i) => c match {
+      // Nested CALL { }: correlates on this body's frame; its join back
+      // keeps this body's key.
+      case cs: CallSubquery =>
+        sub = planCallSubquery(sub, cs.inner, cs.optional)
+      // A write body is keyed per driving row; the caller refreshes stale
+      // outer bindings.
+      case c if isWriteClause(c) =>
+        sub = planWriteClause(sub, c); graph = buildWrittenGraph()
+      case w: With if key.isDefined =>
+        sub = planProjection(sub, w.distinct, w.star, w.items ++ keyItem,
+          w.orderBy, w.skip, w.limit, w.where, perKey = key)._1
+      case c if isReadingClause(c) =>
+        sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) :+ ret))
+      case other => throw new CypherCompileException(
+        s"CALL { } clause ${other.getClass.getSimpleName} is not supported",
+        CE.SemanticError, CE.UnsupportedExpression)
+    }}
+    // RETURN * exports the body-local variables: the imports are bound
+    // outside already, so exporting them would always clash (documented
+    // in tck_blacklist.md).
+    val retItems =
+      if (!ret.star) ret.items
+      else {
+        val starVars = sub.header.kinds.keys.toSeq.sorted
+          .filterNot(v => generated(v) || imports.contains(v))
+        if (starVars.isEmpty && ret.items.isEmpty) throw new CypherCompileException(
+          "CALL { } RETURN * with no body-local variables in scope",
+          CE.SyntaxError, CE.InvalidSyntax)
+        starVars.map(v => ReturnItem(Var(v), None)) ++ ret.items
+      }
+    val (rows, _) = planProjection(sub, ret.distinct, star = false,
+      retItems ++ keyItem, ret.orderBy, ret.skip, ret.limit, None, perKey = key)
+    rows.header.kinds.keys.filterNot(key.contains).foreach { n =>
+      if (keyed.header.kinds.contains(n)) throw new CypherCompileException(
         s"CALL { } returns $n, which is already bound outside",
         CE.SyntaxError, CE.VariableAlreadyBound)
     }
-
-    val bodyWrites = clauses.exists(isWriteClause)
-    // A WRITE body runs once per INPUT ROW (openCypher) even without
-    // imports, so it must plan over the row-keyed driving frame; the
-    // run-once-and-cross-join shortcut is only equivalent for reads.
-    if (imports.isEmpty && (!bodyWrites || ctx0.isUnit)) {
-      // Uncorrelated: plan from the unit context, cross-join the result.
-      var sub = unitCtx
-      clauses.zipWithIndex.foreach {
-        case (cs: CallSubquery, _) =>
-          sub = planCallSubquery(sub, cs.inner, cs.optional)
-        case (c, _) if isWriteClause(c) =>
-          sub = planWriteClause(sub, c); graph = buildWrittenGraph()
-        case (c, i) if isReadingClause(c) =>
-          sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) :+ ret))
-        case (other, _) => unsupported(s"clause ${other.getClass.getSimpleName}")
-      }
-      if (ret.star && sub.header.kinds.isEmpty) throw new CypherCompileException(
-        "CALL { } RETURN * with no variables in scope",
-        CE.SyntaxError, CE.InvalidSyntax)
-      val (done, outs) = planProjection(sub, ret.distinct, star = ret.star,
-        ret.items, ret.orderBy, ret.skip, ret.limit, None)
-      checkClash(done.header.kinds.keys)
-      keyedOpt match {
-        // UNION arm: cross-join onto the shared keyed frame (row id kept).
-        case Some((keyed, _)) =>
-          Ctx(keyed.df.crossJoin(done.df), keyed.header ++ done.header)
-        case None =>
-          // OPTIONAL CALL { }: an empty uncorrelated result contributes
-          // one all-null row instead of annihilating the driving rows.
-          val doneDf = if (optional) orNullRow(done.df) else done.df
-          if (ctx0.isUnit) Ctx(doneDf, done.header)
-          else Ctx(ctx0.df.crossJoin(doneDf), ctx0.header ++ done.header)
-      }
-    } else {
-      imports.foreach { v =>
-        if (!ctx0.header.kinds.contains(v)) throw new CypherCompileException(
-          s"CALL { } imports unbound variable $v",
-          CE.SyntaxError, CE.UndefinedVariable)
-      }
-      // ORDER BY/SKIP/LIMIT in a correlated body select top-k PER DRIVING
-      // ROW — one window keyed on the synthetic row id (non-aggregating
-      // form only; an aggregate returns one row per group anyway).
-      // Pinned synthetic row id: both the driving side and the aggregated
-      // side of the re-join must see the same generated values. UNION
-      // bodies pass the shared frame in so every arm sees the same ids.
-      val (keyed, rowVar) = keyedOpt.getOrElse {
-        val rv = freshVar()
-        val rs = ValueSlot(rv)
-        (Ctx(
-          Pin(ctx0.df.withColumn(RecordHeader.colName(rs),
-            monotonically_increasing_id())),
-          ctx0.header.withSlot(rs).withVar(rv, ValueKind)), rv)
-      }
-      val rowSlot = ValueSlot(rowVar)
-      // Body input: the row id plus the IMPORTED vars only (openCypher
-      // scoping — the body cannot see other outer bindings). The body's
-      // result re-joins to the full outer frame on the row id at the end.
-      val bodySlots = keyed.header.slots.filter { case (s, _) =>
-        s.owner == rowVar || imports.contains(s.owner) }
-      var sub = Ctx(
-        keyed.df.select(bodySlots.values.toSeq.distinct.map(col): _*),
-        RecordHeader(bodySlots, keyed.header.kinds.filter { case (v, _) =>
-          v == rowVar || imports.contains(v) }))
-      clauses.zipWithIndex.foreach { case (c, i) => c match {
-        case _: Match | _: Unwind =>
-          sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) :+ ret))
-        // Write clauses run per driving row (the body IS the keyed
-        // driving frame); the caller refreshes stale outer bindings.
-        case c if isWriteClause(c) =>
-          sub = planWriteClause(sub, c); graph = buildWrittenGraph()
-        // Nested CALL { }: recurse — the inner subquery correlates against
-        // THIS body's frame (row id + imports), so its own importing WITH
-        // may re-import the outer imports; its result re-joins on the
-        // inner row id and the outer correlation key flows through.
-        case cs: CallSubquery =>
-          sub = planCallSubquery(sub, cs.inner, cs.optional)
-        // Intermediate WITH: append the row id to the projection so an
-        // aggregating WITH groups PER DRIVING ROW and a plain/DISTINCT
-        // WITH keeps the correlation key. SKIP/LIMIT select per driving
-        // row via a window on the row id (ORDER BY must then reference
-        // projected items — the pre-projection scope is gone once the
-        // window applies).
-        case w: With =>
-          if (w.skip.isEmpty && w.limit.isEmpty)
-            sub = planProjection(sub, w.distinct, w.star,
-              w.items :+ ReturnItem(Var(rowVar), None),
-              w.orderBy, None, None, w.where)._1
-          else {
-            val proj = planProjection(sub, w.distinct, w.star,
-              w.items :+ ReturnItem(Var(rowVar), None),
-              Seq.empty, None, None, w.where)._1
-            sub = perRowOrderSkipLimit(proj,
-              proj.header.col(ValueSlot(rowVar)), w.orderBy, w.skip, w.limit,
-              projExprAliases(w.items))
-          }
-        case other => unsupported(
-          s"clause ${other.getClass.getSimpleName} in a correlated subquery")
-      }}
-      // RETURN * in a correlated body exports the body-local variables —
-      // imports are excluded (they are already bound outside, so including
-      // them would make * always clash; documented in tck_blacklist.md).
-      val retItems =
-        if (!ret.star) ret.items
-        else {
-          val starVars = sub.header.kinds.keys.toSeq.sorted
-            .filterNot(_.startsWith("_a")).filterNot(imports.contains)
-          if (starVars.isEmpty && ret.items.isEmpty) throw new CypherCompileException(
-            "CALL { } RETURN * with no body-local variables in scope",
-            CE.SyntaxError, CE.InvalidSyntax)
-          starVars.map(v => ReturnItem(Var(v), None)) ++ ret.items
-        }
-      val ret2 = ret.copy(items = retItems)
-      val aggregating = retItems.exists(i => sub.compiler.hasAggregation(i.expr))
-      if (aggregating) {
-        val items2 = ReturnItem(Var(rowVar), None) +: retItems
-        val (agg0, _) = planProjection(sub, distinct = false, star = false,
-          items2, Seq.empty, None, None, None)
-        checkClash(agg0.header.kinds.keys.filterNot(_ == rowVar))
-        // ORDER BY/SKIP/LIMIT on an aggregating body page through the
-        // per-driving-row GROUPS (meaningful when the body has grouping
-        // keys; a global aggregate has one row per driving row anyway).
-        val agg = perRowOrderSkipLimit(agg0,
-          agg0.header.col(ValueSlot(rowVar)), ret2.orderBy, ret2.skip,
-          ret2.limit, projExprAliases(retItems))
-        val aggKey = agg.header.col(ValueSlot(rowVar))
-        val outerKey = keyed.header.col(rowSlot)
-        // With grouping keys an empty per-row group yields no subquery rows,
-        // so the driving row drops (inner); a global aggregate always yields
-        // one row — empty groups surface as nulls (left + count/sum zeros).
-        val grouped = retItems.exists(i => !sub.compiler.hasAggregation(i.expr))
-        // Rename the agg side's key so the equi-join condition is unambiguous.
-        val aggDf = agg.df.withColumnRenamed(aggKey, "_cs_k")
-        var df = keyed.df.join(aggDf, col(outerKey) === col("_cs_k"),
-          if (grouped && !optional) "inner" else "left")
-          .drop("_cs_k")
-        // Aggregates over an empty per-row group: count/sum read 0.
-        retItems.foreach { i =>
-          val zeroish = i.expr match {
-            case CountStar => true
-            case FuncCall(n, _, _) => n == "count" || n == "sum"
-            case _ => false
-          }
-          if (zeroish) {
-            val target = i.alias.getOrElse(Pretty.print(i.expr))
-            val cName = agg.header.col(ValueSlot(target))
-            df = df.withColumn(cName, F.coalesce(col(cName), lit(0L)))
-          }
-        }
-        val outHeader = RecordHeader(
-          agg.header.slots.filterNot(_._1.owner == rowVar),
-          agg.header.kinds - rowVar)
-        if (keyedOpt.isDefined) Ctx(df, keyed.header ++ outHeader)
-        else Ctx(df.drop(keyed.header.col(rowSlot)), ctx0.header ++ outHeader)
-      } else {
-        // Row-multiplying subquery: project the RETURN items per body row,
-        // then re-join the (row id, items) frame onto the outer rows —
-        // driving rows with no body rows drop out (CALL{} semantics).
-        var df = sub.df
-        var newHeader = RecordHeader.empty
-        retItems.foreach { i =>
-          val display = i.alias.getOrElse(Pretty.print(i.expr))
-          i.expr match {
-            case Var(n) if sub.header.kinds.contains(n) &&
-                sub.header.kindOf(n) != Some(ValueKind) =>
-              checkClash(Seq(display))
-              val (renamed, renames) = RecordHeader(
-                sub.header.slots.filter(_._1.owner == n),
-                Map(n -> sub.header.kinds(n))).renameVar(n, display)
-              renames.foreach { case (from, to) =>
-                df = df.withColumn(to, col(from))
-              }
-              newHeader = newHeader ++ renamed
-            case expr =>
-              checkClash(Seq(display))
-              val slot = ValueSlot(display)
-              df = df.withColumn(RecordHeader.colName(slot),
-                sub.compiler.compile(expr))
-              newHeader = newHeader.withSlot(slot).withVar(display, ValueKind)
-          }
-        }
-        if (ret.orderBy.nonEmpty || ret.skip.nonEmpty || ret.limit.nonEmpty) {
-          // Top-k per driving row: row_number over a window on the row id.
-          val sortCols = ret.orderBy.map { s =>
-            val c = s.expr match {
-              case Var(n) if newHeader.contains(ValueSlot(n)) =>
-                col(newHeader.col(ValueSlot(n)))
-              case e => sub.compiler.compile(e)
-            }
-            if (s.ascending) c.asc_nulls_last else c.desc_nulls_first
-          }
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(keyed.header.col(rowSlot)))
-            .orderBy((if (sortCols.nonEmpty) sortCols
-              else Seq(lit(1))): _*) // LIMIT without ORDER BY: arbitrary k
-          val lo = ret.skip.map(e => evalInt(e, "SKIP")).getOrElse(0)
-          val hi = ret.limit.map(e => evalInt(e, "LIMIT"))
-          df = df.withColumn("_cs_rn", row_number().over(w))
-            .filter(col("_cs_rn") > lo &&
-              hi.map(h => col("_cs_rn") <= lo + h).getOrElse(lit(true)))
-            .drop("_cs_rn")
-        }
-        val rowCol = keyed.header.col(rowSlot)
-        df = df.select((rowCol +: newHeader.slots.values.toSeq).distinct.map(col): _*)
-        if (ret.distinct) df = df.dropDuplicates()
-        val joined = keyed.df
-          .join(df.withColumnRenamed(rowCol, "_cs_k"),
-            col(rowCol) === col("_cs_k"),
-            // OPTIONAL CALL { }: driving rows with no body rows keep one
-            // all-null result row instead of dropping.
-            if (optional) "left" else "inner")
-          .drop("_cs_k")
-        if (keyedOpt.isDefined) Ctx(joined, keyed.header ++ newHeader)
-        else Ctx(joined.drop(rowCol), ctx0.header ++ newHeader)
+    val aggregates = retItems.filter(i => sub.compiler.hasAggregation(i.expr))
+    val empty = aggregates.flatMap { i =>
+      val c = rows.header.col(ValueSlot(i.alias.getOrElse(Pretty.print(i.expr))))
+      i.expr match {
+        case CountStar | FuncCall("count" | "sum", _, _) => Some(c -> lit(0L))
+        case FuncCall("collect", _, _) =>
+          Some(c -> array().cast(rows.df.schema(c).dataType))
+        case _ => None
       }
     }
+    (rows, if (aggregates.nonEmpty && aggregates.size == retItems.size) Some(empty)
+           else None)
   }
 
   // ---------------------------------------------------------------- writes
@@ -4383,50 +4311,42 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         e -> RecordHeader.colName(ValueSlot(alias.getOrElse(Pretty.print(e))))
     }.toMap
 
-  /** Per-driving-row ORDER BY/SKIP/LIMIT inside a correlated CALL { }: a
-    * row_number window partitioned on the synthetic row id replaces the
-    * global sort+offset+limit. ORDER BY alone is a no-op (row order cannot
-    * survive the re-join), so the window only materializes for SKIP/LIMIT. */
-  private def perRowOrderSkipLimit(ctx: Ctx, rowCol: String,
+  /** ORDER BY/SKIP/LIMIT of a projection. Under `key`, the correlation key
+    * of a CALL { } body, they select per key: a row_number window
+    * partitioned on the key replaces the global sort, offset and limit, and
+    * ORDER BY alone is a no-op, since row order cannot survive the join
+    * back. */
+  private def applyOrderSkipLimit(ctx: Ctx, key: Option[String],
       orderBy: Seq[SortItem], skip: Option[Expr], limit: Option[Expr],
       exprAliases: Map[Expr, String]): Ctx = {
-    if (skip.isEmpty && limit.isEmpty) return ctx
     val sortCols = orderBy.map { s =>
+      // ORDER BY may repeat a projected expression (ORDER BY count(*));
+      // resolve it to the already-computed column instead of recompiling
+      // the aggregate after the aggregation.
       val c = exprAliases.get(s.expr).map(col)
         .getOrElse(ctx.compiler.compile(s.expr))
+      // Neo4j ordering: nulls largest (last on ASC, first on DESC).
       if (s.ascending) c.asc_nulls_last else c.desc_nulls_first
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(rowCol))
-      .orderBy((if (sortCols.nonEmpty) sortCols
-        else Seq(lit(1))): _*) // SKIP/LIMIT without ORDER BY: arbitrary rows
-    val lo = skip.map(e => evalInt(e, "SKIP")).getOrElse(0)
-    val hi = limit.map(e => evalInt(e, "LIMIT"))
-    ctx.copy(df = ctx.df.withColumn("_cs_rn", row_number().over(w))
-      .filter(col("_cs_rn") > lo &&
-        hi.map(h => col("_cs_rn") <= lo + h).getOrElse(lit(true)))
-      .drop("_cs_rn"))
-  }
-
-  private def applyOrderSkipLimit(ctx0: Ctx, orderBy: Seq[SortItem],
-      skip: Option[Expr], limit: Option[Expr],
-      exprAliases: Map[Expr, String] = Map.empty): Ctx = {
-    var ctx = ctx0
-    if (orderBy.nonEmpty) {
-      val cols = orderBy.map { s =>
-        // ORDER BY may repeat a projected expression (ORDER BY count(*));
-        // resolve it to the already-computed column instead of recompiling
-        // the aggregate after the aggregation.
-        val c = exprAliases.get(s.expr).map(col)
-          .getOrElse(ctx.compiler.compile(s.expr))
-        // Neo4j ordering: nulls largest (last on ASC, first on DESC).
-        if (s.ascending) c.asc_nulls_last else c.desc_nulls_first
-      }
-      ctx = ctx.copy(df = ctx.df.orderBy(cols: _*))
+    key match {
+      case None =>
+        var df = if (sortCols.isEmpty) ctx.df else ctx.df.orderBy(sortCols: _*)
+        skip.foreach { e => df = df.offset(evalInt(e, "SKIP")) }
+        limit.foreach { e => df = df.limit(evalInt(e, "LIMIT")) }
+        ctx.copy(df = df)
+      case Some(_) if skip.isEmpty && limit.isEmpty => ctx
+      case Some(k) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(ctx.header.col(ValueSlot(k))))
+          .orderBy((if (sortCols.nonEmpty) sortCols
+            else Seq(lit(1))): _*) // SKIP/LIMIT without ORDER BY: arbitrary rows
+        val lo = skip.map(e => evalInt(e, "SKIP")).getOrElse(0)
+        val hi = limit.map(e => evalInt(e, "LIMIT"))
+        ctx.copy(df = ctx.df.withColumn("_cs_rn", row_number().over(w))
+          .filter(col("_cs_rn") > lo &&
+            hi.map(h => col("_cs_rn") <= lo + h).getOrElse(lit(true)))
+          .drop("_cs_rn"))
     }
-    skip.foreach { e => ctx = ctx.copy(df = ctx.df.offset(evalInt(e, "SKIP"))) }
-    limit.foreach { e => ctx = ctx.copy(df = ctx.df.limit(evalInt(e, "LIMIT"))) }
-    ctx
   }
 
   /** SKIP/LIMIT operand: a statically-evaluable non-negative integer
