@@ -3,6 +3,7 @@ package graft.algos
 import graft.graph.PropertyGraph
 import graft.impl.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.BloomBridge
 import org.apache.spark.sql.types._
@@ -82,8 +83,9 @@ object GraphAlgorithms {
   def pageRank(graph: PropertyGraph, iterations: Int = 10,
       damping: Double = 0.85, relTypes: Seq[String] = Seq.empty): DataFrame = {
     val e = validated(edges(graph, relTypes), graph)
-    conservedRanks(graph, degreeLinks(e), endpointIds(e), iterations, damping,
-      col("rank") / col("deg"))
+    val w = Pin.width(e)
+    conservedRanks(graph, degreeLinks(e, Some(w)), endpointIds(e, Some(w)), w,
+      iterations, damping, col("rank") / col("deg"))
   }
 
   /** Weighted PageRank: link mass flows proportionally to edge weight
@@ -108,10 +110,12 @@ object GraphAlgorithms {
           StructField("w", DoubleType)))))
     // Same single-exchange keyed links construction as degreeLinks, with
     // the out-weight sum in place of the out-degree.
+    val w = Pin.width(typed)
     val links = Pin.keyed(typed, Seq("src"), tp =>
-      tp.join(tp.groupBy(col("src")).agg(sum(col("w")).as("outw")), "src"))
-    conservedRanks(graph, links, endpointIds(typed), iterations, damping,
-      col("rank") * col("w") / col("outw"))
+      tp.join(tp.groupBy(col("src")).agg(sum(col("w")).as("outw"))
+        .hint("shuffle_hash"), "src"), Some(w))
+    conservedRanks(graph, links, endpointIds(typed, Some(w)), w, iterations,
+      damping, col("rank") * col("w") / col("outw"))
   }
 
   /** Links frame (src, dst, deg) of the out-degree rank family
@@ -121,19 +125,25 @@ object GraphAlgorithms {
     * Pin.keyed (r15) keeps the hash(src) layout visible through the pin,
     * so no round re-exchanges links (the plain pin lost the metadata —
     * UnknownPartitioning — and re-shuffled it every round; at 100 TB that
-    * re-shuffle would dominate). */
-  private[graft] def degreeLinks(e: DataFrame): DataFrame =
+    * re-shuffle would dominate). The degree side is hinted shuffle_hash:
+    * co-partitioned, the join needs no exchange, and AQE does not spend a
+    * job broadcasting a small degree frame. */
+  private[graft] def degreeLinks(e: DataFrame,
+      width: Option[Int] = None): DataFrame =
     Pin.keyed(e, Seq("src"), ep =>
-      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"))
+      ep.join(ep.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .hint("shuffle_hash"), "src"), width)
 
   /** Distinct endpoint ids of an (src, dst) edge frame, pinned keyed on
     * hash(id). Edge endpoints ARE node ids, so this IS the connected-node
     * set — no semi-join against the full node table. The distinct rides
     * the pin's hash(id) exchange, which the loops' per-round joins on id
     * then consume for free (r15). */
-  private def endpointIds(e: DataFrame): DataFrame =
+  private def endpointIds(e: DataFrame,
+      width: Option[Int] = None): DataFrame =
     Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct())
+      .unionByName(e.select(col("dst").as("id"))), Seq("id"), _.distinct(),
+      width)
 
   /** The mass-conserving damped rank loop of [[pageRank]] and
     * [[pageRankWeighted]]; `share` is the fraction of a link's source rank
@@ -145,33 +155,29 @@ object GraphAlgorithms {
     * every round — r_iso(t+1) = (1-d) + d * miss(t)/n. Only the connected
     * subgraph iterates; on a 100-TB document graph where most nodes are
     * isolated for any given rel-type subset this shrinks every per-round
-    * join and checkpoint by the isolated fraction. */
+    * join and checkpoint by the isolated fraction.
+    *
+    * `links` and `connected` are keyed pins at width `w`, and every
+    * round's state is a [[Pin.round]] at `w` too ([[conservedRound]]), so
+    * a round is one keyed exchange and one materializing action: two jobs
+    * under AQE. Its link-transferred mass rides that action as an
+    * observed scalar. */
   private def conservedRanks(graph: PropertyGraph, links: DataFrame,
-      connected: DataFrame, iterations: Int, damping: Double,
+      connected: DataFrame, w: Int, iterations: Int, damping: Double,
       share: Column): DataFrame = {
-    // All intermediate state is pinned lazily (Pin: localCheckpoint locally,
-    // persist on a cluster): lineage is cut immediately (bounded plans across
-    // rounds), blocks are materialized by the next action that reads them.
-    val n = nodeIds(graph).count()
+    val n = graph.nodeCount
     var isoRank = 1.0
     var ranks = connected.select(col("id"), lit(1.0).as("rank"))
     for (_ <- 1 to iterations) {
-      val contribs = rankContribs(links, ranks, share)
-      // `received` is read twice (mass total + rank update): the lazy
-      // checkpoint is materialized by the 1-row mass aggregate — ONE job
-      // per round (an eager checkpoint + separate aggregate was two; the
-      // per-job overhead dominated the whole algorithm).
-      val received = Pin(connected.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("contrib"), lit(0.0)).as("contrib")))
-      // Total link-transferred mass; the rest (dangling + isolated mass)
-      // is spread uniformly.
-      val tc = received.agg(coalesce(sum("contrib"), lit(0.0))).head().getDouble(0)
+      val (received, mass) = Pin.round(conservedRound(links, ranks, share, w),
+        Seq(sum(col("contrib"))), Seq("id"), w)
+      // Total link-transferred mass (null when nothing is connected); the
+      // rest (dangling + isolated mass) is spread uniformly.
+      val tc = if (mass.isNullAt(0)) 0.0 else mass.getDouble(0)
       val missShare = (n - tc) / n
       // ranks is a cheap projection of the pinned `received`: deriving it
-      // lazily re-reads those cached blocks instead of writing a second
-      // block set per round (same one-pin-per-round rule as sssp, which
-      // measured ~33% faster for it). Lineage stays flat — the chain
-      // roots at this round's pinned frame.
+      // lazily re-reads those blocks instead of writing a second block set
+      // per round, and keeps the pin's hash(id) claim for the next join.
       ranks = received.select(col("id"),
         (lit(1.0 - damping) +
           lit(damping) * (col("contrib") + lit(missShare))).as("rank"))
@@ -179,32 +185,53 @@ object GraphAlgorithms {
     }
     // Isolated nodes receive no link mass, so their rank is the closed-form
     // scalar of the last round.
-    withIsolated(graph, ranks, lit(isoRank).as("rank"))
+    withIsolated(graph, ranks, lit(isoRank))
   }
+
+  /** One [[conservedRanks]] round before its pin: (id, contrib) for every
+    * id of `ranks`, hash-placed at `width`. The link contributions
+    * ([[linkMass]]; `links` and `ranks` co-partitioned at `width`, so no
+    * exchange) and one zero row per ranked id share ONE keyed exchange,
+    * and the sum per id runs on its output: a node no link reaches still
+    * gets its 0 without a join against the connected set. */
+  private[graft] def conservedRound(links: DataFrame, ranks: DataFrame,
+      share: Column, width: Int): DataFrame =
+    linkMass(links, ranks, share)
+      .unionByName(ranks.select(col("id"), lit(0.0).as("c")))
+      .repartition(width, col("id"))
+      .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
 
   /** One rank round's link-mass transfer: `share` of each link's source
     * rank (default degree-normalized, `rank / deg`) flows along the pinned
     * (src-partitioned) links and aggregates per destination as `contrib`.
     * Factored so AlgosSpec can assert the scale property — the round
     * consumes the pinned hash(src) partitioning and never re-shuffles the
-    * edge side (shared by [[conservedRanks]], [[personalizedPageRank]],
-    * [[eigenvectorCentrality]] and [[articleRank]]). */
+    * edge side (shared by [[personalizedPageRank]],
+    * [[eigenvectorCentrality]] and [[articleRank]]; [[conservedRound]]
+    * folds the same link mass into its keyed round). */
   private[graft] def rankContribs(links: DataFrame, ranks: DataFrame,
       share: Column = col("rank") / col("deg")): DataFrame =
+    linkMass(links, ranks, share)
+      .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
+
+  /** Each link's `share` of its source rank, as (id = dst, c). */
+  private def linkMass(links: DataFrame, ranks: DataFrame,
+      share: Column): DataFrame =
     // shuffle_hash on the rank side: links is the pinned fact frame and a
     // sort-merge join would re-sort it every round (r14, guide §3.1).
     links.join(ranks.hint("shuffle_hash"), links("src") === ranks("id"))
       .select(col("dst").as("id"), share.as("c"))
-      .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
 
-  /** `scored` (id, value) plus every node id it lacks, valued by the named
-    * column `fill` — appended lazily: the caller's action reads the pinned
-    * loop state, no extra materialization pass runs here. */
+  /** `scored` (id, value) plus every node id it lacks, valued by `fill`:
+    * one full outer join against the node ids, planned lazily (the
+    * caller's action reads the pinned loop state). The join reads
+    * `scored` once; an anti-join plus union would read it twice. */
   private def withIsolated(graph: PropertyGraph, scored: DataFrame,
-      fill: Column): DataFrame =
-    scored.unionByName(nodeIds(graph)
-      .join(scored.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), fill))
+      fill: Column): DataFrame = {
+    val value = scored.columns(1)
+    nodeIds(graph).join(scored, Seq("id"), "full_outer")
+      .select(col("id"), coalesce(col(value), fill).as(value))
+  }
 
   /** Connected components (undirected) by alternating large-star /
     * small-star contraction (Kiveris et al., "Connected Components in
@@ -227,7 +254,7 @@ object GraphAlgorithms {
     // Isolated singletons (incl. self-loop-only nodes) are their own
     // component.
     withIsolated(graph, ccStarLabels(e0, maxIterations),
-      col("id").as("component"))
+      col("id"))
   }
 
   /** The star-contraction core of [[connectedComponents]] over an arbitrary
@@ -246,47 +273,47 @@ object GraphAlgorithms {
     * (node -> component minimum). */
   private[graft] def ccStarLabels(edges0: DataFrame,
       maxIterations: Int): DataFrame = {
-    var cur = Pin(edges0
+    val (edgeSet, size) = Pin.round(edges0
       .filter(col("src") =!= col("dst"))
       .select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
-      .distinct())
-    var curN = cur.count()
-    var converged = curN == 0
+      .distinct(), Seq(count(lit(1))))
+    var cur = edgeSet
+    var converged = size.getLong(0) == 0L
     var it = 0
     while (!converged && it < maxIterations) {
       // large-star over symmetrized neighborhoods
       val sym = cur.unionByName(cur.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy(col("u")).agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
+      // Exact fixpoint test, observed on the large-star aggregate the round
+      // builds anyway: the round returns `cur` unchanged iff `cur` is a
+      // star forest centred on each component's minimum, i.e. iff every
+      // node with a smaller neighbour has exactly one neighbour. (A node
+      // with a parent and a child would re-point the child to the
+      // grandparent; a node with two parents would drop one.)
+      val (nbr, unsettled) = Pin.observe(sym.groupBy(col("u"))
+          .agg(min(col("v")).as("mv"), count(lit(1)).as("deg")),
+        count(when(col("mv") < col("u") && col("deg") =!= 1L, lit(1))))
+      val lsMin = nbr.select(col("u"), least(col("u"), col("mv")).as("m"))
       // Dedup rides the hash(u) repartition (one exchange), which the
-      // small-star aggregation and join then consume free; shuffle_hash
-      // on the min side keeps the fat edge side unsorted (r14,
-      // guide §2.4/§3.1).
+      // small-star window then consumes free; shuffle_hash on the min side
+      // keeps the fat edge side unsorted (r14, guide §2.4/§3.1).
       val ls = sym.join(lsMin.hint("shuffle_hash"), "u")
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .repartition(col("u")).dropDuplicates(Seq("u", "v"))
-      // small-star over the (u > v) oriented edges
-      val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = ls.join(ssMin.hint("shuffle_hash"), "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(ssMin.select(col("u"), col("m").as("v")))
+      // small-star over the (u > v) oriented edges: every parent v other
+      // than u's minimum parent m re-points to (v, m), and u keeps (u, m).
+      // The minimum is a window over ls's hash(u) partitions, so ls (and
+      // the observed aggregate under it) is read once per round.
+      val ss = ls.select(col("u"), col("v"),
+          min(col("v")).over(Window.partitionBy(col("u"))).as("m"))
+        .select(explode(array(struct(col("u"), col("m").as("v")),
+          struct(col("v").as("u"), col("m").as("v")))).as("e"))
+        .filter(col("e.u") =!= col("e.v"))
+        .select(col("e.u").as("u"), col("e.v").as("v"))
         .distinct()
-      val next = Pin(ss)
-      // Exact fixpoint test: the symmetric difference of the two rounds'
-      // edge sets is empty iff every (u, v) appears twice. A differing
-      // cardinality already proves non-convergence, so the test's extra
-      // shuffle only runs in the (typically final) rounds where the
-      // counts agree — the count itself doubles as next's pin
-      // materialization action.
-      val nextN = next.count()
-      converged = nextN == curN && next.unionByName(cur)
-        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("c"))
-        .filter(col("c") === 1).isEmpty
-      cur = next
-      curN = nextN
+      cur = Pin.round(ss)._1
+      converged = unsettled().getLong(0) == 0L
       it += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -317,20 +344,24 @@ object GraphAlgorithms {
     * aggregation, wedge self-join, closing semi-join); AQE handles
     * residual skew. */
   def triangleCountEdges(edges0: DataFrame): DataFrame = {
-    val canon = canonEdges(edges0)
-    val m = canon.count() // materializes the pin; sizes the bloom (r15)
+    val (canon, m) = canonEdges(edges0)
     closedWedges(canon, m).agg(count(lit(1)).as("triangles"))
   }
 
   /** Canonical undirected form of a (src, dst) edge frame: (a, b) with
-    * a < b, deduped, no loops. Dedup rides the hash(a) repartition (one
-    * exchange, not two — r14, guide §2.4); Pin.keyed (r15) keeps the
-    * hash(a) layout VISIBLE, so orientByDegree's a-side attachment join,
-    * the closing semi-join's (a, b) clustering and the bloom-build scan
-    * all consume it free. */
-  private[graft] def canonEdges(edges0: DataFrame): DataFrame =
-    Pin.keyed(undirectedPairs(edges0), Seq("a"),
-      _.dropDuplicates(Seq("a", "b")))
+    * a < b, deduped, no loops, and its row count `m` (which sizes the
+    * wedge bloom, r15). Dedup rides the hash(a) repartition (one exchange,
+    * not two — r14, guide §2.4); the [[Pin.round]] keeps the hash(a)
+    * layout VISIBLE, so orientByDegree's a-side attachment join, the
+    * closing semi-join's (a, b) clustering and the bloom-build scan all
+    * consume it free, and `m` is observed in the pin's own job. */
+  private[graft] def canonEdges(edges0: DataFrame): (DataFrame, Long) = {
+    val pairs = undirectedPairs(edges0)
+    val w = Pin.width(pairs)
+    val (canon, m) = Pin.round(pairs.repartition(w, col("a"))
+      .dropDuplicates(Seq("a", "b")), Seq(count(lit(1))), Seq("a"), w)
+    (canon, m.getLong(0))
+  }
 
   /** Loop-free (a = least, b = greatest) endpoint pairs, not yet deduped. */
   private def undirectedPairs(edges0: DataFrame): DataFrame =
@@ -345,10 +376,14 @@ object GraphAlgorithms {
     * vs a>b, so the result set is canon ∪ reverse exactly), and the pinned
     * hash(a) partitioning feeds the callers' per-a degree aggregation and
     * a-side join with no further shuffle. */
-  private def symEdges(edges0: DataFrame): DataFrame = {
+  private def symEdges(edges0: DataFrame): DataFrame =
+    Pin.keyed(bothOrientations(edges0), Seq("a"),
+      _.dropDuplicates(Seq("a", "b")))
+
+  /** [[undirectedPairs]] and their reverses, not yet deduped. */
+  private def bothOrientations(edges0: DataFrame): DataFrame = {
     val raw = undirectedPairs(edges0)
-    Pin.keyed(raw.unionByName(raw.select(col("b").as("a"), col("a").as("b"))),
-      Seq("a"), _.dropDuplicates(Seq("a", "b")))
+    raw.unionByName(raw.select(col("b").as("a"), col("a").as("b")))
   }
 
   /** The wedges (w0, x, y) of the degree-oriented `canon` that a canon
@@ -377,8 +412,7 @@ object GraphAlgorithms {
     * one extra explode+aggregate attributes each closed triangle to its
     * three corners. Returns (id, triangles, lcc). */
   def localClusteringCoefficient(edges0: DataFrame): DataFrame = {
-    val canon = canonEdges(edges0)
-    val m = canon.count() // materializes the pin; sizes the bloom (r15)
+    val (canon, m) = canonEdges(edges0)
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     val perNode = closedWedges(canon, m)
@@ -399,13 +433,20 @@ object GraphAlgorithms {
     * O(sqrt m) and the wedge join cannot blow up on hubs. Returns the
     * pinned (u, v) frame. Package-private for AlgosSpec's invariant check. */
   private[graft] def orientByDegree(canon: DataFrame): DataFrame = {
+    // Degrees and the b-side re-keying run at canon's own partition count,
+    // so the hash(a) canon pin meets both attachment joins co-partitioned:
+    // against a shuffle.partitions-wide degree exchange, EnsureRequirements
+    // re-exchanges a narrower pin.
+    val w = canon.queryExecution.executedPlan.outputPartitioning
+      .numPartitions.max(1)
     val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+      .repartition(w, col("id")).groupBy("id").agg(count(lit(1)).as("deg"))
     // shuffle_hash on the n-row degree side keeps the m-row canon side
     // unsorted through both attachment joins (guide §3.1).
     val ranked = canon
       .join(deg.select(col("id").as("a"), col("deg").as("da"))
         .hint("shuffle_hash"), "a")
+      .repartition(w, col("b"))
       .join(deg.select(col("id").as("b"), col("deg").as("db"))
         .hint("shuffle_hash"), "b")
     val fwd = struct(col("da"), col("a")) < struct(col("db"), col("b"))
@@ -618,8 +659,7 @@ object GraphAlgorithms {
   def kTrussEdges(edges0: DataFrame, k: Int,
       maxIterations: Int = 50): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var cur = canonEdges(edges0)
-    var n = cur.count()
+    var (cur, n) = canonEdges(edges0)
     var changed = n > 0
     var it = 0
     while (changed && it < maxIterations) {
@@ -679,42 +719,48 @@ object GraphAlgorithms {
     // Pin lost the metadata (UnknownPartitioning after localCheckpoint)
     // and re-exchanged the full edge frame EVERY round — measured 473 MB
     // of the query's shuffle at sf0.1, ~90% of it this frame.
-    val e = Pin.keyed(bothWays(typed, directed), Seq("src"))
-    var dist = Pin(sources.select(col("id").cast(LongType).as("id"))
-      .distinct().select(col("id"), lit(0.0).as("dist")))
-    var frontier = dist
+    val both = bothWays(typed, directed)
+    val w = Pin.width(both)
+    val e = Pin.keyed(both, Seq("src"), width = Some(w))
+    // Loop state: (id, old, nd) per reached node, a [[Pin.round]] keyed on
+    // hash(id) at the edge pin's width. `nd` is this round's candidate
+    // distance (null if none), `old` the distance before it; both the
+    // frontier and the distances are projections of it. The sources start
+    // as improved candidates at distance 0.
+    val improved = col("nd").isNotNull &&
+      (col("old").isNull || col("nd") < col("old"))
+    val distance = least(coalesce(col("old"), col("nd")),
+      coalesce(col("nd"), col("old")))
+    val activeCount = count(when(improved, lit(1)))
+    val (seeded, seeds) = Pin.round(sources
+      .select(col("id").cast(LongType).as("id"))
+      .repartition(w, col("id")).distinct()
+      .select(col("id"), lit(null).cast(DoubleType).as("old"),
+        lit(0.0).as("nd")), Seq(activeCount), Seq("id"), w)
+    var state = seeded
+    var active = seeds.getLong(0)
     var it = 0
-    var active = frontier.count()
     while (active > 0 && it < maxIterations) {
-      val cand = ssspCandidates(e, frontier)
-      // ONE lazy pin per round: frontier and dist are cheap projections
-      // of the pinned merge, so deriving them lazily re-reads merged's
-      // cached blocks instead of writing two more block sets per round
-      // (three pins per round measured ~15% slower at sf0.1). Lineage
-      // stays flat: both chains root at this round's pinned frame.
-      // shuffle_hash on the (smaller) candidate side: SMJ would sort the
-      // full dist frame every round (r14, guide §3.1).
-      val merged = Pin(dist.withColumnRenamed("dist", "old")
-        .join(cand.hint("shuffle_hash"), Seq("id"), "full_outer"))
-      val improved = col("nd").isNotNull &&
-        (col("old").isNull || col("nd") < col("old"))
-      frontier = merged.filter(improved)
+      val frontier = state.filter(improved)
         .select(col("id"), col("nd").as("dist"))
-      dist = merged.select(col("id"),
-        least(coalesce(col("old"), col("nd")),
-          coalesce(col("nd"), col("old"))).as("dist"))
-      // Convergence check folded into the aggregate that materializes the
-      // round's pin (pageRank's mass-aggregate trick, VERDICT r12 #2):
-      // the 1-row count runs directly over `merged`, so the pin
-      // materialization and the active-frontier count are ONE
-      // driver-visible action per round instead of two.
-      active = merged.agg(count(when(improved, lit(1)))).head().getLong(0)
+      // Every input is at hash(id)/hash(src) width w: the frontier join,
+      // the candidates' min and the full outer merge all run after the
+      // candidates' ONE keyed exchange, and the merge's coalesced id keeps
+      // each row in its hash(id) partition. shuffle_hash on the candidate
+      // side: SMJ would sort the full distance frame every round (r14,
+      // guide §3.1). The round's active count is observed in its job.
+      val (next, counted) = Pin.round(state.select(col("id"),
+          distance.as("old"))
+        .join(ssspCandidates(e, frontier, w).hint("shuffle_hash"), Seq("id"),
+          "full_outer"), Seq(activeCount), Seq("id"), w)
+      state = next
+      active = counted.getLong(0)
       it += 1
     }
     if (active > 0) throw new IllegalStateException(
       s"sssp did not converge within $maxIterations rounds " +
         s"($active nodes still improving — raise maxIterations)")
-    dist
+    state.select(col("id"), distance.as("dist"))
   }
 
   /** Personalized PageRank: the restart distribution concentrates on
@@ -722,12 +768,13 @@ object GraphAlgorithms {
     * relevance/recommendation score around a query set. Update rule per
     * round: r(v) = (1-d)·p(v) + d·(Σ in-contribs + dangling_mass·p(v)),
     * where p is the seed distribution; total mass stays exactly 1, so the
-    * dangling mass is 1 − transferred (one 1-row aggregate per round,
-    * same as [[pageRank]]).
+    * dangling mass is 1 − transferred (one 1-row aggregate per round, a
+    * `head()` of its own; [[pageRank]] observes its mass in the round's
+    * [[Pin.round]] instead).
     *
-    * Scale shape is [[pageRank]]'s: [[degreeLinks]] pinned
-    * pre-partitioned on src (no per-round edge shuffle), one
-    * [[rankContribs]] round, one pin + one job per round. The
+    * Scale shape: [[degreeLinks]] pinned pre-partitioned on src (no
+    * per-round edge shuffle), one [[rankContribs]] round and one pin per
+    * round. The
     * working set is edge endpoints ∪ seeds; every node OUTSIDE it — and
     * every working node unreachable from the seeds — has exactly 0 rank
     * (no restart mass, no in-mass), so the unreachable remainder is
@@ -906,7 +953,7 @@ object GraphAlgorithms {
       lbl = next
       it += 1
     }
-    withIsolated(graph, lbl, col("id").as("label"))
+    withIsolated(graph, lbl, col("id"))
   }
 
   /** The k-core: the maximal subgraph in which every node has degree
@@ -926,25 +973,37 @@ object GraphAlgorithms {
   def kCoreEdges(edges0: DataFrame, k: Int,
       maxIterations: Int = 50): DataFrame = {
     require(k >= 1, "k >= 1")
-    // The pinned hash(a) feeds the first round's degree aggregation and
-    // a-semi-join shuffle-free.
-    var sym = symEdges(edges0)
-    var nEdges = sym.count()
+    // The symmetrized edge set, keyed on hash(a) at its byte-derived width
+    // w, with its size observed in the pin's job. Every round's survivors
+    // are a [[Pin.round]] at the same w, so the degree aggregation and
+    // both end checks below run without an exchange but the one re-keying.
+    val both = bothOrientations(edges0)
+    val w = Pin.width(both)
+    val edgeCount = Seq(count(lit(1)))
+    val (deduped, size) = Pin.round(both.repartition(w, col("a"))
+      .dropDuplicates(Seq("a", "b")), edgeCount, Seq("a"), w)
+    var sym = deduped
+    var nEdges = size.getLong(0)
     var prev = -1L
     var it = 0
     while (nEdges != prev && nEdges > 0 && it < maxIterations) {
       val keep = sym.groupBy(col("a")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("a"))
-      // b-semi first, a-semi LAST: left-semi preserves the left side's
-      // partitioning, so the round's output is pinned hash(a) — exactly
-      // what the NEXT round's degree aggregation and a-semi consume
-      // (semi-joins commute, so the order is free — r14, guide §2.4).
-      val next = Pin(sym
-        .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
+        .filter(col("d") >= k).select(col("a")).hint("shuffle_hash")
+      // An edge survives iff both ends are kept. Check the a end in place,
+      // turn the survivors round to (b, a) — the edge set is symmetric, so
+      // that is the same set — re-key them on hash(a) at w (the round's one
+      // exchange), and check the other end there: `keep` sits in the same
+      // hash(a) partitions, so neither join moves it. The second check is
+      // an inner join on the unique `keep` ids, not a semi-join, because
+      // the optimizer pushes a semi-join below the repartition, where it
+      // would need an exchange on b.
+      val (next, counted) = Pin.round(sym
         .join(keep, Seq("a"), "left_semi")
-        .select(col("a"), col("b")))
+        .select(col("b").as("a"), col("a").as("b"))
+        .repartition(w, col("a"))
+        .join(keep, Seq("a")), edgeCount, Seq("a"), w)
       prev = nEdges
-      nEdges = next.count()
+      nEdges = counted.getLong(0)
       sym = next
       it += 1
     }
@@ -1166,13 +1225,16 @@ object GraphAlgorithms {
     * per-round exchange — only the small frontier shuffles). Package-private
     * so AlgosSpec can pin the plan shape; losing it would re-shuffle the
     * full edge set every round at scale. */
-  private[graft] def ssspCandidates(e: DataFrame, frontier: DataFrame): DataFrame =
+  private[graft] def ssspCandidates(e: DataFrame, frontier: DataFrame,
+      width: Int): DataFrame =
     // shuffle_hash on the frontier: a sort-merge join would SORT the
     // pinned edge frame every round (the pin preserves partitioning, not
     // order); hashing the frontier partition is the per-round-cheap build
-    // (r14, guide §3.1).
+    // (r14, guide §3.1). The min per id runs on the explicit hash(id)
+    // exchange at `width`, so the candidates co-partition with sssp's state.
     e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
       .select(e("dst").as("id"), (col("dist") + col("w")).as("nd"))
+      .repartition(width, col("id"))
       .groupBy("id").agg(min("nd").as("nd"))
 
   /** Symmetrized, deduped, loop-free neighbor frame (u, v) from a raw
@@ -1504,7 +1566,7 @@ object GraphAlgorithms {
       wassermanFaust: Boolean = false, maxIterations: Int = 50): DataFrame = {
     val visited = bfsDistances(graph, sources, relTypes, directed,
       maxIterations, "closenessCentrality")
-    val n = nodeIds(graph).count()
+    val n = graph.nodeCount
     val agg = visited.filter(col("s") =!= col("v"))
       .groupBy(col("v").as("id"))
       .agg(count(lit(1)).cast(DoubleType).as("r"),
@@ -1520,9 +1582,8 @@ object GraphAlgorithms {
   /** Eigenvector centrality by power iteration (GDS eigenvector parity):
     * x ← A'x / ‖A'x‖₂ from a uniform start — each round one src-keyed
     * join + one dst aggregation + one 1-row norm aggregate (which also
-    * materializes the round's lazy pin: ONE job per round, the
-    * [[conservedRanks]] pattern; the round's transfer is [[rankContribs]]
-    * with a unit share). The edge list is pinned pre-partitioned on src
+    * materializes the round's lazy pin; the round's transfer is
+    * [[rankContribs]] with a unit share). The edge list is pinned pre-partitioned on src
     * once, so no iteration re-shuffles it. Nodes with no in-edges (of the requested
     * types) read 0 — returned analytically, never iterated. Fixed
     * iteration count (deterministic, oracle-replayable); GDS's tolerance
@@ -1553,7 +1614,7 @@ object GraphAlgorithms {
       val denom = if (norm == 0.0) 1.0 else norm
       x = received.select(col("id"), (col("raw") / lit(denom)).as("score"))
     }
-    withIsolated(graph, x, lit(0.0).as("score"))
+    withIsolated(graph, x, lit(0.0))
   }
 
   /** Louvain community detection (GDS louvain parity), DETERMINISTIC:
@@ -1759,7 +1820,7 @@ object GraphAlgorithms {
         .select(col("id"), (lit(1.0 - damping) +
           lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))
     }
-    withIsolated(graph, ranks, lit(1.0 - damping).as("rank"))
+    withIsolated(graph, ranks, lit(1.0 - damping))
   }
 
   /** Global transitivity (a.k.a. global clustering coefficient):
@@ -1770,14 +1831,13 @@ object GraphAlgorithms {
     * division is bit-deterministic and the oracle replays it without
     * rounding. Returns 1 row (triangles, wedges, transitivity). */
   def transitivityEdges(edges0: DataFrame): DataFrame = {
-    val canon = canonEdges(edges0)
+    val (canon, m) = canonEdges(edges0)
     // Σ deg·(deg−1) stays an exact LONG end to end; the halving is an
     // integer `div` (the product is always even), never a double.
     val wedges = canon.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
       .agg(sum(col("deg") * (col("deg") - 1)).as("w2"))
       .select(expr("w2 div 2").as("wedges"))
-    val m = canon.count() // materializes the pin; sizes the bloom (r15)
     val tri = closedWedges(canon, m).agg(count(lit(1)).as("triangles"))
     tri.crossJoin(wedges) // both are 1-row aggregates: a broadcast join
       .select(col("triangles"), col("wedges").cast(LongType).as("wedges"),

@@ -78,16 +78,24 @@ object PlanDump {
       // weighted symmetric edge frame (the exact construction sssp uses).
       "sssp_candidates" -> { () =>
         val t = edges.withColumn("w", lit(1.0))
-        val e = graft.impl.Pin.keyed(t.unionByName(t.select(
-          col("dst").as("src"), col("src").as("dst"), col("w"))), Seq("src"))
+        val both = t.unionByName(t.select(
+          col("dst").as("src"), col("src").as("dst"), col("w")))
+        val w = graft.impl.Pin.width(both)
+        val e = graft.impl.Pin.keyed(both, Seq("src"), width = Some(w))
         GraphAlgorithms.ssspCandidates(e, g.nodeIdFrame.limit(64)
-          .select(col("id"), lit(0.0).as("dist")))
+          .select(col("id"), lit(0.0).as("dist")), w)
       },
       // pagerank round: rank contributions against the keyed-pinned links
-      // frame (one explicit src exchange shared with the degree aggregation).
+      // frame (one explicit src exchange shared with the degree
+      // aggregation), with ranks keyed at the links' width as the loop
+      // keeps them: the round's only exchange is its hash(id) re-keying.
       "pagerank_contribs" -> { () =>
-        GraphAlgorithms.rankContribs(GraphAlgorithms.degreeLinks(edges),
-          g.nodeIdFrame.select(col("id"), lit(1.0).as("rank")))
+        val w = graft.impl.Pin.width(edges)
+        GraphAlgorithms.conservedRound(
+          GraphAlgorithms.degreeLinks(edges, Some(w)),
+          graft.impl.Pin.keyed(g.nodeIdFrame, Seq("id"),
+            _.select(col("id"), lit(1.0).as("rank")), Some(w)),
+          col("rank") / col("deg"), w)
       },
       // toposort round: in-degree decrements against the keyed-pinned edges.
       "toposort_decrements" -> { () =>
@@ -99,9 +107,11 @@ object PlanDump {
       // final Pin): the canon scan must carry the hash(a) claim with no
       // Exchange above it.
       "wedge_orient_attach" -> { () =>
-        val canon = GraphAlgorithms.canonEdges(edges)
+        val (canon, _) = GraphAlgorithms.canonEdges(edges)
+        val w = canon.queryExecution.executedPlan.outputPartitioning
+          .numPartitions.max(1)
         val deg = canon.select(explode(array(col("a"), col("b"))).as("id"))
-          .groupBy("id").agg(count(lit(1)).as("deg"))
+          .repartition(w, col("id")).groupBy("id").agg(count(lit(1)).as("deg"))
         canon.join(deg.select(col("id").as("a"), col("deg").as("da"))
           .hint("shuffle_hash"), "a")
       })

@@ -172,6 +172,10 @@ class PropertyGraph(val nodeDefs: Seq[NodeTableDef], val relDefs: Seq[RelTableDe
             org.apache.spark.sql.types.StructField("id", LongType))))
       }
 
+  /** Row count of [[nodeIdFrame]], counted once per graph instance: the
+    * rank algorithms divide by it on every call. */
+  lazy val nodeCount: Long = nodeIdFrame.count()
+
   lazy val nodeTables: Seq[NodeScanTable] = nodeDefs.map { d =>
     val fields = d.df.schema.fields.map(f => f.name -> f.dataType).toMap
     val cols = tagged(d.idSpace, col(d.idCol)).as(ID) +:

@@ -2440,7 +2440,8 @@ class ExprCompiler(header: RecordHeader, schema: StructType,
             else array_compact(array(ks.map(k =>
               when(c.getField(k).isNotNull, lit(k))): _*))
           when(c.isNull, lit(null)).otherwise(built)
-        case Var(n) if !env.contains(n) =>
+        // an element variable; a value variable (a map) takes the branches below
+        case Var(n) if !env.contains(n) && !header.kindOf(n).contains(ValueKind) =>
           val ks = header.ownedBy(n).collect { case PropSlot(_, k) => k }.sorted
           // keys(null) is null (optional-unmatched element), not []
           val built =

@@ -1,6 +1,7 @@
 package graft.impl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.graftx.PinBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage-cut / pinning policy for iterative and shared intermediates
@@ -31,12 +32,12 @@ object Pin {
   /** Pin WITH a retained hash(keys) partitioning (r15, guide §2.4):
     * repartitions `df` to an EXPLICIT partition count (so AQE cannot
     * coalesce the exchange and the layout claim stays exactly true) —
-    * `width` if given, else derived from the frame's estimated size (see
-    * [[keyedPartitions]]) — applies `andThen` (which must be partitioning-
-    * preserving: dedup/aggregate on a key superset, filter, non-renaming
-    * projection — NEVER a re-keying operation), and pins the result so the
-    * planner still SEES the hash(keys) layout afterwards. Every per-round
-    * consumer joining on `keys` then skips the re-exchange that a plain
+    * `width` if given, else [[width]] of the frame — applies `andThen`
+    * (which must be partitioning-preserving: dedup/aggregate on a key
+    * superset, filter, non-renaming projection — NEVER a re-keying
+    * operation), and pins the result so the planner still SEES the
+    * hash(keys) layout afterwards. Every per-round consumer joining on
+    * `keys` then skips the re-exchange that a plain
     * `Pin(df.repartition(...))` pays each round — under lazy
     * localCheckpoint the partitioning metadata is otherwise lost
     * (`UnknownPartitioning(0)`), which r14's "pinned pre-partitioned"
@@ -53,14 +54,66 @@ object Pin {
     // are compute-bound rather than byte-bound (e.g. the HyperBall sketch
     // merges): there the pin's width sets the loop's parallelism, and
     // byte-derived sizing would starve 32 cores with 2-3 fat partitions
-    // (measured r15: neighborhood_hll 6.3 -> 11.1 s).
-    val n = width.getOrElse(keyedPartitions(df))
+    // (measured r15: neighborhood_hll 6.3 -> 11.1 s). The algorithm loops
+    // also pass their edge pin's width, so loop state and edges co-partition.
+    val n = width.getOrElse(this.width(df))
     val shaped = andThen(df.repartition(n,
       keys.map(org.apache.spark.sql.functions.col): _*))
-    if (onCluster(df)) shaped.persist(StorageLevel.MEMORY_AND_DISK)
-    else org.apache.spark.sql.graftx.PinBridge
-      .checkpointKeepingHash(shaped, keys, n)
+    val pinned =
+      if (onCluster(df)) shaped.persist(StorageLevel.MEMORY_AND_DISK)
+      else PinBridge.checkpointKeepingHash(shaped, keys, n, eager = false)
+    keyedPins.value.foreach(_(pinned, keys))
+    pinned
   }
+
+  /** The loop state of one algorithm round, materialized by ONE action
+    * that also yields the round's scalars. Contract:
+    *
+    *  - With `keys`, `df` must already be hash-placed on them at `width`
+    *    partitions: `repartition(width, keys)` followed only by
+    *    partition-preserving operators (as for [[keyed]]'s `andThen`), or
+    *    a join of two such frames on the keys, whose every row lands in
+    *    the partition its key hashes to (sssp's full outer join, whose
+    *    `id` is coalesce(l.id, r.id)). The pin then claims
+    *    `HashPartitioning(keys, width)`, so the next round's joins against
+    *    the edge pin and this state, built at the same width, need no
+    *    exchange. Without `keys`, nothing is claimed and `width` is unused.
+    *  - `scalars` are aggregate expressions over `df`'s rows (a round's
+    *    mass, active count or edge count). They are collected through a
+    *    Spark [[Observation]] in the pin's own job, so no second job brings
+    *    them to the driver. The returned row holds them in order (empty if
+    *    none). Scalars of a frame the round only reads (not its output)
+    *    use [[observe]] before building `df`.
+    *  - Locally the checkpoint is eager: the action runs now, so the
+    *    scalars are known when this returns. On a cluster the state is
+    *    persisted and one `count()` materializes it.
+    *
+    * Under AQE the action is one job per query stage of `df`, so a round
+    * with one keyed exchange costs two jobs. */
+  def round(df: DataFrame, scalars: Seq[Column] = Nil,
+      keys: Seq[String] = Nil, width: Int = 0): (DataFrame, Row) = {
+    val (observed, values) = observe(df, scalars: _*)
+    val state =
+      if (onCluster(df)) {
+        val p = observed.persist(StorageLevel.MEMORY_AND_DISK)
+        p.count()
+        p
+      } else if (keys.isEmpty) observed.localCheckpoint(eager = true)
+      else PinBridge.checkpointKeepingHash(observed, keys, width, eager = true)
+    keyedPins.value.filter(_ => keys.nonEmpty).foreach(_(state, keys))
+    (state, values())
+  }
+
+  /** `df` with `scalars` observed, and the reader of their row. Read it
+    * after the action that runs a plan containing the returned frame; it
+    * waits for that action's report (see [[PinBridge.observed]]). */
+  def observe(df: DataFrame, scalars: Column*): (DataFrame, () => Row) =
+    if (scalars.isEmpty) (df, () => Row.empty)
+    else {
+      val obs = Observation()
+      (df.observe(obs, scalars.head, scalars.tail: _*),
+        () => PinBridge.observed(obs, df.agg(scalars.head, scalars.tail: _*).head()))
+    }
 
   /** Scale-adaptive partition count for a keyed pin (guide §2.2): derive
     * from the frame's ESTIMATED size at the session's advisory partition
@@ -74,15 +127,19 @@ object Pin {
     * configured width. When the estimate is unusable (unknown-size leaves
     * poison the product to ~Long.Max) fall back to shuffle.partitions —
     * the conservative, cluster-correct width. */
-  private def keyedPartitions(df: DataFrame): Int = {
+  def width(df: DataFrame): Int = {
     val spark = df.sparkSession
     val maxN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val advisory = org.apache.spark.sql.graftx.PinBridge
-      .advisoryPartitionSize(spark)
+    val advisory = PinBridge.advisoryPartitionSize(spark)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= 0 || est > BigInt(Long.MaxValue) / 4) maxN
     else ((est + advisory - 1) / advisory).min(maxN).max(1).toInt
   }
+
+  /** While set, every keyed pin built on this thread is reported with its
+    * keys, so a test can check each claim against the rows it covers. */
+  private[graft] val keyedPins =
+    new scala.util.DynamicVariable[Option[(DataFrame, Seq[String]) => Unit]](None)
 
   private def onCluster(df: DataFrame): Boolean =
     !df.sparkSession.sparkContext.isLocal

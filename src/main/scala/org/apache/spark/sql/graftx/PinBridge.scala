@@ -1,11 +1,15 @@
 package org.apache.spark.sql.graftx
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeoutException
+import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
-/** Package-local bridge that makes a lazy `localCheckpoint` keep its TRUE
+/** Package-local bridge that makes a `localCheckpoint` keep its TRUE
   * hash partitioning visible to the planner (guide §2.4 — remove shuffles
   * outright).
   *
@@ -28,13 +32,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Correctness guards: the claim is refused (falls back to the plain
   * checkpoint, with one `[graft]` line) unless the checkpointed RDD's
-  * partition count equals the explicit `n`, and the key attributes resolve
-  * in the output. A FALSE claim would silently mis-join, so callers must
-  * only pass frames shaped as described above; every registry query
-  * downstream is hash-checked against the DuckDB oracle, which would catch
-  * a violation. The re-wrapped relation keeps the checkpoint's size
-  * statistics, so the planner does not read a keyed pin as
-  * `spark.sql.defaultSizeInBytes`.
+  * partition count equals the explicit `n` (or is zero: an empty frame),
+  * and the key attributes resolve in the output. A FALSE claim would
+  * silently mis-join, so callers must only pass frames shaped as
+  * described above (`AlgoRoundsSpec` checks the algorithms' pins row by
+  * row); every registry query downstream is hash-checked against the
+  * DuckDB oracle, which would catch a violation. The re-wrapped relation
+  * keeps the checkpoint's size statistics, so the planner does not read a
+  * keyed pin as `spark.sql.defaultSizeInBytes`.
   */
 object PinBridge {
   private val log = org.slf4j.LoggerFactory.getLogger("graft")
@@ -46,19 +51,25 @@ object PinBridge {
     spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 
-  /** Lazy localCheckpoint of `df` re-wrapped with the
-    * `HashPartitioning(keys, n)` the frame was physically laid out with. */
-  def checkpointKeepingHash(df: DataFrame, keys: Seq[String],
-      n: Int): DataFrame = {
-    val ck = df.localCheckpoint(eager = false)
+  /** localCheckpoint of `df` (eager: materialized now, by one action;
+    * else lazily, by the first action that reads it) re-wrapped with the
+    * `HashPartitioning(keys, n)` the frame was physically laid out with.
+    * An empty frame meets any hash claim: when AQE planned it to zero
+    * partitions, the claim is kept over `n` empty partitions. */
+  def checkpointKeepingHash(df: DataFrame, keys: Seq[String], n: Int,
+      eager: Boolean = false): DataFrame = {
+    val ck = df.localCheckpoint(eager)
       .asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     ck.queryExecution.analyzed match {
       case lr @ LogicalRDD(output, rdd, _, ordering, streaming, stream)
-          if rdd.getNumPartitions == n &&
+          if (rdd.getNumPartitions == n || rdd.getNumPartitions == 0) &&
             keys.forall(k => output.exists(_.name == k)) =>
         val attrs = keys.map(k => output.find(_.name == k).get)
+        val placed = if (rdd.getNumPartitions == n) rdd
+          else ck.sparkSession.sparkContext
+            .parallelize(Seq.empty[InternalRow], n)
         Dataset.ofRows(ck.sparkSession,
-          LogicalRDD(output, rdd, HashPartitioning(attrs, n), ordering,
+          LogicalRDD(output, placed, HashPartitioning(attrs, n), ordering,
             streaming, stream)(ck.sparkSession, Some(lr.computeStats())))
       case plan =>
         val got = plan match {
@@ -73,4 +84,18 @@ object PinBridge {
         ck
     }
   }
+
+  /** The row `obs` collected in the action that ran its frame. The
+    * observation is reported through the listener bus, a few milliseconds
+    * after the action returns; if no report arrives within a minute (a
+    * dropped listener event), `fallback` computes the same row by a
+    * separate job, and one `[graft]` line says so. */
+  def observed(obs: Observation, fallback: => Row): Row =
+    try Await.result(obs.future, 1.minute)
+    catch {
+      case _: TimeoutException =>
+        log.warn(s"[graft] observation ${obs.name} was not reported; " +
+          "its scalars are recomputed by a separate job")
+        fallback
+    }
 }

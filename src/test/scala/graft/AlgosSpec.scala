@@ -555,7 +555,7 @@ class AlgosSpec extends SparkTestBase {
         .toDF("src", "dst", "w")
       val e = graft.impl.Pin(edges.repartition(col("src")))
       val frontier = Seq((1L, 0.0)).toDF("id", "dist")
-      val plan = GraphAlgorithms.ssspCandidates(e, frontier)
+      val plan = GraphAlgorithms.ssspCandidates(e, frontier, 4)
         .queryExecution.executedPlan
       val exchanges = plan.collect { case s: ShuffleExchangeExec => s }
       assert(exchanges.length === 2,

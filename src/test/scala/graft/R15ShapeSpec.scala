@@ -82,11 +82,12 @@ class R15ShapeSpec extends SparkTestBase {
   test("sssp round body: pinned edge frame is NOT re-exchanged (keyed pin)") {
     withSQLConf("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val e = graft.impl.Pin.keyed(
-        Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 4L, 2.0))
-          .toDF("src", "dst", "w"), Seq("src"))
+      val edges = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 4L, 2.0))
+        .toDF("src", "dst", "w")
+      val w = graft.impl.Pin.width(edges)
+      val e = graft.impl.Pin.keyed(edges, Seq("src"), width = Some(w))
       val frontier = Seq((1L, 0.0)).toDF("id", "dist")
-      val cand = GraphAlgorithms.ssspCandidates(e, frontier)
+      val cand = GraphAlgorithms.ssspCandidates(e, frontier, w)
       val (exchanges, claims) = exchangesAndClaims(
         cand.queryExecution.executedPlan)
       assert(claims.nonEmpty, "edge scan must carry the hash(src) claim:\n" +

@@ -26,13 +26,6 @@ class RobustnessSpec extends SparkTestBase {
     }
   }
 
-  /** Spark jobs started while `f` runs, counted by the bench meter. */
-  private def jobsDuring(f: => Any): Int = {
-    val meter = new graft.bench.Harness.Meter(spark)
-    try meter.time(f)._2.jobs
-    finally spark.sparkContext.removeSparkListener(meter)
-  }
-
   test("EXPLAIN of every Cypher registry row runs no Spark job but the listed ones") {
     // The rows whose planning still runs jobs, with the Planner site that
     // runs them. Under AQE a lazy localCheckpoint runs its frame's query

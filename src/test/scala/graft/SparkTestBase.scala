@@ -31,6 +31,13 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Spark jobs started while `f` runs, counted by the bench meter. */
+  def jobsDuring(f: => Any): Int = {
+    val meter = new graft.bench.Harness.Meter(spark)
+    try meter.time(f)._2.jobs
+    finally spark.sparkContext.removeSparkListener(meter)
+  }
+
   /** The messages `body` logs to the `graft` logger (its `[graft]` lines). */
   def graftLog(body: => Any): Seq[String] = {
     import org.apache.logging.log4j.{Level, LogManager}

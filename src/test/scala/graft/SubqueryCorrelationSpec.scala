@@ -169,6 +169,15 @@ class SubqueryCorrelationSpec extends TckScenarioBase {
     assert(got === Seq(2L, 2L, 2L))
   }
 
+  test("keys() of an imported map lists the map's keys") {
+    import spark.implicits._
+    val driving = Seq(Map("a" -> 1), Map("a" -> 1, "b" -> 2)).toDF("m")
+    val got = session.cypher(g,
+      "CALL { WITH m UNWIND keys(m) AS k RETURN count(k) AS n } RETURN n",
+      drivingTable = Some(driving)).collect().map(_.getLong(0)).toSeq
+    assert(got.sorted === Seq(1L, 2L))
+  }
+
   // ----------------------------------------- planner names vs user names
   test("a user variable spelled like a planner name stays the user's") {
     def count(q: String) = session.cypher(tpch, q).collect().head.getLong(0)
@@ -189,13 +198,6 @@ class SubqueryCorrelationSpec extends TckScenarioBase {
   }
 
   // ----------------------------------------------- planning and plan shape
-  /** Spark jobs started while `f` runs, counted by the bench meter. */
-  private def jobsDuring(f: => Any): Int = {
-    val meter = new graft.bench.Harness.Meter(spark)
-    try meter.time(f)._2.jobs
-    finally spark.sparkContext.removeSparkListener(meter)
-  }
-
   test("EXPLAIN of correlated read subqueries runs no Spark job") {
     val call = "MATCH (c:Customer)-[:FROM_NATION]->(n:Nation) " +
       "CALL { WITH c MATCH (c)-[:PLACED]->(o:Order) RETURN count(o) AS k } " +
