@@ -11,9 +11,11 @@ import org.apache.spark.sql.types._
 /** Whole-graph analytics over the same element-table scans the Cypher
   * planner uses — DataFrame-native iterative algorithms (no RDD/GraphX
   * legacy): each iteration is a keyed join + aggregation that Catalyst/AQE
-  * plans like any other, and intermediate state is pinned via [[graft.impl.Pin]]
-  * (lazy localCheckpoint locally, fault-tolerant persist on a cluster) to
-  * truncate lineage — the standard scale pattern for iterative Spark.
+  * plans like any other, and every loop's state goes through
+  * [[graft.impl.Pin.round]] (an eager localCheckpoint locally, a
+  * fault-tolerant persist on a cluster) to truncate lineage — the standard
+  * scale pattern for iterative Spark. A round's convergence count or sum
+  * is observed in the job that pins it, never read by a second action.
   *
   * Referential integrity: the iterative algorithms derive their working node
   * set from edge endpoints, assuming rel endpoints are a subset of node ids
@@ -147,7 +149,7 @@ object GraphAlgorithms {
 
   /** The mass-conserving damped rank loop of [[pageRank]] and
     * [[pageRankWeighted]]; `share` is the fraction of a link's source rank
-    * it carries (see [[rankContribs]]). Mass no link transfers (dangling
+    * it carries (see [[linkMass]]). Mass no link transfers (dangling
     * and isolated nodes') is spread uniformly, so ranks sum to n.
     *
     * Nodes outside `connected` are carried ANALYTICALLY, not iterated: an
@@ -188,39 +190,33 @@ object GraphAlgorithms {
     withIsolated(graph, ranks, lit(isoRank))
   }
 
-  /** One [[conservedRanks]] round before its pin: (id, contrib) for every
-    * id of `ranks`, hash-placed at `width`. The link contributions
+  /** One rank round before its pin: (id, contrib) for every id of
+    * `ranks`, hash-placed at `width` — the round of [[pageRank]],
+    * [[pageRankWeighted]], [[personalizedPageRank]],
+    * [[eigenvectorCentrality]] and [[articleRank]]. The link contributions
     * ([[linkMass]]; `links` and `ranks` co-partitioned at `width`, so no
     * exchange) and one zero row per ranked id share ONE keyed exchange,
     * and the sum per id runs on its output: a node no link reaches still
-    * gets its 0 without a join against the connected set. */
+    * gets its 0 without a join against the connected set. The `carried`
+    * columns of `ranks` ride the zero rows (null on the link rows) and
+    * come out as one max per id. */
   private[graft] def conservedRound(links: DataFrame, ranks: DataFrame,
-      share: Column, width: Int): DataFrame =
-    linkMass(links, ranks, share)
-      .unionByName(ranks.select(col("id"), lit(0.0).as("c")))
+      share: Column, width: Int, carried: Seq[String] = Nil): DataFrame =
+    linkMass(links, ranks, share, carried.map(c =>
+        lit(null).cast(ranks.schema(c).dataType).as(c)))
+      .unionByName(ranks.select(col("id") +: lit(0.0).as("c") +:
+        carried.map(col): _*))
       .repartition(width, col("id"))
-      .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
+      .groupBy(col("id")).agg(sum(col("c")).as("contrib"),
+        carried.map(c => max(col(c)).as(c)): _*)
 
-  /** One rank round's link-mass transfer: `share` of each link's source
-    * rank (default degree-normalized, `rank / deg`) flows along the pinned
-    * (src-partitioned) links and aggregates per destination as `contrib`.
-    * Factored so AlgosSpec can assert the scale property — the round
-    * consumes the pinned hash(src) partitioning and never re-shuffles the
-    * edge side (shared by [[personalizedPageRank]],
-    * [[eigenvectorCentrality]] and [[articleRank]]; [[conservedRound]]
-    * folds the same link mass into its keyed round). */
-  private[graft] def rankContribs(links: DataFrame, ranks: DataFrame,
-      share: Column = col("rank") / col("deg")): DataFrame =
-    linkMass(links, ranks, share)
-      .groupBy(col("id")).agg(sum(col("c")).as("contrib"))
-
-  /** Each link's `share` of its source rank, as (id = dst, c). */
+  /** Each link's `share` of its source rank, as (id = dst, c, `extra`). */
   private def linkMass(links: DataFrame, ranks: DataFrame,
-      share: Column): DataFrame =
+      share: Column, extra: Seq[Column]): DataFrame =
     // shuffle_hash on the rank side: links is the pinned fact frame and a
     // sort-merge join would re-sort it every round (r14, guide §3.1).
     links.join(ranks.hint("shuffle_hash"), links("src") === ranks("id"))
-      .select(col("dst").as("id"), share.as("c"))
+      .select(col("dst").as("id") +: share.as("c") +: extra: _*)
 
   /** `scored` (id, value) plus every node id it lacks, valued by `fill`:
     * one full outer join against the node ids, planned lazily (the
@@ -518,64 +514,45 @@ object GraphAlgorithms {
     * Nothing materializes per-pair state — memory is O(reached ×
     * sources-that-reach), the Brandes invariant.
     *
-    * Per-round job shape (VERDICT r13 #1, adjudicated by the r13 A/B
-    * measured below): the forward visited set is a LAZY union of the
-    * already-pinned levels (no per-round visited checkpoint write — the
-    * anti-join re-reads cached level blocks), convergence is the 1-row
-    * aggregate that materializes the round's pin, and the backward sweep
-    * pins only the inner-join contrib frame per level — the zero-fill for
-    * contribution-less nodes happens at the USE site (a coalesce inside
-    * the next level's `upper` join) instead of a per-level left-outer
-    * materialization. Measured against the per-round-checkpoint shape:
-    * 98 → 85 driver-visible jobs and 19.8 s → 16.9 s mean (noisy window;
-    * job count is the stable signal — fewer barriers is what the
-    * driver's loud-window readings tax). */
+    * Per-round job shape: the forward visited set is a LAZY union of the
+    * pinned levels, each level a [[Pin.round]] whose observed row count is
+    * the convergence test; the backward sweep pins only the inner-join
+    * contrib frame per level and zero-fills at the USE site (a coalesce in
+    * the next level's `upper` join). */
   def betweenness(edges0: DataFrame, sources: DataFrame,
       directed: Boolean = false, maxDepth: Int = 50): DataFrame = {
     val e = bfsEdges(edges0.select(col("src").cast(LongType).as("src"),
       col("dst").cast(LongType).as("dst")), directed)
     val src0 = sources.select(col("id").cast(LongType).as("s")).distinct()
     // forward BFS: levels(k) = (s, v, sigma) first reached at depth k.
-    // visited is a lazy union of the pinned levels — no per-round visited
-    // checkpoint; the anti-join re-reads the levels' cached blocks.
-    var levels = Vector(Pin(src0.select(col("s"), col("s").as("v"),
-      lit(1.0).as("sigma"))))
+    var levels = Vector(Pin.round(src0.select(col("s"), col("s").as("v"),
+      lit(1.0).as("sigma")))._1)
     var depth = 0
     var go = true
     while (go && depth < maxDepth) {
       val visited = levels.map(_.select(col("s"), col("v").as("_v2")))
         .reduce(_.unionByName(_))
-      // Aggregate BEFORE the visited anti-join (r14): exclusion is
-      // all-or-nothing per (s, v) — a visited node's whole sigma group is
-      // dropped — so the order is free, and aggregating first (a) shrinks
-      // the anti-join's probe side from the raw expansion to one row per
-      // (s, v), (b) rides the map-side partial aggregation through the
-      // one fat exchange, and (c) leaves the probe side hash(s, _v2)
-      // partitioned so the anti-join adds no exchange on it. The visited
-      // side is the hash build (SMJ would sort both sides every round).
-      val next = Pin(levels.last.hint("shuffle_hash")
+      // Aggregate BEFORE the visited anti-join: exclusion is all-or-nothing
+      // per (s, v), so the order is free, and aggregating first shrinks
+      // the probe side, combines map-side and leaves it hash(s, _v2)
+      // placed for the anti-join. The visited side is the hash build.
+      val (next, reached) = Pin.round(levels.last.hint("shuffle_hash")
         .join(e, col("v") === col("src"))
         .select(col("s"), col("dst").as("_v2"), col("sigma"))
         .groupBy(col("s"), col("_v2"))
         .agg(sum(col("sigma")).as("sigma"))
         .join(visited.hint("shuffle_hash"), Seq("s", "_v2"), "left_anti")
-        .select(col("s"), col("_v2").as("v"), col("sigma")))
-      // Convergence count folded into the aggregate that materializes the
-      // round's pin (the sssp r13 fold): one driver-visible action/round.
-      if (next.agg(count(lit(1))).head().getLong(0) == 0L) go = false
+        .select(col("s"), col("_v2").as("v"), col("sigma")),
+        Seq(count(lit(1))))
+      if (reached.getLong(0) == 0L) go = false
       else { levels = levels :+ next; depth += 1 }
     }
     if (go) throw new IllegalStateException(
       s"betweenness BFS exceeded $maxDepth levels")
     // backward accumulation: delta(v@k) = sum over BFS-DAG successors w@k+1
-    // of sigma(v)/sigma(w) * (1 + delta(w)); bc accumulates non-source rows.
-    // Only the inner-join contrib frame is pinned per level — nodes with
-    // no lower-level contribution are zero-filled at the USE site (the
-    // coalesce in the next level's `upper` join) rather than through a
-    // per-level left-outer materialization, and the bc accumulation is
-    // DEFERRED — one union + aggregation over all pinned per-level
-    // contribs at the end (absent rows contribute exactly 0 to the sum,
-    // so the zero-fill rows were pure overhead).
+    // of sigma(v)/sigma(w) * (1 + delta(w)); bc accumulates non-source rows,
+    // DEFERRED to one union + aggregation over the pinned per-level
+    // contribs at the end (absent rows contribute exactly 0).
     var deltas = Vector.empty[DataFrame]
     var contribAbove: DataFrame = null // pinned delta of level k+1; rows absent when 0
     for (k <- (levels.size - 2) to 0 by -1) {
@@ -584,18 +561,18 @@ object GraphAlgorithms {
           levels(k + 1).select(col("s"), col("v").as("_w"),
             col("sigma").as("_sw"), lit(0.0).as("_dw"))
         else levels(k + 1)
-          .join(contribAbove.withColumnRenamed("delta", "_d"),
-            Seq("s", "v"), "left_outer")
+          .join(contribAbove.withColumnRenamed("delta", "_d")
+            .hint("shuffle_hash"), Seq("s", "v"), "left_outer")
           .select(col("s"), col("v").as("_w"), col("sigma").as("_sw"),
             coalesce(col("_d"), lit(0.0)).as("_dw"))
       val contrib = levels(k).hint("shuffle_hash")
         .join(e, col("v") === col("src"))
         .select(col("s"), col("v"), col("sigma"), col("dst").as("_w"))
-        .join(upper, Seq("s", "_w"))
+        .join(upper.hint("shuffle_hash"), Seq("s", "_w"))
         .groupBy(col("s"), col("v"))
         .agg(sum(col("sigma") / col("_sw") * (lit(1.0) + col("_dw")))
           .as("delta"))
-      contribAbove = Pin(contrib)
+      contribAbove = Pin.round(contrib)._1
       deltas = deltas :+ contribAbove
     }
     val bc: DataFrame =
@@ -625,8 +602,8 @@ object GraphAlgorithms {
     * forward degree), then exploded back onto its three edges and
     * counted. One wedge join + one map-side-combinable aggregation. */
   private[graft] def edgeSupport(canon: DataFrame, m: Long): DataFrame =
-    // `m` is the caller's canon count (the ktruss loop counts each round's
-    // survivors anyway). PER-ROUND caller: the bloom build costs one
+    // `m` is the caller's canon count (the ktruss loop observes each
+    // round's survivors anyway). PER-ROUND caller: the bloom build costs one
     // aggregate job + a subquery per peeling round, so by default it must
     // clear a higher bar than the one-shot wedge queries — below ~1M
     // surviving edges the wedge exchange is already small and the r15
@@ -650,7 +627,8 @@ object GraphAlgorithms {
     *
     * Scale shape: each round is one degree-oriented wedge join (fan-out
     * O(sqrt m) by orientation) + two keyed aggregations, with the
-    * surviving edge frame pinned per round — the standard distributed
+    * surviving edge frame a [[Pin.round]] whose observed row count is the
+    * convergence test — the standard distributed
     * peeling formulation (per-round full recount; the delta-maintenance
     * variant trades simplicity for fewer recounts and is not needed
     * until round counts grow). Rounds are bounded by the peeling depth;
@@ -663,11 +641,11 @@ object GraphAlgorithms {
     var changed = n > 0
     var it = 0
     while (changed && it < maxIterations) {
-      val support = edgeSupport(cur, n)
-      val next = Pin(cur.join(support, Seq("a", "b"), "left_outer")
+      val (next, kept) = Pin.round(cur
+        .join(edgeSupport(cur, n), Seq("a", "b"), "left_outer")
         .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
-        .select(col("a"), col("b")))
-      val nn = next.count()
+        .select(col("a"), col("b")), Seq(count(lit(1))))
+      val nn = kept.getLong(0)
       changed = nn != n
       cur = next
       n = nn
@@ -768,47 +746,45 @@ object GraphAlgorithms {
     * relevance/recommendation score around a query set. Update rule per
     * round: r(v) = (1-d)·p(v) + d·(Σ in-contribs + dangling_mass·p(v)),
     * where p is the seed distribution; total mass stays exactly 1, so the
-    * dangling mass is 1 − transferred (one 1-row aggregate per round, a
-    * `head()` of its own; [[pageRank]] observes its mass in the round's
-    * [[Pin.round]] instead).
+    * dangling mass is 1 − transferred, observed in the round's
+    * [[Pin.round]].
     *
-    * Scale shape: [[degreeLinks]] pinned pre-partitioned on src (no
-    * per-round edge shuffle), one [[rankContribs]] round and one pin per
-    * round. The
-    * working set is edge endpoints ∪ seeds; every node OUTSIDE it — and
-    * every working node unreachable from the seeds — has exactly 0 rank
-    * (no restart mass, no in-mass), so the unreachable remainder is
-    * appended as a closed-form 0 without joining the loop. */
+    * Scale shape: [[pageRank]]'s — [[degreeLinks]] and the working set
+    * keyed at one width, and every round a [[conservedRound]] whose zero
+    * rows carry each id's restart share p. The working set is edge
+    * endpoints ∪ seeds; every node OUTSIDE it — and every working node
+    * unreachable from the seeds — has exactly 0 rank (no restart mass, no
+    * in-mass), so the unreachable remainder is appended as a closed-form 0
+    * without joining the loop. */
   def personalizedPageRank(graph: PropertyGraph, seeds: DataFrame,
       iterations: Int = 10, damping: Double = 0.85,
       relTypes: Seq[String] = Seq.empty): DataFrame = {
     val e = validated(edges(graph, relTypes), graph)
-    val links = degreeLinks(e)
+    val w = Pin.width(e)
+    val links = degreeLinks(e, Some(w))
     val seedIds = seeds.select(col("id").cast(LongType).as("id")).distinct()
     val k = seedIds.count()
     require(k > 0, "personalizedPageRank needs at least one seed")
-    val base = Pin.keyed(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .unionByName(seedIds), Seq("id"), _.distinct()
-      .join(seedIds.withColumn("_p", lit(1.0 / k)), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("_p"), lit(0.0)).as("p")))
-    var ranks = base.select(col("id"), col("p").as("rank"))
+    // (id, p) over the working set: the seeds' 1/k and every endpoint's 0
+    // meet in one hash(id) exchange, and the max per id is p.
+    val base = Pin.keyed(e.select(col("src").as("id"), lit(0.0).as("p"))
+      .unionByName(e.select(col("dst").as("id"), lit(0.0).as("p")))
+      .unionByName(seedIds.select(col("id"), lit(1.0 / k).as("p"))),
+      Seq("id"), _.groupBy(col("id")).agg(max(col("p")).as("p")), Some(w))
+    var ranks = base.select(col("id"), col("p"), col("p").as("rank"))
     for (_ <- 1 to iterations) {
-      val contribs = rankContribs(links, ranks)
-      val received = Pin(base.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), col("p"),
-          coalesce(col("contrib"), lit(0.0)).as("contrib")))
-      val tc = received.agg(coalesce(sum("contrib"), lit(0.0)))
-        .head().getDouble(0)
-      val miss = 1.0 - tc
-      ranks = received.select(col("id"),
+      val (received, mass) = Pin.round(conservedRound(links, ranks,
+        col("rank") / col("deg"), w, Seq("p")), Seq(sum(col("contrib"))),
+        Seq("id"), w)
+      val miss = 1.0 - (if (mass.isNullAt(0)) 0.0 else mass.getDouble(0))
+      ranks = received.select(col("id"), col("p"),
         (lit(1.0 - damping) * col("p") +
           lit(damping) * (col("contrib") + lit(miss) * col("p"))).as("rank"))
     }
     val outside = nodeIds(graph)
       .join(base.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), lit(0.0).as("rank"))
-    ranks.unionByName(outside)
+    ranks.select(col("id"), col("rank")).unionByName(outside)
   }
 
   /** HITS hub/authority scores (Kleinberg 1999) over a DIRECTED edge
@@ -827,20 +803,21 @@ object GraphAlgorithms {
     * zero — a null sum on an existing group is distinguished from the
     * no-in-edges join miss below).
     *
-    * Scale shape: the edge list is pinned pre-partitioned on src once;
-    * each round is two keyed joins + two map-side-combinable sums
-    * consuming that partitioning — no per-round edge shuffle (the
-    * [[sssp]]/[[pageRank]] skeleton). */
+    * Scale shape: the edge list is pinned twice, keyed on src and on dst
+    * at one width, and the scores are a [[Pin.round]] keyed on hash(id) at
+    * that width, so every join of a round is co-partitioned: the round's
+    * two exchanges re-key the auth sums on dst and the hub sums on src. */
   def hitsEdges(edges0: DataFrame, iterations: Int = 2): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val dec = DecimalType(38, 0)
-    // Pin.keyed (r15): hash(src)/hash(id) layouts stay visible through the
-    // pins, so the per-round hub-side joins skip the edge re-exchange.
-    val e = Pin.keyed(edges0.select(col("src").cast(LongType).as("src"),
-      col("dst").cast(LongType).as("dst")), Seq("src"))
-    val nodes = endpointIds(e)
-    var scores = Pin(nodes.select(col("id"),
-      lit(1).cast(dec).as("hub"), lit(1).cast(dec).as("auth")))
+    val typed = edges0.select(col("src").cast(LongType).as("src"),
+      col("dst").cast(LongType).as("dst"))
+    val w = Pin.width(typed)
+    val bySrc = Pin.keyed(typed, Seq("src"), width = Some(w))
+    val byDst = Pin.keyed(typed, Seq("dst"), width = Some(w))
+    val nodes = endpointIds(bySrc, Some(w))
+    var scores = nodes.select(col("id"),
+      lit(1).cast(dec).as("hub"), lit(1).cast(dec).as("auth"))
     // Distinguish "no in/out edges" (join miss — score 0) from Decimal
     // overflow (group EXISTS but its sum is null under non-ANSI overflow
     // semantics): the count column is non-null exactly when the group
@@ -852,24 +829,24 @@ object GraphAlgorithms {
         .when(s.isNull, raise_error(lit(
           "hits: Decimal(38,0) overflow — reduce iterations")).cast(dec))
         .otherwise(s)
-    var it = 0
-    while (it < iterations) {
-      val authSums = e.join(scores.hint("shuffle_hash"),
-          e("src") === scores("id"))
+    for (_ <- 1 to iterations) {
+      val authSums = bySrc.join(scores.hint("shuffle_hash"),
+          bySrc("src") === scores("id"))
+        .select(col("dst"), col("hub")).repartition(w, col("dst"))
         .groupBy(col("dst")).agg(sum(col("hub")).as("_a"),
           count(lit(1)).as("_ac"))
-      val withAuth = Pin(nodes.join(authSums, nodes("id") === authSums("dst"),
-          "left_outer")
-        .select(col("id"), sumOr(col("_a"), col("_ac")).as("auth")))
-      val hubSums = e.join(withAuth.hint("shuffle_hash"),
-          e("dst") === withAuth("id"))
+      val withAuth = nodes.join(authSums.hint("shuffle_hash"),
+          nodes("id") === authSums("dst"), "left_outer")
+        .select(col("id"), sumOr(col("_a"), col("_ac")).as("auth"))
+      val hubSums = byDst.join(withAuth.hint("shuffle_hash"),
+          byDst("dst") === withAuth("id"))
+        .select(col("src"), col("auth")).repartition(w, col("src"))
         .groupBy(col("src")).agg(sum(col("auth")).as("_h"),
           count(lit(1)).as("_hc"))
-      scores = Pin(withAuth.join(hubSums, withAuth("id") === hubSums("src"),
-          "left_outer")
+      scores = Pin.round(withAuth.join(hubSums.hint("shuffle_hash"),
+          withAuth("id") === hubSums("src"), "left_outer")
         .select(col("id"), sumOr(col("_h"), col("_hc")).as("hub"),
-          col("auth")))
-      it += 1
+          col("auth")), Nil, Seq("id"), w)._1
     }
     scores
   }
@@ -922,38 +899,48 @@ object GraphAlgorithms {
     * so the cap is semantic, not a safety net). Returns (id, label);
     * isolated nodes keep their own label.
     *
-    * Scale shape per round: one join (labels x symmetrized edges, edge
-    * side pinned pre-partitioned on dst — never re-shuffled), one
-    * (node, label) count aggregation, one max_by per node, one
-    * changed-label count for convergence. Same iterative skeleton as
-    * [[connectedComponents]] with a mode instead of a min. */
+    * Scale shape per round: the labels (id, label, _old) are a
+    * [[Pin.round]] keyed on hash(id) at the edge pin's width, so the join
+    * against the symmetrized edges (keyed on dst) and the join with the
+    * previous labels need no exchange; the round's one exchange re-keys
+    * the neighbour labels on their node, and both aggregations (the
+    * (node, label) count and the mode per node) run on it. The changed
+    * count is observed in the round's job. */
   def labelPropagation(graph: PropertyGraph,
       relTypes: Seq[String] = Seq.empty, maxIterations: Int = 10): DataFrame = {
-    val e0 = validated(edges(graph, relTypes), graph)
+    val both = bothWays(validated(edges(graph, relTypes), graph))
+    val w = Pin.width(both)
     // One exchange, not two: hash(dst) satisfies the (src, dst) dedup
     // clustering, and the pinned partitioning feeds every round's
     // labels-join (r14, guide §2.4).
-    val und = Pin.keyed(bothWays(e0), Seq("dst"),
-      _.dropDuplicates(Seq("src", "dst")))
-    var lbl = Pin(und.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")))
+    val und = Pin.keyed(both, Seq("dst"), _.dropDuplicates(Seq("src", "dst")),
+      Some(w))
+    // The edge set is symmetric, so its dst ids are its src ids, already
+    // hash-placed: the starting labels need no exchange.
+    var lbl = Pin.round(und.select(col("dst").as("id")).distinct()
+      .select(col("id"), col("id").as("label")), Nil, Seq("id"), w)._1
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIterations) {
-      val counts = und
-        .join(lbl.withColumnRenamed("id", "_nid"), und("dst") === col("_nid"))
-        .groupBy(und("src").as("id"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
       // mode with min-label ties: max over (cnt, -label)
-      val next = Pin(counts.groupBy(col("id"))
+      val mode = und
+        .join(lbl.select(col("id").as("_nid"), col("label"))
+          .hint("shuffle_hash"), und("dst") === col("_nid"))
+        .select(col("src").as("id"), col("label"))
+        .repartition(w, col("id"))
+        .groupBy(col("id"), col("label")).agg(count(lit(1)).as("cnt"))
+        .groupBy(col("id"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("id"), (-col("m.nl")).as("label")))
-      changed = next.join(lbl.withColumnRenamed("label", "_old"), "id")
-        .filter(col("label") =!= col("_old")).count()
+        .select(col("id"), (-col("m.nl")).as("label"))
+      val (next, moved) = Pin.round(mode.join(
+          lbl.select(col("id"), col("label").as("_old")).hint("shuffle_hash"),
+          "id"),
+        Seq(count(when(col("label") =!= col("_old"), lit(1)))), Seq("id"), w)
+      changed = moved.getLong(0)
       lbl = next
       it += 1
     }
-    withIsolated(graph, lbl, col("id"))
+    withIsolated(graph, lbl.select(col("id"), col("label")), col("id"))
   }
 
   /** The k-core: the maximal subgraph in which every node has degree
@@ -1046,45 +1033,46 @@ object GraphAlgorithms {
         graft.api.CypherError.InvalidArgumentValue,
         "topologicalLevels: graph contains a self-loop (cycle)")
     // No dedup pass: Kahn is correct on multigraphs (in-degrees and
-    // decrements both count edge multiplicity), so duplicate edges don't
-    // warrant a 1.9M-row distinct shuffle.
-    // Pin.keyed (r15): the hash(src) layout stays visible, so every Kahn
-    // round's decrement join consumes it instead of re-exchanging e.
+    // decrements both count multiplicity). The keyed pin's hash(src)
+    // layout feeds every round's decrement join.
     val e = Pin.keyed(e0, Seq("src"))
     val indeg0 = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("d"))
-    var frontier: DataFrame = Pin(e.select(col("src").as("id")).distinct()
-      .join(indeg0.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), lit(0L).as("level")))
+    // `left` counts the nodes still holding in-edges: observed on indeg0
+    // in the first front's job, then on every round's merged frame. Any
+    // left when the fronts run out means a cycle.
+    val (withIn, hasIn) = Pin.observe(indeg0, count(lit(1)))
+    val (front0, fronts) = Pin.round(e.select(col("src").as("id")).distinct()
+      .join(withIn.select(col("id")), Seq("id"), "left_anti")
+      .select(col("id"), lit(0L).as("level")), Seq(count(lit(1))))
+    var frontier = front0
+    var frontN = fronts.getLong(0)
+    var left = hasIn().getLong(0)
     var indeg = indeg0
     var levels = Vector.empty[DataFrame]
     var level = 0L
-    var frontN = frontier.count()
     while (frontN > 0 && level < maxIterations) {
       levels = levels :+ frontier
       val dec = topoDecrements(e, frontier)
-      // ONE lazy pin per round; frontier/indeg are cheap projections of it
-      // (the sssp merged-frame pattern).
-      // shuffle_hash on the (front-sized) decrement side: SMJ would sort
-      // the full in-degree frame every round (r14, guide §3.1).
-      val merged = Pin(indeg.join(dec.hint("shuffle_hash"),
+      // ONE pin per round, counting its front and remainder; frontier and
+      // indeg are projections of it. shuffle_hash on the (front-sized)
+      // decrement side: SMJ would sort the full in-degree frame.
+      val (merged, counted) = Pin.round(indeg.join(dec.hint("shuffle_hash"),
           Seq("id"), "left_outer")
         .select(col("id"),
-          (col("d") - coalesce(col("rm"), lit(0L))).as("d")))
+          (col("d") - coalesce(col("rm"), lit(0L))).as("d")),
+        Seq(count(when(col("d") === 0, lit(1))),
+          count(when(col("d") > 0, lit(1)))))
       level += 1
       frontier = merged.filter(col("d") === 0)
         .select(col("id"), lit(level).as("level"))
       indeg = merged.filter(col("d") > 0)
-      // Convergence count folded into the aggregate that materializes the
-      // round's pin (sssp's r13 fold): one driver-visible action per
-      // round on the pinned frame itself.
-      frontN = merged.agg(count(when(col("d") === 0, lit(1))))
-        .head().getLong(0)
+      frontN = counted.getLong(0)
+      left = counted.getLong(1)
     }
     if (frontN > 0) throw new IllegalStateException(
       s"topologicalLevels did not finish within $maxIterations rounds " +
         "(longest path exceeds the cap — raise maxIterations)")
-    val cyclic = indeg.limit(1).count()
-    if (cyclic > 0) throw new graft.api.CypherException(
+    if (left > 0) throw new graft.api.CypherException(
       graft.api.CypherError.ArgumentError, graft.api.CypherError.Runtime,
       graft.api.CypherError.InvalidArgumentValue,
       "topologicalLevels: graph contains a cycle (in-degrees never " +
@@ -1112,34 +1100,36 @@ object GraphAlgorithms {
     * all THROW at their caps.
     *
     * Scale shape: per inner round one keyed join + min/mark aggregation
-    * over the surviving edge frame (pinned per round, monotonically
-    * shrinking across outer rounds); color convergence is tested by the
-    * strictly-decreasing Decimal color sum, mark convergence by the
-    * monotone mark count — both one aggregate on the frame the round
-    * pins anyway. Worst case (a long chain of SCCs) peels one SCC per
-    * outer round, the algorithm's documented bound; webby graphs peel
-    * many roots per round. */
+    * over the surviving edge frame, a [[Pin.round]] per round. Each
+    * convergence scalar is observed in the job of the round it tests: the
+    * strictly-decreasing Decimal color sum and the root count on color
+    * rounds, the monotone mark count on mark rounds, the node count and id
+    * sum on the peel. Worst case (a long chain of SCCs) peels one SCC per
+    * outer round, the algorithm's documented bound. */
   def stronglyConnectedComponents(graph: PropertyGraph,
       relTypes: Seq[String] = Seq.empty, maxOuterRounds: Int = 50,
       maxInnerRounds: Int = 100): DataFrame = {
     val e0 = validated(edges(graph, relTypes), graph)
-    // Single-exchange dedup (r14, guide §2.4) + visible hash(src) layout
-    // (Pin.keyed, r15): every inner color round's rem-side join consumes
-    // the partitioning instead of re-exchanging the surviving edge frame.
+    // Single-exchange dedup; every inner color round's rem-side join
+    // consumes the keyed pin's hash(src) layout.
     var rem = Pin.keyed(e0.filter(col("src") =!= col("dst")), Seq("src"),
       _.dropDuplicates(Seq("src", "dst")))
-    var active = Pin(rem.select(col("src").as("id"))
-      .unionByName(rem.select(col("dst").as("id"))).distinct())
-    var activeN = active.count()
     val dec = DecimalType(38, 0)
+    val sized = Seq(count(lit(1)), sum(col("id").cast(dec)))
+    val colorStats = Seq(sum(col("c").cast(dec)),
+      count(when(col("id") === col("c"), lit(1))))
+    var (active, stats) = Pin.round(rem.select(col("src").as("id"))
+      .unionByName(rem.select(col("dst").as("id"))).distinct(), sized)
     var found = Vector.empty[DataFrame]
     var outer = 0
-    while (activeN > 0 && outer < maxOuterRounds) {
+    while (stats.getLong(0) > 0 && outer < maxOuterRounds) {
       // ---- forward color propagation to fixpoint (colors only decrease,
-      // so the Decimal sum is strictly decreasing until converged)
-      var color = Pin(active.select(col("id"), col("id").as("c")))
+      // so the Decimal sum is strictly decreasing until converged); every
+      // node starts as the root of its own color
+      var color = active.select(col("id"), col("id").as("c"))
       var prevSum: java.math.BigDecimal = null
-      var curSum = color.agg(sum(col("c").cast(dec))).head().getDecimal(0)
+      var curSum = stats.getDecimal(1)
+      var roots = stats.getLong(0)
       var inner = 0
       while (prevSum != curSum && inner < maxInnerRounds) {
         // shuffle_hash on the color side: rem is the pinned fact frame —
@@ -1148,12 +1138,14 @@ object GraphAlgorithms {
             rem("src") === color("id"))
           .select(rem("dst").as("id"), col("c"))
           .groupBy(col("id")).agg(min(col("c")).as("pc"))
-        val next = Pin(color.join(fromPred.hint("shuffle_hash"),
-          Seq("id"), "left_outer")
+        val (next, colored) = Pin.round(color.join(
+            fromPred.hint("shuffle_hash"), Seq("id"), "left_outer")
           .select(col("id"),
-            least(col("c"), coalesce(col("pc"), col("c"))).as("c")))
+            least(col("c"), coalesce(col("pc"), col("c"))).as("c")),
+          colorStats)
         prevSum = curSum
-        curSum = next.agg(sum(col("c").cast(dec))).head().getDecimal(0)
+        curSum = colored.getDecimal(0)
+        roots = colored.getLong(1)
         color = next
         inner += 1
       }
@@ -1163,20 +1155,21 @@ object GraphAlgorithms {
       // ---- intra-color edges + backward SCC growth from the color roots
       val srcC = color.select(col("id").as("src"), col("c").as("_sc"))
       val dstC = color.select(col("id").as("dst"), col("c").as("_dc"))
-      val intra = Pin(rem.join(srcC, "src").join(dstC, "dst")
+      val intra = Pin.round(rem.join(srcC, "src").join(dstC, "dst")
         .filter(col("_sc") === col("_dc"))
-        .select(col("src"), col("dst"), col("_sc").as("c")))
-      var mark = Pin(color.filter(col("id") === col("c")))
-      var markN = mark.count()
+        .select(col("src"), col("dst"), col("_sc").as("c")))._1
+      var mark = color.filter(col("id") === col("c"))
+      var markN = roots
       var prevMark = -1L
       inner = 0
       while (markN != prevMark && inner < maxInnerRounds) {
         val grown = intra.join(
             mark.select(col("id").as("dst")).hint("shuffle_hash"), "dst")
           .select(col("src").as("id"), col("c"))
-        val next = Pin(mark.unionByName(grown).distinct())
+        val (next, marked) = Pin.round(mark.unionByName(grown).distinct(),
+          Seq(count(lit(1))))
         prevMark = markN
-        markN = next.count()
+        markN = marked.getLong(0)
         mark = next
         inner += 1
       }
@@ -1187,19 +1180,20 @@ object GraphAlgorithms {
       // ---- remove the extracted SCCs and iterate on the rest
       val gone = mark.select(col("id"))
       // dst-anti first, src-anti LAST (anti-joins commute; left-anti
-      // preserves the left partitioning): the next outer round's rem is
-      // pinned hash(src) again — no re-shuffle of the surviving edges.
-      rem = Pin(rem
+      // preserves the left partitioning).
+      rem = Pin.round(rem
         .join(gone.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
         .join(gone.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .select(col("src"), col("dst")))
-      active = Pin(active.join(gone, Seq("id"), "left_anti"))
-      activeN = active.count()
+        .select(col("src"), col("dst")))._1
+      val (rest, restStats) = Pin.round(
+        active.join(gone, Seq("id"), "left_anti"), sized)
+      active = rest
+      stats = restStats
       outer += 1
     }
-    if (activeN > 0) throw new IllegalStateException(
+    if (stats.getLong(0) > 0) throw new IllegalStateException(
       s"scc: peeling did not finish within $maxOuterRounds outer rounds " +
-        s"($activeN nodes unresolved — raise maxOuterRounds)")
+        s"(${stats.getLong(0)} nodes unresolved — raise maxOuterRounds)")
     // Edge-less nodes (and self-loop-only nodes) are singleton SCCs.
     val sccs = found.reduceOption(_.unionByName(_))
       .getOrElse(e0.limit(0).select(col("src").as("id"),
@@ -1340,11 +1334,11 @@ object GraphAlgorithms {
       .filter(col("src") =!= col("dst")), directed)
     // visited is a LAZY union of the pinned per-depth levels (no per-round
     // visited checkpoint write — the anti-join re-reads cached level
-    // blocks), and the convergence count is the 1-row aggregate that
-    // materializes the round's pin: one driver-visible action per round
-    // (the betweenness/sssp r13-r14 fold, VERDICT r13 #1).
-    var levels = Vector(Pin(sources.select(col("id").cast(LongType).as("s"))
-      .distinct().select(col("s"), col("s").as("v"), lit(0).as("d"))))
+    // blocks), and each level's row count, observed in its [[Pin.round]],
+    // is the convergence test.
+    var levels = Vector(Pin.round(sources
+      .select(col("id").cast(LongType).as("s"))
+      .distinct().select(col("s"), col("s").as("v"), lit(0).as("d")))._1)
     var d = 0
     var go = true
     while (go && d < maxIterations) {
@@ -1352,7 +1346,7 @@ object GraphAlgorithms {
       val frontier = levels.last
       val visited = levels.map(_.select(col("s"), col("v")))
         .reduce(_.unionByName(_))
-      val next = Pin(e.join(frontier.hint("shuffle_hash"),
+      val (next, reached) = Pin.round(e.join(frontier.hint("shuffle_hash"),
           e("src") === frontier("v"))
         .select(col("s"), col("dst").as("v"), lit(d).as("d"))
         // dedup on (s, v) only — d is a per-level constant, so this is
@@ -1361,8 +1355,9 @@ object GraphAlgorithms {
         // the visited side is the hash build (no per-round sort of
         // either side — r14, guide §2.4/§3.1).
         .dropDuplicates(Seq("s", "v"))
-        .join(visited.hint("shuffle_hash"), Seq("s", "v"), "left_anti"))
-      if (next.agg(count(lit(1))).head().getLong(0) == 0L) go = false
+        .join(visited.hint("shuffle_hash"), Seq("s", "v"), "left_anti"),
+        Seq(count(lit(1))))
+      if (reached.getLong(0) == 0L) go = false
       else levels = levels :+ next
     }
     if (go) throw new IllegalStateException(
@@ -1371,67 +1366,69 @@ object GraphAlgorithms {
     levels.reduce(_.unionByName(_))
   }
 
-  /** Symmetrized, deduped, loop-free (u, v) neighbor frame of the HyperBall
-    * loops, pinned keyed on hash(v). One exchange, not two (r14, guide
-    * §2.4): the neighbor dedup rides the hash(v) repartition every hop's
-    * sketch join consumes (hash(v) satisfies the (u, v) dedup clustering),
-    * and Pin.keyed (r15) keeps that layout visible, so no hop re-exchanges
-    * the edge frame. Width stays at defaultParallelism (the deliberate r14
-    * choice): the per-hop sketch unions are CPU-bound, and the pin's width
-    * SETS the loop's parallelism — byte-derived sizing measured
-    * neighborhood_hll 6.3 -> 11.1 s by running the merges 2-3 wide on 32
-    * cores. */
-  private def sketchNeighbors(edges0: DataFrame): DataFrame = {
+  /** The HyperBall loops' start: the symmetrized, deduped, loop-free
+    * (u, v) neighbor frame keyed on hash(v), each node's own sketch
+    * (id, sk) as a [[Pin.round]] keyed on hash(id), and their width. The
+    * dedup rides the one hash(v) exchange, and the edge set is symmetric,
+    * so grouping it on v builds the own sketches with none. The width is
+    * defaultParallelism: the sketch unions are CPU-bound, and byte-derived
+    * sizing measured neighborhood_hll 6.3 -> 11.1 s at 32 cores. */
+  private def sketchStart(edges0: DataFrame,
+      lgK: Int): (DataFrame, DataFrame, Int) = {
+    val w = spark(edges0).sparkContext.defaultParallelism
     val e = edges0.filter(col("src") =!= col("dst"))
-    Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
+    val sym = Pin.keyed(e.select(col("src").as("u"), col("dst").as("v"))
       .unionByName(e.select(col("dst").as("u"), col("src").as("v"))),
-      Seq("v"), _.dropDuplicates(Seq("u", "v")),
-      width = Some(edges0.sparkSession.sparkContext.defaultParallelism))
+      Seq("v"), _.dropDuplicates(Seq("u", "v")), width = Some(w))
+    val own = Pin.round(sym.select(col("v").as("id")).groupBy(col("id"))
+      .agg(hll_sketch_agg(col("id"), lgK).as("sk")), Nil, Seq("id"), w)._1
+    (sym, own, w)
+  }
+
+  /** One HyperBall hop before its pin: `state` with each node's sketch
+    * unioned with its neighbours'. The unions aggregate map-side (not one
+    * sketch per edge crosses the exchange), then re-key at `width`, so the
+    * merge with `state` is co-partitioned and stays hash-placed. */
+  private def sketchHop(sym: DataFrame, state: DataFrame,
+      width: Int): DataFrame = {
+    val grown = sym.join(state.select(col("id"), col("sk")).hint("shuffle_hash"),
+        col("v") === col("id"))
+      .groupBy(col("u"))
+      .agg(hll_union_agg(col("sk"), allowDifferentLgConfigK = true).as("_nsk"))
+      .repartition(width, col("u"))
+    state.join(grown.hint("shuffle_hash"), state("id") === grown("u"), "left")
+      .withColumn("sk", when(col("_nsk").isNull, col("sk"))
+        .otherwise(hll_union(col("sk"), col("_nsk"),
+          allowDifferentLgConfigK = true)))
+      .drop("u", "_nsk")
   }
 
   /** Harmonic centrality ESTIMATES for every node via HyperBall
     * (Boldi & Vigna 2014 — the paper's motivating application):
     * H(v) ≈ Σ_h (|B(v,h)| − |B(v,h−1)|)/h from the per-hop HLL ball
-    * sizes, iterated until the ball sizes stop changing (sketches are
-    * monotone, so the per-node estimates converge exactly in diameter
-    * hops; the cap THROWS). O(2^lgK) state per node, never materializes
+    * sizes, iterated until no ball size changes (sketches are monotone,
+    * so the per-node estimates converge exactly in diameter hops; the
+    * count of changed estimates is observed in each hop's [[Pin.round]];
+    * the cap THROWS). O(2^lgK) state per node, never materializes
     * distances — the 100-TB formulation. */
   def harmonicCentralityHll(edges0: DataFrame, maxIterations: Int = 50,
       lgK: Int = 12): DataFrame = {
-    val sym = sketchNeighbors(edges0)
-    var state = Pin {
-      val init = sym.select(col("u").as("id"))
-        .groupBy(col("id"))
-        .agg(hll_sketch_agg(col("id"), lgK).as("sk"))
-      init.select(col("id"), col("sk"),
-        hll_sketch_estimate(col("sk")).cast(DoubleType).as("est"),
-        lit(0.0).as("acc"))
-    }
-    def totalEst(df: DataFrame): Double =
-      df.agg(sum(col("est"))).head().getDouble(0)
-    var prevTotal = totalEst(state)
+    val (sym, own, w) = sketchStart(edges0, lgK)
+    val est = hll_sketch_estimate(col("sk")).cast(DoubleType)
+    var state = own.select(col("id"), col("sk"), est.as("est"),
+      lit(0.0).as("acc"))
     var h = 0
     var converged = false
     while (!converged && h < maxIterations) {
       h += 1
-      val contrib = sym.join(state, col("v") === col("id"))
-        .groupBy(col("u"))
-        .agg(hll_union_agg(col("sk"), allowDifferentLgConfigK = true)
-          .as("_nsk"))
-      state = Pin(state.join(contrib, state("id") === contrib("u"), "left")
-        .select(col("id"),
-          when(col("_nsk").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("_nsk"),
-              allowDifferentLgConfigK = true)).as("sk"),
-          col("est").as("_pe"), col("acc"))
-        .select(col("id"), col("sk"),
-          hll_sketch_estimate(col("sk")).cast(DoubleType).as("est"),
-          (col("acc") + greatest(
-            hll_sketch_estimate(col("sk")).cast(DoubleType) - col("_pe"),
-            lit(0.0)) / h).as("acc")))
-      val t = totalEst(state) // doubles as the round's pin action
-      converged = t == prevTotal // identical sketches -> identical doubles
-      prevTotal = t
+      // `est` in the expressions is the previous hop's estimate, kept as
+      // `_pe` so the round can count the estimates that moved.
+      val (next, moved) = Pin.round(sketchHop(sym, state, w).select(
+          col("id"), col("sk"), est.as("est"), col("est").as("_pe"),
+          (col("acc") + greatest(est - col("est"), lit(0.0)) / h).as("acc")),
+        Seq(count(when(col("est") =!= col("_pe"), lit(1)))), Seq("id"), w)
+      converged = moved.getLong(0) == 0L
+      state = next
     }
     if (!converged) throw new IllegalStateException(
       s"harmonicCentralityHll did not converge within $maxIterations " +
@@ -1447,31 +1444,21 @@ object GraphAlgorithms {
     * (id, ball_est) — the estimated |B(v, maxHops)|, self included.
     *
     * Scale shape: the symmetrized edge frame is pinned PRE-PARTITIONED on
-    * its join key once, so each round shuffles only the per-node sketch
-    * frame (sketches stay tiny for small balls — DataSketches HLL is
-    * sparse until ~2^lgK distinct items); per round: one join + one
-    * hll_union_agg groupBy + one merge join. Nothing ever materializes a
-    * pair set, which is the whole point vs [[neighborhoodSizes2]] — ball
-    * counting over a 100-TB edge list is feasible exactly because the
-    * state per node is O(2^lgK) bytes regardless of ball size. Estimates
-    * are deterministic (DataSketches HLL has no run-time randomness), so
-    * the accuracy gate in the registered query is stable. */
+    * its join key once and the sketches are keyed at its width
+    * ([[sketchStart]]), so each hop ([[sketchHop]]) shuffles only the
+    * per-node sketch unions (sketches stay tiny for small balls —
+    * DataSketches HLL is sparse until ~2^lgK distinct items). Nothing
+    * ever materializes a pair set, which is the whole point vs
+    * [[neighborhoodSizes2]] — ball counting over a 100-TB edge list is
+    * feasible exactly because the state per node is O(2^lgK) bytes
+    * regardless of ball size. Estimates are deterministic (DataSketches
+    * HLL has no run-time randomness), so the accuracy gate in the
+    * registered query is stable. */
   def neighborhoodHll(edges0: DataFrame, maxHops: Int, lgK: Int = 12): DataFrame = {
-    val sym = sketchNeighbors(edges0)
-    var sk = Pin(sym.select(col("u").as("id"))
-      .groupBy(col("id"))
-      .agg(hll_sketch_agg(col("id"), lgK).as("sk")))
-    var hop = 0
-    while (hop < maxHops) {
-      val contrib = sym.join(sk, col("v") === col("id"))
-        .groupBy(col("u"))
-        .agg(hll_union_agg(col("sk"), allowDifferentLgConfigK = true).as("_nsk"))
-      sk = Pin(sk.join(contrib, sk("id") === contrib("u"), "left")
-        .select(col("id"),
-          when(col("_nsk").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("_nsk"), allowDifferentLgConfigK = true)).as("sk")))
-      hop += 1
-    }
+    val (sym, own, w) = sketchStart(edges0, lgK)
+    var sk = own
+    for (_ <- 1 to maxHops)
+      sk = Pin.round(sketchHop(sym, sk, w), Nil, Seq("id"), w)._1
     sk.select(col("id"), hll_sketch_estimate(col("sk")).as("ball_est"))
   }
 
@@ -1580,14 +1567,13 @@ object GraphAlgorithms {
   }
 
   /** Eigenvector centrality by power iteration (GDS eigenvector parity):
-    * x ← A'x / ‖A'x‖₂ from a uniform start — each round one src-keyed
-    * join + one dst aggregation + one 1-row norm aggregate (which also
-    * materializes the round's lazy pin; the round's transfer is
-    * [[rankContribs]] with a unit share). The edge list is pinned pre-partitioned on src
-    * once, so no iteration re-shuffles it. Nodes with no in-edges (of the requested
-    * types) read 0 — returned analytically, never iterated. Fixed
-    * iteration count (deterministic, oracle-replayable); GDS's tolerance
-    * stop is a caller-side loop away.
+    * x ← A'x / ‖A'x‖₂ from a uniform start — each round a
+    * [[conservedRound]] with a unit share, its Σ raw² observed in the
+    * round's [[Pin.round]]. The edge list is pinned pre-partitioned on src
+    * once, so no iteration re-shuffles it. Nodes with no in-edges (of the
+    * requested types) read 0 — returned analytically, never iterated.
+    * Fixed iteration count (deterministic, oracle-replayable); GDS's
+    * tolerance stop is a caller-side loop away.
     *
     * `directed = false` symmetrizes the edge multiset (GDS UNDIRECTED
     * orientation) — the right mode for DAG-shaped data, where A' is
@@ -1597,22 +1583,17 @@ object GraphAlgorithms {
       relTypes: Seq[String] = Seq.empty,
       directed: Boolean = true): DataFrame = {
     val e = bothWays(validated(edges(graph, relTypes), graph), directed)
-    // Pin.keyed (r15): hash(src)/hash(id) layouts stay visible through the
-    // pins, so no power-iteration round re-exchanges the edge frame.
-    val links = Pin.keyed(e, Seq("src"))
-    val connected = endpointIds(e)
-    var x = connected.select(col("id"), lit(1.0).as("score"))
+    val w = Pin.width(e)
+    val links = Pin.keyed(e, Seq("src"), width = Some(w))
+    var x = endpointIds(e, Some(w)).select(col("id"), lit(1.0).as("score"))
     for (_ <- 1 to iterations) {
-      val contrib = rankContribs(links, x, share = col("score"))
-      val received = Pin(connected.join(contrib, Seq("id"), "left_outer")
-        .select(col("id"), coalesce(col("contrib"), lit(0.0)).as("raw")))
-      // L2 norm materializes the pin — the round's single job.
-      val norm = math.sqrt(
-        received.agg(sum(col("raw") * col("raw"))).head().getDouble(0))
+      val (received, sq) = Pin.round(conservedRound(links, x, col("score"), w),
+        Seq(sum(col("contrib") * col("contrib"))), Seq("id"), w)
       // A graph with edges always moves mass somewhere, but guard the
       // all-zero corner (e.g. a single self-loop filtered upstream).
+      val norm = if (sq.isNullAt(0)) 0.0 else math.sqrt(sq.getDouble(0))
       val denom = if (norm == 0.0) 1.0 else norm
-      x = received.select(col("id"), (col("raw") / lit(denom)).as("score"))
+      x = received.select(col("id"), (col("contrib") / lit(denom)).as("score"))
     }
     withIsolated(graph, x, lit(0.0))
   }
@@ -1625,115 +1606,115 @@ object GraphAlgorithms {
     * so the modularity-gain doubles are bit-reproducible and the DuckDB
     * oracle replays level 1 exactly.
     *
-    * Per sweep: community volumes (one aggregation), neighbor-community
-    * weights for this sweep's movers (one join + aggregation), argmax
-    * window, comm update — all keyed shuffles, state pinned per sweep.
-    * Coarsening contracts communities into super-nodes (one aggregation)
-    * and recurses; the leaf mapping composes per level. Community labels
-    * are node ids (the standard Louvain labeling).
+    * Edges are keyed on hash(u) and node state (strength, community) on
+    * hash(id) at one width, so every join is co-partitioned and a sweep's
+    * exchanges are explicit re-keyings: volumes on the community, mover
+    * edges on the neighbour (to read its community), candidates on that
+    * community (to read its volume), the argmax on the mover; the new
+    * communities are a [[Pin.round]]. Coarsening re-keys tagged edges and
+    * old self-loop weights on the community in one pinned frame. The leaf
+    * mapping composes lazily. Community labels are node ids.
     *
     * Returns (id, community) over the symmetrized input edge list. */
   def louvain(edges0: DataFrame, levels: Int = 2, sweeps: Int = 2,
       resolution: Double = 1.0): DataFrame = {
-    // Symmetric non-self rows (u,v,w) both directions; self-loop weight
-    // accumulates during coarsening as selfw(u).
-    // One exchange, not three (r14, guide §2.4): the old shape deduped
-    // the directed base, then deduped the symmetrized union again (both
-    // full shuffles); one repartition on u + in-place (u, v) dedup yields
-    // the identical symmetric set, and the pinned hash(u) partitioning is
-    // what every sweep's mover join and degree aggregation consume.
+    // Symmetric non-self rows (u,v,w) both directions, deduped on the one
+    // hash(u) exchange; self-loop weight accumulates as selfw(u).
     val base = edges0.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
-    var sym = Pin.keyed(base.select(col("src").as("u"), col("dst").as("v"))
-      .unionByName(base.select(col("dst").as("u"), col("src").as("v"))),
-      Seq("u"), _.dropDuplicates(Seq("u", "v")).withColumn("w", lit(1.0)))
+    val both = base.select(col("src").as("u"), col("dst").as("v"))
+      .unionByName(base.select(col("dst").as("u"), col("src").as("v")))
+    val w = Pin.width(both)
+    var sym = Pin.keyed(both, Seq("u"),
+      _.dropDuplicates(Seq("u", "v")).withColumn("w", lit(1.0)), Some(w))
     var selfw = sym.select(col("u").as("id")).distinct()
       .withColumn("sw", lit(0.0))
     // orig node -> current super-node (starts as identity).
-    var mapping = sym.select(col("u").as("orig"), col("u").as("node")).distinct()
+    var mapping = selfw.select(col("id").as("orig"), col("id").as("node"))
     for (level <- 1 to levels) {
       // Node strength: incident weight + twice the self-loop weight.
       // Anchored on selfw (the full node set) so an all-internal community
       // with no cross edges still iterates — an inner join on the degree
       // frame would silently drop it from the leaf mapping.
       val deg = sym.groupBy(col("u").as("id")).agg(sum(col("w")).as("kd"))
-      val strength = Pin(selfw.join(deg, Seq("id"), "left_outer")
+      val (strength, total) = Pin.round(selfw.join(deg.hint("shuffle_hash"),
+          Seq("id"), "left_outer")
         .select(col("id"),
-          (coalesce(col("kd"), lit(0.0)) + lit(2.0) * col("sw")).as("k")))
-      val m2 = strength.agg(coalesce(sum(col("k")), lit(0.0)))
-        .head().getDouble(0) // = 2m
+          (coalesce(col("kd"), lit(0.0)) + lit(2.0) * col("sw")).as("k")),
+        Seq(coalesce(sum(col("k")), lit(0.0))), Seq("id"), w)
+      val m2 = total.getDouble(0) // = 2m
       if (m2 == 0.0) {
         // No edges left to optimize (degenerate input): stop coarsening.
         return mapping.select(col("orig").as("id"), col("node").as("community"))
       }
-      var comm = Pin(strength.select(col("id"), col("id").as("c")))
+      var comm = strength.select(col("id"), col("id").as("c"))
       for (sweep <- 1 to sweeps) {
-        val ctot = comm.join(strength, Seq("id"))
+        // shuffle_hash: a broadcast of a small side would cost a job.
+        val ck = comm.join(strength.hint("shuffle_hash"), Seq("id"))
+        val ctot = ck.select(col("c"), col("k")).repartition(w, col("c"))
           .groupBy(col("c")).agg(sum(col("k")).as("tot"))
         // This sweep's movers: (id + sweep) even.
-        val movers = comm.filter(pmod(col("id") + lit(sweep.toLong), lit(2L)) === 0)
-          .select(col("id").as("u"), col("c").as("oc"))
-        // Weight from each mover to each neighboring community.
-        val nbrC = sym
-          .join(movers, sym("u") === movers("u"))
-          .drop(movers("u"))
-          .join(comm.select(col("id").as("v"), col("c").as("nc")), Seq("v"))
-          .groupBy(col("u"), col("oc"), col("nc"))
+        val movers = ck.filter(pmod(col("id") + lit(sweep.toLong), lit(2L)) === 0)
+          .select(col("id").as("u"), col("c").as("oc"), col("k"))
+        // Weight from each mover to each neighboring community; staying
+        // put is always a candidate (a 0 row, so kin is 0 when no
+        // neighbor shares the community).
+        val nbr = sym.join(movers.hint("shuffle_hash"), Seq("u"))
+          .select(col("u"), col("v"), col("w"), col("oc"), col("k"))
+          .repartition(w, col("v"))
+          .join(comm.select(col("id").as("v"), col("c").as("nc"))
+            .hint("shuffle_hash"), Seq("v"))
+          .select(col("u"), col("oc"), col("k"), col("nc"), col("w"))
+        val own = movers.select(col("u"), col("oc"), col("k"),
+          col("oc").as("nc"), lit(0.0).as("w"))
+        val cand = nbr.unionByName(own).repartition(w, col("nc"))
+          .groupBy(col("u"), col("oc"), col("k"), col("nc"))
           .agg(sum(col("w")).as("kin"))
-        // Staying put is always a candidate (kin 0 when no neighbor
-        // shares the community).
-        val own = movers.select(col("u"), col("oc"),
-          col("oc").as("nc"), lit(0.0).as("kin"))
-        val cand = nbrC.unionByName(own)
-          .groupBy(col("u"), col("oc"), col("nc"))
-          .agg(max(col("kin")).as("kin"))
-          .join(strength.select(col("id").as("u"), col("k")), Seq("u"))
-          .join(ctot.select(col("c").as("nc"), col("tot")), Seq("nc"))
+          .join(ctot.select(col("c").as("nc"), col("tot")).hint("shuffle_hash"),
+            Seq("nc"))
           .withColumn("score",
             col("kin") - lit(resolution) * col("k") *
               (col("tot") -
                 when(col("nc") === col("oc"), col("k")).otherwise(lit(0.0)))
               / lit(m2))
-        // argmax by (score desc, nc asc) as a struct-max aggregate: the
-        // window formulation SORTED every candidate partition; max over
-        // struct(score, -nc) is map-side-combinable and picks the
-        // identical row (negation reverses the id order, so ties resolve
-        // toward the smaller community for any sign — r14, guide §2.3/§4;
-        // same mode-by-struct-max trick as labelPropagation).
-        val best = cand
+        // argmax by (score desc, nc asc) as a struct-max aggregate (no
+        // window sort; negating nc breaks ties toward the smaller id).
+        val best = cand.select(col("u"), col("score"), col("nc"))
+          .repartition(w, col("u"))
           .groupBy(col("u"))
           .agg(max(struct(col("score"), (-col("nc")).as("_nnc"))).as("_m"))
           .select(col("u").as("id"), (-col("_m._nnc")).as("_newc"))
-        comm = Pin(comm.join(best, Seq("id"), "left_outer")
-          .select(col("id"), coalesce(col("_newc"), col("c")).as("c")))
+        comm = Pin.round(comm.join(best.hint("shuffle_hash"), Seq("id"),
+            "left_outer")
+          .select(col("id"), coalesce(col("_newc"), col("c")).as("c")),
+          Nil, Seq("id"), w)._1
       }
       // Compose the leaf mapping, then contract communities.
-      mapping = Pin(mapping
+      mapping = mapping
         .join(comm.select(col("id").as("node"), col("c")), Seq("node"))
-        .select(col("orig"), col("c").as("node")))
+        .select(col("orig"), col("c").as("node"))
       if (level < levels) {
+        // Edges tagged with both ends' communities and old self-loop
+        // weights with theirs, re-keyed on the (source) community.
         val tagged = sym
-          .join(comm.select(col("id").as("u"), col("c").as("cu")), Seq("u"))
-          .join(comm.select(col("id").as("v"), col("c").as("cv")), Seq("v"))
-        val cross = tagged.filter(col("cu") =!= col("cv"))
+          .join(comm.select(col("id").as("u"), col("c").as("cu"))
+            .hint("shuffle_hash"), Seq("u"))
+          .repartition(w, col("v"))
+          .join(comm.select(col("id").as("v"), col("c").as("cv"))
+            .hint("shuffle_hash"), Seq("v"))
+          .select(col("cu"), col("cv"), col("w"), lit(0.0).as("sw"))
+        val weights = Pin.round(tagged.unionByName(
+            selfw.join(comm.hint("shuffle_hash"), "id")
+            .select(col("c").as("cu"), lit(null).cast(LongType).as("cv"),
+              lit(0.0).as("w"), col("sw")))
+          .repartition(w, col("cu")), Nil, Seq("cu"), w)._1
+        // Internal rows appear in both directions: halve.
+        selfw = weights.groupBy(col("cu").as("id"))
+          .agg((coalesce(sum(when(col("cu") === col("cv"), col("w"))),
+            lit(0.0)) / 2.0 + sum(col("sw"))).as("sw"))
+        sym = Pin.round(weights.filter(col("cu") =!= col("cv"))
           .groupBy(col("cu").as("u"), col("cv").as("v"))
-          .agg(sum(col("w")).as("w"))
-        // Internal non-self rows appear in both directions: halve. Old
-        // self-loop weight rides along per community.
-        val internal = tagged.filter(col("cu") === col("cv"))
-          .groupBy(col("cu").as("id"))
-          .agg((sum(col("w")) / 2.0).as("iw"))
-        val oldSelf = selfw
-          .join(comm.select(col("id"), col("c")), Seq("id"))
-          .groupBy(col("c").as("id")).agg(sum(col("sw")).as("osw"))
-        val nodes = comm.select(col("c").as("id")).distinct()
-        selfw = Pin(nodes
-          .join(internal, Seq("id"), "left_outer")
-          .join(oldSelf, Seq("id"), "left_outer")
-          .select(col("id"),
-            (coalesce(col("iw"), lit(0.0)) +
-              coalesce(col("osw"), lit(0.0))).as("sw")))
-        sym = Pin(cross)
+          .agg(sum(col("w")).as("w")), Nil, Seq("u"), w)._1
       }
     }
     mapping.select(col("orig").as("id"), col("node").as("community"))
@@ -1747,51 +1728,52 @@ object GraphAlgorithms {
     * arithmetic stays below 2^63 so wrap-free on both engines).
     * Returns (walk_id, start, step, node) — step 0 is the start node.
     *
-    * Scale shape: the neighbor table is ranked ONCE (one window over the
-    * symmetrized edge list, partitioned by node) and pinned partitioned
-    * on the join key; each step is one equi-join of the O(starts·walks)
-    * state frame against it — no per-walk driver loop, no RNG state
-    * outside the hash. Walks ending on a sink (directed mode) stop: the
-    * inner join drops them. */
+    * Scale shape: the neighbor table is deduped and ranked ONCE (one
+    * window over the symmetrized edge list, partitioned by node) and
+    * pinned partitioned on the join key; each step is one equi-join of the
+    * O(starts·walks) state frame against it — no per-walk driver loop, no
+    * RNG state outside the hash. Each walk carries its path, so the corpus
+    * is the last step's paths exploded: the loop pins nothing and runs no
+    * action, and the steps are one query. Walks ending on a sink
+    * (directed mode) stop: they keep their path and match no neighbour. */
   def randomWalks(edges0: DataFrame, starts: DataFrame,
       walksPerStart: Int = 4, steps: Int = 8, seed: Long = 42L,
       undirected: Boolean = true): DataFrame = {
     val MOD = 1000000007L // fits every intermediate product in a Long
-    val e0 = edges0.select(col("src"), col("dst")).distinct()
-    val sym = if (undirected) bothWays(e0).distinct() else e0
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
     // Pin.keyed (r15): hash(src) layout stays visible so each step's
     // cur-join consumes it instead of re-exchanging the neighbor frame.
-    // The windows need hash(src) clustering too, so the one explicit
-    // exchange feeds windows, pin and every step (the windows' sort is
-    // per-partition; placement stays hash(src)).
-    val nbr = Pin.keyed(sym, Seq("src"), _
+    // The dedup and the windows need hash(src) clustering too, so the one
+    // explicit exchange feeds dedup, windows, pin and every step (the
+    // windows' sort is per-partition; placement stays hash(src)).
+    val nbr = Pin.keyed(bothWays(edges0.select(col("src"), col("dst")),
+        directed = !undirected), Seq("src"), _
+      .dropDuplicates(Seq("src", "dst"))
       .withColumn("idx", row_number().over(w))
       .withColumn("deg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
-    // State: one row per live walk. walk_id = start·walksPerStart + w.
+    // State: one row per walk. walk_id = start·walksPerStart + w.
     var state = starts.select(col("id").cast(LongType).as("start"))
       .distinct()
       .crossJoin(spark(edges0).range(walksPerStart).select(col("id").as("_w")))
       .select((col("start") * walksPerStart + col("_w")).as("walk_id"),
-        col("start"), col("start").as("cur"))
-    var out = state.select(col("walk_id"), col("start"),
-      lit(0).as("step"), col("cur").as("node"))
+        col("start"), col("start").as("cur"), array(col("start")).as("path"))
     for (t <- 1 to steps) {
       val h = pmod(
         pmod(col("walk_id"), lit(MOD)) * lit(31L) + lit(t.toLong) * lit(7919L)
           + pmod(col("cur"), lit(MOD)) * lit(2654435761L % MOD) + lit(seed),
         lit(MOD))
-      val stepped = state.withColumn("_h", h)
+      // A stopped walk's cur is null: it matches nothing again.
+      state = state.withColumn("_h", h)
         .join(nbr, col("cur") === nbr("src") &&
-          nbr("idx") === pmod(col("_h"), nbr("deg")) + lit(1L))
-        .select(col("walk_id"), col("start"), col("dst").as("cur"))
-      state = Pin(stepped)
-      out = out.unionByName(state.select(col("walk_id"), col("start"),
-        lit(t).as("step"), col("cur").as("node")))
+          nbr("idx") === pmod(col("_h"), nbr("deg")) + lit(1L), "left_outer")
+        .select(col("walk_id"), col("start"), col("dst").as("cur"),
+          when(col("dst").isNull, col("path"))
+            .otherwise(concat(col("path"), array(col("dst")))).as("path"))
     }
-    out
+    state.select(col("walk_id"), col("start"),
+      posexplode(col("path")).as(Seq("step", "node")))
   }
 
   /** ArticleRank (GDS articleRank parity in shape): PageRank's recurrence
@@ -1802,23 +1784,23 @@ object GraphAlgorithms {
     * avgOutDeg = |E| / |connected nodes|, no dangling-mass
     * redistribution (mass is NOT conserved in this recurrence — the
     * normalizer is deliberately too large), initial rank 1.0, isolated
-    * nodes closed-form at `1 - damping`. Scale shape: [[degreeLinks]]
-    * pinned pre-partitioned on src, one [[rankContribs]] round (keyed join
-    * + aggregation), isolated nodes never iterate. */
+    * nodes closed-form at `1 - damping`. Scale shape: [[pageRank]]'s
+    * [[conservedRound]] at the links' width, isolated nodes never
+    * iterate. */
   def articleRank(graph: PropertyGraph, iterations: Int = 10,
       damping: Double = 0.85, relTypes: Seq[String] = Seq.empty): DataFrame = {
     val e = validated(edges(graph, relTypes), graph)
-    val links = degreeLinks(e)
-    val connected = endpointIds(e)
+    val w = Pin.width(e)
+    val links = degreeLinks(e, Some(w))
+    val connected = endpointIds(e, Some(w))
     val nConn = connected.count()
     val avgDeg = if (nConn == 0L) 0.0 else e.count().toDouble / nConn
     var ranks = connected.select(col("id"), lit(1.0).as("rank"))
     for (_ <- 1 to iterations) {
-      val contribs = rankContribs(links, ranks,
-        col("rank") / (col("deg") + lit(avgDeg)))
-      ranks = Pin(connected.join(contribs, Seq("id"), "left_outer")
-        .select(col("id"), (lit(1.0 - damping) +
-          lit(damping) * coalesce(col("contrib"), lit(0.0))).as("rank")))
+      val (received, _) = Pin.round(conservedRound(links, ranks,
+        col("rank") / (col("deg") + lit(avgDeg)), w), Nil, Seq("id"), w)
+      ranks = received.select(col("id"),
+        (lit(1.0 - damping) + lit(damping) * col("contrib")).as("rank"))
     }
     withIsolated(graph, ranks, lit(1.0 - damping))
   }
@@ -1864,10 +1846,11 @@ object GraphAlgorithms {
     // into the a-side assignment join below.
     val canon = undirectedPairs(edges0)
       .repartition(col("a")).dropDuplicates(Seq("a", "b"))
-    val tagged = Pin(canon
+    val (tagged, size) = Pin.round(canon
       .join(assign.select(col("id").as("a"), col("community").as("ca")), Seq("a"))
-      .join(assign.select(col("id").as("b"), col("community").as("cb")), Seq("b")))
-    val m = tagged.count().toDouble
+      .join(assign.select(col("id").as("b"), col("community").as("cb")), Seq("b")),
+      Seq(count(lit(1))))
+    val m = size.getLong(0).toDouble
     val intra = tagged.filter(col("ca") === col("cb"))
       .groupBy(col("ca").as("community")).agg(count(lit(1)).as("mc"))
     val degSum = tagged

@@ -8,11 +8,18 @@ import org.apache.spark.storage.StorageLevel
   * (the materialization the reference's InsertCachingOperators performs with
   * `cache()`, okapi-relational/.../RelationalOptimizer.scala:42-93).
   *
-  * Local master (tests, bench, single-JVM): lazy `localCheckpoint` — the
+  * Local master (tests, bench, single-JVM): `localCheckpoint` — the
   * truncated plan re-reads executor-local blocks, and the blocks are dropped
   * by the ContextCleaner as soon as the DataFrame becomes unreachable, so a
   * long-lived session running many queries does not accumulate cache-manager
-  * entries.
+  * entries. [[apply]] and [[keyed]] ask for a non-eager checkpoint, but it
+  * is not lazy under AQE: building it takes the frame's RDD, and the
+  * adaptive plan runs every shuffle and broadcast stage of the frame right
+  * then, so a pin of a frame with an exchange runs jobs when it is built;
+  * only the final stage waits for the first action that reads the pin.
+  * [[round]], the entry point for algorithm loop state, is eager: it runs
+  * the final stage too, in one action that also observes the round's
+  * scalars.
   *
   * Cluster master: `persist(MEMORY_AND_DISK)` — localCheckpoint blocks live
   * ONLY on the executors that computed them, so losing a single executor
@@ -38,7 +45,7 @@ object Pin {
     * operation), and pins the result so the planner still SEES the
     * hash(keys) layout afterwards. Every per-round consumer joining on
     * `keys` then skips the re-exchange that a plain
-    * `Pin(df.repartition(...))` pays each round — under lazy
+    * `Pin(df.repartition(...))` pays each round — under a plain
     * localCheckpoint the partitioning metadata is otherwise lost
     * (`UnknownPartitioning(0)`), which r14's "pinned pre-partitioned"
     * comments wrongly assumed survived.

@@ -517,7 +517,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         }
     }
     // The node/rel tables of the constructed graph all derive from this
-    // frame, so it must materialize once (Pin chooses lazy localCheckpoint
+    // frame, so it must materialize once (Pin chooses localCheckpoint
     // locally, persist on a cluster).
     val mat = Pin(df)
 

@@ -717,23 +717,47 @@ class AlgosSpec extends SparkTestBase {
   }
 
   test("rank round consumes the pinned link partitioning: no edge-side exchange") {
-    // Shared by pageRank and personalizedPageRank: the (large) link frame
-    // shuffles once at pin time; each round's contribution join reuses the
-    // hash(src) partitioning. Two exchanges are legitimate (the small
-    // ranks frame, the per-dst aggregation) — a third means the refactored
-    // join re-shuffles the links per round.
+    // conservedRound is the round of pageRank, pageRankWeighted,
+    // personalizedPageRank, eigenvectorCentrality and articleRank. Links
+    // and ranks are keyed pins at one width w, narrower than
+    // shuffle.partitions included: EnsureRequirements re-exchanges a
+    // narrower keyed side joined with a side that needs an exchange, so a
+    // second exchange here means the round lost its co-partitioning. The
+    // one exchange is the round's hash(id) re-keying at w, with or without
+    // a carried column (personalizedPageRank's restart share p).
     withStaticPlans {
+      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      import org.apache.spark.sql.execution.RDDScanExec
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-      val links = graft.impl.Pin(e
-        .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-        .repartition(col("src")))
-      val ranks = Seq((1L, 1.0), (2L, 1.0)).toDF("id", "rank")
-      val plan = GraphAlgorithms.rankContribs(links, ranks)
-        .queryExecution.executedPlan
-      val exchanges = plan.collect { case s: ShuffleExchangeExec => s }
-      assert(exchanges.length <= 2,
-        s"expected <=2 exchanges (ranks + agg), got ${exchanges.length}:\n$plan")
+      val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      for (w <- Seq(1, 2, n).distinct; carried <- Seq(Nil, Seq("p"))) {
+        val links = GraphAlgorithms.degreeLinks(e, Some(w))
+        val ranks = graft.impl.Pin.keyed(e.select(col("src").as("id")),
+          Seq("id"), _.distinct().select(col("id"), lit(1.0).as("rank"),
+            lit(0.5).as("p")), Some(w))
+        val round = GraphAlgorithms.conservedRound(links, ranks,
+          col("rank") / col("deg"), w, carried)
+        val plan = round.queryExecution.executedPlan
+        val exchanges = plan.collect { case s: ShuffleExchangeExec => s }
+        assert(exchanges.map(_.outputPartitioning.numPartitions) === Seq(w),
+          s"width $w, carried $carried:\n$plan")
+        exchanges.head.outputPartitioning match {
+          case h: HashPartitioning =>
+            assert(h.expressions.flatMap(_.references.map(_.name)) === Seq("id"))
+          case other => // a 1-wide repartition plans as SinglePartition
+            assert(w === 1, s"width $w exchange is $other")
+        }
+        // links once, ranks twice (the join side and the zero rows)
+        val scans = plan.collect { case r: RDDScanExec => r.outputPartitioning }
+        assert(scans.size === 3 &&
+          scans.forall(_.isInstanceOf[HashPartitioning]), s"unkeyed scan:\n$plan")
+        // 3 -> 1 (deg 1), 1 -> 2 and 1 -> 3 (deg 2), 2 -> 3 (deg 1)
+        val got = round.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+        val p = carried.map(_ => 0.5)
+        assert(got === Map(1L -> (1.0 +: p), 2L -> (0.5 +: p),
+          3L -> (1.5 +: p)))
+      }
     }
   }
 

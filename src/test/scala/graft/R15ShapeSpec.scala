@@ -103,17 +103,19 @@ class R15ShapeSpec extends SparkTestBase {
   test("pagerank round body: pinned links frame is NOT re-exchanged") {
     withSQLConf("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val links = graft.impl.Pin.keyed(
-        Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst"), Seq("src"),
-        ep => ep.join(ep.groupBy(col("src"))
-          .agg(count(lit(1)).as("deg")), "src"))
+      val e = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
+      val w = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val links = GraphAlgorithms.degreeLinks(e, Some(w))
       val ranks = Seq((1L, 1.0), (2L, 1.0), (3L, 1.0)).toDF("id", "rank")
-      val contribs = GraphAlgorithms.rankContribs(links, ranks)
+      val round = GraphAlgorithms.conservedRound(links, ranks,
+        col("rank") / col("deg"), w)
       val (exchanges, claims) = exchangesAndClaims(
-        contribs.queryExecution.executedPlan)
+        round.queryExecution.executedPlan)
+      // the unpinned ranks frame and the round's hash(id) re-keying; a
+      // third exchange means the links side lost its claimed layout.
       assert(claims.nonEmpty && exchanges.length === 2,
-        s"expected claimed links scan + 2 exchanges (ranks, groupBy):\n" +
-          contribs.queryExecution.executedPlan)
+        s"expected claimed links scan + 2 exchanges (ranks, re-keying):\n" +
+          round.queryExecution.executedPlan)
     }
   }
 
