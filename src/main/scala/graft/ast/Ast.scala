@@ -215,9 +215,12 @@ case class FromGraph(ref: GraphRef) extends Clause
   * the reference has no procedure surface). */
 case class CallProc(name: String, args: Seq[Expr],
     yields: Seq[String], optional: Boolean = false) extends Clause
-/** CALL { [WITH imports] ... RETURN ... }: a subquery executed once per
+/** CALL { [WITH imports] ... [RETURN ...] }: a subquery executed once per
   * driving row (correlated via the importing WITH) or once in total
-  * (uncorrelated). Beyond-parity — the reference has no subquery clause. */
+  * (uncorrelated). A body without RETURN is a unit (updating) subquery;
+  * FOREACH (x IN list | updates) parses to the unit body
+  * `CALL (*) { UNWIND list AS x updates }`. Beyond-parity — the reference
+  * has no subquery clause. */
 case class CallSubquery(inner: Query,
     optional: Boolean = false) extends Clause
 
@@ -260,10 +263,6 @@ case class Delete(exprs: Seq[Expr], detach: Boolean) extends Clause
 /** MERGE pattern [ON CREATE SET ...] [ON MATCH SET ...]. */
 case class Merge(part: PatternPart, onCreate: Seq[SetItem],
     onMatch: Seq[SetItem]) extends Clause
-/** FOREACH (x IN list | updates): apply write clauses once per list
-  * element; the driving table's cardinality is unchanged. */
-case class Foreach(variable: String, list: Expr, updates: Seq[Clause])
-    extends Clause
 
 /** CONSTRUCT [ON graph*] [NEW pattern]* [SET ...]* [RETURN GRAPH]: build a
   * new graph from the current driving table (reference

@@ -138,8 +138,6 @@ object ExprOps {
     case Delete(exprs, _) => Some(exprs.flatMap(varRefs).toSet)
     case Merge(part, onCreate, onMatch) =>
       Some(patternRefs(part) ++ (onCreate ++ onMatch).flatMap(setItemRefs))
-    case Foreach(v, list, updates) =>
-      Some(varRefs(list) ++ updates.flatMap(clauseRefs(_).getOrElse(Set.empty)) + v)
     case CallSubquery(inner, _) =>
       // Over-approximate with everything the inner query references —
       // only its importing WITH actually reads outer scope.

@@ -641,7 +641,7 @@ class ExprCompiler(header: RecordHeader, schema: StructType,
   } yield lc != rc).getOrElse(false)
 
   /** Path values are (nodes, rels) structs bound by the planner. */
-  private def isPathStruct(e: Expr): Boolean = inferType(e) match {
+  private[impl] def isPathStruct(e: Expr): Boolean = inferType(e) match {
     case Some(StructType(fs)) => fs.map(_.name).toSeq == Seq("nodes", "rels")
     case _ => false
   }

@@ -345,7 +345,11 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       case (Construct(on, news, sets, clones), _) =>
         requireNoWrites("CONSTRUCT")
         constructedGraph = Some(planConstruct(ctx, on, news, sets, clones))
-      case (w, _) if isWriteClause(w) =>
+      // A CALL { } body, unit or RETURNing, and FOREACH (a unit body); a
+      // body that writes leaves the ambient graph at the written state.
+      case (cs: CallSubquery, _) =>
+        ctx = planCallSubquery(ctx, cs.inner, cs.optional)
+      case (w, _) if writes(w) =>
         ctx = planWriteClause(ctx, w)
         // The ambient graph becomes the written state, so everything after
         // the clause boundary — element-binding in RETURN and (per
@@ -354,25 +358,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         // tables. The write frames are pinned, so re-scanning them from a
         // later MATCH cannot re-evaluate the fresh-id generator.
         graph = buildWrittenGraph()
-      case (cs: CallSubquery, _) =>
-        // After writes the ambient graph IS the written state, so the
-        // (read-only) body scans post-write tables like MATCH does.
-        // A unit body (no RETURN, performs updates — the CALL { } IN
-        // TRANSACTIONS shape) writes per driving row instead; the graph
-        // becomes the written state inside planUnitWriteCall.
-        if (isUnitWriteSub(cs.inner)) {
-          if (cs.optional) throw new CypherCompileException(
-            "OPTIONAL CALL { } with a unit (updating) body is not supported",
-            CE.SemanticError, CE.UnsupportedExpression)
-          ctx = planUnitWriteCall(ctx, cs.inner.first)
-        } else {
-          ctx = planCallSubquery(ctx, cs.inner, cs.optional)
-          // A RETURNing body with writes: the ambient graph becomes the
-          // written state, like any top-level write clause.
-          val arms = cs.inner.first +: cs.inner.rest.map(_._2)
-          if (arms.exists(a => containsWriteClause(a.clauses)))
-            graph = buildWrittenGraph()
-        }
       case (reading, i) =>
         // Clauses that read the (written) ambient graph or only reshape
         // the driving table are legal after writes; FROM GRAPH/CONSTRUCT
@@ -1548,22 +1533,11 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
         case Some(ListNodeKind(_)) => Some(false)
         case _ => None
       }
-    def isPathStructVar(p: String): Boolean =
-      ctx0.header.get(ValueSlot(p)).exists { c =>
-        ctx0.df.schema.fields.find(_.name == c).map(_.dataType) match {
-          case Some(StructType(fs)) => fs.map(_.name).toSeq == Seq("nodes", "rels")
-          case _ => false
-        }
-      }
-    // A computed path value (e.g. desugared shortestPath(...)): a struct
-    // (nodes, rels) by static type.
-    def isPathTyped(pe: Expr): Boolean = ctx0.compiler.inferType(pe) match {
-      case Some(StructType(fs)) => fs.map(_.name).toSeq == Seq("nodes", "rels")
-      case _ => false
-    }
-    val needs = entityListNeeds(e, listKind, isPathTyped).filter {
-      case (Var(p), _) => listKind(p).isDefined || isPathStructVar(p)
-      case _ => true // non-var targets already passed isPathTyped
+    // A path value, bound or computed (e.g. desugared shortestPath(...)).
+    val isPath = ctx0.compiler.isPathStruct _
+    val needs = entityListNeeds(e, listKind, isPath).filter {
+      case (Var(p), _) => listKind(p).isDefined || isPath(Var(p))
+      case _ => true // non-var targets already passed isPath
     }
     if (needs.isEmpty) return (ctx0, e)
     var ctx = ctx0
@@ -1571,9 +1545,6 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     needs.toSeq.sortBy(_.toString).foreach { case key @ (pe, isRels) =>
       val arr = pe match {
         case Var(p) if listKind(p).isDefined => col(ctx.header.col(PathSlot(p)))
-        case Var(p) if isPathStructVar(p) =>
-          col(ctx.header.col(ValueSlot(p)))
-            .getField(if (isRels) "rels" else "nodes")
         case _ => ctx.compiler.compile(pe)
           .getField(if (isRels) "rels" else "nodes")
       }
@@ -1582,7 +1553,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       replacement(key) = listVar
     }
     def swap(l: Expr, binder: String, bodies: Seq[Expr]): Option[Expr] =
-      entityListTarget(l, listKind, isPathTyped).filter(t =>
+      entityListTarget(l, listKind, isPath).filter(t =>
         binderUsedAsEntity(binder, bodies) && replacement.contains(t))
         .map(t => Var(replacement(t)))
     val rewritten = ExprOps.transformUp(e) {
@@ -2546,26 +2517,16 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     // UNWIND over nodes()/relationships() of a path — or over a
     // var-length relationship-list binder — unwinds ENTITIES (Neo4j), not
     // bare ids: materialize the entity-struct list first, then explode.
-    def isPathTyped(pe: Expr): Boolean = ctx.compiler.inferType(pe) match {
-      case Some(StructType(fs)) => fs.map(_.name).toSeq == Seq("nodes", "rels")
-      case _ => false
-    }
-    def isPathVar(pe: Expr): Boolean = pe match {
-      case Var(p) => ctx.header.kindOf(p) match {
-        case Some(ListRelKind(_)) | Some(ListNodeKind(_)) => true
-        case _ => ctx.header.get(ValueSlot(p)).exists { c =>
-          ctx.df.schema.fields.find(_.name == c).map(_.dataType) match {
-            case Some(StructType(fs)) =>
-              fs.map(_.name).toSeq == Seq("nodes", "rels")
-            case _ => false
-          }
-        }
+    def isGroupList(pe: Expr): Boolean = pe match {
+      case Var(p) => ctx.header.kindOf(p).exists {
+        case ListRelKind(_) | ListNodeKind(_) => true
+        case _ => false
       }
       case _ => false
     }
     val entitySrc: Option[(Column, Boolean)] = e match {
       case FuncCall(f @ ("nodes" | "relationships"), Seq(pe), _)
-          if isPathTyped(pe) || isPathVar(pe) =>
+          if ctx.compiler.isPathStruct(pe) || isGroupList(pe) =>
         Some((ctx.compiler.compile(e), f == "relationships"))
       case Var(r) if ctx.header.kindOf(r).exists(_.isInstanceOf[ListRelKind]) =>
         Some((ctx.compiler.compile(e), true))
@@ -2975,66 +2936,15 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     case c => (Seq.empty[String], c)
   }
 
-  private def isWriteClause(c: Clause): Boolean =
-    c.isInstanceOf[Create] || c.isInstanceOf[SetClause] ||
-      c.isInstanceOf[Remove] || c.isInstanceOf[Delete] ||
-      c.isInstanceOf[Merge] || c.isInstanceOf[Foreach]
-
-  /** A unit CALL { } body: single arm, no RETURN, at least one update
-    * clause — the CALL { } IN TRANSACTIONS shape (Neo4j "unit subquery"). */
-  private def isUnitWriteSub(inner: Query): Boolean =
-    inner.rest.isEmpty && {
-      val body = inner.first.clauses.dropWhile {
-        case w: With => w.items.forall(i =>
-          i.alias.isEmpty && i.expr.isInstanceOf[Var])
-        case _ => false
-      }
-      inner.first.clauses.nonEmpty &&
-        !inner.first.clauses.exists(_.isInstanceOf[Return]) &&
-        body.exists(isWriteClause)
-    }
-
-  /** Plan a unit (updating, RETURN-less) CALL { } body: the body runs once
-    * per driving row over the imported variables only (openCypher subquery
-    * scoping), its bindings are discarded, the driving rows pass through
-    * unchanged, and the ambient graph becomes the written state — exactly
-    * the top-level write-clause contract, restricted to the import scope.
-    * Neo4j CallSubqueryAcceptance "unit subquery" semantics; batching
-    * (IN TRANSACTIONS) is commit shape only and is parsed separately. */
-  private def planUnitWriteCall(ctx0: Ctx, sq: SingleQuery): Ctx = {
-    val (imports, body) = splitCallImports(ctx0, sq.clauses)
-    imports.foreach { v =>
-      if (!ctx0.header.kinds.contains(v)) throw new CypherCompileException(
-        s"CALL { } imports unbound variable $v",
-        CE.SyntaxError, CE.UndefinedVariable)
-    }
-    // Body frame: the imported slots, one row per driving row (an
-    // uncorrelated body over N driving rows still executes N times —
-    // a zero-column frame keeps the multiplicity without the bindings).
-    var sub =
-      if (ctx0.isUnit) unitCtx
-      else if (imports.isEmpty) Ctx(ctx0.df.select(), RecordHeader.empty)
-      else {
-        val slots = ctx0.header.slots.filter {
-          case (s, _) => imports.contains(s.owner) }
-        Ctx(ctx0.df.select(slots.values.toSeq.distinct.map(col): _*),
-          RecordHeader(slots,
-            ctx0.header.kinds.filter { case (v, _) => imports.contains(v) }))
-      }
-    body.zipWithIndex.foreach {
-      case (w, _) if isWriteClause(w) =>
-        sub = planWriteClause(sub, w)
-        graph = buildWrittenGraph()
-      case (Finish, _) => ()
-      case (c, i) if isReadingClause(c) =>
-        sub = planReadingClause(sub, c, readBy(body.drop(i + 1)))
-      case (other, _) => throw new CypherCompileException(
-        s"CALL { } clause ${other.getClass.getSimpleName} is not supported " +
-          "in a unit (updating) body",
-        CE.SemanticError, CE.UnsupportedExpression)
-    }
-    ctx0
+  /** Does a clause write, directly or in a nested CALL { } (and so
+    * FOREACH) body? */
+  private def writes(c: Clause): Boolean = c match {
+    case _: Create | _: Merge | _: SetClause | _: Remove | _: Delete => true
+    case cs: CallSubquery => callArms(cs.inner).exists(_.clauses.exists(writes))
+    case _ => false
   }
+
+  private def callArms(q: Query): Seq[SingleQuery] = q.first +: q.rest.map(_._2)
 
   /** The key a CALL { } body correlates on: `keyed` is the driving rows
     * with the key column `key` added (none when uncorrelated); `perRow`
@@ -3053,7 +2963,9 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     *  - it writes, so it runs once per driving row (openCypher), or an
     *    import holds a map, which Spark can neither group nor compare (a
     *    driving-table column): a row id. It is pinned because the body and
-    *    the join back must see the same generated ids. */
+    *    the join back must see the same generated ids.
+    * A unit body (no RETURN) needs no key: it plans over every driving row
+    * (`perRow` with no key) and nothing joins back. */
   private case class CallKey(keyed: Ctx, key: Option[String], perRow: Boolean)
 
   private def callKey(ctx0: Ctx, imports: Seq[String], writes: Boolean): CallKey = {
@@ -3076,29 +2988,40 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       ctx0.header.withSlot(ValueSlot(k)).withVar(k, ValueKind)), Some(k), perRow)
   }
 
-  /** CALL { [WITH imports] body RETURN items }, each UNION arm with its own
-    * importing WITH. Every arm plans once, INLINE (Catalyst sees one join
-    * tree, not one subplan per driving row), over the key frame of
-    * [[callKey]], and yields its RETURN rows per key. A UNION dedups them
-    * per key, so its distinct applies per driving row. [[joinShared]] then
-    * joins them back onto the driving rows on the key: inner, so a driving
-    * row with no body rows drops (CALL { } semantics), and left-outer under
-    * OPTIONAL CALL and for a global aggregate, whose missing key reads as
-    * the aggregate of no rows. */
+  /** CALL { [WITH imports] body [RETURN items] }, each UNION arm with its
+    * own importing WITH; FOREACH parses to a unit body. Every arm plans
+    * once, INLINE (Catalyst sees one join tree, not one subplan per
+    * driving row).
+    *  - A unit body (one arm, no RETURN: the CALL { } IN TRANSACTIONS
+    *    shape and FOREACH) plans over the import projection of the driving
+    *    rows, which pass through unchanged.
+    *  - A RETURNing arm plans over the key frame of [[callKey]] and yields
+    *    its RETURN rows per key. A UNION dedups them per key, so its
+    *    distinct applies per driving row. [[joinShared]] then joins them
+    *    back onto the driving rows on the key: inner, so a driving row with
+    *    no body rows drops (CALL { } semantics), and left-outer under
+    *    OPTIONAL CALL and for a global aggregate, whose missing key reads
+    *    as the aggregate of no rows.
+    * After the body, [[refreshWritten]] re-reads the outer bindings it
+    * may have written. */
   private def planCallSubquery(ctx0: Ctx, inner: Query,
       optional: Boolean = false): Ctx = {
     checkUnionMix(inner)
     if (optional && inner.rest.nonEmpty) throw new CypherCompileException(
       "OPTIONAL CALL { } with a UNION body is not supported",
       CE.SemanticError, CE.UnsupportedExpression)
-    val arms = inner.first +: inner.rest.map(_._2)
+    val arms = callArms(inner)
     val imports = arms.flatMap(a => splitCallImports(ctx0, a.clauses)._1).distinct
     imports.foreach { v =>
       if (!ctx0.header.kinds.contains(v)) throw new CypherCompileException(
         s"CALL { } imports unbound variable $v",
         CE.SyntaxError, CE.UndefinedVariable)
     }
-    val ck = callKey(ctx0, imports, arms.exists(a => containsWriteClause(a.clauses)))
+    if (inner.rest.isEmpty && !inner.first.clauses.lastOption.exists(_.isInstanceOf[Return])) {
+      planCallArm(CallKey(ctx0, None, perRow = true), inner.first)
+      return refreshWritten(ctx0, ctx0.header, inner.first.clauses)
+    }
+    val ck = callKey(ctx0, imports, arms.exists(_.clauses.exists(writes)))
     val results = arms.map(planCallArm(ck, _))
     def complete(onto: Ctx, arm: (Ctx, Option[Seq[(String, Column)]]),
         how: String): Ctx =
@@ -3140,36 +3063,7 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
       Ctx(joined.df.drop(joined.header.colsOf(k): _*), RecordHeader(
         joined.header.slots.filterNot(_._1.owner == k), joined.header.kinds - k))
     }
-    // Body writes can touch outer bindings (an imported var directly, or
-    // any outer entity via a body-local alias); refresh the touched
-    // (var, key) pairs from the written state so post-CALL reads observe
-    // the final values — the FOREACH refresh rule, applied to the joined
-    // result frame.
-    val pairs = arms.flatMap(a => writeSetKeys(a.clauses)).distinct
-    if (pairs.isEmpty) res
-    else {
-      val outerEnt = ctx0.header.kinds.toSeq.collect {
-        case (v, NodeKind(_)) => v
-        case (v, RelKind(_)) => v
-      }
-      val touched = pairs.flatMap { case (v, kOpt) =>
-        val targets =
-          if (ctx0.header.kinds.contains(v)) Seq(v) else outerEnt
-        targets.flatMap { tv =>
-          kOpt match {
-            case Some(k) => Seq((tv, k))
-            case None => ctx0.header.kindOf(tv) match {
-              case Some(NodeKind(_)) =>
-                wNodes.flatMap(_.propTypes.keys).distinct.map((tv, _))
-              case Some(RelKind(_)) =>
-                wRels.flatMap(_.propTypes.keys).distinct.map((tv, _))
-              case _ => Seq.empty
-            }
-          }
-        }
-      }
-      refreshWrittenProps(res, touched)
-    }
+    refreshWritten(res, ctx0.header, arms.flatMap(_.clauses))
   }
 
   /** One CALL { } arm over the key frame `ck`. The body sees the key and
@@ -3179,63 +3073,65 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     * key. Returns the RETURN rows with the key and, for a global aggregate
     * (one row per key, even for a key with no body rows), what its columns
     * read on such a key where Spark's null is wrong: count and sum 0,
-    * collect []. */
+    * collect []. A unit arm (no key, per row) must write; its rows are the
+    * body's last frame, which nothing reads. */
   private def planCallArm(ck: CallKey, inner: SingleQuery)
       : (Ctx, Option[Seq[(String, Column)]]) = {
     val CallKey(keyed, key, perRow) = ck
     val (imports, body) = splitCallImports(keyed, inner.clauses)
     val ret = body.lastOption match {
-      case Some(r: Return) => r
+      case Some(r: Return) => Some(r)
+      case _ if key.isEmpty && perRow && body.exists(writes) => None
       case _ => throw new CypherCompileException(
         "CALL { } must end in RETURN",
         CE.SyntaxError, CE.InvalidSyntax)
     }
-    val clauses = body.init
+    val clauses = body.dropRight(ret.size)
     val keyItem = key.map(k => ReturnItem(Var(k), None)).toSeq
     val scope = imports.toSet ++ key
     val slots = keyed.header.slots.filter { case (s, _) => scope(s.owner) }
-    var sub = key match {
-      case None => unitCtx
-      case Some(k) =>
+    var sub =
+      if (key.isEmpty && !perRow) unitCtx
+      else {
         // One row per value key, hash-partitioned on the key alone, so a
         // per-key aggregate in the body needs no second exchange.
         val df = keyed.df.select(slots.values.toSeq.distinct.map(col): _*)
-        Ctx(if (perRow) df else df.dropDuplicates(keyed.header.col(ValueSlot(k))),
+        Ctx(if (perRow) df else df.dropDuplicates(keyed.header.col(ValueSlot(key.get))),
           RecordHeader(slots, keyed.header.kinds.filter { case (v, _) => scope(v) }))
-    }
+      }
     clauses.zipWithIndex.foreach { case (c, i) => c match {
-      // Nested CALL { }: correlates on this body's frame; its join back
-      // keeps this body's key.
+      // Nested CALL { } or FOREACH: correlates on this body's frame; its
+      // join back keeps this body's key.
       case cs: CallSubquery =>
         sub = planCallSubquery(sub, cs.inner, cs.optional)
-      // A write body is keyed per driving row; the caller refreshes stale
-      // outer bindings.
-      case c if isWriteClause(c) =>
+      case c if writes(c) =>
         sub = planWriteClause(sub, c); graph = buildWrittenGraph()
       case w: With if key.isDefined =>
         sub = planProjection(sub, w.distinct, w.star, w.items ++ keyItem,
           w.orderBy, w.skip, w.limit, w.where, perKey = key)._1
+      case Finish => ()
       case c if isReadingClause(c) =>
-        sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) :+ ret))
+        sub = planReadingClause(sub, c, readBy(clauses.drop(i + 1) ++ ret))
       case other => throw new CypherCompileException(
         s"CALL { } clause ${other.getClass.getSimpleName} is not supported",
         CE.SemanticError, CE.UnsupportedExpression)
     }}
+    val r = ret.getOrElse(return (sub, None))
     // RETURN * exports the body-local variables: the imports are bound
     // outside already, so exporting them would always clash (documented
     // in tck_blacklist.md).
     val retItems =
-      if (!ret.star) ret.items
+      if (!r.star) r.items
       else {
         val starVars = sub.header.kinds.keys.toSeq.sorted
           .filterNot(v => generated(v) || imports.contains(v))
-        if (starVars.isEmpty && ret.items.isEmpty) throw new CypherCompileException(
+        if (starVars.isEmpty && r.items.isEmpty) throw new CypherCompileException(
           "CALL { } RETURN * with no body-local variables in scope",
           CE.SyntaxError, CE.InvalidSyntax)
-        starVars.map(v => ReturnItem(Var(v), None)) ++ ret.items
+        starVars.map(v => ReturnItem(Var(v), None)) ++ r.items
       }
-    val (rows, _) = planProjection(sub, ret.distinct, star = false,
-      retItems ++ keyItem, ret.orderBy, ret.skip, ret.limit, None, perKey = key)
+    val (rows, _) = planProjection(sub, r.distinct, star = false,
+      retItems ++ keyItem, r.orderBy, r.skip, r.limit, None, perKey = key)
     rows.header.kinds.keys.filterNot(key.contains).foreach { n =>
       if (keyed.header.kinds.contains(n)) throw new CypherCompileException(
         s"CALL { } returns $n, which is already bound outside",
@@ -3795,232 +3691,78 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     case m: Merge =>
       planMerge(upgradeEntityValueTargets(ctx,
         patternVars(Pattern(Seq(m.part)))), m)
-    case f: Foreach => planForeach(ctx, f)
     case _ => ctx
   }
 
-  /** FOREACH (x IN list | updates): the update clauses run against the
-    * driving table exploded by the list (one update row per element; null
-    * or empty lists contribute nothing), but the clause itself leaves the
-    * driving table untouched — only the graph state changes. */
-  private def planForeach(ctx0: Ctx, f: Foreach): Ctx = {
-    beginWrites()
-    // FOREACH over a literal null: no elements, no updates (explode would
-    // reject the VOID-typed literal at analysis).
-    if (ctx0.compiler.inferType(f.list).contains(NullType)) return ctx0
-    val listC = ctx0.compiler.compile(f.list)
-    // An element-id list binds the FOREACH variable as a NODE/REL, so the
-    // body may SET/REMOVE/DELETE it — the classic
-    // `FOREACH (n IN nodes(p) | SET n.marked = true)` idiom. Recognized
-    // shapes: nodes(p)/relationships(p) over a bound path value, and
-    // GROUP-list vars from var-length/QPP segments.
-    def isPathValue(pv: String): Boolean =
-      ctx0.header.get(ValueSlot(pv)).exists { cn =>
-        ctx0.df.schema(cn).dataType match {
-          case org.apache.spark.sql.types.StructType(fs) =>
-            fs.map(_.name).toSeq == Seq("nodes", "rels")
-          case _ => false
+  /** Refresh the entity bindings of `outer` that the write clauses `body`
+    * (a CALL { } or FOREACH body, nested ones included) may have written —
+    * a property SET or REMOVEd, a label set or removed — from the CURRENT
+    * written state, so a later read of `res` observes the final value: one
+    * id-keyed join per touched slot. A write to an outer variable touches
+    * that variable; one through a body-local alias (an unwound entity) may
+    * hit any outer entity, so it touches them all. A map SET
+    * (`n += properties(x)`) has no syntactic key list and touches every key
+    * the written tables of the variable's kind carry (over-approximate but
+    * correct). */
+  private def refreshWritten(res: Ctx, outer: RecordHeader,
+      body: Seq[Clause]): Ctx = {
+    // (variable, Right(key)) for a property, None for any key;
+    // (variable, Left(label)) for a label.
+    def written(cs: Seq[Clause]): Seq[(String, Either[String, Option[String]])] =
+      cs.flatMap {
+        case SetClause(items) => items.map(resolveSetItem).flatMap {
+          case SetProp(v, k, _) => Seq(v -> Right(Some(k)))
+          case SetAllProps(v, MapLit(es), _) => es.map(e => v -> Right(Some(e._1)))
+          case SetAllProps(v, _, _) => Seq(v -> Right(None))
+          case SetLabel(v, ls) => ls.map(v -> Left(_))
+          case _ => Seq.empty
         }
+        case Remove(items) => items.map(resolveRemoveItem).flatMap {
+          case RemoveProp(v, k) => Seq(v -> Right(Some(k)))
+          case RemoveLabel(v, ls) => ls.map(v -> Left(_))
+          case _ => Seq.empty
+        }
+        case Merge(_, onCreate, onMatch) => written(Seq(SetClause(onCreate ++ onMatch)))
+        case cs: CallSubquery => callArms(cs.inner).flatMap(a => written(a.clauses))
+        case _ => Seq.empty
       }
-    val elemKind: Option[VarKind] = f.list match {
-      case FuncCall(n, Seq(Var(pv)), _)
-          if n.equalsIgnoreCase("nodes") && isPathValue(pv) =>
-        Some(NodeKind(Set.empty))
-      case FuncCall(n, Seq(Var(pv)), _)
-          if n.equalsIgnoreCase("relationships") && isPathValue(pv) =>
-        Some(RelKind(Set.empty))
-      case Var(lv) => ctx0.header.kindOf(lv) match {
-        case Some(ListNodeKind(ls)) => Some(NodeKind(ls))
-        case Some(ListRelKind(ts)) => Some(RelKind(ts))
-        case _ => None
-      }
-      case _ => None
+    def tables(v: String): Seq[(DataFrame, Map[String, DataType])] = outer.kindOf(v) match {
+      case Some(NodeKind(_)) => wNodes.map(t => (t.df, t.propTypes))
+      case _ => wRels.map(t => (t.df, t.propTypes))
     }
-    // Literal lists OF ENTITY VARS — incl. the conditional-update idiom
-    // `FOREACH (x IN CASE WHEN c THEN [a] ELSE [] END | SET x...)`. An
-    // entity var in a list literal compiles to the FULL entity struct
-    // (round 12), so these lists explode via their _id field; the
-    // detection is syntactic.
-    def entityListKind(e: Expr): Option[VarKind] = e match {
-      case ListLit(items) if items.nonEmpty =>
-        val ks = items.map {
-          case Var(v) => ctx0.header.kindOf(v) match {
-            case Some(k @ (NodeKind(_) | RelKind(_))) => Some(k)
-            case _ => None
-          }
-          case _ => None
-        }
-        if (ks.forall(_.isDefined)) {
-          val flat = ks.flatten
-          if (flat.forall(_.isInstanceOf[NodeKind])) Some(NodeKind(Set.empty))
-          else if (flat.forall(_.isInstanceOf[RelKind])) Some(RelKind(Set.empty))
-          else None
-        } else None
-      case CaseExpr(_, alts, default) =>
-        // [] / null branches are neutral; every informative branch must
-        // agree on the element kind.
-        val branches = alts.map(_._2) ++ default.toSeq
-        val informative = branches.filterNot(b =>
-          b == ListLit(Seq.empty) || b == NullLit)
-        val ks = informative.map(entityListKind)
-        if (informative.nonEmpty && ks.forall(_.isDefined) &&
-            ks.flatten.map(_.getClass).distinct.size == 1) ks.head
-        else None
-      case _ => None
-    }
-    val binderKind: Option[VarKind] = elemKind.orElse(entityListKind(f.list))
-    // Entity-struct element lists (literal [a] / collected lists) carry
-    // the id in the _id field; path/group lists are bare id arrays.
-    val idListC =
-      if (elemKind.isEmpty && entityListKind(f.list).isDefined)
-        transform(listC, x => x.getField("_id"))
-      else listC
-    val sub0 = binderKind match {
-      case Some(kind) =>
-        val idSlot = IdSlot(f.variable)
-        var subDf = ctx0.df
-          .withColumn(RecordHeader.colName(idSlot), explode(idListC))
-        var subHeader = ctx0.header.withSlot(idSlot).withVar(f.variable, kind)
-        // Join the element's CURRENT stored properties (write state) so
-        // body expressions can read them (SET n.x = n.y + 1).
-        val tables = kind match {
-          case NodeKind(_) => wNodes.map(t => (t.df, t.propTypes))
-          case _ => wRels.map(t => (t.df, t.propTypes))
-        }
-        val propTypes = unifyProps(tables.map(_._2))
-        if (propTypes.nonEmpty && tables.nonEmpty) {
-          val keys = propTypes.keys.toSeq.sorted
-          val frames = tables.map { case (df, pt) =>
-            df.select(col(ID).as("_fe_id") +: keys.zipWithIndex.map {
-              case (k, i) =>
-                (if (pt.contains(k)) col(propCol(k)).cast(propTypes(k))
-                 else lit(null).cast(propTypes(k))).as(s"_fe_p$i")
-            }: _*)
-          }
-          subDf = subDf.join(frames.reduce(_.unionByName(_)),
-            col(RecordHeader.colName(idSlot)) === col("_fe_id"), "left")
-            .drop("_fe_id")
-          keys.zipWithIndex.foreach { case (k, i) =>
-            val ps = PropSlot(f.variable, k)
-            subDf = subDf.withColumnRenamed(s"_fe_p$i",
-              RecordHeader.colName(ps))
-            subHeader = subHeader.withSlot(ps)
-          }
-        }
-        Ctx(subDf, subHeader)
-      case None =>
-        val slot = ValueSlot(f.variable)
-        Ctx(
-          ctx0.df.withColumn(RecordHeader.colName(slot), explode(listC)),
-          ctx0.header.withSlot(slot).withVar(f.variable, ValueKind))
-    }
-    f.updates.foldLeft(sub0)(planWriteClause)
-    // Outer variables whose properties the body SET: refresh their bindings
-    // from the written state so a later RETURN observes the final value
-    // (one id-keyed join per touched (var, key) pair).
-    // A SET through an entity BINDER (this FOREACH's variable, or a
-    // nested one) can alias ANY outer entity var of its kind — refresh
-    // them all, so `FOREACH (x IN [a] | SET x.h = 1) RETURN a.h` reads
-    // the written value (kind unknown for nested binders: refresh both
-    // kinds, conservative but correct).
-    val outerEntityVars: Seq[(String, VarKind)] =
-      ctx0.header.kinds.toSeq.collect {
-        case (v, k @ (NodeKind(_) | RelKind(_))) => (v, k)
-      }
-    def sameClass(a: VarKind, b: VarKind): Boolean = (a, b) match {
-      case (NodeKind(_), NodeKind(_)) | (RelKind(_), RelKind(_)) => true
-      case _ => false
-    }
-    val touched = writeSetKeys(f.updates).distinct.flatMap { case (v, kOpt) =>
-      val targets: Seq[String] =
-        if (ctx0.header.kinds.contains(v)) Seq(v)
-        else {
-          val bk = if (v == f.variable) binderKind else None
-          outerEntityVars
-            .filter(t => bk.forall(sameClass(t._2, _))).map(_._1)
-        }
-      targets.flatMap { tv =>
-        kOpt match {
-          case Some(k) => Seq((tv, k))
-          case None => ctx0.header.kindOf(tv) match {
-            case Some(NodeKind(_)) =>
-              wNodes.flatMap(_.propTypes.keys).distinct.map((tv, _))
-            case Some(RelKind(_)) =>
-              wRels.flatMap(_.propTypes.keys).distinct.map((tv, _))
-            case _ => Seq.empty
-          }
+    val entities = outer.kinds.toSeq.collect { case (v, NodeKind(_) | RelKind(_)) => v }
+    val slots = written(body).flatMap { case (v, w) =>
+      (if (outer.kinds.contains(v)) Seq(v) else entities).flatMap { tv =>
+        (outer.kindOf(tv), w) match {
+          case (Some(NodeKind(_)), Left(l)) => Seq(LabelSlot(tv, l))
+          case (Some(NodeKind(_) | RelKind(_)), Right(key)) =>
+            key.fold(tables(tv).flatMap(_._2.keys).distinct)(Seq(_)).map(PropSlot(tv, _))
+          case _ => Seq.empty
         }
       }
     }.distinct
-    refreshWrittenProps(ctx0, touched)
-  }
-
-  /** Does a clause list (recursively, through FOREACH bodies and nested
-    * CALL arms) contain any write clause? */
-  private def containsWriteClause(cs: Seq[Clause]): Boolean = cs.exists {
-    case _: Create | _: Merge | _: SetClause | _: Remove | _: Delete => true
-    case Foreach(_, _, inner) => inner.nonEmpty // FOREACH bodies only write
-    case sq: CallSubquery =>
-      (sq.inner.first +: sq.inner.rest.map(_._2))
-        .exists(a => containsWriteClause(a.clauses))
-    case _ => false
-  }
-
-  /** (var, key) pairs a clause list may SET; a dynamic-map SET
-    * (n += properties(x)) has no syntactic key list — None marks "all
-    * keys", expanded by callers to every key the written tables of the
-    * var's kind carry (over-approximate but correct). */
-  private def writeSetKeys(cs: Seq[Clause]): Seq[(String, Option[String])] =
-    cs.flatMap {
-      case SetClause(items) => items.map(resolveSetItem).flatMap {
-        case SetProp(v, k, _) => Seq((v, Some(k)))
-        case SetAllProps(v, MapLit(es), _) =>
-          es.map { case (k, _) => (v, Some(k)) }
-        case SetAllProps(v, _, _) => Seq((v, None))
-        case _ => Seq.empty
+    slots.foldLeft(res) { (ctx, slot) =>
+      // The written (id, value) rows; a label reads true on the ids of the
+      // tables that carry it and false on every other id.
+      val (rows, absent) = (slot: @unchecked) match {
+        case LabelSlot(_, l) =>
+          (wNodes.filter(_.labels(l)).map(_.df.select(col(ID), lit(true))), Some(lit(false)))
+        case PropSlot(v, k) =>
+          (tables(v).filter(_._2.contains(k)).map(_._1.select(col(ID), col(propCol(k)))), None)
       }
-      case Merge(_, onCreate, onMatch) =>
-        writeSetKeys(Seq(SetClause(onCreate ++ onMatch)))
-      case Foreach(_, _, inner) => writeSetKeys(inner)
-      case sq: CallSubquery =>
-        (sq.inner.first +: sq.inner.rest.map(_._2))
-          .flatMap(a => writeSetKeys(a.clauses))
-      case _ => Seq.empty
-    }
-
-  /** Refresh entity-var property bindings from the CURRENT written state
-    * after a nested write scope (FOREACH body, CALL { } body): one
-    * id-keyed join per touched (var, key) pair, so a later read of the
-    * outer binding observes the final value. */
-  private def refreshWrittenProps(ctx0: Ctx,
-      touched: Seq[(String, String)]): Ctx = {
-    var ctx = ctx0
-    touched.distinct.foreach { case (v, k) =>
-      ctx.header.kindOf(v) match {
-        case Some(kind @ (NodeKind(_) | RelKind(_))) =>
-          val tables = kind match {
-            case NodeKind(_) =>
-              wNodes.filter(_.propTypes.contains(k))
-                .map(t => t.df.select(col(ID), col(propCol(k))))
-            case _ =>
-              wRels.filter(_.propTypes.contains(k))
-                .map(t => t.df.select(col(ID), col(propCol(k))))
-          }
-          tables.reduceOption(_.unionByName(_)).foreach { vals =>
-            val slotC = PropSlot(v, k)
-            val idCol = ctx.header.col(IdSlot(v))
-            val upd = vals.select(col(ID).as("_wf_id"),
-              col(propCol(k)).as("_wf_v")).dropDuplicates("_wf_id")
-            ctx = Ctx(
-              ctx.df.join(upd, col(idCol) === col("_wf_id"), "left")
-                .withColumn(RecordHeader.colName(slotC), col("_wf_v"))
-                .drop("_wf_id", "_wf_v"),
-              ctx.header.withSlot(slotC))
-          }
-        case _ => ()
+      val id = col(ctx.header.col(IdSlot(slot.owner)))
+      val name = RecordHeader.colName(slot)
+      (rows.reduceOption(_.unionByName(_)), absent) match {
+        case (None, None) => ctx
+        case (None, Some(a)) =>
+          Ctx(ctx.df.withColumn(name, when(id.isNotNull, a)), ctx.header.withSlot(slot))
+        case (Some(vals), _) =>
+          val upd = vals.toDF("_wf_id", "_wf_v").dropDuplicates("_wf_id")
+          val v = absent.fold(col("_wf_v"))(a => when(id.isNotNull, coalesce(col("_wf_v"), a)))
+          Ctx(ctx.df.join(upd, id === col("_wf_id"), "left").withColumn(name, v)
+            .drop("_wf_id", "_wf_v"), ctx.header.withSlot(slot))
       }
     }
-    ctx
   }
 
   private def planRemove(ctx0: Ctx, items: Seq[RemoveItem]): Ctx = {
@@ -4044,19 +3786,10 @@ class Planner(spark: SparkSession, graph0: PropertyGraph,
     // delete, and because the rel deletions apply before the connected-
     // node check, a plain DELETE p succeeds when the path covers every
     // relationship of its nodes.
-    def isPathStruct(v: String): Boolean =
-      ctx0.header.get(ValueSlot(v)).exists { cn =>
-        ctx0.df.schema(cn).dataType match {
-          case st: org.apache.spark.sql.types.StructType =>
-            st.fieldNames.toSeq == Seq("nodes", "rels")
-          case _ => false
-        }
-      }
     var relFrames = Seq.empty[DataFrame]
     var nodeFrames = Seq.empty[DataFrame]
     exprs.foreach {
-      case Var(v) if ctx0.header.kindOf(v).contains(ValueKind) &&
-          isPathStruct(v) =>
+      case Var(v) if ctx0.compiler.isPathStruct(Var(v)) =>
         val cn = ctx0.header.col(ValueSlot(v))
         val live = ctx0.df.filter(col(cn).isNotNull)
         relFrames :+= live

@@ -397,7 +397,9 @@ object CypherParser {
       val clauses = Seq.newBuilder[Clause]
       var done = false
       while (!done) {
-        peek match {
+        val update = parseUpdateClause()
+        if (update.isDefined) clauses ++= update
+        else peek match {
           case Kw("MATCH", _, _) => p += 1; clauses += parseMatch(optional = false)
           case Kw("OPTIONAL", _, _) =>
             p += 1
@@ -452,64 +454,6 @@ object CypherParser {
           case Kw("USE", _, _) => p += 1; clauses += FromGraph(parseGraphRef())
           case Kw("CALL", _, _) =>
             p += 1; clauses ++= parseCallClause(optional = false)
-          // ---- write clauses (beyond-reference; see GraphWriter) ----
-          case Kw("CREATE", _, _) =>
-            p += 1
-            val parts = Seq.newBuilder[PatternPart]
-            parts += parsePatternPart()
-            while (tryPunct(",")) parts += parsePatternPart()
-            clauses += Create(Pattern(parts.result()))
-          case Kw("MERGE", _, _) =>
-            p += 1
-            val part = parsePatternPart()
-            val onCreate = Seq.newBuilder[SetItem]
-            val onMatch = Seq.newBuilder[SetItem]
-            while (isKw("ON")) {
-              p += 1
-              if (tryKw("CREATE")) { eatKw("SET"); onCreate ++= parseSetItems() }
-              else if (tryKw("MATCH")) { eatKw("SET"); onMatch ++= parseSetItems() }
-              else fail("expected CREATE or MATCH after ON")
-            }
-            clauses += Merge(part, onCreate.result(), onMatch.result())
-          case Kw("SET", _, _) =>
-            p += 1; clauses += SetClause(parseSetItems())
-          case Kw("REMOVE", _, _) =>
-            p += 1
-            val items = Seq.newBuilder[RemoveItem]
-            def removeItem(): Unit = {
-              val v = ident()
-              if (tryPunct(".")) items += RemoveProp(v, ident())
-              else if (tryPunct("[")) {
-                // dynamic property: REMOVE n[keyExpr] (Neo4j 5.24)
-                val k = parseExpr()
-                eatPunct("]")
-                items += RemoveDynProp(v, k)
-              } else {
-                val statics = Seq.newBuilder[String]
-                val dyns = Seq.newBuilder[Expr]
-                var any = false
-                while (tryPunct(":")) {
-                  any = true
-                  if (tryPunct("$")) {
-                    eatPunct("("); dyns += parseExpr(); eatPunct(")")
-                  } else statics += ident()
-                }
-                if (!any) fail("expected .prop, [key] or :Label in REMOVE")
-                val l = statics.result()
-                if (l.nonEmpty) items += RemoveLabel(v, l)
-                val d = dyns.result()
-                if (d.nonEmpty) items += RemoveDynLabel(v, d)
-              }
-            }
-            removeItem()
-            while (tryPunct(",")) removeItem()
-            clauses += Remove(items.result())
-          case Kw("FOREACH", _, _) =>
-            p += 1; clauses += parseForeach()
-          case Kw("DELETE", _, _) =>
-            p += 1; clauses += parseDelete(detach = false)
-          case Kw("DETACH", _, _) =>
-            p += 1; eatKw("DELETE"); clauses += parseDelete(detach = true)
           case Kw("CONSTRUCT", _, _) =>
             p += 1
             val on = Seq.newBuilder[GraphRef]
@@ -579,21 +523,6 @@ object CypherParser {
                 case t => fail(s"expected a string FIELDTERMINATOR, got $t")
               }
             clauses += LoadCsv(headers, url, alias, sep)
-          // INSERT: the GQL-conformant CREATE synonym (Neo4j 5.18).
-          case Ident(s, _) if s.equalsIgnoreCase("INSERT") &&
-              (peek2 match {
-                case Punct("(", _) => true
-                case _ => false
-              }) =>
-            p += 1
-            val parts = Seq.newBuilder[PatternPart]
-            parts += parsePatternPart()
-            while (tryPunct(",")) parts += parsePatternPart()
-            clauses += Create(Pattern(parts.result()))
-          // NODETACH DELETE: the explicit non-detaching form (Neo4j 5).
-          case Ident(s, _) if s.equalsIgnoreCase("NODETACH") &&
-              wordAt(p + 1, "DELETE") =>
-            p += 2; clauses += parseDelete(detach = false)
           case _ => done = true
         }
       }
@@ -642,62 +571,98 @@ object CypherParser {
       items.result()
     }
 
-    /** FOREACH ( x IN list | write-clauses ). */
-    private def parseForeach(): Foreach = {
+    /** An update clause (CREATE/INSERT, MERGE, SET, REMOVE, DELETE in its
+      * three forms, FOREACH), or None with nothing consumed. One parser for
+      * a query's clause list and a FOREACH body. */
+    private def parseUpdateClause(): Option[Clause] = {
+      def parts(): Pattern = {
+        val ps = Seq.newBuilder[PatternPart]
+        ps += parsePatternPart()
+        while (tryPunct(",")) ps += parsePatternPart()
+        Pattern(ps.result())
+      }
+      Some(peek match {
+        case Kw("CREATE", _, _) => p += 1; Create(parts())
+        // INSERT: the GQL-conformant CREATE synonym (Neo4j 5.18).
+        case Ident(s, _) if s.equalsIgnoreCase("INSERT") &&
+            (peek2 match {
+              case Punct("(", _) => true
+              case _ => false
+            }) =>
+          p += 1; Create(parts())
+        case Kw("MERGE", _, _) =>
+          p += 1
+          val part = parsePatternPart()
+          val onCreate = Seq.newBuilder[SetItem]
+          val onMatch = Seq.newBuilder[SetItem]
+          while (isKw("ON")) {
+            p += 1
+            if (tryKw("CREATE")) { eatKw("SET"); onCreate ++= parseSetItems() }
+            else if (tryKw("MATCH")) { eatKw("SET"); onMatch ++= parseSetItems() }
+            else fail("expected CREATE or MATCH after ON")
+          }
+          Merge(part, onCreate.result(), onMatch.result())
+        case Kw("SET", _, _) => p += 1; SetClause(parseSetItems())
+        case Kw("REMOVE", _, _) => p += 1; parseRemove()
+        case Kw("FOREACH", _, _) => p += 1; parseForeach()
+        case Kw("DELETE", _, _) => p += 1; parseDelete(detach = false)
+        case Kw("DETACH", _, _) =>
+          p += 1; eatKw("DELETE"); parseDelete(detach = true)
+        // NODETACH DELETE: the explicit non-detaching form (Neo4j 5).
+        case Ident(s, _) if s.equalsIgnoreCase("NODETACH") &&
+            wordAt(p + 1, "DELETE") =>
+          p += 2; parseDelete(detach = false)
+        case _ => return None
+      })
+    }
+
+    private def parseRemove(): Remove = {
+      val items = Seq.newBuilder[RemoveItem]
+      def removeItem(): Unit = {
+        val v = ident()
+        if (tryPunct(".")) items += RemoveProp(v, ident())
+        else if (tryPunct("[")) {
+          // dynamic property: REMOVE n[keyExpr] (Neo4j 5.24)
+          val k = parseExpr()
+          eatPunct("]")
+          items += RemoveDynProp(v, k)
+        } else {
+          val statics = Seq.newBuilder[String]
+          val dyns = Seq.newBuilder[Expr]
+          var any = false
+          while (tryPunct(":")) {
+            any = true
+            if (tryPunct("$")) {
+              eatPunct("("); dyns += parseExpr(); eatPunct(")")
+            } else statics += ident()
+          }
+          if (!any) fail("expected .prop, [key] or :Label in REMOVE")
+          val l = statics.result()
+          if (l.nonEmpty) items += RemoveLabel(v, l)
+          val d = dyns.result()
+          if (d.nonEmpty) items += RemoveDynLabel(v, d)
+        }
+      }
+      removeItem()
+      while (tryPunct(",")) removeItem()
+      Remove(items.result())
+    }
+
+    /** FOREACH ( x IN list | update-clauses ): the unit subquery
+      * `CALL (*) { UNWIND list AS x update-clauses }`. */
+    private def parseForeach(): CallSubquery = {
       eatPunct("(")
       val v = ident()
       eatKw("IN")
       val list = guardLabelOr(parseExpr())
       eatPunct("|")
-      val body = Seq.newBuilder[Clause]
-      var more = true
-      while (more) {
-        peek match {
-          case Kw("CREATE", _, _) =>
-            p += 1
-            val parts = Seq.newBuilder[PatternPart]
-            parts += parsePatternPart()
-            while (tryPunct(",")) parts += parsePatternPart()
-            body += Create(Pattern(parts.result()))
-          case Kw("MERGE", _, _) =>
-            p += 1
-            val part = parsePatternPart()
-            val onCreate = Seq.newBuilder[SetItem]
-            val onMatch = Seq.newBuilder[SetItem]
-            while (isKw("ON")) {
-              p += 1
-              if (tryKw("CREATE")) { eatKw("SET"); onCreate ++= parseSetItems() }
-              else if (tryKw("MATCH")) { eatKw("SET"); onMatch ++= parseSetItems() }
-              else fail("expected CREATE or MATCH after ON")
-            }
-            body += Merge(part, onCreate.result(), onMatch.result())
-          case Kw("SET", _, _) => p += 1; body += SetClause(parseSetItems())
-          case Kw("REMOVE", _, _) =>
-            p += 1
-            val items = Seq.newBuilder[RemoveItem]
-            def removeItem(): Unit = {
-              val v2 = ident()
-              if (tryPunct(".")) items += RemoveProp(v2, ident())
-              else {
-                val ls = Seq.newBuilder[String]
-                while (tryPunct(":")) ls += ident()
-                items += RemoveLabel(v2, ls.result())
-              }
-            }
-            removeItem()
-            while (tryPunct(",")) removeItem()
-            body += Remove(items.result())
-          case Kw("DELETE", _, _) => p += 1; body += parseDelete(detach = false)
-          case Kw("DETACH", _, _) =>
-            p += 1; eatKw("DELETE"); body += parseDelete(detach = true)
-          case Kw("FOREACH", _, _) => p += 1; body += parseForeach()
-          case _ => more = false
-        }
-      }
+      val body = Iterator.continually(parseUpdateClause())
+        .takeWhile(_.isDefined).flatten.toSeq
       eatPunct(")")
-      val b = body.result()
-      if (b.isEmpty) fail("FOREACH requires at least one update clause")
-      Foreach(v, list, b)
+      if (body.isEmpty) fail("FOREACH requires at least one update clause")
+      CallSubquery(Query(SingleQuery(
+        With(distinct = false, star = true, Seq.empty, Seq.empty, None, None, None) +:
+          Unwind(list, v) +: body), Seq.empty))
     }
 
     private def parseDelete(detach: Boolean): Delete = {

@@ -197,6 +197,20 @@ class SubqueryCorrelationSpec extends TckScenarioBase {
     assert(counts("_a1") === counts("c"))
   }
 
+  // --------------------------------------------------- unit write bodies
+  scenario("a unit body's SET is read back through the outer binding", g,
+    "MATCH (p:P) CALL { WITH p SET p.num = 99 } RETURN p.name AS name, p.num AS num",
+    rows(Map("name" -> "a", "num" -> 99L), Map("name" -> "b", "num" -> 99L),
+      Map("name" -> "c", "num" -> 99L)))
+  scenario("a unit body nests in a unit body", g,
+    "MATCH (p:P) CALL (p) { CALL (p) { SET p.num = 5 } } RETURN sum(p.num) AS x",
+    value(15L))
+  scenario("a unit body nests in a RETURNing body", g,
+    "MATCH (p:P) CALL (p) { MATCH (p)-[:T]->(q) CALL (q) { SET q.v = q.v + 1 } " +
+      "RETURN sum(q.v) AS s } RETURN p.name AS name, s",
+    rows(Map("name" -> "a", "s" -> 32L), Map("name" -> "b", "s" -> 31L),
+      Map("name" -> "c", "s" -> 0L)))
+
   // ----------------------------------------------- planning and plan shape
   test("EXPLAIN of correlated read subqueries runs no Spark job") {
     val call = "MATCH (c:Customer)-[:FROM_NATION]->(n:Nation) " +

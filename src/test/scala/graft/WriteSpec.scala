@@ -382,4 +382,87 @@ class WriteSpec extends SparkTestBase {
     assert(one(g2, "MATCH (n:G) RETURN count(*) AS n") === 4L)
     assert(one(g2, "MATCH (n:G) RETURN sum(n.v) AS s") === 90L)
   }
+
+  // ----------------------------------------------- nested write bodies
+  // FOREACH is the unit body CALL (*) { UNWIND list AS x updates }: both
+  // forms write the same, and the outer bindings read the written values.
+  private def rowsOf(q: String): Seq[Seq[Any]] =
+    session.cypher(g, q).collect().toSeq.map(_.toSeq)
+
+  test("a unit CALL body's SET is read back through the outer binding") {
+    assert(rowsOf("MATCH (n:Person) CALL { WITH n SET n.age = 99 } " +
+      "RETURN n.age AS a").map(_.head) === Seq(99L, 99L))
+  }
+
+  test("a label set in a unit body is read back, also through an alias") {
+    assert(rowsOf("MATCH (n:Person) CALL { WITH n SET n:Seen } " +
+      "RETURN n:Seen").map(_.head) === Seq(true, true))
+    assert(rowsOf("MATCH (a:Person) CALL (*) { UNWIND CASE WHEN a.age > 35 " +
+      "THEN [a] ELSE [] END AS x SET x:Old } RETURN a.name, a:Old")
+      .toSet === Set(Seq("a", false), Seq("b", true)))
+  }
+
+  test("a unit body over nodes(p) writes every path node") {
+    assert(rowsOf("MATCH p = (a:Person {name: 'a'})-[:KNOWS]->(b) " +
+      "CALL (*) { UNWIND nodes(p) AS nd SET nd.dbl = nd.age * 2 } " +
+      "RETURN a.dbl, b.dbl") === Seq(Seq(60L, 80L)))
+  }
+
+  test("a unit body over a CASE-guarded [a] writes only the guarded node") {
+    assert(rowsOf("MATCH (a:Person) CALL (*) { UNWIND CASE WHEN a.age > 35 " +
+      "THEN [a] ELSE [] END AS x SET x.hit = 1 } RETURN a.name, a.hit")
+      .toSet === Set(Seq("a", null), Seq("b", 1L)))
+  }
+
+  test("a unit body over [r] writes the relationship") {
+    assert(rowsOf("MATCH ()-[r:KNOWS]->() CALL (*) { UNWIND [r] AS x " +
+      "SET x.w = 7 } RETURN r.w") === Seq(Seq(7L)))
+  }
+
+  test("unit bodies nest, in a unit body and in a RETURNing body") {
+    assert(rowsOf("MATCH (n:Person) CALL (n) { CALL (n) { SET n.age = 5 } } " +
+      "RETURN n.name, n.age").toSet === Set(Seq("a", 5L), Seq("b", 5L)))
+    assert(rowsOf("MATCH (n:Person) CALL (n) { CALL (n) { SET n.age = 5 } " +
+      "RETURN n.age AS inner } RETURN n.name, inner, n.age").toSet ===
+      Set(Seq("a", 5L, 5L), Seq("b", 5L, 5L)))
+  }
+
+  test("FOREACH takes the dynamic REMOVE forms") {
+    assert(rowsOf("MATCH (n:Person) FOREACH (x IN [1] | REMOVE n['age']) " +
+      "RETURN n.age").map(_.head) === Seq(null, null))
+    assert(rowsOf("MATCH (n:Person) FOREACH (x IN [1] | REMOVE n:$('Person')) " +
+      "RETURN labels(n), n:Person").map(_.map {
+        case l: scala.collection.Seq[_] => l.toList
+        case b => b
+      }) === Seq(Seq(Nil, false), Seq(Nil, false)))
+    val g2 = session.update(g,
+      "MATCH (n:Person) FOREACH (x IN [1] | REMOVE n:$('Person'))")
+    assert(one(g2, "MATCH (n:Person) RETURN count(*) AS n") === 0L)
+    assert(one(g2, "MATCH (n) WHERE n.age > 0 RETURN count(*) AS n") === 2L)
+  }
+
+  test("planning FOREACH and nested unit bodies runs no more jobs") {
+    // Jobs to build each result frame, counted on a second pass (the first
+    // fills per-graph caches). The bounds are what the dedicated FOREACH
+    // planner ran; a nested unit CALL did not plan then, so its bound is
+    // the one-level body's. MERGE and DETACH DELETE pin their id frames.
+    val bounds = Seq(
+      "MATCH (p:Person) FOREACH (k IN ['x'] | SET p.mark = k) RETURN p.mark" -> 0,
+      "MATCH p = (a:Person {name: 'a'})-[:KNOWS]->(b) " +
+        "FOREACH (nd IN nodes(p) | SET nd.dbl = nd.age * 2) RETURN a.dbl, b.dbl" -> 0,
+      "MATCH (a:Person) FOREACH (x IN CASE WHEN a.age > 35 THEN [a] ELSE [] END " +
+        "| SET x.hit = 1) RETURN a.hit" -> 0,
+      "MATCH ()-[r:KNOWS]->() FOREACH (x IN [r] | SET x.w = 7) RETURN r.w" -> 0,
+      "FOREACH (i IN [1, 2] | FOREACH (j IN [10, 20] | CREATE (:G {v: i * j})))" -> 0,
+      "FOREACH (i IN [1, 2, 2] | MERGE (:FM {k: i}))" -> 1,
+      "MATCH (c:City) WITH collect(c) AS cs FOREACH (x IN cs | DETACH DELETE x)" -> 1,
+      "MATCH (n:Person) FOREACH (x IN [1] | REMOVE n.age) RETURN n.age" -> 0,
+      "MATCH (n:Person) CALL (n) { CALL (n) { SET n.age = 5 } } RETURN n.age" -> 0)
+    val graph = g
+    bounds.foreach { case (q, _) => session.cypher(graph, q) }
+    val over = bounds.map { case (q, bound) =>
+      (q, jobsDuring(session.cypher(graph, q)), bound)
+    }.filter { case (_, jobs, bound) => jobs > bound }
+    assert(over.isEmpty, over)
+  }
 }
